@@ -49,11 +49,6 @@ def filter_dimi_balance(df: DataFrame, columns=("balance", "balance1")) -> DataF
     return df
 
 
-def drop_null_keys(df: DataFrame, *cols: str) -> DataFrame:
-    """Null-key pruning before matching (ref main.py:2108-2112)."""
-    return df.na.drop(subset=list(cols))
-
-
 def anti_filter_matched(df: DataFrame, matched: DataFrame, key: str, matched_key: str | None = None) -> DataFrame:
     """Remove already-matched keys from the unmatched pool after a cascade
     stage (ref main.py:1053-1088 ``~isin``) — a broadcastable left-anti join."""

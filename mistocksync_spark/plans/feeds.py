@@ -220,15 +220,6 @@ def docs_para(spark, sf_dir: str):
     return spark.sql(DOCS_PARA_SQL)
 
 
-def register_feeds(spark, sf_dir: str) -> None:
-    """Register ``part`` plus the derived supplier/base feeds as temp views."""
-    import os
-
-    spark.read.parquet(os.path.join(sf_dir, "part.parquet")).createOrReplaceTempView("part")
-    spark.sql(SUPPLIER_FEED_SQL).createOrReplaceTempView("supplier_feed")
-    spark.sql(BASE_FEED_SQL).createOrReplaceTempView("base_feed")
-
-
 # Per-(session, sf_dir) feed memo.  The synthetic-quirk projections are huge
 # expression trees; without a shared cache every parity query re-derives
 # them and projection collapse duplicates them past the JVM 64KB codegen
@@ -254,11 +245,6 @@ def supplier_feed(spark, sf_dir: str):
 
 def base_feed(spark, sf_dir: str):
     return _memo_feed(spark, sf_dir, "base", BASE_FEED_SQL)
-
-
-def feed_ctes() -> str:
-    """CTE prefix reused by every DuckDB oracle."""
-    return f"WITH supplier_feed AS ({SUPPLIER_FEED_SQL}), base_feed AS ({BASE_FEED_SQL})"
 
 
 # Embeddings corpus augmented with planted duplicates: exact copies and

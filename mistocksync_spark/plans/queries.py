@@ -1881,16 +1881,15 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pristine per run (the stream mutates state, so runs can't share one
     live copy).  Decisions are unchanged — the copied state is
     bit-identical to what the per-call setup built."""
-    import hashlib
     import os
     import shutil
     import tempfile
-    import time
 
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
     from mistocksync_spark.streaming.merge import (
         incremental_corpus_dedup,
         prime_corpus_dedup_state,
+        stage_arrivals,
     )
 
     work = tempfile.mkdtemp(prefix="incr_dedup_stream_")
@@ -1905,21 +1904,15 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = os.path.join(work, "state")
     shutil.copytree(root, state_dir)
     os.remove(os.path.join(state_dir, "_STATE_READY"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
-    batch = docs_incr_batch(spark, sf_dir)
-    # two id-ordered arrival files; ascending mtimes pin the file-source
-    # processing order (FileStreamSource orders by modification time)
-    now = time.time()
-    for i, (lo, hi) in enumerate([(0, 4_500_000), (4_500_000, 10_000_000)]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    doc_id = F.col("doc_id")
+    arrivals = stage_arrivals(
+        docs_incr_batch(spark, sf_dir),
+        [
+            (doc_id >= lo) & (doc_id < hi)
+            for lo, hi in [(0, 4_500_000), (4_500_000, 10_000_000)]
+        ],
+        os.path.join(work, "arrivals"),
+    )
     return incremental_corpus_dedup(
         spark,
         None,  # state primed above (produce-once root, pristine copy)
@@ -2620,18 +2613,17 @@ def incremental_embedding_dedup_ivf_stream_q(
     a JSON sidecar, exact float round-trip) and COPIED pristine per run
     — the stream mutates state, so runs can't share one live copy.
     Accepted sets are unchanged."""
-    import hashlib
     import json as _json
     import os
     import shutil
     import tempfile
-    import time
 
     from mistocksync_spark.operators.vectors import inferred_dim, ivf_train
     from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
     from mistocksync_spark.streaming.merge import (
         incremental_embedding_dedup_stream,
         prime_embedding_dedup_state,
+        stage_arrivals,
     )
 
     work = tempfile.mkdtemp(prefix="incr_emb_stream_")
@@ -2660,19 +2652,15 @@ def incremental_embedding_dedup_ivf_stream_q(
     shutil.copytree(root, state_dir)
     os.remove(os.path.join(state_dir, "_STATE_READY"))
     os.remove(os.path.join(state_dir, "_quantizer.json"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
-    batch = emb_incr_batch(spark, sf_dir)
-    now = time.time()
-    for i, (lo, hi) in enumerate([(0, 3_500_000), (3_500_000, 10_000_000)]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    vec_id = F.col("vec_id")
+    arrivals = stage_arrivals(
+        emb_incr_batch(spark, sf_dir),
+        [
+            (vec_id >= lo) & (vec_id < hi)
+            for lo, hi in [(0, 3_500_000), (3_500_000, 10_000_000)]
+        ],
+        os.path.join(work, "arrivals"),
+    )
     return incremental_embedding_dedup_stream(
         spark,
         None,  # state primed above (produce-once root, pristine copy)
@@ -10005,120 +9993,41 @@ def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataF
     return _stored_prepare_tick(spark, sf_dir)
 
 
+def _prepare_state_root(spark: SparkSession, sf_dir: str) -> str:
+    """The produce-once root of the prepare state (``prime_prepare_state``:
+    docs/bands/digests/grams at ``batch=-1`` + frozen vocab + frozen
+    holdout shingles), keyed on the documents' content.  The holdout set
+    is built unconditionally so the v1/v3 twins of the stored tick and of
+    the stream share one root."""
+    from mistocksync_spark.plans.feeds import docs_incr_corpus
+    from mistocksync_spark.streaming.merge import prime_prepare_state
+
+    return _produce_once_root(
+        "/tmp/spark_graft_prep_stream_state",
+        "incremental_prepare_stream_state",
+        sf_dir,
+        _parquet_content_tag(f"{sf_dir}/documents.parquet"),
+        lambda r: prime_prepare_state(
+            docs_incr_corpus(spark, sf_dir).select("doc_id", "text"),
+            r,
+            holdout_mod=50,
+        ),
+    )
+
+
 def _stored_prepare_tick(
     spark: SparkSession, sf_dir: str, holdout_mod: int | None = None
 ) -> DataFrame:
     """Shared body of ``incremental_prepare_tick_stored`` and its v3 twin:
-    produce-once keyed-append state (docs/bands/digests/grams + frozen
-    vocab, plus the frozen holdout shingle set under ``holdout_mod``),
-    folded bucket fetch, candidate-pruned docs read, corpus=None."""
-    import hashlib
-    import os
-    import shutil
+    the stream's probe and gate (folded bucket fetch, candidate-pruned
+    docs read, corpus=None), unpinned, on the produce-once prepare root."""
+    from mistocksync_spark.plans.feeds import docs_incr_batch
+    from mistocksync_spark.streaming.merge import prepare_decisions
 
-    from mistocksync_spark.operators.dedup import (
-        char_gram_positions,
-        corpus_digest_state,
-        corpus_gram_state,
-        corpus_signature_state,
-        holdout_shingle_state,
-    )
-    from mistocksync_spark.operators.textual import (
-        corpus_vocabulary,
-        incremental_prepare_tick,
-    )
-    from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        parallel_actions,
-        touched_buckets,
-        touched_buckets_multi,
-    )
-
-    corpus = docs_incr_corpus(spark, sf_dir).select("doc_id", "text")
-    batch = (
-        docs_incr_batch(spark, sf_dir).select("doc_id", "text")
-        .localCheckpoint(eager=False)
-    )
-    tag = _parquet_content_tag(f"{sf_dir}/documents.parquet")
-    def _build(r: str) -> None:
-        # r16 (guide §2.6): eager checkpoint (one materialization of the
-        # shared corpus), then the six independent state builds overlap —
-        # the prime wall is ~max() of the builds, not their sum
-        corpus_ck = corpus.localCheckpoint()
-        parallel_actions(
-            lambda: keyed_state_append(corpus_ck, f"{r}/docs", ["doc_id"]),
-            lambda: keyed_state_append(
-                corpus_signature_state(corpus_ck),
-                f"{r}/bands",
-                ["band", "band_key"],
-            ),
-            lambda: keyed_state_append(
-                corpus_digest_state(corpus_ck), f"{r}/digests", ["digest"]
-            ),
-            lambda: keyed_state_append(
-                corpus_gram_state(corpus_ck), f"{r}/grams", ["g"]
-            ),
-            lambda: corpus_vocabulary(corpus_ck)
-            .write.mode("overwrite")
-            .parquet(f"{r}/vocab"),
-            # the frozen per-corpus-version holdout shingle set (v3 tick
-            # probe) — built unconditionally so both twins share one root
-            lambda: holdout_shingle_state(corpus_ck, holdout_mod=50)
-            .write.mode("overwrite")
-            .parquet(f"{r}/holdout_shingles"),
-        )
-
-    root = _produce_once_root(
-        "/tmp/spark_graft_prep_state",
-        "incremental_prepare_tick_stored:v3",
-        sf_dir,
-        tag,
-        _build,
-    )
-    bbands = corpus_signature_state(batch).localCheckpoint(eager=False)
-    bdig = corpus_digest_state(batch).localCheckpoint(eager=False)
-    bgrams = (
-        char_gram_positions(batch).select("g").distinct()
-        .localCheckpoint(eager=False)
-    )
-    # ONE folded driver action for the three key-state bucket sets (r14
-    # verdict: three separate .distinct().collect() jobs were the tick
-    # floor at small batches)
-    tb = touched_buckets_multi(
-        {
-            "bands": (bbands, ["band", "band_key"]),
-            "digests": (bdig, ["digest"]),
-            "grams": (bgrams, ["g"]),
-        }
-    )
-    bands = keyed_state_read(spark, f"{root}/bands", tb["bands"])
-    digests = keyed_state_read(spark, f"{root}/digests", tb["digests"])
-    grams = keyed_state_read(spark, f"{root}/grams", tb["grams"])
-
-    def fetch_docs(c_ids):
-        # r14 verdict ask #1: the docs store — already bucketed on doc_id
-        # — is read ONLY in the buckets the band probe's candidate corpus
-        # ids hash to; the verify still semi-restricts to exact ids
-        return keyed_state_read(
-            spark, f"{root}/docs", touched_buckets(c_ids, ["doc_id"])
-        )
-
-    return incremental_prepare_tick(
-        None,
-        batch,
-        corpus_bands=bands,
-        vocab=spark.read.parquet(f"{root}/vocab"),
-        corpus_digests=digests,
-        corpus_grams=grams,
-        corpus_fetch=fetch_docs,
+    return prepare_decisions(
+        docs_incr_batch(spark, sf_dir),
+        _prepare_state_root(spark, sf_dir),
         holdout_mod=holdout_mod,
-        holdout_shingles=(
-            spark.read.parquet(f"{root}/holdout_shingles")
-            if holdout_mod is not None
-            else None
-        ),
     )
 
 
@@ -10325,58 +10234,38 @@ def _run_prepare_stream(
     Setup amortization (r15 verdict ask #7): the stream's INITIAL state
     (four batch=-1 keyed-append tables + frozen vocab + holdout
     shingles) is a pure function of the corpus, so it is produced ONCE
-    per corpus version in a content-tagged scratch root — the stored
-    tick's produce-once pattern — and each run COPIES the pristine
+    per corpus version in a content-tagged scratch root shared with the
+    stored tick (``_prepare_state_root``), and each run COPIES the pristine
     directory into its own state_dir (the stream mutates state:
     per-batch appends + compaction, so runs can't share one live copy).
     The copy is I/O-bounded (~state size) vs ~40 s of corpus-scale
     Spark recompute per graded call; decisions are unchanged because
     the copied state is bit-identical to what the setup built."""
-    import hashlib
     import os
     import shutil
     import tempfile
-    import time
 
-    from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
+    from mistocksync_spark.plans.feeds import docs_incr_batch
     from mistocksync_spark.streaming.merge import (
         incremental_prepare_stream,
-        prime_prepare_state,
+        stage_arrivals,
     )
 
     work = tempfile.mkdtemp(prefix="incr_prep_stream_")
-    tag = _parquet_content_tag(f"{sf_dir}/documents.parquet")
-    root = _produce_once_root(
-        "/tmp/spark_graft_prep_stream_state",
-        "incremental_prepare_stream_state",
-        sf_dir,
-        tag,
-        # holdout built unconditionally so the v1/v3 twins share one root
-        lambda r: prime_prepare_state(
-            docs_incr_corpus(spark, sf_dir).select("doc_id", "text"),
-            r,
-            holdout_mod=50,
-        ),
-    )
     state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
+    shutil.copytree(_prepare_state_root(spark, sf_dir), state_dir)
     os.remove(os.path.join(state_dir, "_STATE_READY"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
     batch = docs_incr_batch(spark, sf_dir).localCheckpoint(eager=False)
-    # id-ordered halves split at the OBSERVED median (r13 ADVICE: the old
-    # hardcoded 0/4.5M/10M cuts silently dropped arrivals whenever the
-    # corpus's id offsets moved); <=cut / >cut is a partition of the
-    # batch, so no row can fall outside the two micro-batches
+    # id-ordered halves split at the OBSERVED median (hardcoded cuts
+    # silently dropped arrivals whenever the corpus's id offsets moved);
+    # <=cut / >cut is a partition of the batch, so no row can fall
+    # outside the two micro-batches
     cut = batch.agg(F.expr("percentile(doc_id, 0.5)").alias("c")).collect()[0].c
-    now = time.time()
-    for i, pred in enumerate([F.col("doc_id") <= cut, F.col("doc_id") > cut]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(pred).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    arrivals = stage_arrivals(
+        batch,
+        [F.col("doc_id") <= cut, F.col("doc_id") > cut],
+        os.path.join(work, "arrivals"),
+    )
     return incremental_prepare_stream(
         spark,
         None,  # state primed above (produce-once root, pristine copy)

@@ -83,12 +83,6 @@ def summary_sheet(summary: DataFrame) -> DataFrame:
     return summary
 
 
-def new_items_sheet(new_items_annotated: DataFrame) -> DataFrame:
-    """«Новые товары»: new items with their advisory fuzzy annotations
-    (ref main.py:3583-3687)."""
-    return new_items_annotated
-
-
 def code_matches_sheet(code_matches: DataFrame) -> DataFrame:
     """«Совпадения по кодам» / «…в скобках» (ref main.py:3687-3782)."""
     return code_matches.select(
@@ -104,20 +98,6 @@ def code_matches_sheet(code_matches: DataFrame) -> DataFrame:
         "capacity_match",
         "matched_in",
         "match_type",
-    )
-
-
-def article_changes_sheet(audit: DataFrame) -> DataFrame:
-    """«Изменения артикулов»: the writeback audit (ref main.py:3988-4088)."""
-    return audit
-
-
-def price_updates_sheet(merged: DataFrame, base_article: str = "article_vitya") -> DataFrame:
-    """«Обновленные цены»: applied updates out of the MERGE result
-    (ref main.py:4088-4134)."""
-    return merged.filter(F.col("updated")).select(
-        F.col(base_article).cast("string").alias("article"),
-        F.col("row_id").alias("base_row"),
     )
 
 

@@ -66,9 +66,3 @@ def load_events(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     # pin the session tz so results don't depend on the host's default
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return normalize_event_ts(spark, load_table(spark, "events", sf_dir))
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=None) -> None:
-    """Register each table as a temp view so SQL-defined feeds can run."""
-    for n in names or TABLES:
-        load_table(spark, n, sf_dir).createOrReplaceTempView(n)

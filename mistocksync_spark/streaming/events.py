@@ -93,23 +93,6 @@ def throttle_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def run_available_now(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Run the streaming plan to completion over the existing files
-    (Trigger.AvailableNow) writing to a parquet sink — used by tests to
-    prove batch/stream parity."""
-    ev = read_events_stream(spark, sf_dir)
-    agg = hourly_aggregate(ev)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("events_hourly_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    spark.table("events_hourly_stream").write.mode("overwrite").parquet(out_dir)
-
-
 def purchase_view_join_stream(events: DataFrame) -> DataFrame:
     """Stream-stream event-time interval join: each purchase joins the
     same user's views from the preceding hour — streaming attribution,

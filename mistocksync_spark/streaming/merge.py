@@ -1,21 +1,114 @@
-"""Incremental price-sync: streaming supplier feed → foreachBatch MERGE
-(the streaming composition of J7 + S12; north-star extension).
+"""Incremental ingest as keyed-state streams.
 
 The reference re-reads the whole base workbook and re-runs the comparison
 per button press (main.py:889-904).  The streaming shape subscribes to
-supplier price-list arrivals and applies each micro-batch as a MERGE into
-the base table: ``foreachBatch`` hands every micro-batch to the *batch*
-operators verbatim, so the merge semantics (ε = 0.001 skip, null-old as
-0.0) are literally the same code that passed the oracle.
+arrivals and hands each micro-batch to the *batch* operators verbatim — so
+the semantics are literally the code that passed the oracle.
 
-At 100 TB: the sink becomes Delta/Iceberg ``MERGE INTO`` (idempotent per
-batch id), the source a Kafka topic of price updates; state lives in the
-table, not the stream.
+``incremental_price_merge`` MERGEs supplier price updates into the base.
+The three keyed-state families — corpus dedup, embedding dedup and corpus
+prepare — decide every arrival against the ACCUMULATED seen-set (initial
+corpus + every earlier arrival, accepted or rejected).  Each arrival's
+verdict depends only on what precedes it, and the vocabulary, holdout
+shingles and IVF quantizer are FROZEN per corpus version, so id-ordered
+micro-batches reproduce the one-shot batch operators bit for bit — which
+is what lets the streams share their oracles.
+
+Each family's state is described once, as data (``_Family``), and run
+through one copy of each step; the family gate is the only per-family code:
+
+- **prime**: one eager ``localCheckpoint`` of the corpus, then every table
+  build overlapped in ``parallel_actions`` at ``batch_id=-1``;
+- **probe**: lazy checkpoints of the batch-side rows, ONE folded
+  ``touched_buckets_multi`` action, pinned and bucket-pruned
+  ``keyed_state_read``s, and a content fetch pruned to the buckets the
+  gate's candidate ids hash to;
+- **tick**: probe, gate, the optional decisions write, then the overlapped
+  appends;
+- **stream**: an availableNow file stream, one arrival file per micro-batch.
+
+Replay safety: every state read pins ``before_batch=batch_id`` (a replayed
+tick sees exactly the pre-batch state, never its own earlier appends) and
+every append carries ``batch_id`` (dynamic partition overwrite — a replay
+REPLACES its own partitions), so per-tick write bytes are ∝ batch, not ∝
+state.  At 100 TB the tables are Delta/Iceberg appends bucketed on their
+keys with MERGE idempotency per micro-batch id; the frozen artifacts are
+rebuilt on rebuild ticks, never on ingest ticks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import glob
+import os
+from dataclasses import dataclass, field
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from mistocksync_spark.operators.dedup import (
+    corpus_digest_state,
+    corpus_gram_state,
+    corpus_signature_state,
+    holdout_shingle_state,
+    incremental_dedup_merge,
+)
+from mistocksync_spark.operators.textual import (
+    corpus_vocabulary,
+    incremental_prepare_tick,
+)
+from mistocksync_spark.operators.vectors import (
+    incremental_embedding_dedup_ivf,
+    inferred_dim,
+    ivf_assign,
+)
+from mistocksync_spark.sinks.layout import (
+    compact_keyed_state,
+    keyed_state_append,
+    keyed_state_read,
+    parallel_actions,
+    touched_buckets,
+    touched_buckets_multi,
+)
+
+
+def _available_now(spark: SparkSession, src: str, apply_batch, checkpoint: str) -> None:
+    """Run ``apply_batch`` over the parquet files under ``src`` as an
+    availableNow file stream, one file per micro-batch.  The query ends by
+    itself once the backlog is consumed, so there is no timeout to outrun
+    on a slow host; a failed batch raises here."""
+    q = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def stage_arrivals(batch: DataFrame, predicates, arrivals_dir: str) -> str:
+    """Write ``batch`` as one single-file arrival per predicate, in order,
+    under ``arrivals_dir``.  The file source orders its backlog by
+    modification time, not by name, so the files get ascending mtimes:
+    that pins micro-batch k to predicate k — the id order the streams'
+    prefix-decomposable verdicts rely on."""
+    import shutil
+    import time
+
+    os.makedirs(arrivals_dir, exist_ok=True)
+    now = time.time()
+    for i, pred in enumerate(predicates):
+        part = f"{arrivals_dir}_part{i}"
+        batch.filter(pred).coalesce(1).write.parquet(part)
+        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+        dst = os.path.join(arrivals_dir, f"arrivals_{i}.parquet")
+        os.rename(os.path.join(part, src), dst)
+        shutil.rmtree(part)
+        os.utime(dst, (now - 120 + 60 * i,) * 2)
+    return arrivals_dir
 
 
 def incremental_price_merge(
@@ -24,19 +117,10 @@ def incremental_price_merge(
     """Run the supplier feed as a file stream and MERGE each micro-batch's
     price updates into the base, persisting the merged base to
     ``out_path`` (overwrite-per-batch stands in for a transactional
-    MERGE)."""
-    from pyspark.sql import functions as F
-
+    MERGE; at 100 TB the source is a Kafka topic of price updates)."""
     from mistocksync_spark.operators.matching import price_update_join
     from mistocksync_spark.plans.feeds import SUPPLIER_FEED_SQL, base_feed
     from mistocksync_spark.sinks.mutate import price_merge
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/part.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{sf_dir.rstrip('/')}/part.parq*")
-    )
 
     def apply_batch(batch_df, batch_id: int) -> None:
         from mistocksync_spark.plans.queries import _preprocess_vitya
@@ -57,13 +141,323 @@ def incremental_price_merge(
         )
         price_merge(base, updates).write.mode("overwrite").parquet(out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _available_now(spark, f"{sf_dir.rstrip('/')}/part.parq*", apply_batch, checkpoint)
+
+
+@dataclass(frozen=True)
+class _Family:
+    """One keyed-state family, as data.  ``content`` is the seen-set table
+    of the batch frame itself, keyed on ``key``; each ``derived`` table is
+    (key columns, derivation from the frame), built the same way at prime
+    and at tick and probed by the tick; each ``frozen`` table is written
+    once at prime and read whole by the gate.  ``gate(frame, reads,
+    fetch)`` gets the pruned reads by table name and the content fetch.
+    With ``decides`` it returns decision rows, committed before the state
+    appends, and the content rows are the frame verbatim; otherwise it
+    returns the rejected ids, which mark the content rows' ``accepted``."""
+
+    content: str
+    key: str
+    cols: tuple
+    derived: dict[str, tuple[list[str], Callable]]
+    gate: Callable
+    frozen: dict[str, Callable] = field(default_factory=dict)
+    decides: bool = False
+
+
+def _corpus_family(threshold: float = 0.5) -> _Family:
+    return _Family(
+        "docs",
+        "doc_id",
+        ("doc_id", "text"),
+        {"bands": (["band", "band_key"], corpus_signature_state)},
+        lambda frame, reads, fetch: incremental_dedup_merge(
+            None,
+            frame,
+            threshold=threshold,
+            corpus_bands=reads["bands"],
+            return_rejected=True,
+            corpus_fetch=fetch,
+        ),
     )
-    q.awaitTermination(300)
+
+
+def _embedding_family(
+    centroids: list[list[float]],
+    n_assign: int = 2,
+    threshold: float = 0.99,
+    dim: int | None = None,
+) -> _Family:
+    return _Family(
+        "vecs",
+        "vec_id",
+        # one appended table holds every batch's rows, so the element type
+        # must be uniform across appends: widen to double at the boundary
+        # (exact for float inputs; the cosine math is already double)
+        ("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
+        {"cells": (["centroid"], lambda f: ivf_assign(f, centroids, n_assign=n_assign))},
+        lambda frame, reads, fetch: incremental_embedding_dedup_ivf(
+            None,
+            frame,
+            centroids,
+            threshold=threshold,
+            n_assign=n_assign,
+            dim=dim,
+            corpus_cells=reads["cells"],
+            return_rejected=True,
+            corpus_fetch=fetch,
+        ),
+    )
+
+
+def _prepare_family(
+    rel_threshold: float = 1e-4, holdout_mod: int | None = None
+) -> _Family:
+    frozen = {"vocab": lambda f: corpus_vocabulary(f, rel_threshold=rel_threshold)}
+    if holdout_mod is not None:
+        # v3: the frozen holdout shingle set the decontamination gate probes
+        frozen["holdout_shingles"] = lambda f: holdout_shingle_state(
+            f, holdout_mod=holdout_mod
+        )
+    return _Family(
+        "docs",
+        "doc_id",
+        ("doc_id", "text"),
+        {
+            "bands": (["band", "band_key"], corpus_signature_state),
+            "digests": (["digest"], corpus_digest_state),
+            "grams": (["g"], corpus_gram_state),
+        },
+        lambda frame, reads, fetch: incremental_prepare_tick(
+            None,
+            frame,
+            corpus_bands=reads["bands"],
+            vocab=reads["vocab"],
+            corpus_digests=reads["digests"],
+            corpus_grams=reads["grams"],
+            corpus_fetch=fetch,
+            holdout_mod=holdout_mod,
+            holdout_shingles=reads.get("holdout_shingles"),
+        ),
+        frozen,
+        decides=True,
+    )
+
+
+def _marked(frame: DataFrame, key: str, rejected: DataFrame | None = None) -> DataFrame:
+    """Seen-set content rows with (origin, accepted): the prime corpus is
+    all accepted; a tick's arrivals are accepted unless rejected."""
+    cols = frame.columns
+    if rejected is None:
+        origin, accepted = F.lit("corpus"), F.lit(True)
+    else:
+        frame = frame.join(
+            F.broadcast(rejected.withColumn("__rej", F.lit(1))), on=key, how="left"
+        )
+        origin, accepted = F.lit("batch"), F.col("__rej").isNull()
+    return frame.select(*cols, origin.alias("origin"), accepted.alias("accepted"))
+
+
+def _prime(fam: _Family, corpus: DataFrame, state_dir: str) -> str:
+    """Build a family's initial state under ``state_dir``."""
+    # eager-checkpoint the shared corpus once, so no two concurrent builds
+    # race to materialize one lazy checkpoint and none re-derives the feed
+    # lineage; the prime wall is then ~max() of the builds, not their sum
+    frame = corpus.select(*fam.cols).localCheckpoint()
+    content = frame if fam.decides else _marked(frame, fam.key)
+
+    def append(table, keys, rows):
+        return lambda: keyed_state_append(
+            rows(frame), os.path.join(state_dir, table), keys, batch_id=-1
+        )
+
+    def freeze(table, rows):
+        return lambda: rows(frame).write.mode("overwrite").parquet(
+            os.path.join(state_dir, table)
+        )
+
+    parallel_actions(
+        append(fam.content, [fam.key], lambda _: content),
+        *(append(t, keys, rows) for t, (keys, rows) in fam.derived.items()),
+        *(freeze(t, rows) for t, rows in fam.frozen.items()),
+    )
+    return state_dir
+
+
+def _decide(fam: _Family, batch_df: DataFrame, state_dir: str, before_batch: int | None):
+    """Probe the state with one batch and run the gate; returns (frame,
+    derived batch rows by table, gate output)."""
+    s = batch_df.sparkSession
+    frame = batch_df.select(*fam.cols).localCheckpoint(eager=False)
+    # batch-side derived rows, computed ONCE: probe keys now, appended
+    # verbatim after the gate
+    rows = {
+        t: derive(frame).localCheckpoint(eager=False)
+        for t, (_, derive) in fam.derived.items()
+    }
+    tb = touched_buckets_multi({t: (rows[t], fam.derived[t][0]) for t in rows})
+
+    def read(table, buckets):
+        return keyed_state_read(
+            s, os.path.join(state_dir, table), buckets, before_batch=before_batch
+        )
+
+    reads = {t: read(t, tb[t]) for t in rows}
+    reads.update({t: s.read.parquet(os.path.join(state_dir, t)) for t in fam.frozen})
+    out = fam.gate(
+        frame, reads, lambda ids: read(fam.content, touched_buckets(ids, [fam.key]))
+    )
+    return frame, rows, out
+
+
+def _tick(fam: _Family, batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+    """One ingest tick: decide the batch, then append it to the state."""
+    frame, rows, out = _decide(fam, batch_df, state_dir, batch_id)
+    if fam.decides:
+        # sequential, before the appends: the tick's externally observable
+        # commit order is decisions, then state
+        out.write.mode("overwrite").parquet(
+            os.path.join(state_dir, "decisions", f"b{batch_id}")
+        )
+        content = frame
+    else:
+        content = _marked(frame, fam.key, out)
+    # every arrival joins the seen-set, accepted or not.  The appends are
+    # independent jobs on distinct tables, and the derived frames are
+    # already materialized by the probe.  The content rows' gate lineage
+    # still scans state tables while a sibling appends to them; that is
+    # safe because keyed_state_read snapshots the file index eagerly at
+    # read time AND prunes batch partitions >= the current batch, so a
+    # concurrent append (or a replayed dynamic overwrite) can never change
+    # which files the gate reads
+    appends = [(fam.content, [fam.key], content)]
+    appends += [(t, fam.derived[t][0], df) for t, df in rows.items()]
+    parallel_actions(
+        *(
+            lambda t=t, keys=keys, df=df: keyed_state_append(
+                df, os.path.join(state_dir, t), keys, batch_id=batch_id
+            )
+            for t, keys, df in appends
+        )
+    )
+
+
+def _ready(fam: _Family, corpus: DataFrame | None, state_dir: str) -> None:
+    """Prime the state from ``corpus``; with ``corpus=None``, require a
+    state_dir that already holds a PRIMED state (the graded entries
+    produce it once per corpus version and copy the pristine root per
+    run)."""
+    if corpus is not None:
+        _prime(fam, corpus, state_dir)
+        return
+    tables = [fam.content, *fam.derived, *fam.frozen]
+    missing = [
+        p for p in (os.path.join(state_dir, t) for t in tables) if not os.path.isdir(p)
+    ]
+    if missing:
+        raise ValueError(
+            f"corpus=None requires a primed state_dir; missing: {missing}"
+        )
+
+
+def _stream(
+    fam: _Family,
+    spark: SparkSession,
+    arrivals_dir: str,
+    state_dir: str,
+    checkpoint: str,
+    compact_every: int = 0,
+) -> DataFrame:
+    """Tick every arrival file in ``arrivals_dir`` against the primed state;
+    returns the union of decisions, or the accepted (key, origin) set."""
+
+    def apply_batch(batch_df, batch_id: int) -> None:
+        batch_id = int(batch_id)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            # compaction at tick START, with current_batch=batch_id: if a
+            # prior attempt of THIS batch crashed after appending but before
+            # its checkpoint committed, those uncommitted batch>=batch_id
+            # partitions are dropped before the rebase-to-max fold — kept,
+            # they would become the max, before_batch reads would return
+            # zero pre-batch rows, and the replay's dynamic overwrite would
+            # wipe the rebased history.  Committed state content is
+            # unchanged either way.
+            for t in (fam.content, *fam.derived):
+                compact_keyed_state(
+                    batch_df.sparkSession,
+                    os.path.join(state_dir, t),
+                    current_batch=batch_id,
+                )
+        _tick(fam, batch_df, batch_id, state_dir)
+
+    _available_now(spark, arrivals_dir, apply_batch, checkpoint)
+    if fam.decides:
+        parts = sorted(glob.glob(os.path.join(state_dir, "decisions", "b*")))
+        return spark.read.parquet(*parts).select("doc_id", "reason")
+    return (
+        keyed_state_read(spark, os.path.join(state_dir, fam.content))
+        .filter(F.col("accepted"))
+        .select(fam.key, "origin")
+    )
+
+
+def prime_corpus_dedup_state(corpus, state_dir: str) -> str:
+    """The corpus dedup stream's initial state: ``docs`` (doc_id, text,
+    origin, accepted) and ``bands`` (``corpus_signature_state``), both
+    ``batch=-1``."""
+    return _prime(_corpus_family(), corpus, state_dir)
+
+
+def corpus_dedup_tick_against_state(
+    batch_df, batch_id: int, state_dir: str, threshold: float = 0.5
+) -> None:
+    """One corpus-dedup ingest tick (the ``incremental_corpus_dedup``
+    micro-batch body): band probe and candidate docs fetch both
+    bucket-pruned, reads pinned before ``batch_id``."""
+    _tick(_corpus_family(threshold), batch_df, batch_id, state_dir)
+
+
+def incremental_corpus_dedup(
+    spark: SparkSession,
+    corpus,
+    arrivals_dir: str,
+    state_dir: str,
+    checkpoint: str,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Streaming twin of ``operators.dedup.incremental_dedup_merge``: dedup
+    each arrival file against the accumulated seen-set.  ``corpus=None``
+    runs on an already primed ``state_dir``.  Returns the final accepted
+    corpus as (doc_id, origin)."""
+    fam = _corpus_family(threshold)
+    _ready(fam, corpus, state_dir)
+    return _stream(fam, spark, arrivals_dir, state_dir, checkpoint)
+
+
+def prime_embedding_dedup_state(
+    corpus, centroids: list[list[float]], state_dir: str, n_assign: int = 2
+) -> str:
+    """The embedding dedup stream's initial state: ``vecs`` (vec_id,
+    embedding, origin, accepted) and ``cells`` (the IVF inverted table,
+    keyed on centroid), both ``batch=-1``."""
+    return _prime(_embedding_family(centroids, n_assign), corpus, state_dir)
+
+
+def embedding_dedup_tick_against_state(
+    batch_df,
+    batch_id: int,
+    state_dir: str,
+    centroids: list[list[float]],
+    threshold: float = 0.99,
+    n_assign: int = 2,
+    dim: int | None = None,
+) -> None:
+    """One vector ingest tick (the ``incremental_embedding_dedup_stream``
+    micro-batch body) under the FROZEN quantizer ``centroids``: cell probe
+    and exact-rescore vector fetch both bucket-pruned, reads pinned before
+    ``batch_id``."""
+    fam = _embedding_family(centroids, n_assign, threshold, dim)
+    _tick(fam, batch_df, batch_id, state_dir)
 
 
 def incremental_embedding_dedup_stream(
@@ -76,559 +470,24 @@ def incremental_embedding_dedup_stream(
     threshold: float = 0.99,
     n_assign: int = 2,
     dim: int | None = None,
-) -> "DataFrame":
+) -> DataFrame:
     """Streaming twin of ``operators.vectors.incremental_embedding_dedup_ivf``
-    — the VECTOR ingest tick as a continuously-running pipeline under a
-    FROZEN quantizer (round-12; the vector sibling of
-    ``incremental_corpus_dedup`` above, closing the batch/stream symmetry
-    gap on the embedding side).
-
-    Vector arrivals land as parquet files in ``arrivals_dir``; each
-    micro-batch is deduped against the ACCUMULATED seen-set (initial
-    corpus + every earlier arrival, accepted or rejected — the
-    prefix-decomposable rule the batch operator documents), with
-    candidates generated from the PERSISTED IVF cell state (only the
-    arriving batch pays the one-matmul assignment per tick).  Id-ordered
-    micro-batches therefore produce bit-identical accepted sets to the
-    one-shot batch run — the property that makes the exact all-pairs
-    oracle shareable.
-
-    State (r15 — migrated off the last ``v{k}`` full-rewrite layout,
-    with ``incremental_corpus_dedup``): KEYED-APPEND tables in the
-    prepare stream's shape — ``vecs`` (vec_id, embedding, origin,
-    accepted; keyed on vec_id) and ``cells`` (the inverted table, keyed
-    on centroid) — per-batch ``batch=<id>`` partitions under dynamic
-    overwrite, reads pinned ``before_batch=<id>``: appends ∝ batch,
-    the cell probe reads only the buckets the batch's own assigned
-    centroids hash to, the exact-rescore vector fetch reads only the
-    buckets the cell probe's candidate ids hash to (``corpus_fetch``),
-    and checkpoint-recovery replay is idempotent.  At 100 TB the two
-    tables are Delta/Iceberg appends with MERGE per micro-batch id; the
-    quantizer re-trains on ``ivf_index_rebuild`` ticks, never ingest
-    ticks.  Returns the final accepted corpus as (vec_id, origin).
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.operators.vectors import inferred_dim, ivf_assign
-    from mistocksync_spark.sinks.layout import keyed_state_append, keyed_state_read
-
-    p_vecs = os.path.join(state_dir, "vecs")
-    p_cells = os.path.join(state_dir, "cells")
-    if corpus is not None:
-        if dim is None:
-            dim = inferred_dim(corpus, "embedding")
-        prime_embedding_dedup_state(
-            corpus, centroids, state_dir, n_assign=n_assign
-        )
-    else:
-        # r16 (guide §1.2/§5 — the prepare stream's corpus=None contract):
-        # state_dir must already hold a PRIMED vecs/cells pair (a
-        # prime_embedding_dedup_state output; the graded entry produces it
-        # once per corpus version and copies the pristine root per run)
-        missing = [p for p in (p_vecs, p_cells) if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                "incremental_embedding_dedup_stream(corpus=None) requires "
-                f"a primed state_dir; missing: {missing}"
+    under a FROZEN quantizer (the quantizer re-trains on
+    ``ivf_index_rebuild`` ticks, never ingest ticks).  ``corpus=None`` runs
+    on an already primed ``state_dir``.  Returns the final accepted corpus
+    as (vec_id, origin)."""
+    _ready(_embedding_family(centroids, n_assign), corpus, state_dir)
+    if dim is None:
+        dim = (
+            inferred_dim(corpus, "embedding")
+            if corpus is not None
+            else len(
+                spark.read.parquet(os.path.join(state_dir, "vecs"))
+                .select("embedding").head()["embedding"]
             )
-        if dim is None:
-            first = spark.read.parquet(p_vecs).select("embedding").head()
-            dim = len(first["embedding"])
-
-    schema = spark.read.parquet(arrivals_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
-    )
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        embedding_dedup_tick_against_state(
-            batch_df,
-            int(batch_id),
-            state_dir,
-            centroids,
-            threshold=threshold,
-            n_assign=n_assign,
-            dim=dim,
         )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "incremental_embedding_dedup_stream did not finish in 300 s"
-        )
-    return (
-        keyed_state_read(spark, p_vecs)
-        .filter(F.col("accepted"))
-        .select("vec_id", "origin")
-    )
-
-
-def prime_embedding_dedup_state(
-    corpus,
-    centroids: list[list[float]],
-    state_dir: str,
-    n_assign: int = 2,
-) -> str:
-    """Build the embedding dedup stream's INITIAL state under
-    ``state_dir``: the two ``batch=-1`` keyed-append tables (``vecs`` on
-    vec_id, ``cells`` — the IVF inverted table — on centroid).  Factored
-    out of ``incremental_embedding_dedup_stream`` (r16, the
-    ``prime_prepare_state`` precedent / r15 verdict ask #7's pattern) so
-    the graded entry can produce it once per corpus version in a
-    content-tagged scratch root and copy the pristine directory per run
-    — at 100 TB the initial state is the standing table; only arrivals
-    are recomputed per tick."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.operators.vectors import ivf_assign
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        parallel_actions,
-    )
-
-    # one appended table holds every batch's rows, so the embedding
-    # element type must be uniform across appends: widen to double at
-    # the boundary (exact for float inputs; the cosine math is already
-    # double).  r16 (guide §2.6): eager-checkpoint the shared corpus
-    # once, then overlap the two independent table builds
-    corpus = corpus.localCheckpoint()
-    parallel_actions(
-        lambda: keyed_state_append(
-            corpus.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.lit("corpus").alias("origin"),
-                F.lit(True).alias("accepted"),
-            ),
-            os.path.join(state_dir, "vecs"),
-            ["vec_id"],
-            batch_id=-1,
-        ),
-        lambda: keyed_state_append(
-            ivf_assign(corpus, centroids, n_assign=n_assign),
-            os.path.join(state_dir, "cells"),
-            ["centroid"],
-            batch_id=-1,
-        ),
-    )
-    return state_dir
-
-
-def embedding_dedup_tick_against_state(
-    batch_df,
-    batch_id: int,
-    state_dir: str,
-    centroids: list[list[float]],
-    threshold: float = 0.99,
-    n_assign: int = 2,
-    dim: int | None = None,
-) -> None:
-    """ONE vector ingest tick against the keyed-append vecs/cells state
-    under ``state_dir`` — the ``foreachBatch`` body of
-    ``incremental_embedding_dedup_stream``, module-level (r16, the
-    ``prepare_tick_against_state`` precedent) so the dedup-stream
-    ladders time exactly what the stream runs per micro-batch and its
-    replay idempotency is directly testable.  Reads pin
-    ``before_batch=batch_id``; appends carry ``batch_id`` (dynamic
-    overwrite); the cell probe and the exact-rescore vector fetch are
-    both bucket-pruned."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.operators.vectors import (
-        incremental_embedding_dedup_ivf,
-        ivf_assign,
-    )
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        parallel_actions,
-        touched_buckets,
-        touched_buckets_multi,
-    )
-
-    s = batch_df.sparkSession
-    p_vecs = os.path.join(state_dir, "vecs")
-    p_cells = os.path.join(state_dir, "cells")
-    batch_df = batch_df.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).localCheckpoint(eager=False)
-    bcells = ivf_assign(
-        batch_df, centroids, n_assign=n_assign
-    ).localCheckpoint(eager=False)
-    tb = touched_buckets_multi({"cells": (bcells, ["centroid"])})
-    cells = keyed_state_read(s, p_cells, tb["cells"], before_batch=batch_id)
-
-    def fetch_vecs(c_ids):
-        return keyed_state_read(
-            s, p_vecs, touched_buckets(c_ids, ["vec_id"]),
-            before_batch=batch_id,
-        )
-
-    rejected = incremental_embedding_dedup_ivf(
-        None,
-        batch_df,
-        centroids,
-        threshold=threshold,
-        n_assign=n_assign,
-        dim=dim,
-        corpus_cells=cells,
-        return_rejected=True,
-        corpus_fetch=fetch_vecs,
-    )
-    new_rows = batch_df.join(
-        F.broadcast(rejected.withColumn("__rej", F.lit(1))),
-        on="vec_id",
-        how="left",
-    ).select(
-        "vec_id",
-        "embedding",
-        F.lit("batch").alias("origin"),
-        F.col("__rej").isNull().alias("accepted"),
-    )
-    # r16 (guide §2.6): the two appends are independent jobs on distinct
-    # tables (bcells already materialized by the touched-buckets probe).
-    # new_rows' rejected lineage still scans the vecs/cells state tables
-    # concurrently with the sibling append into p_cells; that is safe
-    # because keyed_state_read snapshots the file index eagerly at read
-    # time AND prunes batch=<id> partitions >= the current batch, so a
-    # concurrent append (or a replayed dynamic overwrite) can never change
-    # which files the rejected DAG reads — overlap them instead of paying
-    # two sequential driver round-trips per micro-batch
-    parallel_actions(
-        lambda: keyed_state_append(new_rows, p_vecs, ["vec_id"], batch_id=batch_id),
-        lambda: keyed_state_append(bcells, p_cells, ["centroid"], batch_id=batch_id),
-    )
-
-
-def incremental_corpus_dedup(
-    spark: SparkSession,
-    corpus,
-    arrivals_dir: str,
-    state_dir: str,
-    checkpoint: str,
-    threshold: float = 0.5,
-) -> "DataFrame":
-    """Streaming twin of ``operators.dedup.incremental_dedup_merge``: the
-    corpus-ingest tick as a continuously-running pipeline.
-
-    Arrivals land as parquet files in ``arrivals_dir``; each micro-batch is
-    deduped against the ACCUMULATED seen-set (initial corpus + every
-    earlier arrival, accepted or rejected — the same prefix-decomposable
-    rule the batch operator documents) and the state table is appended.
-    Because each document's verdict depends only on documents that precede
-    it, replaying the arrivals in id-ordered micro-batches produces
-    bit-identical accepted sets to the one-shot batch run — that property
-    is what makes the oracle shareable.
-
-    State (r15 — migrated off the last ``v{k}`` full-rewrite layout):
-    the same KEYED-APPEND shape the prepare stream runs — ``docs``
-    (doc_id, text, origin, accepted; keyed on doc_id) and ``bands``
-    (the persisted ``corpus_signature_state``, keyed on
-    (band, band_key)) — written per micro-batch under a ``batch=<id>``
-    partition with dynamic overwrite, reads pinned to
-    ``before_batch=<id>``.  So: per-tick write bytes ∝ batch (the old
-    layout rewrote BOTH tables in full every tick — O(state) write
-    amplification, the r13 verdict's gap, closed here for the dedup
-    stream as r14 closed it for the prepare stream); the band probe
-    reads only the buckets the batch's own band keys hash to; the
-    candidate docs fetch reads only the buckets the band probe's
-    corpus-side candidate ids hash to (``corpus_fetch``); and a
-    checkpoint-recovery replay of batch k reads exactly the pre-batch
-    state and REPLACES its own partitions — the version pinning the old
-    layout provided, kept, without its rewrite cost.  At 100 TB the two
-    tables are Delta/Iceberg appends bucketed on their keys with MERGE
-    idempotency per micro-batch id.  Returns the final accepted corpus
-    as (doc_id, origin).
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.sinks.layout import keyed_state_read
-
-    p_docs = os.path.join(state_dir, "docs")
-    p_bands = os.path.join(state_dir, "bands")
-    if corpus is not None:
-        prime_corpus_dedup_state(corpus, state_dir)
-    else:
-        # r16 (the prepare stream's corpus=None contract): state_dir must
-        # already hold a PRIMED docs/bands pair (a prime_corpus_dedup_state
-        # output; the graded entry produces it once per corpus version and
-        # copies the pristine root per run)
-        missing = [p for p in (p_docs, p_bands) if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                "incremental_corpus_dedup(corpus=None) requires a primed "
-                f"state_dir; missing: {missing}"
-            )
-
-    schema = spark.read.parquet(arrivals_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
-    )
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        corpus_dedup_tick_against_state(
-            batch_df, int(batch_id), state_dir, threshold=threshold
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("incremental_corpus_dedup stream did not finish in 300 s")
-    return (
-        keyed_state_read(spark, p_docs)
-        .filter(F.col("accepted"))
-        .select("doc_id", "origin")
-    )
-
-
-def prime_corpus_dedup_state(corpus, state_dir: str) -> str:
-    """Build the corpus dedup stream's INITIAL state under ``state_dir``:
-    the two ``batch=-1`` keyed-append tables (``docs`` on doc_id,
-    ``bands`` — the persisted ``corpus_signature_state`` — on
-    (band, band_key)).  Factored out of ``incremental_corpus_dedup``
-    (r16, the ``prime_prepare_state`` precedent) so the graded entry can
-    produce it once per corpus version in a content-tagged scratch root
-    and copy the pristine directory per run — at 100 TB the initial
-    state is the standing table; only arrivals are recomputed per
-    tick."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.operators.dedup import corpus_signature_state
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        parallel_actions,
-    )
-
-    # r16 (guide §2.6): eager-checkpoint the shared corpus once, then
-    # overlap the two independent table builds
-    corpus_docs = corpus.select("doc_id", "text").localCheckpoint()
-    parallel_actions(
-        lambda: keyed_state_append(
-            corpus_docs.select(
-                "doc_id",
-                "text",
-                F.lit("corpus").alias("origin"),
-                F.lit(True).alias("accepted"),
-            ),
-            os.path.join(state_dir, "docs"),
-            ["doc_id"],
-            batch_id=-1,
-        ),
-        lambda: keyed_state_append(
-            corpus_signature_state(corpus_docs),
-            os.path.join(state_dir, "bands"),
-            ["band", "band_key"],
-            batch_id=-1,
-        ),
-    )
-    return state_dir
-
-
-def corpus_dedup_tick_against_state(
-    batch_df,
-    batch_id: int,
-    state_dir: str,
-    threshold: float = 0.5,
-) -> None:
-    """ONE corpus-dedup ingest tick against the keyed-append docs/bands
-    state under ``state_dir`` — the ``foreachBatch`` body of
-    ``incremental_corpus_dedup``, module-level (r16, the
-    ``prepare_tick_against_state`` precedent) so the dedup-stream
-    ladders time exactly what the stream runs per micro-batch and its
-    replay idempotency is directly testable.  Reads pin
-    ``before_batch=batch_id``; appends carry ``batch_id`` (dynamic
-    overwrite); the band probe and the candidate docs fetch are both
-    bucket-pruned."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mistocksync_spark.operators.dedup import (
-        corpus_signature_state,
-        incremental_dedup_merge,
-    )
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        parallel_actions,
-        touched_buckets,
-        touched_buckets_multi,
-    )
-
-    s = batch_df.sparkSession
-    p_docs = os.path.join(state_dir, "docs")
-    p_bands = os.path.join(state_dir, "bands")
-    batch_df = batch_df.select("doc_id", "text").localCheckpoint(eager=False)
-    bbands = corpus_signature_state(batch_df).localCheckpoint(eager=False)
-    tb = touched_buckets_multi({"bands": (bbands, ["band", "band_key"])})
-    bands = keyed_state_read(s, p_bands, tb["bands"], before_batch=batch_id)
-
-    def fetch_docs(c_ids):
-        return keyed_state_read(
-            s, p_docs, touched_buckets(c_ids, ["doc_id"]),
-            before_batch=batch_id,
-        )
-
-    rejected = incremental_dedup_merge(
-        None,
-        batch_df,
-        threshold=threshold,
-        corpus_bands=bands,
-        return_rejected=True,
-        corpus_fetch=fetch_docs,
-    )
-    new_rows = batch_df.join(
-        F.broadcast(rejected.withColumn("__rej", F.lit(1))),
-        on="doc_id",
-        how="left",
-    ).select(
-        "doc_id",
-        "text",
-        F.lit("batch").alias("origin"),
-        F.col("__rej").isNull().alias("accepted"),
-    )
-    # r16 (guide §2.6): independent jobs on distinct tables (bbands already
-    # materialized by the touched-buckets probe) — overlap the appends
-    parallel_actions(
-        lambda: keyed_state_append(new_rows, p_docs, ["doc_id"], batch_id=batch_id),
-        lambda: keyed_state_append(
-            bbands, p_bands, ["band", "band_key"], batch_id=batch_id
-        ),
-    )
-
-
-def prepare_tick_against_state(
-    batch_df,
-    batch_id: int,
-    state_dir: str,
-    holdout_mod: int | None = None,
-) -> None:
-    """ONE prepare ingest tick against the keyed-append state under
-    ``state_dir`` — the ``foreachBatch`` body of
-    ``incremental_prepare_stream``, module-level so its replay
-    idempotency is directly testable (tests/test_streaming.py runs the
-    same batch twice and asserts identical decisions and state).
-
-    Replay safety (r14 ADVICE): every state read pins
-    ``before_batch=batch_id`` (a replayed tick sees exactly the
-    pre-batch state, never its own earlier appends) and every append
-    carries ``batch_id`` (dynamic partition overwrite — a replay
-    REPLACES its own partitions).  Reads are fully pruned: the three
-    key-state bucket sets come from ONE folded driver action
-    (``touched_buckets_multi``), and the docs store is read only in the
-    buckets the band probe's candidate corpus ids hash to
-    (``corpus_fetch``).  ``holdout_mod`` switches the tick to the v3
-    gate set (frozen holdout shingle state expected at
-    ``{state_dir}/holdout_shingles``)."""
-    import os
-
-    from mistocksync_spark.operators.dedup import (
-        char_gram_positions,
-        corpus_digest_state,
-        corpus_signature_state,
-    )
-    from mistocksync_spark.operators.textual import incremental_prepare_tick
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        parallel_actions,
-        touched_buckets,
-        touched_buckets_multi,
-    )
-
-    s = batch_df.sparkSession
-    p_docs = os.path.join(state_dir, "docs")
-    p_bands = os.path.join(state_dir, "bands")
-    p_dig = os.path.join(state_dir, "digests")
-    p_grams = os.path.join(state_dir, "grams")
-    batch_df = batch_df.select("doc_id", "text").localCheckpoint(eager=False)
-    # batch-side derived state rows, computed ONCE: probe keys now,
-    # appended verbatim after the decisions are materialized
-    bbands = corpus_signature_state(batch_df).localCheckpoint(eager=False)
-    bdig = corpus_digest_state(batch_df).localCheckpoint(eager=False)
-    bgrams = (
-        char_gram_positions(batch_df).select("g").distinct()
-        .localCheckpoint(eager=False)
-    )
-    tb = touched_buckets_multi(
-        {
-            "bands": (bbands, ["band", "band_key"]),
-            "digests": (bdig, ["digest"]),
-            "grams": (bgrams, ["g"]),
-        }
-    )
-    bands = keyed_state_read(s, p_bands, tb["bands"], before_batch=batch_id)
-    digests = keyed_state_read(s, p_dig, tb["digests"], before_batch=batch_id)
-    grams = keyed_state_read(s, p_grams, tb["grams"], before_batch=batch_id)
-    vocab = s.read.parquet(os.path.join(state_dir, "vocab"))
-
-    def fetch_docs(c_ids):
-        return keyed_state_read(
-            s, p_docs, touched_buckets(c_ids, ["doc_id"]), before_batch=batch_id
-        )
-
-    hs = (
-        s.read.parquet(os.path.join(state_dir, "holdout_shingles"))
-        if holdout_mod is not None
-        else None
-    )
-    dec = incremental_prepare_tick(
-        None,
-        batch_df,
-        corpus_bands=bands,
-        vocab=vocab,
-        corpus_digests=digests,
-        corpus_grams=grams,
-        corpus_fetch=fetch_docs,
-        holdout_mod=holdout_mod,
-        holdout_shingles=hs,
-    )
-    dec.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "decisions", f"b{batch_id}")
-    )
-    # seen-set append: EVERY arrival joins the state (accepted or
-    # not), the prefix-decomposability invariant; appends derive
-    # only from the batch, so per-tick write bytes ∝ batch size.
-    # r16 (guide §2.6): the four appends are independent jobs on distinct
-    # tables, and every input frame is already materialized (batch_df via
-    # the decisions write, the other three via the touched-buckets probe)
-    # — overlap them instead of paying four sequential driver round-trips
-    # per micro-batch.  The decisions write stays sequential ABOVE so the
-    # tick's externally observable commit order (decisions, then state)
-    # is unchanged.
-    parallel_actions(
-        lambda: keyed_state_append(batch_df, p_docs, ["doc_id"], batch_id=batch_id),
-        lambda: keyed_state_append(
-            bbands, p_bands, ["band", "band_key"], batch_id=batch_id
-        ),
-        lambda: keyed_state_append(bdig, p_dig, ["digest"], batch_id=batch_id),
-        lambda: keyed_state_append(bgrams, p_grams, ["g"], batch_id=batch_id),
-    )
+    fam = _embedding_family(centroids, n_assign, threshold, dim)
+    return _stream(fam, spark, arrivals_dir, state_dir, checkpoint)
 
 
 def prime_prepare_state(
@@ -637,72 +496,27 @@ def prime_prepare_state(
     rel_threshold: float = 1e-4,
     holdout_mod: int | None = None,
 ) -> str:
-    """Build the prepare stream's INITIAL state under ``state_dir``: the
-    four keyed-append tables (docs/bands/digests/grams, all ``batch=-1``)
-    plus the frozen vocabulary and — under ``holdout_mod`` — the frozen
-    holdout shingle set.  Factored out of ``incremental_prepare_stream``
-    (r15 verdict ask #7) so the graded entries can produce it ONCE per
-    corpus version in a content-tagged scratch root and copy the
-    pristine directory per run, instead of re-deriving ~40 s of
-    corpus-scale state every stream invocation — at 100 TB the initial
-    state is the standing table; only arrivals are ever recomputed."""
-    import os
+    """The prepare stream's initial state: ``docs``, ``bands``, ``digests``
+    and ``grams`` at ``batch=-1``, the frozen ``vocab`` and, under
+    ``holdout_mod``, the frozen ``holdout_shingles``."""
+    return _prime(_prepare_family(rel_threshold, holdout_mod), corpus, state_dir)
 
-    from mistocksync_spark.operators.dedup import (
-        corpus_digest_state,
-        corpus_gram_state,
-        corpus_signature_state,
-    )
-    from mistocksync_spark.operators.textual import corpus_vocabulary
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        parallel_actions,
-    )
 
-    # r16 (guide §2.6 + §5): the five/six state builds are independent
-    # jobs over ONE shared input — eager-checkpoint the corpus once (so
-    # no two concurrent jobs race to materialize the same lazy
-    # checkpoint, and none re-derives the feed lineage), then overlap the
-    # writes; the prime wall becomes ~max() of the builds, not their sum
-    corpus_docs = corpus.select("doc_id", "text").localCheckpoint()
-    builds = [
-        lambda: keyed_state_append(
-            corpus_docs, os.path.join(state_dir, "docs"), ["doc_id"], batch_id=-1
-        ),
-        lambda: keyed_state_append(
-            corpus_signature_state(corpus_docs),
-            os.path.join(state_dir, "bands"),
-            ["band", "band_key"],
-            batch_id=-1,
-        ),
-        lambda: keyed_state_append(
-            corpus_digest_state(corpus_docs),
-            os.path.join(state_dir, "digests"),
-            ["digest"],
-            batch_id=-1,
-        ),
-        lambda: keyed_state_append(
-            corpus_gram_state(corpus_docs),
-            os.path.join(state_dir, "grams"),
-            ["g"],
-            batch_id=-1,
-        ),
-        lambda: corpus_vocabulary(corpus_docs, rel_threshold=rel_threshold)
-        .write.mode("overwrite")
-        .parquet(os.path.join(state_dir, "vocab")),
-    ]
-    if holdout_mod is not None:
-        # v3: the frozen per-corpus-version holdout shingle state the
-        # decontamination gate probes (never grows on ingest ticks)
-        from mistocksync_spark.operators.dedup import holdout_shingle_state
+def prepare_decisions(
+    batch_df, state_dir: str, holdout_mod: int | None = None
+) -> DataFrame:
+    """Per-arrival prepare decisions of ``batch_df`` against a primed state,
+    unpinned and without writing anything: the stored-state tick."""
+    return _decide(_prepare_family(holdout_mod=holdout_mod), batch_df, state_dir, None)[2]
 
-        builds.append(
-            lambda: holdout_shingle_state(corpus_docs, holdout_mod=holdout_mod)
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, "holdout_shingles"))
-        )
-    parallel_actions(*builds)
-    return state_dir
+
+def prepare_tick_against_state(
+    batch_df, batch_id: int, state_dir: str, holdout_mod: int | None = None
+) -> None:
+    """One prepare ingest tick (the ``incremental_prepare_stream``
+    micro-batch body): decisions to ``decisions/b{batch_id}``, then the
+    four keyed appends.  ``holdout_mod`` switches to the v3 gate set."""
+    _tick(_prepare_family(holdout_mod=holdout_mod), batch_df, batch_id, state_dir)
 
 
 def incremental_prepare_stream(
@@ -714,123 +528,15 @@ def incremental_prepare_stream(
     rel_threshold: float = 1e-4,
     holdout_mod: int | None = None,
     compact_every: int = 1,
-) -> "DataFrame":
-    """Streaming twin of ``operators.textual.incremental_prepare_tick`` —
-    the corpus-prepare ingest as a continuously-running pipeline: every
-    arriving micro-batch gets per-document decision rows (exact_dup /
-    near_dup / gopher / rare_tokens / ok) against the ACCUMULATED
-    seen-set, and the union of all micro-batch decisions must equal the
-    one-shot tick BIT-FOR-BIT (oracle shared).
-
-    Why the decisions decompose: the exact gate's seen-set (corpus +
-    every earlier arrival, accepted or rejected) and the near-dup rule
-    are both arrival-ordered and verdict-independent — the
-    ``incremental_dedup_merge`` prefix-decomposability argument — the
-    Gopher gate is scan-local to the arrival, and the OOV gate scores
-    against a FROZEN vocabulary built once from the initial corpus (the
-    rare-token analogue of the frozen IVF quantizer: the vocabulary
-    refreshes on rebuild ticks, never ingest ticks — and freezing is
-    exactly what keeps tick decisions independent of batch boundaries).
-
-    State (r14 rework — every corpus-proportional rewrite is gone; r15 —
-    replay-safe and fully pruned): four KEYED-APPEND tables in the
-    ``sinks/layout.keyed_state_append`` bucketed layout — ``docs`` (text
-    store, keyed on doc_id), ``bands`` (keyed on (band, band_key)),
-    ``digests`` (keyed on digest), and ``grams`` (keyed on g) — plus
-    ``vocab`` (written once, FROZEN) and per-batch ``decisions/b{k}``.
-    Each micro-batch APPENDS only its own rows (per-tick write bytes ∝
-    batch, not ∝ state), under a ``batch=<id>`` partition written with
-    dynamic partition overwrite, and every state read pins
-    ``before_batch=<id>`` — so a checkpoint-recovery REPLAY of batch k
-    reads exactly the pre-batch state and REPLACES its own partitions
-    instead of double-appending (r14 ADVICE; previously a replayed tick
-    saw its own digests and marked every arrival exact_dup).  All reads
-    are pruned: band/digest/gram state to the buckets the batch's own
-    keys hash to (ONE folded driver action for the three sets), and the
-    DOCS store to the buckets the band probe's candidate corpus ids hash
-    to (r14 verdict ask #1 — the last unpruned state read; consumption
-    was already candidate-bounded, now the read surface is too).  At
-    100 TB the appends become Delta/Iceberg writes with MERGE idempotency
-    per micro-batch id; compaction runs INSIDE the stream on the
-    ``compact_every`` cadence, at tick START so only checkpoint-committed
-    batches are ever rewritten (r14 advisory: the cadence previously
-    lived only in the ladder tool — the graded 2-micro-batch entry keeps
-    the default cadence 1 so its single eligible tick exercises one real
-    compaction; ladders run cadence 5).  Returns the accumulated
-    decision rows (doc_id, reason).
-
-    ``corpus=None`` (r15 verdict ask #7) skips the setup entirely:
-    ``state_dir`` must then already hold a PRIMED initial state (a
-    ``prime_prepare_state`` output — the graded entries produce it once
-    per corpus version under a content-tagged scratch root and copy the
-    pristine directory per run, so the stream entry's cost is the
-    ticks, not a per-call rebuild of corpus-scale state).
-    """
-    import glob
-    import os
-
-    p_docs = os.path.join(state_dir, "docs")
-    p_bands = os.path.join(state_dir, "bands")
-    p_dig = os.path.join(state_dir, "digests")
-    p_grams = os.path.join(state_dir, "grams")
-
-    if corpus is not None:
-        prime_prepare_state(
-            corpus, state_dir, rel_threshold=rel_threshold, holdout_mod=holdout_mod
-        )
-    else:
-        required = [p_docs, p_bands, p_dig, p_grams, os.path.join(state_dir, "vocab")]
-        if holdout_mod is not None:
-            required.append(os.path.join(state_dir, "holdout_shingles"))
-        missing = [p for p in required if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                "incremental_prepare_stream(corpus=None) requires a primed "
-                f"state_dir; missing: {missing}"
-            )
-
-    schema = spark.read.parquet(arrivals_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_dir)
-    )
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if compact_every and int(batch_id) > 0 and int(batch_id) % compact_every == 0:
-            # compaction cadence ON the stream's own state, at tick START
-            # (r14 advisory: the cadence previously lived only in the
-            # ladder tool).  current_batch=batch_id makes the cadence
-            # replay-safe (r15 ADVICE high): if a prior attempt of THIS
-            # batch crashed after appending but before its checkpoint
-            # committed, those uncommitted batch>=batch_id partitions are
-            # physically dropped before the rebase-to-max fold — without
-            # the drop they became the max, before_batch=batch_id reads
-            # returned zero pre-batch rows, and the replay's dynamic
-            # overwrite wiped the rebased history.  Committed state
-            # content is unchanged either way, so the shared oracle is
-            # untouched.
-            from mistocksync_spark.sinks.layout import compact_keyed_state
-
-            for p in (p_docs, p_bands, p_dig, p_grams):
-                compact_keyed_state(
-                    batch_df.sparkSession, p, current_batch=int(batch_id)
-                )
-        prepare_tick_against_state(
-            batch_df, int(batch_id), state_dir, holdout_mod=holdout_mod
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("incremental_prepare_stream did not finish in 300 s")
-    parts = sorted(glob.glob(os.path.join(state_dir, "decisions", "b*")))
-    out = spark.read.parquet(parts[0])
-    for p in parts[1:]:
-        out = out.unionByName(spark.read.parquet(p))
-    return out.select("doc_id", "reason")
+) -> DataFrame:
+    """Streaming twin of ``operators.textual.incremental_prepare_tick``:
+    decision rows (exact_dup / near_dup / gopher / rare_tokens / ok, plus
+    the v3 gates under ``holdout_mod``) for every arrival file, whose
+    union equals the one-shot tick bit for bit.  The OOV gate scores
+    against the vocabulary frozen at prime, which is what keeps decisions
+    independent of batch boundaries.  Compaction runs inside the stream
+    every ``compact_every`` ticks.  ``corpus=None`` runs on an already
+    primed ``state_dir``.  Returns the decision rows (doc_id, reason)."""
+    fam = _prepare_family(rel_threshold, holdout_mod)
+    _ready(fam, corpus, state_dir)
+    return _stream(fam, spark, arrivals_dir, state_dir, checkpoint, compact_every)

@@ -2658,25 +2658,20 @@ def test_incremental_dedup_summary_accounting(spark):
 def test_incremental_corpus_dedup_stream_equals_batch(spark, tmp_path):
     """Two id-ordered micro-batches through the foreachBatch MERGE must
     produce the same accepted corpus as the one-shot batch operator."""
-    import os
-    import time
-
     from mistocksync_spark.operators.dedup import incremental_dedup_merge
-    from mistocksync_spark.streaming.merge import incremental_corpus_dedup
+    from mistocksync_spark.streaming.merge import (
+        incremental_corpus_dedup,
+        stage_arrivals,
+    )
 
     corpus, batch = _incr_fixture(spark)
-    arrivals = tmp_path / "arrivals"
-    arrivals.mkdir()
-    now = time.time()
-    for i, ids in enumerate([(10, 11, 12), (13, 14)]):
-        part = tmp_path / f"part{i}"
-        batch.filter(F.col("doc_id").isin(*ids)).coalesce(1).write.parquet(str(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = arrivals / f"arrivals_{i}.parquet"
-        os.rename(part / src, dst)
-        os.utime(dst, (now - 120 + 60 * i,) * 2)
+    arrivals = stage_arrivals(
+        batch,
+        [F.col("doc_id").isin(*ids) for ids in [(10, 11, 12), (13, 14)]],
+        str(tmp_path / "arrivals"),
+    )
     streamed = incremental_corpus_dedup(
-        spark, corpus, str(arrivals), str(tmp_path / "state"), str(tmp_path / "ckpt")
+        spark, corpus, arrivals, str(tmp_path / "state"), str(tmp_path / "ckpt")
     )
     got = {(r.doc_id, r.origin) for r in streamed.collect()}
     want = {(r.doc_id, r.origin) for r in incremental_dedup_merge(corpus, batch).collect()}
@@ -2961,14 +2956,14 @@ def test_incremental_embedding_dedup_stream_equals_batch(spark, tmp_path):
     15 (dup of tick-0's accepted 14) arrives in tick 1 and must reject
     against persisted state, and 13 (dup of REJECTED-in-tick-0's... of
     accepted 12) likewise."""
-    import os
-    import time
-
     from mistocksync_spark.operators.vectors import (
         incremental_embedding_dedup_ivf,
         ivf_train,
     )
-    from mistocksync_spark.streaming.merge import incremental_embedding_dedup_stream
+    from mistocksync_spark.streaming.merge import (
+        incremental_embedding_dedup_stream,
+        stage_arrivals,
+    )
 
     corpus = _emb(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])])
     batch = _emb(
@@ -2987,16 +2982,11 @@ def test_incremental_embedding_dedup_stream_equals_batch(spark, tmp_path):
         (r.vec_id, r.origin)
         for r in incremental_embedding_dedup_ivf(corpus, batch, cents, dim=4).collect()
     }
-    arrivals = str(tmp_path / "arrivals")
-    os.makedirs(arrivals)
-    now = time.time()
-    for i, ids in enumerate([(10, 11, 12, 14), (13, 15)]):
-        part = str(tmp_path / f"part{i}")
-        batch.filter(F.col("vec_id").isin(list(ids))).coalesce(1).write.parquet(part)
-        src = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"a{i}.parquet")
-        os.rename(os.path.join(part, src), dst)
-        os.utime(dst, (now - 120 + 60 * i,) * 2)
+    arrivals = stage_arrivals(
+        batch,
+        [F.col("vec_id").isin(list(ids)) for ids in [(10, 11, 12, 14), (13, 15)]],
+        str(tmp_path / "arrivals"),
+    )
     got = {
         (r.vec_id, r.origin)
         for r in incremental_embedding_dedup_stream(

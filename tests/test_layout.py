@@ -6,6 +6,7 @@ import glob
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -254,77 +255,149 @@ def _mini_prepare_inputs(spark, sf_dir):
     return corpus, batch
 
 
-def _seed_prepare_state(corpus, state_dir):
-    from mistocksync_spark.operators.dedup import (
-        corpus_digest_state,
-        corpus_gram_state,
-        corpus_signature_state,
-    )
-    from mistocksync_spark.operators.textual import corpus_vocabulary
-    from mistocksync_spark.sinks.layout import keyed_state_append
+def _stream_family(spark, sf_dir, family):
+    """One keyed-state stream family on small inputs: ``prime(state)``,
+    ``tick(state)`` (micro-batch 0), ``decided(state)`` (the decisions, or
+    the arrivals' accepted flags), its state ``tables``, and the table
+    whose append the fault-injection test fails."""
+    from types import SimpleNamespace
 
-    keyed_state_append(corpus, os.path.join(state_dir, "docs"), ["doc_id"], batch_id=-1)
-    keyed_state_append(
-        corpus_signature_state(corpus),
-        os.path.join(state_dir, "bands"),
-        ["band", "band_key"],
-        batch_id=-1,
-    )
-    keyed_state_append(
-        corpus_digest_state(corpus),
-        os.path.join(state_dir, "digests"),
-        ["digest"],
-        batch_id=-1,
-    )
-    keyed_state_append(
-        corpus_gram_state(corpus), os.path.join(state_dir, "grams"), ["g"], batch_id=-1
-    )
-    corpus_vocabulary(corpus).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "vocab")
-    )
+    from mistocksync_spark.operators.vectors import ivf_train
+    from mistocksync_spark.sinks.layout import keyed_state_read
+    from mistocksync_spark.streaming import merge
 
+    def accepted(state, table, key):
+        rows = keyed_state_read(spark, os.path.join(state, table))
+        return {
+            (r[key], r.accepted) for r in rows.filter("origin = 'batch'").collect()
+        }
 
-def test_prepare_tick_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """r14 ADVICE (medium): a checkpoint-recovery REPLAY of micro-batch k
-    must produce bit-identical decisions (NOT mark every arrival
-    exact_dup against its own earlier appends) and leave every state
-    table with exactly one copy of the batch's rows.  batch-id-partition
-    + dynamic overwrite makes the append idempotent; before_batch pins
-    the read side to the pre-batch state."""
-    from mistocksync_spark.streaming.merge import prepare_tick_against_state
-
+    if family == "embedding":
+        emb = "vec_id long, embedding array<float>"
+        corpus = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])], emb
+        )
+        batch = spark.createDataFrame(
+            [
+                (10, [2.0, 0.0, 0.0, 0.0]),  # scaled copy of corpus 1
+                (11, [0.0, 1.0, 0.0, 0.0]),  # exact copy of corpus 2
+                (12, [0.0, 0.0, 1.0, 0.0]),  # fresh
+                (13, [0.0, 0.0, 3.0, 0.0]),  # scaled copy of accepted 12
+                (14, [-1.0, 0.0, 0.0, 0.0]),  # negated corpus 1: fresh
+            ],
+            emb,
+        )
+        cents = ivf_train(corpus, n_centroids=2, iterations=2)
+        return SimpleNamespace(
+            prime=lambda st: merge.prime_embedding_dedup_state(corpus, cents, st),
+            tick=lambda st: merge.embedding_dedup_tick_against_state(
+                batch, 0, st, cents, dim=4
+            ),
+            decided=lambda st: accepted(st, "vecs", "vec_id"),
+            tables=("vecs", "cells"),
+            fail="vecs",
+        )
     corpus, batch = _mini_prepare_inputs(spark, sf_dir)
-    state = str(tmp_path / "state")
-    _seed_prepare_state(corpus, state)
+    if family == "corpus":
+        return SimpleNamespace(
+            prime=lambda st: merge.prime_corpus_dedup_state(corpus, st),
+            tick=lambda st: merge.corpus_dedup_tick_against_state(batch, 0, st),
+            decided=lambda st: accepted(st, "docs", "doc_id"),
+            tables=("docs", "bands"),
+            fail="bands",
+        )
+    return SimpleNamespace(
+        prime=lambda st: merge.prime_prepare_state(corpus, st),
+        tick=lambda st: merge.prepare_tick_against_state(batch, 0, st),
+        decided=lambda st: {
+            (r.doc_id, r.reason)
+            for r in spark.read.parquet(os.path.join(st, "decisions", "b0")).collect()
+        },
+        tables=("docs", "bands", "digests", "grams"),
+        fail="digests",
+    )
 
-    prepare_tick_against_state(batch, 0, state)
-    dec1 = {
-        (r.doc_id, r.reason)
-        for r in spark.read.parquet(os.path.join(state, "decisions", "b0")).collect()
-    }
-    counts1 = {
-        t: spark.read.parquet(os.path.join(state, t)).count()
-        for t in ("docs", "bands", "digests", "grams")
-    }
-    # the replay: same batch, same id — foreachBatch re-delivery after a
-    # checkpoint-recovery failure
-    prepare_tick_against_state(batch, 0, state)
-    dec2 = {
-        (r.doc_id, r.reason)
-        for r in spark.read.parquet(os.path.join(state, "decisions", "b0")).collect()
-    }
-    counts2 = {
-        t: spark.read.parquet(os.path.join(state, t)).count()
-        for t in ("docs", "bands", "digests", "grams")
-    }
+
+def _state_rows(spark, state, table):
+    rows = spark.read.parquet(os.path.join(state, table)).collect()
+    return sorted(repr(tuple(r)) for r in rows)
+
+
+_FAMILIES = ("prepare", "corpus", "embedding")
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_tick_replay_is_idempotent(spark, sf_dir, tmp_path, family):
+    """A checkpoint-recovery REPLAY of micro-batch k must produce the same
+    decisions (NOT judge every arrival against its own earlier appends)
+    and leave every state table with exactly one copy of the batch's
+    rows: batch-id partitions + dynamic overwrite make the append
+    idempotent, and before_batch pins the reads to the pre-batch state."""
+    case = _stream_family(spark, sf_dir, family)
+    state = str(tmp_path / "state")
+    case.prime(state)
+
+    def run():
+        case.tick(state)
+        counts = {
+            t: spark.read.parquet(os.path.join(state, t)).count() for t in case.tables
+        }
+        return case.decided(state), counts
+
+    dec1, counts1 = run()
+    dec2, counts2 = run()  # same batch, same id: foreachBatch re-delivery
     assert dec1 == dec2
     assert counts1 == counts2
-    # the replayed verdicts are the REAL ones (the pre-fix failure mode
-    # marked everything exact_dup): fresh docs must still be 'ok'
-    reasons = {r for _, r in dec2}
-    assert "ok" in reasons and "exact_dup" in reasons
-    n_exact = sum(1 for _, r in dec2 if r == "exact_dup")
-    assert n_exact < len(dec2)
+    # the replayed verdicts are the REAL ones: some arrivals rejected,
+    # some accepted
+    verdicts = {v for _, v in dec2}
+    if family == "prepare":
+        assert "ok" in verdicts and "exact_dup" in verdicts
+    else:
+        assert verdicts == {True, False}
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_tick_crash_then_replay_equals_clean_run(
+    spark, sf_dir, tmp_path, monkeypatch, family
+):
+    """Fault injection through the shared tick: one table's first tick
+    append raises.  The tick must raise with no sibling append left in
+    flight, and a replay of the same batch id must leave the state and
+    the decisions exactly as a clean run does."""
+    from mistocksync_spark.streaming import merge
+
+    case = _stream_family(spark, sf_dir, family)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    case.prime(clean)
+    case.prime(crashed)
+    case.tick(clean)
+
+    real = merge.keyed_state_append
+    failed, started, finished = [], [], []
+
+    def flaky(df, path, key_cols, **kw):
+        table = os.path.basename(path)
+        if table == case.fail and kw.get("batch_id") == 0 and not failed:
+            failed.append(table)
+            raise RuntimeError("injected append failure")
+        started.append(table)
+        real(df, path, key_cols, **kw)
+        finished.append(table)
+
+    monkeypatch.setattr(merge, "keyed_state_append", flaky)
+    with pytest.raises(RuntimeError, match="injected append failure"):
+        case.tick(crashed)
+    assert failed == [case.fail]
+    # every sibling append ran to completion before the error surfaced
+    assert sorted(started) == sorted(finished) == sorted(set(case.tables) - {case.fail})
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+    monkeypatch.undo()
+    case.tick(crashed)
+    assert case.decided(crashed) == case.decided(clean)
+    for t in case.tables:
+        assert _state_rows(spark, crashed, t) == _state_rows(spark, clean, t), t
 
 
 def test_prepare_tick_docs_read_is_pruned_and_batch_pinned(spark, sf_dir, tmp_path):

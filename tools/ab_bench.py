@@ -10,6 +10,9 @@ and the pairwise per-round ratios.
 Usage:
     python tools/ab_bench.py <variants_module> [sf_dir] [rounds]
 
+``rounds`` defaults to 4.  The variant order reverses every round, so an
+even round count gives every variant first position equally often.
+
 ``variants_module`` is a python file that defines ``VARIANTS``: a list of
 (label, fn) where fn(spark, sf_dir) -> DataFrame.  A warmup entry
 (``WARMUP``: same signature, optional) is run once untimed first.
@@ -31,7 +34,7 @@ sys.path.insert(0, REPO)
 def main():
     mod_path = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     spec = importlib.util.spec_from_file_location("ab_variants", mod_path)
