@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_column
-
 
 def strip_ws(col: Column) -> Column:
     """Python ``str.strip()`` equivalent: trim any leading/trailing whitespace
@@ -22,7 +20,6 @@ def strip_ws(col: Column) -> Column:
     return F.regexp_replace(col, r"^\s+|\s+$", "")
 
 
-@memoized_column
 def clean_invisible_chars(col: Column) -> Column:
     """Collapse internal whitespace runs to single spaces, trim ends;
     null/empty → null.  (ref main.py:1262-1272: ``" ".join(s.split())``)"""
@@ -39,7 +36,6 @@ def _prepped_article(col: Column) -> Column:
     return F.when(s.startswith("000"), F.substring(s, 4, 2147483647)).otherwise(s)
 
 
-@memoized_column
 def clean_article_vitya(col: Column) -> Column:
     """Vitya article cleaner → always integer (LongType, null on null input).
 
@@ -54,7 +50,6 @@ def clean_article_vitya(col: Column) -> Column:
     return F.when(s.isNull(), F.lit(None).cast("long")).otherwise(out)
 
 
-@memoized_column
 def clean_article_dimi(col: Column) -> Column:
     """Dimi article cleaner → keeps the **string** SKU (alphanumeric allowed).
 
@@ -65,7 +60,6 @@ def clean_article_dimi(col: Column) -> Column:
     return F.nullif(s, F.lit(""))
 
 
-@memoized_column
 def safe_color(col: Column) -> Column:
     """Null-safe color normalizer → lowercase trimmed string, with
     null / '' / 'nan' / 'none' collapsing to '' (ref main.py:2037-2055)."""

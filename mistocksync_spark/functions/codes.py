@@ -1,7 +1,12 @@
 """Product-code / capacity extractors (reference parity: C3, C4, C5, C6).
 
 Native column expressions throughout — regexp_extract / regexp_extract_all /
-higher-order ``filter`` keep everything JVM-side and codegen-friendly.
+higher-order ``filter`` keep everything JVM-side and codegen-friendly.  Each
+extractor is written as Spark SQL text and parsed with one ``F.expr``:
+building the same tree through the Column API costs one py4j round trip per
+node (~200 ms for ``product_code_unified``), the parse well under 1 ms.  The
+extractors take the SQL text of their input — a column name such as
+``name``, or an expression such as ``CAST(`article_vitya` AS STRING)``.
 
 Reference semantics re-derived from /root/reference/main.py:1591-1638
 (find_product_code_in_name), 1640-1666 (find_product_code_in_brackets),
@@ -24,9 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.cleaning import strip_ws
-from mistocksync_spark.functions.exprmemo import memoized_column
-
 BRANDS = ["GREENOE", "XIAOMI", "SAMSUNG", "APPLE", "HUAWEI", "OPPO", "VIVO", "ONEPLUS"]
 
 CODE_STOPLIST = ["USB-C", "POWER", "PORTABLE", "CHARGER", "BANK"]
@@ -42,82 +44,85 @@ CODE_PATTERNS = [
     r"(?:^|[^A-Za-z0-9_А-Яа-я])([А-Я][0-9]{1,3})(?:$|[^A-Za-z0-9_А-Яа-я])",  # Cyrillic С20
 ]
 
+CAPACITY_PATTERNS = [r"(\d+)\s*mah", r"(\d+)mah", r"(\d+)\s*мач", r"(\d+)мач", r"(\d+)\s*мч", r"(\d+)мч"]
 
-@memoized_column
-def bracket_code(name: Column) -> Column:
+
+def _raw(pattern: str) -> str:
+    """A Spark SQL raw string literal: backslashes reach the regex engine
+    as written."""
+    return f"r'{pattern}'"
+
+
+def _bracket_sql(name: str) -> str:
+    code = rf"upper(regexp_replace(regexp_extract({name}, r'\(([^)]+)\)', 1), r'^\s+|\s+$', ''))"
+    ok = rf"{code} RLIKE r'^[A-Za-zА-Яа-я0-9\-]+$' AND length({code}) >= 4"
+    return f"CASE WHEN {ok} THEN {code} ELSE CAST(NULL AS STRING) END"
+
+
+def bracket_code(name: str) -> Column:
     """First parenthesized token, uppercased; valid only if it is purely
     [Latin|Cyrillic|digit|-] and length ≥ 4 (ref main.py:1640-1666)."""
-    raw = F.regexp_extract(name, r"\(([^)]+)\)", 1)
-    code = F.upper(strip_ws(raw))
-    ok = code.rlike(r"^[A-Za-zА-Яа-я0-9\-]+$") & (F.length(code) >= 4)
-    return F.when(ok, code).otherwise(F.lit(None).cast("string"))
+    return F.expr(_bracket_sql(name))
 
 
-def _not_excluded(m: Column) -> Column:
-    """Exclusion rules applied to each candidate match (ref main.py:1617-1633):
-    spec-like tokens (mah/w/wh/ma), ≥5-digit pure numbers, and the stoplist."""
-    lower = F.lower(m)
+# Exclusion rules applied to each candidate match ``m`` (ref
+# main.py:1617-1633): spec-like tokens (mah/w/wh/ma), ≥5-digit pure numbers,
+# and the stoplist.
+_STOPLIST_SQL = ", ".join(f"'{s}'" for s in CODE_STOPLIST)
+_NOT_EXCLUDED = (
+    r"NOT (lower(m) RLIKE r'^\d+mah$|^\d+w$|^\d+wh$|^\d+ma$')"
+    r" AND NOT (m RLIKE r'^\d{5,}$')"
+    f" AND NOT (m IN ({_STOPLIST_SQL}))"
+)
+
+
+def _name_code_sql(name: str) -> str:
+    # get() is null-safe on the empty array, so ONE instance of the
+    # regexp_extract_all+filter tree per pattern suffices — a
+    # `CASE WHEN size(X) > 0 THEN element_at(X, 1)` form would evaluate the
+    # whole regex pipeline twice per pattern in codegen
+    per_pattern = [
+        f"get(filter(regexp_extract_all(upper({name}), {_raw(pat)}, "
+        f"{1 if i == len(CODE_PATTERNS) - 1 else 0}), m -> {_NOT_EXCLUDED}), 0)"
+        for i, pat in enumerate(CODE_PATTERNS)
+    ]
     return (
-        ~lower.rlike(r"^\d+mah$|^\d+w$|^\d+wh$|^\d+ma$")
-        & ~m.rlike(r"^\d{5,}$")
-        & ~m.isin(CODE_STOPLIST)
+        f"CASE WHEN {name} IS NULL THEN CAST(NULL AS STRING) "
+        f"ELSE coalesce({', '.join(per_pattern)}) END"
     )
 
 
-@memoized_column
-def product_code_in_name(name: Column) -> Column:
+def product_code_in_name(name: str) -> Column:
     """Ordered multi-pattern extractor: for each pattern (priority order) take
     the first match that survives the exclusion rules (ref main.py:1591-1638)."""
-    up = F.upper(name)
-    result = F.lit(None).cast("string")
-    # Build coalesce(p1_first_ok, p2_first_ok, ...) preserving priority.
-    per_pattern = []
-    for i, pat in enumerate(CODE_PATTERNS):
-        group = 1 if i == len(CODE_PATTERNS) - 1 else 0
-        matches = F.regexp_extract_all(up, F.lit(pat), group)
-        surviving = F.filter(matches, _not_excluded)
-        # F.get is null-safe on the empty array, so ONE instance of the
-        # regexp_extract_all+filter tree suffices — the previous
-        # `when(size(X) > 0, element_at(X, 1))` form evaluated the whole
-        # regex pipeline twice per pattern in codegen (the dominant cost
-        # of the code-match bench entries)
-        per_pattern.append(F.get(surviving, 0))
-    result = F.coalesce(*per_pattern)
-    return F.when(name.isNull(), F.lit(None).cast("string")).otherwise(result)
+    return F.expr(_name_code_sql(name))
 
 
-@memoized_column
-def battery_capacity(name: Column) -> Column:
+def battery_capacity(name: str) -> Column:
     """Battery capacity (mAh) as a **string** of the captured digits.
 
     For each pattern in order, the *first* match is range-checked
     (5 ≤ v ≤ 999999); out-of-range falls through to the next pattern
     (ref main.py:1668-1710).
     """
-    low = F.lower(name)
-    pats = [r"(\d+)\s*mah", r"(\d+)mah", r"(\d+)\s*мач", r"(\d+)мач", r"(\d+)\s*мч", r"(\d+)мч"]
     candidates = []
-    for pat in pats:
-        cap = F.nullif(F.regexp_extract(low, pat, 1), F.lit(""))
-        v = cap.try_cast("long")
-        candidates.append(F.when((v >= 5) & (v <= 999999), cap))
-    return F.coalesce(*candidates, F.lit(None).cast("string"))
+    for pat in CAPACITY_PATTERNS:
+        cap = f"nullif(regexp_extract(lower({name}), {_raw(pat)}, 1), '')"
+        v = f"try_cast({cap} AS BIGINT)"
+        candidates.append(f"CASE WHEN {v} >= 5 AND {v} <= 999999 THEN {cap} END")
+    return F.expr(f"coalesce({', '.join(candidates)}, CAST(NULL AS STRING))")
 
 
-@memoized_column
-def product_code_unified(name: Column) -> Column:
+def product_code_unified(name: str) -> Column:
     """Priority: bracket code → first known brand contained in the name →
     general name code if length ≥ 4 (ref main.py:1712-1750)."""
-    up = F.upper(name)
-    brand = F.coalesce(
-        *[F.when(up.contains(b), F.lit(b)) for b in BRANDS],
-        F.lit(None).cast("string"),
-    )
+    brands = ", ".join(f"CASE WHEN contains(upper({name}), '{b}') THEN '{b}' END" for b in BRANDS)
     # Single instance of the (large) C5 expression: the length-guard is
-    # applied via array filter instead of `when(length(x)>=4, x)`, which
-    # would duplicate the whole expression tree in the generated code.
-    name_code_ge4 = F.get(
-        F.filter(F.array(product_code_in_name(name)), lambda x: x.isNotNull() & (F.length(x) >= 4)),
-        0,
-    )  # F.get is null-safe on the empty array (ANSI element_at would throw)
-    return F.coalesce(bracket_code(name), brand, name_code_ge4)
+    # applied via array filter instead of `CASE WHEN length(x) >= 4 ...`,
+    # which would duplicate the whole expression tree in the generated code.
+    name_code_ge4 = (
+        f"get(filter(array({_name_code_sql(name)}), c -> c IS NOT NULL AND length(c) >= 4), 0)"
+    )
+    return F.expr(
+        f"coalesce({_bracket_sql(name)}, coalesce({brands}, CAST(NULL AS STRING)), {name_code_ge4})"
+    )

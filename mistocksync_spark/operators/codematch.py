@@ -39,7 +39,7 @@ from mistocksync_spark.functions.pricing import base_price_from_config, pct_chan
 
 def supplier_code_variants(
     supplier: DataFrame,
-    extractor: Callable[[Column], Column],
+    extractor: Callable[[str], Column],
     article_col: str,
     price_col: str = "price_usd",
     name_col: str = "name",
@@ -50,7 +50,7 @@ def supplier_code_variants(
     has_color = color_col in supplier.columns
     return (
         supplier.filter(F.col(name_col).isNotNull())
-        .withColumn("code", extractor(F.col(name_col)))
+        .withColumn("code", extractor(f"`{name_col}`"))
         .filter(F.col("code").isNotNull())
         .select(
             "code",
@@ -59,14 +59,14 @@ def supplier_code_variants(
             F.coalesce(F.col(price_col).cast("double"), F.lit(0.0)).alias("supplier_price"),
             F.col(article_col).cast("string").alias("supplier_article"),
             (safe_color(F.col(color_col)) if has_color else F.lit("")).alias("supplier_color"),
-            battery_capacity(F.col(name_col)).alias("supplier_capacity"),
+            battery_capacity(f"`{name_col}`").alias("supplier_capacity"),
         )
     )
 
 
 def base_code_variants(
     base: DataFrame,
-    extractor: Callable[[Column], Column],
+    extractor: Callable[[str], Column],
     base_price_col: str,
     name_col: str = "name",
     color_col: str = "color",
@@ -85,7 +85,7 @@ def base_code_variants(
         F.col(name_col).alias("base_name"),
         F.col(article_col).cast("string").alias("base_article"),
         safe_color(F.col(color_col)).alias("base_color"),
-        battery_capacity(F.col(name_col)).alias("base_capacity"),
+        battery_capacity(f"`{name_col}`").alias("base_capacity"),
         base_price_from_config(F.col(base_price_col)).alias("base_price"),
     ]
     # Single pass with explode instead of a per-source-column union: one
@@ -97,7 +97,7 @@ def base_code_variants(
         F.struct(
             F.lit(0).alias("slot"),
             F.lit("name").alias("src"),
-            F.when(F.col(name_col).isNotNull(), extractor(F.col(name_col))).alias("code"),
+            F.when(F.col(name_col).isNotNull(), extractor(f"`{name_col}`")).alias("code"),
         )
     ]
     for i, col in enumerate(supplier_article_cols):
@@ -107,7 +107,7 @@ def base_code_variants(
             F.struct(
                 F.lit(i + 1).alias("slot"),
                 F.lit(col).alias("src"),
-                F.when(F.col(col).isNotNull(), extractor(F.col(col).cast("string"))).alias("code"),
+                F.when(F.col(col).isNotNull(), extractor(f"CAST(`{col}` AS STRING)")).alias("code"),
             )
         )
     exploded = base.select(*common, F.explode(F.array(*entries)).alias("e")).filter(
@@ -161,7 +161,7 @@ def code_match(
     unified-code regex extraction — the most expensive expression in the
     pipeline — would re-run five times per query.
 
-    ``broadcast_lookups`` — CARDINALITY ASSUMPTION (r10 advisory): the
+    ``broadcast_lookups`` — CARDINALITY ASSUMPTION: the
     b1–b4 lookup aggregates are bounded by the number of DISTINCT
     (code, color, capacity) combinations in the base catalog, which grows
     with the catalog.  ``True`` (default, correct for any
@@ -193,8 +193,7 @@ def code_match(
     # of the three left joins, so a broadcast hint there is silently
     # dropped (HintErrorLogger: "build left for left outer join") while
     # the executed plan builds right anyway.  Hinting the build side makes
-    # the stated plan the executed plan (r10; the r8/r9 report-sheet
-    # lesson applied here).
+    # the stated plan the executed plan.
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_lookups else df
 

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_exprs
-
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup groups: md5(text) → keep-id (min), occurrence count."""
@@ -85,25 +83,17 @@ def minhash_signatures(
     )
 
 
-@memoized_exprs
 def _minhash_exprs(num_hashes: int):
     """The per-seed min-hash aggregates and the unpivot explode, bound to
-    the fixed ``shingle``/``mh{s}`` names — pure function of
-    ``num_hashes``, memoized for the same reason as ``_simhash_exprs``
-    (~0.8 s of py4j construction per call)."""
+    the fixed ``shingle``/``mh{s}`` names, as Spark SQL text (one parse per
+    Column instead of one py4j round trip per node)."""
     min_aggs = [
-        F.min(F.md5(F.concat_ws("|", F.lit(s), F.col("shingle")))).alias(f"mh{s}")
-        for s in range(num_hashes)
+        F.expr(f"min(md5(concat_ws('|', {s}, shingle))) AS mh{s}") for s in range(num_hashes)
     ]
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(s).cast("int").alias("seed"), F.col(f"mh{s}").alias("minhash"))
-                for s in range(num_hashes)
-            ]
-        )
+    structs = ", ".join(
+        f"struct(CAST({s} AS INT) AS seed, mh{s} AS minhash)" for s in range(num_hashes)
     )
-    return min_aggs, pairs
+    return min_aggs, F.expr(f"explode(array({structs}))")
 
 
 def lsh_bands(signatures: DataFrame, rows_per_band: int = 2) -> DataFrame:
@@ -134,7 +124,7 @@ def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     ``bands`` to evaluate the shingle→minhash→band pipeline once).  An
     unconditional ``.cache()`` here was measured ~1 s SLOWER on the cold
     single-shot path and leaked cache entries across queries in one
-    session (round-2 verdict), so the operator no longer persists.
+    session, so the operator does not persist.
     """
     left = bands.select(F.col("band"), F.col("band_key"), F.col("doc_id").alias("doc_a"))
     right = bands.select(F.col("band"), F.col("band_key"), F.col("doc_id").alias("doc_b"))
@@ -190,34 +180,23 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", nbits
     return votes.select("doc_id", sig.alias("simhash"))
 
 
-@memoized_exprs
 def _simhash_exprs(nbits: int):
     """The nbits-term simhash expression set (contrib array, vote
     aggregates, signature fold), bound to the fixed ``token``/``c``/
-    ``s{b}`` names ``simhash`` projects — a pure function of ``nbits``.
-    Memoized (r17, guide §7.3): building these is ~500 py4j round trips
-    (~3.9 s measured per ``simhash()`` call at session load), re-paid on
-    every cold run of every simhash-family entry before any data moved."""
-    h = F.md5(F.col("token"))
-    contrib = F.array(
-        *[
-            (
-                F.shiftright(F.conv(F.substring(h, b // 4 + 1, 1), 16, 10).cast("int"), b % 4)
-                .bitwiseAND(F.lit(1))
-                * 2
-                - 1
-            )
-            for b in range(nbits)
-        ]
+    ``s{b}`` names ``simhash`` projects, as Spark SQL text: one parse per
+    Column instead of ~500 py4j round trips.  The parentheses are explicit
+    because SQL binds ``*`` tighter than ``&``."""
+    bits = ", ".join(
+        f"(((shiftright(CAST(conv(substring(md5(token), {b // 4 + 1}, 1), 16, 10) AS INT), {b % 4})"
+        " & 1) * 2) - 1)"
+        for b in range(nbits)
     )
-    vote_aggs = [
-        F.sum(F.element_at(F.col("c"), b + 1)).alias(f"s{b}") for b in range(nbits)
-    ]
-    sig = sum(
-        [F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(nbits)],
-        start=F.lit(0).cast("long"),
+    vote_aggs = [F.expr(f"sum(element_at(c, {b + 1})) AS s{b}") for b in range(nbits)]
+    fold = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [f"CASE WHEN s{b} >= 0 THEN {1 << b} ELSE 0 END" for b in range(nbits)]
     )
-    return contrib, vote_aggs, sig
+    return F.expr(f"array({bits})"), vote_aggs, F.expr(fold)
 
 
 def connected_components(pairs: DataFrame, max_iterations: int = 25) -> DataFrame:
@@ -252,10 +231,10 @@ def connected_components(pairs: DataFrame, max_iterations: int = 25) -> DataFram
         )
         .select("e.src", "e.dst")
         # lazy: materializes inside the first propagation block's job
-        # instead of as a separate up-front job (driver-side job-count is
-        # the variance lever — r5 cold spread 6.4/7.7/15.4 s was
-        # scheduling jitter across the iterative jobs, not plan cost);
-        # the persist still guarantees the edge subplan evaluates once.
+        # instead of as a separate up-front job (driver-side job count is
+        # the variance lever: the cold spread is scheduling jitter across
+        # the iterative jobs, not plan cost); the persist still
+        # guarantees the edge subplan evaluates once.
         .localCheckpoint(eager=False)
     )
 
@@ -284,14 +263,14 @@ def connected_components(pairs: DataFrame, max_iterations: int = 25) -> DataFram
     # one full round is a fixed point, so a graph whose labels settle by the
     # block's final round is detected inside that SAME checkpoint job —
     # near-clique duplicate graphs finish in ONE job where the
-    # block-start snapshot needed a second just to observe zero change
-    # (round-4 verdict #5: cut a checkpoint job, keep the guard).  The
+    # block-start snapshot needed a second just to observe zero change.
+    # The
     # probe is folded into the checkpoint materialization: a LAZY
     # localCheckpoint plus one full-scan aggregate persists every partition
     # AND returns the changed count in a single job.
     # 4 rounds/block: duplicate graphs converge in 2-4 rounds, so one
     # block job detects the fixed point for diameter ≤ 3 where 3 rounds
-    # needed a second block just to observe zero change (r5 verdict #6).
+    # needed a second block just to observe zero change.
     rounds_per_check = 4
     changed = 1
     done = 0
@@ -337,8 +316,8 @@ def dedup_cluster_histogram(
     caller also runs the clusters/survivors stages: CC is the expensive
     iterative part and the label frame is already materialized via
     localCheckpoint, so sharing it makes this a labels-join + two tiny
-    groupBys instead of a full re-derivation (round-4 verdict: the histogram
-    re-ran pair generation + CC from scratch, 7× its sibling's cost).
+    groupBys instead of a full re-derivation (without it the histogram
+    re-runs pair generation + CC from scratch, 7× its sibling's cost).
     """
     if labels is None:
         if pairs is None:
@@ -461,7 +440,7 @@ def holdout_shingle_state(
     n: int = 3,
 ) -> DataFrame:
     """The FROZEN holdout shingle set the v3 prepare tick's
-    decontamination gate probes (r15): distinct word ``n``-gram shingles
+    decontamination gate probes: distinct word ``n``-gram shingles
     of the corpus's ``doc_id % holdout_mod == 0`` eval slice.  Built once
     per corpus version and persisted like the band/digest/gram state —
     the eval slice never changes on ingest ticks (the vocabulary-freeze
@@ -492,7 +471,7 @@ def holdout_rebuild(
     frozen_shingles: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The holdout VERSION-BUMP tick ``holdout_shingle_state``'s freeze
-    defers to (r16, r15 verdict ask #2 — the exact mirror of
+    defers to (the exact mirror of
     ``vocabulary_rebuild`` on the decontamination side, completing the
     third and last aggregate-artifact lifecycle after vocab and IVF):
     re-derive the holdout slice and its shingle set over the GROWN
@@ -519,8 +498,7 @@ def holdout_rebuild(
     overwrites the persisted frozen state with the first (the ladder's
     ``--holdout-rebuild-at`` does exactly that).
 
-    Governance note (documents the retention rule the r15 verdict named
-    as missing): a PURGED holdout document's shingles leave the state at
+    Retention rule: a PURGED holdout document's shingles leave the state at
     the next rebuild — until then they persist as decontamination
     memory, the same deliberate rule as the digest keepers
     (sinks/layout.purge_keyed_state docstring): a copy of deleted
@@ -685,7 +663,7 @@ def simhash_near_dup_pairs(sigs: DataFrame, max_hamming: int = 3, nbits: int = 6
     # persisted/checkpointed ``sigs`` to evaluate the 60-vote simhash
     # aggregation once — persistence lifetime is owned by the caller (an
     # unconditional .cache() here cost the cold path and leaked entries
-    # across queries; round-2 verdict).
+    # across queries).
     banded = sigs.select(
         "doc_id", "simhash", F.posexplode(slices).alias("band", "band_key")
     )
@@ -1142,8 +1120,8 @@ def corpus_digest_state(
     """The stored exact-dedup state a production corpus maintains between
     ingest ticks: (doc_id, digest) with digest = md5(text) — the seen-set
     ``incremental_prepare_tick``'s exact gate probes with the batch's own
-    digests, so a tick never re-hashes the standing corpus (r13 verdict
-    ask #1: this was the last corpus-proportional stage in the tick).
+    digests, so a tick never re-hashes the standing corpus (otherwise
+    the last corpus-proportional stage in the tick).
     Appended per tick with the arrivals' digests (accepted AND rejected —
     the same seen-set rule as bands and grams); at 100 TB this is a
     bucketed table on digest and the probe join is partition-pruned to
@@ -1219,7 +1197,7 @@ def incremental_dedup_merge(
     over the two input tables.
 
     ``corpus_fetch`` (state path only) closes the LAST unpruned state
-    read (r14 verdict ask #1): a callable ``(candidate_corpus_ids_df) ->
+    read: a callable ``(candidate_corpus_ids_df) ->
     docs_df`` the verify stage calls AFTER the band probe has produced
     the corpus-side candidate ids — the caller resolves it to a
     bucket-pruned ``keyed_state_read`` of the docs store, so the text
@@ -1326,7 +1304,7 @@ def incremental_dedup_merge(
         # id from the corpus store); batch shingles are already in bsh
         e_ids = cand.select(F.col("earlier_id").alias("doc_id")).distinct()
         if corpus_fetch is not None:
-            # docs-store pruning (r14 verdict ask #1): hand the caller the
+            # docs-store pruning: hand the caller the
             # corpus-side candidate ids so it can bucket-prune the text
             # fetch; the left_semi below still restricts to exact ids
             c_ids = (
@@ -1448,12 +1426,13 @@ def char_gram_positions(
     """(doc_id, pos, g): md5 of every length-``gram_len`` character window.
 
     ``hashed=False`` emits the RAW window substring as ``g`` instead of
-    its md5 (r17, guide §1.2 don't compute what you throw away): gram
-    equality is all any consumer tests, raw equality is exact (md5 is
-    only injective-in-practice), and the raw key is no wider than the
-    32-hex digest while skipping one md5 per corpus character — measured
-    −17% on ``duplicated_span_coverage`` at sf0.1, outputs bit-identical
-    (exceptAll 0 both directions).  Callers that PERSIST ``g`` (the
+    its md5, skipping one md5 per corpus character: gram equality is all
+    any consumer tests, and raw equality is exact (md5 is only
+    injective-in-practice).  The raw key is ``gram_len`` characters, so
+    it is no wider than the 32-hex digest only on ASCII text; on Cyrillic
+    text it takes two UTF-8 bytes per letter (60 bytes at the default 30).
+    Measured −17% on ``duplicated_span_coverage`` on the sf0.1 test
+    corpus, outputs bit-identical (exceptAll 0 both directions).  Callers that PERSIST ``g`` (the
     prepare ticks' gram state) or subsample on the digest's hex prefix
     (the anchored span family: ``substring(g, 1, 1) ∈ anchor_hex`` must
     be a content-independent 1/8 sample, which raw text prefixes are
@@ -1688,10 +1667,9 @@ def span_anchor_recall(
     the anchor candidate generator against the exact span pairs (the
     embedding family's ``vector_pair_quality`` analogue for text spans).
     Output: n_exact_pairs, n_candidate_pairs, n_recalled, pair_recall."""
-    # r17: the r16 checkpoint-each-arm change REVERTED on measurement.
-    # The driver recorded 11.71 → 18.79 s (+60%); a focused 6-round
-    # interleaved A/B confirmed the no-checkpoint form wins every paired
-    # round (median 12.35 vs 13.40 s).  Each arm does appear twice in the
+    # No checkpoint per arm: an interleaved A/B measured the
+    # no-checkpoint form faster in every paired round (median 12.35 vs
+    # 13.40 s).  Each arm does appear twice in the
     # plan (count + recalled semi-join), but materializing the full
     # distinct pair lists costs more than the optimizer's partial-agg
     # handling of the duplicate references — the expensive span sweep's

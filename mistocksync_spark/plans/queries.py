@@ -156,7 +156,7 @@ _SQL_PREP_VITYA = f"""
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Decimal-exact sums/means throughout (functions/numeric.py): raw
     # double accumulation is partition-order dependent and the rounded
-    # result can flip on half-cases — the r5 lineitem_profile FAIL class.
+    # result can flip on half-cases.
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -256,7 +256,7 @@ def safe_color_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     _CTES + f" SELECT row_id, {_SQL_BRACKET.format(col='name')} AS code FROM supplier_feed",
 )
 def bracket_code_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return supplier_feed(spark, sf_dir).select("row_id", bracket_code(F.col("name")).alias("code"))
+    return supplier_feed(spark, sf_dir).select("row_id", bracket_code("name").alias("code"))
 
 
 @query(
@@ -264,7 +264,7 @@ def bracket_code_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _CTES + f" SELECT row_id, {_sql_unified_code('name')} AS code FROM supplier_feed",
 )
 def product_code_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return supplier_feed(spark, sf_dir).select("row_id", product_code_unified(F.col("name")).alias("code"))
+    return supplier_feed(spark, sf_dir).select("row_id", product_code_unified("name").alias("code"))
 
 
 @query(
@@ -272,7 +272,7 @@ def product_code_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _CTES + f" SELECT row_id, {_SQL_CAPACITY.format(col='name')} AS capacity FROM supplier_feed",
 )
 def battery_capacity_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return supplier_feed(spark, sf_dir).select("row_id", battery_capacity(F.col("name")).alias("capacity"))
+    return supplier_feed(spark, sf_dir).select("row_id", battery_capacity("name").alias("capacity"))
 
 
 # --------------------------------------------------------------------------
@@ -530,8 +530,8 @@ def _sql_code_cascade(
 
 # Memoized per (session, sf_dir, variant): five J1–J3 queries share one
 # cascade, and re-running `perform_comparison(cache=True)` per query
-# re-cached identical lineages ("Asked to cache already cached data" spam
-# in the round-2 driver tail).  bench.py clears this between entries so
+# re-cached identical lineages ("Asked to cache already cached data"
+# spam).  bench.py clears this between entries so
 # each bench reading stays cold.
 _CASCADE_MEMO: dict = {}
 
@@ -539,7 +539,7 @@ _CASCADE_MEMO: dict = {}
 # clusters/histogram/survivors family shares ONE connected-components run —
 # CC ends in a localCheckpoint, so the memoized frame is already
 # materialized and each sibling query pays only its own joins/groupBys
-# (round-4 verdict #3: the histogram re-derived pairs + CC, 79 s vs 12 s).
+# (re-deriving pairs + CC per sibling measured 79 s vs 12 s).
 # bench.py's _reset clears this too, so cold readings stay cold.
 _CC_MEMO: dict = {}
 
@@ -570,7 +570,7 @@ def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle) table, lazily materialized once per
     (session, sf_dir) for the n-gram family (prefix-filter join,
     containment pairs) — siblings pay only their own joins instead of
-    re-running docs_aug + shingling (round-5 verdict ask #5, the same
+    re-running docs_aug + shingling (the same
     memo pattern as ``_minhash_pairs_shared``).  The headline
     ``ngram_jaccard_pairs`` entry stays unmemoized so its cold bench
     reading measures the full pipeline."""
@@ -731,8 +731,8 @@ def fuzzy_match_pair_count(spark: SparkSession, sf_dir: str) -> int:
     """Candidate×base pairs after the length-band prefilter — an UPPER BOUND
     on the pairs the Python scorer evaluates: ``fuzzy_match`` runs the
     ``bounded`` blocking path, whose vectorized quick-ratio bound skips
-    difflib for most of these (round-4 advisory: the broadcast-path count no
-    longer described the measured workload).  Not a registered query — the
+    difflib for most of these (the broadcast-path count would not
+    describe the measured workload).  Not a registered query — the
     bench reports it alongside the timing so the workload scale is
     explicit."""
     from mistocksync_spark.operators.fuzzy import fuzzy_candidate_pairs
@@ -924,8 +924,8 @@ def minhash_lsh_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mistocksync_spark.plans.feeds import docs_aug
 
     sh = shingle_table(docs_aug(spark, sf_dir))
-    # r17 (guide §2.4): the shingle→minhash→band pipeline fed BOTH sides
-    # of the band self-join (the r16 before-plan shows the collect_list
+    # The shingle→minhash→band pipeline feeds BOTH sides of the band
+    # self-join (without the checkpoint the plan shows the collect_list
     # ObjectHashAggregate subtree twice, no ReusedExchange) — exactly the
     # persistence decision lsh_candidate_pairs documents as the caller's.
     # Interleaved 4-round A/B: checkpointed 2.01 s vs 2.36 median, the
@@ -939,9 +939,9 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mistocksync_spark.operators.dedup import ngram_jaccard_pairs, shingle_table
     from mistocksync_spark.plans.feeds import docs_aug
 
-    # r17 (guide §2.4): the shingle explode fed the sizes aggregate plus
-    # both intersection self-join sides (3 evaluations, no subtree reuse
-    # in the r16 before-plan).  Interleaved 4-round A/B: checkpointed
+    # The shingle explode feeds the sizes aggregate plus both
+    # intersection self-join sides (3 evaluations, no subtree reuse
+    # without the checkpoint).  Interleaved 4-round A/B: checkpointed
     # 2.88 s vs 3.25 median, winning all four paired rounds.
     sh = shingle_table(docs_aug(spark, sf_dir)).localCheckpoint(eager=False)
     return ngram_jaccard_pairs(sh, 0.5)
@@ -1533,7 +1533,7 @@ def _sql_topk_lsh(nbits: int = 8, dim: int = 64) -> str:
 def embedding_topk_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-bucketed ANN — full hash check: the deterministic hyperplane
     family makes bucket assignment and multi-probe membership oracle-
-    expressible (was rows-only in round 1)."""
+    expressible."""
     from mistocksync_spark.operators.vectors import lsh_bucket_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1570,7 +1570,7 @@ ORACLES["minhash_lsh_pairs"] = (
     """
 )
 
-# MATERIALIZED hints (round-11 sf1-oracle rewrite, part 2): sh/mh/cand/shc
+# MATERIALIZED hints: sh/mh/cand/shc
 # are each referenced 2-4 times below and DuckDB inlines CTEs by default,
 # re-hashing the 2.6M-shingle x 8-seed minhash table per reference — the
 # residual 300 s interrupt after the candidate-bounded rewrite.  Forcing
@@ -1579,7 +1579,7 @@ ORACLES["minhash_lsh_pairs"] = (
 def _hinted(sql: str, old: str, new: str) -> str:
     """``str.replace`` that FAILS LOUDLY when the target text is absent —
     a silent no-op here would quietly reintroduce the ~300 s sf1 CTE
-    re-evaluation the MATERIALIZED hint exists to prevent (r11 advisory)."""
+    re-evaluation the MATERIALIZED hint exists to prevent."""
     out = sql.replace(old, new)
     if out == sql:
         raise AssertionError(f"materialization hint target {old!r} not found")
@@ -1791,7 +1791,7 @@ ORACLES["incremental_dedup_merge_stateful"] = ORACLES["incremental_dedup_merge"]
 @query("incremental_dedup_merge_pruned")
 def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest tick against the PARTITIONED persisted state under a
-    PRUNED read (round-12, sinks/layout.py): the corpus signature state is
+    PRUNED read (sinks/layout.py): the corpus signature state is
     written partitioned by pmod(xxhash64(band, band_key)) buckets, the
     tick computes its batch's touched-bucket set (bounded driver fetch,
     the same expression that placed the rows) and reads ONLY those
@@ -1874,8 +1874,8 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-ordered, so the operator's prefix-decomposable rule guarantees
     bit-identical output to the one-shot run.
 
-    Setup amortization (r16, the ``_run_prepare_stream`` pattern / r15
-    verdict ask #7): the stream's initial state (docs + bands, both
+    Setup amortization (the ``_run_prepare_stream`` pattern): the
+    stream's initial state (docs + bands, both
     ``batch=-1``) is a pure function of the corpus, so it is produced
     ONCE per corpus version in a content-tagged scratch root and COPIED
     pristine per run (the stream mutates state, so runs can't share one
@@ -2074,39 +2074,30 @@ def _run_stream(spark: SparkSession, stream_df, base: str, mode: str) -> DataFra
     """Start a one-shot (Trigger.AvailableNow) stream into a memory sink,
     wait for it, and return the sink table.
 
-    Streaming state partitioning is scoped DOWN for the run: every
+    Streaming state partitioning is scoped DOWN to 8 for the run: every
     stateful operator instantiates one state store per shuffle
     partition, and for these bounded single-session streams the
     per-instance setup dominates wall time (the stream-stream join
     measured 8.5 s at 32 partitions vs 2.8 s at 8 on 1 M events; a
     vanilla 200-partition session is worse).  The session value is
-    restored afterward — batch plans keep their own parallelism.  On a
-    real cluster with large state, raise it back via
-    ``SPARK_GRAFT_STREAM_PARTITIONS``.
-    """
-    import os
+    restored afterward — batch plans keep their own parallelism.
 
+    The wait has no fixed bound: an availableNow query stops by itself
+    once it has drained its input, and a failed batch raises from
+    ``awaitTermination``.
+    """
     qname = _stream_sink_name(base)
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
+        (
             stream_df.writeStream.outputMode(mode)
             .format("memory")
             .queryName(qname)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "availableNow stream did not finish within 300 s — refusing "
-                "to return a partial memory table (it would fail the oracle "
-                "with a confusing value diff instead of a clear timeout)"
-            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(qname)
@@ -2350,7 +2341,7 @@ def embedding_near_dup_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same corpus/threshold.  The oracle asserts n_missed = n_extra = 0
     and both counts equal the exact pair count, so ANY recall loss at the
     default nbits/nbands is a graded hash failure, not a silent data-
-    dependent divergence (round-2 advisory)."""
+    dependent divergence."""
     from mistocksync_spark.operators.vectors import (
         cosine_near_dup_pairs,
         cosine_near_dup_pairs_brute,
@@ -2358,7 +2349,7 @@ def embedding_near_dup_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mistocksync_spark.plans.feeds import emb_aug
 
     emb = emb_aug(spark, sf_dir)
-    # lazy checkpoints (r16, guide §2.4): each arm's subplan appears three
+    # lazy checkpoints: each arm's subplan appears three
     # times in the combined audit plan (count + both anti-join sides) and
     # the optimizer reuses none of it (72 scans, 0 ReusedExchange in the
     # before-plan) — so the O(n²) brute pass ran three times per audit.
@@ -2449,7 +2440,7 @@ def incremental_embedding_dedup_stateful_q(spark: SparkSession, sf_dir: str) -> 
 def _sql_incremental_embedding_dedup() -> str:
     """Oracle for incremental_embedding_dedup — exact all-pairs cosine.
 
-    FIXTURE-DEPENDENT PARITY (r10 advisory): the Spark operator only
+    FIXTURE-DEPENDENT PARITY: the Spark operator only
     rejects pairs that collide in ≥1 SimHash band before the exact-cosine
     rescore, while this oracle considers EVERY pair at cos >= 0.99.  The
     two agree because the incremental feed (EMB_INCR_CTE_DUCKDB) plants
@@ -2495,7 +2486,7 @@ ORACLES["incremental_embedding_dedup_stateful"] = ORACLES["incremental_embedding
 @query("incremental_embedding_dedup_ivf")
 def incremental_embedding_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vector ingest tick through the IVF-CELL candidate generator and
-    the PERSISTED index state (round-11): the quantizer is trained once on
+    the PERSISTED index state: the quantizer is trained once on
     the corpus and frozen, the corpus inverted table is written to parquet
     and read back (the serving stack's own table — see
     ``embedding_topk_ivf_stored``), and the tick assigns only the arriving
@@ -2540,7 +2531,7 @@ def incremental_embedding_dedup_ivf_pruned_q(
 ) -> DataFrame:
     """The IVF vector ingest tick with the stored inverted state written
     PARTITIONED BY CENTROID and read PRUNED to the batch's assigned cells
-    (round-12, the vector analogue of ``incremental_dedup_merge_pruned``;
+    (the vector analogue of ``incremental_dedup_merge_pruned``;
     the layout the SCALE_r12 §2 ladders run): pruning is lossless because
     candidates are a centroid equi-join — corpus rows in cells none of
     the batch's assignments touch cannot pair with any arrival.  Same
@@ -2593,7 +2584,7 @@ ORACLES["incremental_embedding_dedup_ivf_pruned"] = ORACLES[
 def incremental_embedding_dedup_ivf_stream_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Streaming parity for the VECTOR ingest tick (round-12, the
+    """Streaming parity for the VECTOR ingest tick (the
     embedding sibling of ``incremental_dedup_stream``): arrivals land as
     two id-ordered parquet files consumed one per micro-batch
     (foreachBatch MERGE into versioned (vecs, cells) state under a FROZEN
@@ -2605,7 +2596,7 @@ def incremental_embedding_dedup_ivf_stream_q(
     seen-set chain (a tick-1 arrival rejected against a tick-0 ACCEPTED
     arrival) is exercised, not just within-tick dedup.
 
-    Setup amortization (r16, the ``_run_prepare_stream`` pattern): the
+    Setup amortization (the ``_run_prepare_stream`` pattern): the
     frozen quantizer (``ivf_train`` is deterministic — exact int64
     accumulation, deterministic seeds) and the initial vecs/cells state
     are pure functions of the corpus, so they are produced ONCE per
@@ -2758,7 +2749,7 @@ def embedding_near_dup_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFra
     from mistocksync_spark.plans.feeds import emb_aug
 
     emb = emb_aug(spark, sf_dir)
-    # lazy checkpoints (r16): same triple-evaluation shape as
+    # lazy checkpoints: same triple-evaluation shape as
     # embedding_near_dup_recall — materialize each arm once
     ivf = (
         cosine_near_dup_pairs_ivf(emb, threshold=0.99)
@@ -2953,7 +2944,7 @@ def _sql_vector_pair_quality(
 @query("vector_pair_quality", _sql_vector_pair_quality())
 def vector_pair_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-flight candidate-generator audit for the embedding near-dup
-    family (operators/vectors.vector_pair_quality, r11 verdict ask #3):
+    family (operators/vectors.vector_pair_quality):
     banded-SimHash vs IVF-cell candidate volume, miss counts and ppm
     recall against the exact-threshold pair set, plus the deterministic
     generator recommendation — the vector-side analogue of
@@ -3023,8 +3014,8 @@ def _sql_ivf_rebuild_diff(iterations: int = 2) -> str:
 
 @query("ivf_index_rebuild", _sql_ivf_rebuild_diff())
 def ivf_index_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The index-rebuild tick (operators/vectors.ivf_index_rebuild, r11
-    verdict ask #2): the serving index is built and PERSISTED on the
+    """The index-rebuild tick (operators/vectors.ivf_index_rebuild): the
+    serving index is built and PERSISTED on the
     drift-fixture corpus (v1 tables), the accepted arrivals grow the
     corpus (on this fixture every arrival is accepted — no cos >= 0.99
     pair straddles the split, the documented emb_incr property), and the
@@ -3130,8 +3121,8 @@ def _sql_ivf_recall_drift(iterations: int = 2, n_probe: int = 4, topk: int = 20)
 
 @query("ivf_recall_drift", _sql_ivf_recall_drift())
 def ivf_recall_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The recall-DRIFT gate the frozen-quantizer assumption needs (r11
-    verdict ask #2): recall@20 of the STALE persisted index (trained and
+    """The recall-DRIFT gate the frozen-quantizer assumption needs:
+    recall@20 of the STALE persisted index (trained and
     inverted on the pre-arrival corpus, probed over the grown corpus —
     its lists cannot return an un-indexed arrival) vs recall@20 of the
     REBUILT index, both against brute force on the grown corpus.  A
@@ -3648,7 +3639,7 @@ def embedding_topk_ivf_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_topk_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-graded recall@20 of the seed-centroid IVF tier vs the exact
-    brute-force baseline (round-5 verdict ask #7): the oracle replicates
+    brute-force baseline: the oracle replicates
     the ENTIRE inverted-file path in SQL — the 16 lowest-id seed
     centroids, nearest-centroid assignment (ties break to the lowest
     centroid index, matching numpy argmax-first), the 4-probe selection,
@@ -3768,10 +3759,10 @@ def _sql_ivf_trained_recall(iterations: int = 2, n_probe: int = 4, topk: int = 2
 
 @query("embedding_topk_ivf_trained_recall", _sql_ivf_trained_recall())
 def embedding_topk_ivf_trained_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-graded recall@20 of the Lloyd-TRAINED IVF tier vs brute force
-    (round-5 verdict ask #7): the oracle independently re-runs the whole
-    2-iteration k-means (possible because ivf_train's micro-int partial
-    sums make the trained centroids bit-deterministic), so training drift,
+    """Hash-graded recall@20 of the Lloyd-TRAINED IVF tier vs brute force:
+    the oracle independently re-runs the whole 2-iteration k-means
+    (possible because ivf_train's micro-int partial sums make the trained
+    centroids bit-deterministic), so training drift,
     probe selection, and recall are all graded — converting a rows-only
     entry into a full hash row."""
     from mistocksync_spark.operators.vectors import brute_force_topk, ivf_topk, ivf_train
@@ -3798,7 +3789,7 @@ def embedding_topk_ivf_trained_recall_q(spark: SparkSession, sf_dir: str) -> Dat
 
 @query("embedding_topk_ivf_stored")
 def embedding_topk_ivf_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-index serving tick (round-11): train the IVF quantizer,
+    """Persisted-index serving tick: train the IVF quantizer,
     WRITE centroids + inverted lists as parquet tables, read them back,
     and answer the probe purely from the stored tables — no re-training,
     no assignment pass, no Python stage in the probe plan.  Rows-only by
@@ -3815,7 +3806,7 @@ def embedding_topk_ivf_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents_df, inverted = ivf_index_tables(emb, iterations=2)
     # the query name is part of the path so sibling entries (the recall
-    # twin) never overwrite this entry's tables mid-read (r11 advisory)
+    # twin) never overwrite this entry's tables mid-read
     root = (
         "/tmp/spark_graft_ivf_index/"
         + hashlib.md5(f"embedding_topk_ivf_stored:{sf_dir}".encode()).hexdigest()[:10]
@@ -3982,8 +3973,8 @@ def _sql_pq_recall(m: int = 8, kc: int = 16, iterations: int = 2, topk: int = 20
 
 @query("embedding_topk_pq_recall", _sql_pq_recall())
 def embedding_topk_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-graded recall@20 of the PQ/ADC tier vs brute force (round-5
-    verdict ask #7): the oracle independently re-trains the per-subspace
+    """Hash-graded recall@20 of the PQ/ADC tier vs brute force: the
+    oracle independently re-trains the per-subspace
     codebooks (possible because pq_train's micro-int partial sums make
     them bit-deterministic), re-encodes the corpus, and re-scores with
     the same ordered ADC fold — so codebook drift, encoding, and recall
@@ -5694,7 +5685,7 @@ def _triangles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row triangle-count frame over the shared MinHash pair list,
     lazily materialized once per (session, sf_dir) — the clustering
     coefficient composes it with the degree/wedge pass instead of
-    re-running the two-join closure (round-6 verdict ask #4, the same
+    re-running the two-join closure (the same
     memo pattern as ``_simhash_cc_labels``)."""
     key = (id(spark), sf_dir, "minhash_triangles")
     if key not in _CC_MEMO:
@@ -6149,7 +6140,7 @@ def brand_capacity_inventory_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return feed.groupBy(
         brand.alias("brand"),
-        F.coalesce(battery_capacity(F.col("name")), F.lit("n/a")).alias("capacity"),
+        F.coalesce(battery_capacity("name"), F.lit("n/a")).alias("capacity"),
     ).agg(
         F.count(F.lit(1)).alias("n_items"),
         dec_avg("price_usd").alias("avg_price"),
@@ -6546,9 +6537,8 @@ def q22_dormant_high_balance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-7 registrations for the formerly-dark operators (round-6 verdict
-# ask #3): bloom filter pair, trigram char-LM scoring, hashing-trick
-# quality logit, and exact two-sample KS drift.
+# Registrations for the bloom filter pair, trigram char-LM scoring,
+# hashing-trick quality logit, and exact two-sample KS drift operators.
 # --------------------------------------------------------------------------
 _SQL_BLOOM_POS = (
     "(" + _SQL_HEX8.format(sha="md5({i} || '|' || text)") + ") % 65536"
@@ -7465,8 +7455,8 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     _sql_semantic_dedup(n_clusters="(SELECT GREATEST(16, COUNT(*) // 200) FROM ea)"),
 )
 def semantic_dedup_scaled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with a CORPUS-PROPORTIONAL cluster count (r11 verdict ask
-    #7): the fixed-k tier's O(n²/k) in-cluster scoring is the method's own
+    """SemDeDup with a CORPUS-PROPORTIONAL cluster count: the fixed-k
+    tier's O(n²/k) in-cluster scoring is the method's own
     bound and measured 39.5× on 10× data at k=16 (SCALE_r11); holding
     cluster DENSITY constant instead (k = max(16, n/200) — the same rule
     ``cosine_near_dup_pairs_ivf`` uses) keeps per-cluster pair volume flat
@@ -7803,7 +7793,7 @@ def events_cuped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# round-8 session: data-quality gates — declarative rule engine, join-key
+# Data-quality gates — declarative rule engine, join-key
 # skew profiler, leakage-safe hash split (operators/quality.py)
 # --------------------------------------------------------------------------
 
@@ -8047,7 +8037,7 @@ def events_bootstrap_ci_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact-substring (duplicated-span) dedup family (round 12): the
+# Exact-substring (duplicated-span) dedup family: the
 # suffix-array-style dedup of Lee et al. 2022 re-expressed as rolling-hash
 # gram positions + gaps-and-islands span merge (operators/dedup.py), over
 # documents with planted cross-doc substrings (plans/feeds.DOCS_SPAN_SQL:
@@ -8102,7 +8092,7 @@ def _span_positions_shared(
     (session, sf_dir) for the span family — the four siblings share one
     positions build instead of re-hashing every character window (the
     ``_shingles_shared`` memo pattern).  ``hashed=False`` keys a SEPARATE
-    memo entry with raw-substring grams (r17): the coverage entry only
+    memo entry with raw-substring grams: the coverage entry only
     tests gram equality, while the anchored variants subsample on the
     digest hex prefix and must keep md5."""
     key = (id(spark), sf_dir, "span_pos" if hashed else "span_pos_raw")
@@ -8339,7 +8329,7 @@ def _sql_pagerank_ctes(iterations: int = 5) -> str:
     arithmetic width.  ``edges``/``deg`` are MATERIALIZED: each is
     referenced from every unrolled iteration, and an inlining planner
     would otherwise re-run the whole MinHash pipeline once per iteration
-    (the r11 ``_SQL_SHINGLES`` lesson, applied up front this time).
+    (the same reason ``_SQL_SHINGLES`` is materialized).
     Shared by ``dedup_pagerank`` and ``dedup_canonicals``."""
     scale = 1_000_000_000_000
     ctes = [
@@ -8639,7 +8629,7 @@ def events_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Document clustering (late round 12): hashing-trick TF-IDF vectors →
+# Document clustering: hashing-trick TF-IDF vectors →
 # k-means (the ivf_train machinery) → cluster membership + term readout.
 # The corpus-organization family a training pipeline uses for cluster-
 # balanced sampling and topic inspection, built so every stage stays
@@ -8730,7 +8720,7 @@ def doc_hashed_tfidf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Graded surface: the SAME memoized vectors the k-means family consumes,
     posexploded to scalar (doc_id, dim_idx, weight) — the driver's
     canonicalizer pandas-sorts every output column, so a graded query may
-    not expose array/map/struct columns (r12 lesson; the array form stays
+    not expose array/map/struct columns (the array form stays
     available as operators/textual.hashed_tfidf_vectors).  Each exploded
     weight is the identical IEEE division micro/1e6 the oracle computes
     from its dspine/dwb CTEs, so the grade is still bit-exact per element.
@@ -8869,7 +8859,7 @@ def _parquet_content_tag(*paths: str) -> str:
     stat-only, no data read.  The tag changes whenever the source data is
     regenerated (even bit-identically: mtime moves), so derived state
     keyed on it can never serve stale rows after a testdata refresh
-    (r12 ADVICE; the zipf scale corpora ARE regenerated in place)."""
+    (the zipf scale corpora ARE regenerated in place)."""
     import hashlib
     import os
 
@@ -8897,8 +8887,8 @@ def _scratch_root(base: str, tag: str, max_age_days: float = 7.0) -> str:
     recycled pid (or a pid owned by another user, where kill(pid, 0)
     raises PermissionError) would keep a dead session's root alive
     forever, so an mtime-age fallback reaps any sibling root older than
-    ``max_age_days`` regardless of pid liveness (r13 ADVICE).  Every
-    REUSE touches the root's mtime first (r14 ADVICE: without the touch,
+    ``max_age_days`` regardless of pid liveness.  Every
+    REUSE touches the root's mtime first (without the touch,
     a LIVE session's week-old root could be reaped by a sibling session
     mid-query — between the produce-once marker check and the lazy reads
     — a transient FileNotFound job failure, not just a one-rebuild
@@ -8940,8 +8930,8 @@ def _scratch_root(base: str, tag: str, max_age_days: float = 7.0) -> str:
 
 def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> str:
     """PRODUCE-ONCE SETUP CONTRACT — the single audited implementation of
-    the amortization the r16 verdict §3 ruled legitimate, centralized per
-    its ask #8 so the discipline stays structurally checkable
+    setup amortization, centralized so the discipline stays structurally
+    checkable
     (tests/test_layout.py pins that queries.py calls ``_scratch_root``
     ONLY through here plus the one documented bucketed-table site).
 
@@ -9006,8 +8996,8 @@ def orders_bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # produce-once guard keyed on a CONTENT fingerprint of the source
     # parquet (size+mtime) plus the session pid: regenerated testdata
     # changes the tag, so the tableExists hit can never serve a stale
-    # bucketed copy, and concurrent sessions never race on one /tmp path
-    # (r12 ADVICE); dead sessions' roots are reaped by _scratch_root.
+    # bucketed copy, and concurrent sessions never race on one /tmp path;
+    # dead sessions' roots are reaped by _scratch_root.
     tag = _parquet_content_tag(
         f"{sf_dir}/orders.parquet", f"{sf_dir}/customer.parquet"
     )
@@ -9199,7 +9189,7 @@ ORACLES["user_hll_stream"] = ORACLES["user_hll_estimate"]
 
 
 # ---------------------------------------------------------------------------
-# corpus_prepare_v2 — the r12-era operators chained in ONE declarative plan
+# corpus_prepare_v2 — the corpus operators chained in ONE declarative plan
 # ---------------------------------------------------------------------------
 
 _V2_SAMPLE_PER_CLUSTER = 20
@@ -9216,7 +9206,7 @@ def _sql_corpus_prepare_v2(v3: bool = False) -> str:
     formulation its standalone graded entry uses (cited per block), so
     this grade transitively re-asserts each stage AND their composition.
 
-    ``v3=True`` (r14) extends the SAME template with the emission tier:
+    ``v3=True`` extends the SAME template with the emission tier:
     a ``holdout`` gate (the doc_id % 50 = 0 eval slice — never trained
     on), a ``contaminated`` gate after the five v2 gates (>= 2 distinct
     word-trigram shingles shared with the holdout slice — the
@@ -9224,7 +9214,7 @@ def _sql_corpus_prepare_v2(v3: bool = False) -> str:
     assignment for the sampled kept docs (the ``doc_packing``
     concat-then-chunk replay, stratum = cluster, 2048-token windows).
     With the default ``v3=False`` every injection is the empty string,
-    so the v2 oracle text is BYTE-IDENTICAL to its graded r13 form."""
+    so the v2 oracle text is BYTE-IDENTICAL to its graded form."""
     km_blocks, final_cents = _sql_kmeans_blocks(
         "kv", "k2", str(_DOC_VEC_K), _DOC_VEC_ITERS
     )
@@ -9438,7 +9428,7 @@ def _sql_corpus_prepare_v2(v3: bool = False) -> str:
 
 @query("corpus_prepare_v2", _sql_corpus_prepare_v2())
 def corpus_prepare_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end training-data pipeline, v2 — every r12-era stage
+    """The end-to-end training-data pipeline, v2 — every corpus stage
     chained in ONE declarative plan over ONE shared documents scan:
 
       exact dedup (md5 window) → near-dup CANONICAL pick (MinHash-LSH →
@@ -9475,7 +9465,7 @@ def corpus_prepare_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _prepare_pipeline(spark: SparkSession, sf_dir: str, v3: bool) -> DataFrame:
     """Shared body of ``corpus_prepare_v2`` and ``corpus_prepare_v3``:
-    with ``v3=False`` this is the r13 v2 plan unchanged; ``v3=True``
+    with ``v3=False`` this is the v2 plan unchanged; ``v3=True``
     adds the holdout + decontamination gates and the packed-sequence
     emission (see ``corpus_prepare_v3_q``)."""
     from pyspark.sql import Window
@@ -9510,10 +9500,10 @@ def _prepare_pipeline(spark: SparkSession, sf_dir: str, v3: bool) -> DataFrame:
     )
 
     # gate 2: near-dup non-canonical (centrality survivor pick).
-    # r17 (guide §2.6): connected_components and similarity_pagerank are
-    # independent iterative consumers of the same pair list — their
-    # driver-blocking loops (checkpoint probes / deg count / rank rounds)
-    # ran sequentially.  Materialize the shared lazy checkpoint once (the
+    # connected_components and similarity_pagerank are independent
+    # iterative consumers of the same pair list, each with a
+    # driver-blocking loop (checkpoint probes / deg count / rank rounds).
+    # Materialize the shared lazy checkpoint once (the
     # count below — work both loops needed anyway), then overlap the two
     # loops from a 2-thread pool so each one's stage tails back-fill the
     # other's jobs.
@@ -9537,7 +9527,7 @@ def _prepare_pipeline(spark: SparkSession, sf_dir: str, v3: bool) -> DataFrame:
     ).select("doc_id", "canonical_id")
 
     # gate 3: duplicated-span coverage (pair-free) on the RAW corpus.
-    # r17: raw-substring gram keys (hashed=False) — equality is all this
+    # raw-substring gram keys (hashed=False) — equality is all this
     # gate tests and g is never exposed, so skipping the per-character md5
     # is result-identical (exceptAll 0 both ways at sf0.1) and measured
     # −17% on the coverage subplan.
@@ -9674,7 +9664,7 @@ def _prepare_pipeline(spark: SparkSession, sf_dir: str, v3: bool) -> DataFrame:
 
 @query("corpus_prepare_v3", _sql_corpus_prepare_v2(v3=True))
 def corpus_prepare_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training-data pipeline with the EMISSION tier (r14) — v2 plus
+    """The training-data pipeline with the EMISSION tier — v2 plus
     the two hygiene gates a training run demands and the layout it
     consumes:
 
@@ -9713,7 +9703,7 @@ def corpus_prepare_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "GROUP BY cluster, pack_id",
 )
 def pack_emission_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pack EMISSION sink graded end-to-end (r14 verdict ask #4 — the
+    """The pack EMISSION sink graded end-to-end (the
     pipeline's final artifact gets the same "graded decision + graded
     layout" treatment as the state tables): the v3 pipeline's packed
     sampled docs are physically WRITTEN in the loader-consumable layout
@@ -9798,7 +9788,7 @@ _SQL_TICK_SPAN = f"""
 def _sql_incr_tick(v3: bool = False) -> str:
     """The tick oracle as a template (the ``_sql_corpus_prepare_v2``
     byte-identity trick): with ``v3=False`` every injection renders
-    empty and the text is BYTE-IDENTICAL to the r14 tick oracle, so the
+    empty and the text is BYTE-IDENTICAL to the pre-v3 tick oracle, so the
     shared standing grade of tick/stored/stream is provably untouched;
     ``v3=True`` splices the holdout CASE arm (first), the frozen-holdout
     shingle + contamination CTEs, and the contaminated arm (last)."""
@@ -9901,7 +9891,7 @@ def incremental_prepare_tick_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup rejection (band collision + Jaccard >= 0.5, arrival-ordered
     and prefix-decomposable), the arrival-ordered span-coverage gate
     (>= 30% of the arrival's chars covered by grams seen in the corpus
-    or on a smaller-id arrival — r14, closing the v2/tick gate
+    or on a smaller-id arrival — closing the v2/tick gate
     asymmetry), Gopher rules on the arrival text, and OOV vs the CORPUS
     vocabulary.  The production counterpart of ``corpus_prepare_v2``'s
     one-shot decisions: v2 re-decides the world, this decides ONLY the
@@ -9915,14 +9905,14 @@ def incremental_prepare_tick_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_incr_batch(spark, sf_dir),
         # the SELF-CONTAINED anti-shape, graded on purpose: every state
         # derived inline from the corpus (the stored twin is the
-        # production path; deriving state per tick is opt-in, r14 ADVICE)
+        # production path; deriving state per tick is opt-in)
         allow_corpus_derived_state=True,
     )
 
 
 @query("incremental_prepare_tick_v3", _sql_incr_tick(v3=True))
 def incremental_prepare_tick_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The prepare tick with the v3 EMISSION gates (r14 verdict ask #2):
+    """The prepare tick with the v3 EMISSION gates:
     ``corpus_prepare_v3``'s two hygiene gates, at tick time —
 
     - ``holdout`` (checked FIRST): arrivals in the doc_id % 50 == 0 eval
@@ -9960,12 +9950,12 @@ def incremental_prepare_tick_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame
 @query("incremental_prepare_tick_stored")
 def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The prepare tick against PERSISTED keyed-append state under PRUNED
-    reads (r14, completed r15 — no unpruned state surface remains): DOCS,
+    reads (no unpruned state surface remains): DOCS,
     band, DIGEST, and GRAM state are written partitioned by
     pmod(xxhash64(key)) buckets (sinks/layout.keyed_state_append), the
     tick computes the three key-state bucket sets in ONE folded driver
     action (bounded, <= 64 ints each) and reads ONLY those partitions;
-    the DOCS store — the r14 verdict's last unpruned read — is fetched
+    the DOCS store — the last state read to be pruned — is fetched
     only in the buckets the band probe's candidate corpus ids hash to
     (``corpus_fetch``), and the OOV gate scores against the PERSISTED
     frozen vocabulary instead of re-aggregating corpus token mass.  The
@@ -10104,7 +10094,7 @@ ORACLES["incremental_prepare_tick_v3_stored"] = ORACLES["incremental_prepare_tic
 )
 def prepare_vocab_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-staleness gate for the streaming prepare tick
-    (operators/textual.vocabulary_drift, r14): the frozen corpus
+    (operators/textual.vocabulary_drift): the frozen corpus
     vocabulary vs a freshly rebuilt corpus∪batch vocabulary, read out as
     per-arrival rare-token decision disagreement — the OOV analogue of
     the graded ``ivf_recall_drift``, so "when to rebuild the frozen
@@ -10188,7 +10178,7 @@ def prepare_vocab_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def prepare_vocab_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vocabulary REBUILD tick (operators/textual.vocabulary_rebuild,
-    r14 verdict ask #3 — the missing half of the vocab lifecycle):
+    the second half of the vocab lifecycle):
     ``prepare_vocab_drift`` measures when the frozen vocabulary is stale;
     this is the tick a deployment runs when the threshold trips —
     re-derive the vocabulary over corpus + arrivals, re-freeze, and audit
@@ -10231,7 +10221,7 @@ def _run_prepare_stream(
     batch feed into two id-ordered arrival files and run them through
     ``incremental_prepare_stream``.
 
-    Setup amortization (r15 verdict ask #7): the stream's INITIAL state
+    Setup amortization: the stream's INITIAL state
     (four batch=-1 keyed-append tables + frozen vocab + holdout
     shingles) is a pure function of the corpus, so it is produced ONCE
     per corpus version in a content-tagged scratch root shared with the
@@ -10333,7 +10323,7 @@ def _build_tombstone_purge_store(spark: SparkSession, sf_dir: str, root: str) ->
     """Produce-once builder for the docs-side pre-purge standing store
     (docs + digest keepers + frozen original-corpus vocabulary) — shared
     by ``tombstone_purge_emission`` and ``purge_remediation_emission``.
-    r16 (guide §2.6): eager checkpoint (one materialization of the shared
+    Eager checkpoint (one materialization of the shared
     corpus), then the three independent store builds overlap."""
     import os
 
@@ -10362,7 +10352,7 @@ def _build_tombstone_purge_store(spark: SparkSession, sf_dir: str, root: str) ->
 
 @query("tombstone_purge_emission", _sql_tombstone_purge())
 def tombstone_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten, graded END TO END (r15 — the governance
+    """Right-to-be-forgotten, graded END TO END (the governance
     tick a production training-data pipeline needs): tombstone the
     doc_id % 50 == 0 original docs, PHYSICALLY purge them from the
     bucketed docs store (``sinks/layout.purge_keyed_state`` — a partial
@@ -10386,7 +10376,7 @@ def tombstone_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical pruning contract (untouched buckets' files not rewritten)
     is pinned separately by tests/test_layout.py.
 
-    Setup amortization (r16, the ``_run_prepare_stream`` pattern): the
+    Setup amortization (the ``_run_prepare_stream`` pattern): the
     PRE-purge store (docs + digest keepers + the frozen original-corpus
     vocabulary) is a pure function of the corpus — in production it is
     the standing table a deletion request arrives AGAINST — so it is
@@ -10517,8 +10507,7 @@ def _sql_vector_purge() -> str:
 @query("vector_purge_emission", _sql_vector_purge())
 def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten for the VECTOR store, graded end to end
-    (r16 — the embedding twin of ``tombstone_purge_emission``, the r15
-    verdict's top ask): embeddings of deleted documents are DERIVED
+    (the embedding twin of ``tombstone_purge_emission``): embeddings of deleted documents are DERIVED
     personal data under the same purge obligation as the text itself.
 
     Tombstone the ``vec_id % 40 == 0`` corpus vectors and physically
@@ -10549,7 +10538,7 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The frozen quantizer goes stale by design; the graded remediation is
     ``ivf_index_rebuild`` (run post-purge in the SCALE_r16 ladder).
 
-    Setup amortization (r16, the ``_run_prepare_stream`` pattern): the
+    Setup amortization (the ``_run_prepare_stream`` pattern): the
     PRE-purge embedding store (vecs + cells + the frozen deterministic
     quantizer) is a pure function of the corpus — the standing state a
     deletion request arrives against — so it is produced once per corpus
@@ -10584,7 +10573,7 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim = inferred_dim(corpus, "embedding")
         n_cells = max(16, corpus.count() // 200)
         cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
-        # r16 (guide §2.6): two independent table builds over the already-
+        # two independent table builds over the already-
         # materialized corpus checkpoint — overlap them
         parallel_actions(
             lambda: keyed_state_append(
@@ -10634,7 +10623,7 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") % 40 == 0)
         .localCheckpoint()
     )
-    # r16 (guide §2.6): the two purges are independent jobs on distinct
+    # the two purges are independent jobs on distinct
     # tables (the request is eagerly checkpointed above, so neither purge
     # reads files the other rewrites) — overlap them
     parallel_actions(
@@ -10751,8 +10740,7 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def prepare_holdout_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The holdout VERSION-BUMP tick (operators/dedup.holdout_rebuild,
-    r16 — the r15 verdict's ask #2, the last missing aggregate-artifact
-    lifecycle): ``holdout_shingle_state`` is frozen per corpus version;
+    the third aggregate-artifact lifecycle): ``holdout_shingle_state`` is frozen per corpus version;
     this is the tick that bumps the version — re-derive the eval slice
     and its shingle set over corpus + arrivals, re-freeze, and audit in
     one row: shingle churn, the pre-rebuild contaminated-verdict drift
@@ -10847,8 +10835,8 @@ def _sql_purge_remediation() -> str:
 
 @query("purge_remediation_emission", _sql_purge_remediation())
 def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The governance COMPOSITION, graded end to end (r16 — r15 verdict
-    ask #3: the halves were graded separately, the composition was not):
+    """The governance COMPOSITION, graded end to end (the halves are
+    graded separately as well):
     purge → rebuild → re-emit, in one entry whose final artifact only
     hash-matches if every stage held.
 
@@ -10875,7 +10863,7 @@ def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (digest-keeper memory), which is the composition's own proof that
     deleted content cannot re-enter the training artifact.
 
-    Setup amortization (r16): the PRE-purge store (docs + digest
+    Setup amortization: the PRE-purge store (docs + digest
     keepers) is shared with ``tombstone_purge_emission`` via the same
     content-tagged produce-once root (one standing table, two graded
     ticks over it); every composition stage — purge, canonical double

@@ -1,4 +1,3 @@
-from pyspark.sql import functions as F
 
 from mistocksync_spark.functions import (
     battery_capacity,
@@ -10,7 +9,7 @@ from mistocksync_spark.functions import (
 
 def _run(spark, fn, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    return [r[0] for r in df.select(fn(F.col("v"))).collect()]
+    return [r[0] for r in df.select(fn("v")).collect()]
 
 
 def test_bracket_code(spark):

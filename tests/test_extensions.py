@@ -2,6 +2,7 @@
 / SimHash / n-gram Jaccard), vector similarity, text analysis, multimodal
 plumbing, and the Structured Streaming events plan."""
 
+import hashlib
 import math
 
 import pytest
@@ -95,6 +96,44 @@ def test_simhash_banding_is_exact(spark):
                 if h <= 3:
                     brute.add((a.doc_id, b.doc_id, h))
     assert banded == brute
+
+
+_HASH_DOCS = [
+    (1, "один два три четыре"),
+    (2, "Hello World foo bar baz"),
+    (3, "Слово x y Слово z"),
+    (4, "a b c d a b"),
+]
+
+
+def _py_simhash(text, nbits=60):
+    votes = [0] * nbits
+    for tok in set(text.lower().split()):
+        h = hashlib.md5(tok.encode()).hexdigest()
+        for b in range(nbits):
+            votes[b] += ((int(h[b // 4], 16) >> (b % 4)) & 1) * 2 - 1
+    return sum(1 << b for b in range(nbits) if votes[b] >= 0)
+
+
+def _py_minhashes(text, num_hashes=8, n=3):
+    toks = text.lower().split()
+    grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    return [min(hashlib.md5(f"{s}|{g}".encode()).hexdigest() for g in grams) for s in range(num_hashes)]
+
+
+def test_simhash_and_minhash_match_md5_reference(spark):
+    """Signature VALUES equal a pure-Python md5 reference, so a wrong bit
+    extraction fails here even where the relative properties above hold."""
+    from mistocksync_spark.operators.dedup import minhash_signatures, shingle_table, simhash
+
+    df = _docs(spark, _HASH_DOCS)
+    assert {r.doc_id: r.simhash for r in simhash(df).collect()} == {
+        i: _py_simhash(t) for i, t in _HASH_DOCS
+    }
+    got = {}
+    for r in minhash_signatures(shingle_table(df), 8).collect():
+        got.setdefault(r.doc_id, [None] * 8)[r.seed] = r.minhash
+    assert got == {i: _py_minhashes(t) for i, t in _HASH_DOCS}
 
 
 # ---------------------------------------------------------------- vectors
@@ -747,7 +786,7 @@ def test_tfidf_top_terms_values_and_ranking(spark):
     assert out[("ru", "яблоко")].tfidf == 0.0 and out[("ru", "яблоко")].rk == 1
 
 
-# ------------------------------------------------- round-5 text pipeline
+# ------------------------------------------------------- text pipeline
 def test_pii_redact_counts_and_replaces(spark):
     from mistocksync_spark.operators.textual import pii_redact
 
@@ -812,7 +851,7 @@ def test_doc_chunks_overlap_and_tail(spark):
     assert by_doc[2] == [(0, 2, "short text")]
 
 
-# --------------------------------------- round-5 session: journey analytics
+# ------------------------------------------------------ journey analytics
 def _ev(spark, rows):
     return spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -916,7 +955,7 @@ def test_zscore_outliers_flags_planted_spike(spark):
     assert out[0].zscore > 3.0 and out[0].value_r == 1000.0
 
 
-# ------------------------------------- round-5 session: quality gates
+# ---------------------------------------------------------- quality gates
 def test_gopher_rules_planted_cases(spark):
     from mistocksync_spark.operators.textual import gopher_rules
 
@@ -1812,7 +1851,7 @@ def test_q22_dormant_excludes_recent_orderers(spark, sf_dir):
     assert len(rows) <= n_nations
 
 
-# ------------------------------------------- round-7: formerly-dark operators
+# ---------------------- bloom, char-LM, quality logit and KS drift operators
 def test_bloom_bits_no_false_negatives(spark):
     """Every document's own k probe positions must be set in the filter
     built over it — false negatives are impossible by construction."""
@@ -2111,7 +2150,7 @@ def test_event_feed_disorder_within_join_watermark(spark, sf_dir):
     event-time disorder staying under its 24 h watermark: beyond it, the
     stream-stream inner join silently DROPS matched pairs and the hash
     grade fails nondeterministically.  Check the margin instead of
-    assuming it (round-7 advisor finding): replay the files in the
+    assuming it: replay the files in the
     FileStreamSource's path order, track the running max event time, and
     bound (running_max − next file's min) + the 1 h join range under
     24 h."""
@@ -2224,8 +2263,8 @@ def test_new_ops_broadcast_their_bounded_frames(spark, sf_dir):
 
 
 def test_new_ops_no_cartesian_or_bnlj(spark, sf_dir):
-    """None of the round-7 operators may plan a CartesianProduct.  The
-    operators with NO scalar attach must plan zero
+    """None of the bloom / char-LM / quality-logit / KS operators may plan
+    a CartesianProduct.  The operators with NO scalar attach must plan zero
     BroadcastNestedLoopJoins; the rest (dsir totals, KS totals/grid) are
     allowed only their known 1-row/bounded-frame cross-join attaches."""
     from mistocksync_spark.plans.queries import QUERIES
@@ -2322,7 +2361,7 @@ def test_cuped_zero_pre_variance_falls_back_to_plain_means(spark):
         assert r.mean_adjusted == pytest.approx(r.mean_post)
 
 
-# --------------------------------------------- round-8 session: quality gates
+# ------------------------------------------------ data-quality rule engine
 def test_data_quality_report_counts_violations(spark):
     from mistocksync_spark.operators.quality import Rule, data_quality_report
 
@@ -2574,7 +2613,7 @@ def test_poisson_bootstrap_ci_brackets_mean_and_is_stable(spark):
 
 
 # --------------------------------------------------------------------------
-# Incremental corpus dedup MERGE (round-10: the production ingest tick)
+# Incremental corpus dedup MERGE (the production ingest tick)
 # --------------------------------------------------------------------------
 def _incr_fixture(spark):
     """Corpus + batch covering every verdict path: near-dup-of-corpus,
@@ -2748,7 +2787,7 @@ def test_incremental_embedding_dedup_stateful_matches(spark):
 
 
 def test_incremental_dedup_five_ticks_persisted_state(spark, tmp_path):
-    """Round-11 verdict ask #4: N=5 sequential ticks through a PERSISTED,
+    """N=5 sequential ticks through a PERSISTED,
     appended corpus_signature_state (parquet round-trip each tick, nothing
     carried in memory) must be bit-identical to the one-shot MERGE over
     the same arrivals — the prefix-decomposable seen-set rule beyond the
@@ -3042,7 +3081,7 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
               ).collect()}
     assert stored == got
 
-    # round-12: centroid-PARTITIONED state, read PRUNED to the batch's
+    # centroid-PARTITIONED state, read PRUNED to the batch's
     # assigned cells (lossless — candidates are a centroid equi-join) —
     # verdicts identical, and the pruned scan is partition-pruned in plan
     ivf_assign(corpus, cents, n_assign=2).write.partitionBy("centroid").parquet(

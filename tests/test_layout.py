@@ -148,7 +148,7 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_prepare_tick_stored_digest_gram_state(spark, sf_dir, tmp_path):
-    """r14 (verdict asks #1/#3): the prepare tick's exact and span gates
+    """The prepare tick's exact and span gates
     probe PERSISTED keyed-append digest/gram state under PRUNED reads,
     bit-identically to the self-contained tick, and the pruning is real
     partition pruning (PartitionFilters on the bucket column) in both
@@ -401,7 +401,7 @@ def test_tick_crash_then_replay_equals_clean_run(
 
 
 def test_prepare_tick_docs_read_is_pruned_and_batch_pinned(spark, sf_dir, tmp_path):
-    """r14 verdict ask #1: the docs-store fetch inside the stored tick is
+    """The docs-store fetch inside the stored tick is
     real partition pruning — PartitionFilters on BOTH layout columns
     (bucket via the candidate-id bucket set, batch via before_batch) —
     and reads strictly fewer files than the table holds."""
@@ -438,7 +438,7 @@ def test_prepare_tick_docs_read_is_pruned_and_batch_pinned(spark, sf_dir, tmp_pa
 
 
 def test_purge_keyed_state_rewrites_only_touched_buckets(spark, sf_dir, tmp_path):
-    """r15 governance tick: the right-to-be-forgotten purge must remove
+    """Governance tick: the right-to-be-forgotten purge must remove
     exactly the tombstoned keys' rows, and must NOT open/rewrite any
     bucket the purged keys don't hash to — deletion requests are small,
     so the purge is a partial rewrite (the DELETE-WHERE-with-file-pruning
@@ -487,7 +487,7 @@ def test_purge_keyed_state_rewrites_only_touched_buckets(spark, sf_dir, tmp_path
 
 
 def test_pack_emission_layout_is_bucket_routed_and_clustered(spark, tmp_path):
-    """r14 verdict ask #4: the pack emission sink's physical layout —
+    """The pack emission sink's physical layout —
     every row lands in the directory its (stratum, pack_id) bucket
     predicts, rows inside each file are range-clustered by (cluster,
     pack_id, pack_offset) so one pack is one contiguous byte range, and
@@ -572,7 +572,7 @@ def test_window_order_prioritizes_failures_and_oracle_changes(monkeypatch):
         "oracle_changed": {"rows_match": True, "schema_match": True,
                            "hash_match": True, "err": None},
         # truncated write: a dict without the match keys must NOT score
-        # as a pass (rank 3) — positive evidence required (r7 advisor)
+        # as a pass (rank 3) — positive evidence required
         "truncated": {},
     }
     monkeypatch.setattr(entry_mod, "_latest_grades", lambda: latest)
@@ -689,13 +689,13 @@ def test_digest_snapshot_merge_only_touches_graded_queries(tmp_path, monkeypatch
 
 
 def test_digest_snapshot_never_certifies_post_grade_edits():
-    """r14 verdict ask #6 — the digest-snapshot ritual, enforced by the
+    """The digest-snapshot ritual, enforced by the
     suite instead of remembered: the snapshot must NEVER certify the
     current tree's oracle for a windowed query unless it matches the
     GRADE-TIME oracle (reconstructed from the driver commit that added
     the latest CORRECTNESS file).  snap[q] == digest(now) while
     digest(now) != digest(grade-time) is exactly the merge-after-edit
-    signature that slipped through in r13 and r14 (the merge stored the
+    signature that has slipped through before (the merge stored the
     EDITED digest as if graded, erasing the pending-regrade flag); every
     legitimate state — steady, merge-pending, post-merge mid-round edit,
     sentinel-pinned — passes regardless of when in the round the suite
@@ -790,7 +790,7 @@ def test_registry_rows_only_set_is_closed():
 def test_every_query_has_a_bench_entry_or_is_headline():
     """Every registered query must be timed somewhere in bench.py —
     headline, scale-path, or extension — so no operator ships without a
-    recorded cost (the round-6 dark-code lesson)."""
+    recorded cost."""
     import re
 
     from mistocksync_spark.plans.queries import QUERIES
@@ -798,17 +798,37 @@ def test_every_query_has_a_bench_entry_or_is_headline():
     src = open("/root/repo/bench.py").read()
     benched = set(re.findall(r'"([a-z0-9_]+)"', src))
     unbenched = {q for q in QUERIES if q not in benched}
-    # r13: the pre-guard tail was added to the bench extension tier, so
-    # the invariant is now STRICT — "registered => costed" with no
-    # allowed-untimed escape hatch for any entry.
+    # STRICT — "registered => costed" with no allowed-untimed escape
+    # hatch for any entry.
     assert not unbenched, f"queries with no bench entry: {sorted(unbenched)}"
+
+
+def test_no_stream_wait_has_a_timeout():
+    """No ``awaitTermination`` under mistocksync_spark/ takes a timeout: the
+    availableNow queries end by themselves, so a fixed bound only turns a
+    slow host into an error (or, if its result is ignored, returns while
+    the query still runs)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mistocksync_spark"
+    bounded = [
+        f"{path.relative_to(pkg.parent)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "awaitTermination"
+        and (node.args or node.keywords)
+    ]
+    assert not bounded, f"awaitTermination called with a timeout at {bounded}"
 
 
 def test_parquet_content_tag_changes_on_regeneration(tmp_path):
     """Produce-once /tmp state is keyed on _parquet_content_tag: a
     regenerated source file (even bit-identical content — mtime moves)
     must change the tag, so a surviving bucketed table can never be
-    served stale (r12 ADVICE)."""
+    served stale."""
     import os
     import shutil
 
@@ -844,7 +864,7 @@ def test_scratch_root_isolates_pid_and_reaps_dead_sessions(tmp_path):
 
 
 def test_compaction_drops_uncommitted_replay_rows(spark, sf_dir, tmp_path):
-    """r15 ADVICE high: a crashed attempt of batch k leaves batch=k rows
+    """A crashed attempt of batch k leaves batch=k rows
     on disk with no checkpoint commit; the replayed tick's tick-START
     compaction must NOT fold them into the rebase-to-max rewrite (that
     made before_batch=k reads return ZERO pre-batch rows, every arrival
@@ -902,7 +922,7 @@ def test_compaction_drops_uncommitted_replay_rows(spark, sf_dir, tmp_path):
 def test_compaction_is_incremental_and_skips_compact_leaves(
     spark, sf_dir, tmp_path
 ):
-    """r15 verdict advisory: the cadence must rewrite ONLY leaves whose
+    """The compaction cadence must rewrite ONLY leaves whose
     file count exceeds the threshold — already-compact buckets' files
     stay byte-for-byte untouched (same path, size, mtime), so the
     compaction tax is O(new small files), never O(state)."""
@@ -970,7 +990,7 @@ def test_compaction_is_incremental_and_skips_compact_leaves(
 def test_keyed_state_layout_sidecar_guards_appends_and_purge(
     spark, sf_dir, tmp_path
 ):
-    """r15 ADVICE low ×2: (1) mixing batch/flat layouts or bucket counts
+    """(1) mixing batch/flat layouts or bucket counts
     in one table must fail immediately with a named error, not a
     downstream AnalysisException; (2) purge_keyed_state must derive the
     WRITE-TIME n_buckets from the table's sidecar — a disagreeing caller
@@ -1019,7 +1039,7 @@ def test_keyed_state_layout_sidecar_guards_appends_and_purge(
 def test_purge_match_cols_deletes_by_nonkey_with_bucket_pruning(
     spark, sf_dir, tmp_path
 ):
-    """r16 vector-store purge: the IVF inverted table is bucketed on
+    """Vector-store purge: the IVF inverted table is bucketed on
     centroid but deletion requests name vec_id.  ids rows carrying the
     tombstoned vectors' own cell assignments drive the bucket pruning
     (key_cols=centroid) while the per-leaf anti-join deletes on
@@ -1077,7 +1097,7 @@ def test_purge_match_cols_deletes_by_nonkey_with_bucket_pruning(
 
 
 def test_parallel_actions_runs_all_and_propagates_first_error(spark, tmp_path):
-    """r16 (guide §2.6): ``parallel_actions`` overlaps independent driver
+    """``parallel_actions`` overlaps independent driver
     actions.  Semantics pinned here: (a) every thunk runs to completion
     (no silently skipped write), (b) results on disk equal the sequential
     composition, (c) a failing thunk's exception propagates AFTER the

@@ -22,8 +22,6 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
 # faithful replica of the reference's find_product_code_in_name
 # (main.py:1591-1638): Python re, Unicode \b, ordered patterns,
 # first-match-wins with the characteristic/stoplist filters
@@ -67,7 +65,7 @@ def _spark_codes(spark, names):
     from mistocksync_spark.functions.codes import product_code_in_name
 
     df = spark.createDataFrame([(i, n) for i, n in enumerate(names)], ["i", "name"])
-    rows = df.select("i", product_code_in_name(F.col("name")).alias("c")).collect()
+    rows = df.select("i", product_code_in_name("name").alias("c")).collect()
     return [r["c"] for r in sorted(rows, key=lambda r: r["i"])]
 
 

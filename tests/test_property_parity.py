@@ -115,7 +115,7 @@ def test_safe_color_matches_mirror(spark, values):
 def test_bracket_code_matches_mirror(spark, values):
     from mistocksync_spark.functions.codes import bracket_code
 
-    assert _run(spark, values, bracket_code) == [mirror_bracket(v) for v in values]
+    assert _run(spark, values, lambda _: bracket_code("s")) == [mirror_bracket(v) for v in values]
 
 
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
@@ -123,4 +123,4 @@ def test_bracket_code_matches_mirror(spark, values):
 def test_battery_capacity_matches_mirror(spark, values):
     from mistocksync_spark.functions.codes import battery_capacity
 
-    assert _run(spark, values, battery_capacity) == [mirror_capacity(v) for v in values]
+    assert _run(spark, values, lambda _: battery_capacity("s")) == [mirror_capacity(v) for v in values]
