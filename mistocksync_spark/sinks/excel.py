@@ -7,12 +7,13 @@ cell writes that preserve the master file's formatting
 sheet DataFrames; this module is the thin driver-side shim that turns
 them into an ``.xlsx`` file:
 
-- ``write_report_xlsx``: collects each sheet (reports are small
-  aggregates by construction — a hard row-cap guards the Excel format
-  limit) and writes one workbook with the reference's Russian sheet
-  names.  Uses openpyxl when installed; otherwise falls back to a
-  dependency-free stdlib writer (an xlsx is a zip of XML parts), so the
-  file surface works even in minimal environments.
+- ``write_report_xlsx``: collects the sheets concurrently, one Spark
+  action per sheet (reports are small aggregates by construction — a
+  hard row-cap guards the Excel format limit), and writes one workbook
+  with the reference's Russian sheet names.  Uses openpyxl when
+  installed; otherwise falls back to a dependency-free stdlib writer (an
+  xlsx is a zip of XML parts), so the file surface works even in
+  minimal environments.
 - ``update_prices_inplace``: S12's formatting-preserving point writes
   into an EXISTING workbook.  Rewriting arbitrary styled workbooks
   safely requires openpyxl, so this one is environment-gated.
@@ -30,6 +31,8 @@ from typing import Mapping
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
+
+from mistocksync_spark.sinks.layout import parallel_actions
 
 # reference sheet names in reference order (main.py:3137-4089)
 SHEET_NAMES: dict[str, str] = {
@@ -163,25 +166,34 @@ def write_report_xlsx(
     the reference's sheet names.
 
     Collect happens here by design: a report is a human-facing aggregate.
-    ``row_cap`` fails loudly if a sheet exceeds the xlsx row limit — at
-    100 TB the fix is upstream (aggregate or limit the sheet query), not a
-    bigger spreadsheet.
+    Unknown keys are rejected before any job runs; the sheets are then
+    collected concurrently (``parallel_actions``, one action per sheet) and
+    written in ``SHEET_NAMES`` order.  ``row_cap`` fails loudly if a sheet
+    exceeds the xlsx row limit — at 100 TB the fix is upstream (aggregate
+    or limit the sheet query), not a bigger spreadsheet.
     """
+    unknown = set(sheets) - set(SHEET_NAMES)
+    if unknown:
+        raise ValueError(f"unknown sheet keys: {sorted(unknown)}; expected {list(SHEET_NAMES)}")
+    keys = [key for key in SHEET_NAMES if key in sheets]
+    collected: dict[str, list] = {}
+
+    def _collect(key: str):
+        def run():
+            collected[key] = sheets[key].limit(row_cap + 1).collect()
+
+        return run
+
+    parallel_actions(*(_collect(key) for key in keys))
     ordered = []
-    for key, title in SHEET_NAMES.items():
-        if key not in sheets:
-            continue
-        df = sheets[key]
-        rows = df.limit(row_cap + 1).collect()
+    for key in keys:
+        rows = collected[key]
         if len(rows) > row_cap:
             raise ValueError(
                 f"sheet {key!r} exceeds {row_cap} rows — xlsx cannot hold it; "
                 "aggregate or limit the sheet query upstream"
             )
-        ordered.append((title, list(df.columns), [tuple(r) for r in rows]))
-    unknown = set(sheets) - set(SHEET_NAMES)
-    if unknown:
-        raise ValueError(f"unknown sheet keys: {sorted(unknown)}; expected {list(SHEET_NAMES)}")
+        ordered.append((SHEET_NAMES[key], list(sheets[key].columns), [tuple(r) for r in rows]))
     try:
         _write_xlsx_openpyxl(path, ordered)
     except ImportError:

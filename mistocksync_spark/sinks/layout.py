@@ -63,29 +63,41 @@ def parallel_actions(*thunks) -> None:
     independent writes cost ~max() instead of sum() of their walls).
 
     Contract: every thunk must be a genuinely independent job — distinct
-    output directories, and any SHARED lazy ``localCheckpoint`` input must
-    already be materialized by an earlier action (so no two threads race
-    to compute the same checkpoint).  All actions complete before this
-    returns; the first exception propagates (remaining futures are still
-    awaited, so no write is left silently in flight), with the other
-    failures attached as notes so multi-write failures keep their
-    diagnostics.
+    output directories.  Thunks may share a lazy ``localCheckpoint`` input
+    that no action has materialized yet: each checkpoint partition is one
+    cached block, which one task computes while other readers of that
+    block on the same executor wait for it, so in local mode (one
+    executor) every thunk reads the same rows.
+    All actions complete before this returns; the first exception
+    propagates (remaining futures are still awaited, so no write is left
+    silently in flight), with the other failures attached as notes so
+    multi-write failures keep their diagnostics.
 
-    Limitation: the pool uses plain ``ThreadPoolExecutor`` threads, not
-    ``pyspark.InheritableThread`` — caller-thread JVM-local properties
-    (job groups/tags, scheduler pools) do NOT propagate to the overlapped
-    jobs.  Nothing in this repo sets those today; if job-group
-    cancellation is ever adopted, switch to InheritableThread (or copy
-    local properties) or these writes will silently escape the group."""
+    Each thunk is wrapped in the caller's thread with
+    ``inheritable_thread_target``, so the overlapped jobs keep the
+    caller's job group, description and tags."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     if not thunks:
         return
     if len(thunks) == 1:
         thunks[0]()
         return
+    session = SparkSession.active()
+
+    def inherit(thunk):
+        # one wrapper per thunk: each wrapper installs its own copy of the
+        # caller's local properties in its pool thread, and Spark writes to
+        # that copy (the SQL execution id) while the thread's action runs
+        wrap = inheritable_thread_target(session)
+        # with PYSPARK_PIN_THREAD=false PySpark hands the session back: no
+        # JVM thread is tied to a pool thread, so there is nothing to inherit
+        return thunk if isinstance(wrap, SparkSession) else wrap(thunk)
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         errs = []
         for f in futures:
             try:
@@ -93,10 +105,13 @@ def parallel_actions(*thunks) -> None:
             except BaseException as e:  # await ALL, then raise the first
                 errs.append(e)
         if errs:
-            for other in errs[1:]:
-                errs[0].add_note(
-                    f"parallel_actions: concurrent action also failed: {other!r}"
-                )
+            if hasattr(errs[0], "add_note"):  # Python >= 3.11
+                for other in errs[1:]:
+                    # str(), not repr(): a PySpark error's repr drops its message
+                    errs[0].add_note(
+                        "parallel_actions: concurrent action also failed: "
+                        f"{type(other).__name__}: {other}"
+                    )
             raise errs[0]
 
 

@@ -4,7 +4,9 @@ The reference loads Excel with pandas and applies a JSON config:
 drop ignored columns → rename per mapping → cast types → drop all-null rows
 → validate (loader.py:439-487).  Here the same config drives a declarative
 DataFrame pipeline, so Catalyst prunes columns at the scan and the casts
-ride inside whole-stage codegen.
+ride inside whole-stage codegen.  Every read checks the required columns,
+which needs only the schema and so runs no Spark job; the S6 out-of-range
+price counts are warn-only and on demand through ``validate``.
 
 Sources: parquet/CSV natively via ``spark.read`` (the scale path); ``.xlsx``
 via a driver-side openpyxl/pandas bridge, gated behind an import-try since
@@ -99,12 +101,17 @@ def drop_empty_rows(df: DataFrame, config: SourceConfig) -> DataFrame:
     return df.na.drop(how="all") if config.skip_empty_rows else df
 
 
-def validate(df: DataFrame, config: SourceConfig) -> dict:
-    """S6: required columns hard-fail; out-of-range prices are warn-only
-    counts (loader.py:288-344)."""
+def _check_required_columns(df: DataFrame, config: SourceConfig) -> None:
     missing = [c for c in config.required_columns if c not in df.columns]
     if missing:
         raise ValueError(f"missing required columns: {missing}")
+
+
+def validate(df: DataFrame, config: SourceConfig) -> dict:
+    """S6: required columns hard-fail; out-of-range prices are warn-only
+    counts (loader.py:288-344).  The counts cost one aggregate action, so
+    they are computed only when a caller asks for them."""
+    _check_required_columns(df, config)
     warnings = {}
     price_cols = [c for c in df.columns if c.startswith("price")]
     if price_cols:
@@ -123,14 +130,16 @@ def validate(df: DataFrame, config: SourceConfig) -> dict:
 
 
 def apply_config(df: DataFrame, config: SourceConfig, check: bool = True) -> DataFrame:
-    """S1 pipeline: drop-ignored → rename → cast → drop-empty → validate,
-    in the reference's order (loader.py:442-469)."""
+    """S1 pipeline: drop-ignored → rename → cast → drop-empty → required
+    columns, in the reference's order (loader.py:442-469).  The required-
+    column check reads only the schema, so this submits no Spark job; the
+    S6 price-range warnings are on demand through ``validate``."""
     df = remove_ignored_columns(df, config)
     df = apply_column_mapping(df, config)
     df = apply_data_types(df, config)
     df = drop_empty_rows(df, config)
     if check:
-        validate(df, config)
+        _check_required_columns(df, config)
     return df
 
 
@@ -223,6 +232,8 @@ def read_excel(spark: SparkSession, path: str, config: SourceConfig, sheet: int 
         pdf = pd.read_excel(path, sheet_name=sheet)
         raw = spark.createDataFrame(pdf.astype("object").where(pdf.notna(), None))
     except ImportError:
+        import pyarrow as pa
+
         cells = _read_xlsx_stdlib(path, sheet=sheet)
         if not cells:
             raise ValueError(f"empty worksheet in {path}")
@@ -231,29 +242,29 @@ def read_excel(spark: SparkSession, path: str, config: SourceConfig, sheet: int 
         data = [tuple((r + [None] * width)[:width]) for r in cells[1:]]
 
         # per-column type inference so the fallback yields the same typed
-        # schema as the pandas path (round-2 advisory: an all-string
-        # fallback schema made results differ by environment for columns
-        # the SourceConfig did not cast)
+        # schema as the pandas path (an all-string fallback schema made
+        # results differ by environment for columns the SourceConfig did
+        # not cast)
         def _col_type(i: int):
             vals = [r[i] for r in data if r[i] is not None]
             if vals and all(isinstance(v, bool) for v in vals):
-                return "boolean", bool
+                return pa.bool_(), bool
             if vals and all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
-                return "bigint", int
+                return pa.int64(), int
             if vals and all(
                 isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals
             ):
-                return "double", float
-            return "string", str
+                return pa.float64(), float
+            return pa.string(), str
 
-        types = [_col_type(i) for i in range(width)]
-        raw = spark.createDataFrame(
-            [
-                tuple(conv(v) if v is not None else None for (_, conv), v in zip(types, r))
-                for r in data
-            ],
-            schema=", ".join(f"`{h}` {t}" for h, (t, _) in zip(header, types)),
-        )
+        # an Arrow table plans as a LocalRelation: recomputing the list
+        # starts no Python worker, unlike a list of tuples (a pickled RDD)
+        columns = []
+        for i in range(width):
+            arrow_type, conv = _col_type(i)
+            values = [conv(r[i]) if r[i] is not None else None for r in data]
+            columns.append(pa.array(values, type=arrow_type))
+        raw = spark.createDataFrame(pa.Table.from_arrays(columns, names=header))
     return apply_config(raw, config)
 
 

@@ -76,18 +76,84 @@ def test_write_report_xlsx_end_to_end_from_cascade(spark, sf_dir, tmp_path):
         assert sheet_xml.count("<row ") == matches_rows + 1  # + header
 
 
-def test_write_report_xlsx_rejects_unknown_and_oversize(spark, tmp_path):
+def test_write_report_xlsx_rejects_unknown_and_oversize(spark, tmp_path, job_group):
     from mistocksync_spark.sinks.excel import write_report_xlsx
 
     mk = spark.createDataFrame
-    with pytest.raises(ValueError, match="unknown sheet keys"):
-        write_report_xlsx({"bogus": mk([(1,)], "x long")}, str(tmp_path / "a.xlsx"))
+    # an unknown key is rejected before any sheet job runs
+    sheets = {"summary": mk([(1,)], "x long"), "bogus": mk([(1,)], "x long")}
+    with job_group("report:unknown") as ids:
+        with pytest.raises(ValueError, match="unknown sheet keys"):
+            write_report_xlsx(sheets, str(tmp_path / "a.xlsx"))
+    assert ids == []
+    assert not (tmp_path / "a.xlsx").exists()
     with pytest.raises(ValueError, match="exceeds"):
         write_report_xlsx(
             {"summary": mk([(i,) for i in range(5)], "x long")},
             str(tmp_path / "b.xlsx"),
             row_cap=3,
         )
+
+
+def test_write_report_xlsx_failed_sheets_raise_in_sheet_order(spark, tmp_path, job_group):
+    """Two sheets fail at collect while the others succeed: the first
+    failing sheet in ``SHEET_NAMES`` order raises, the other failure rides
+    along as a note, no job is left running and no file is written."""
+    from pyspark.sql import functions as F
+
+    from mistocksync_spark.sinks.excel import write_report_xlsx
+
+    def failing(tag):
+        return spark.range(5).select(
+            F.when(F.col("id") >= 0, F.raise_error(F.lit(f"{tag} sheet failed"))).alias("x")
+        )
+
+    sheets = _report_sheets(spark)
+    sheets["warnings"] = failing("warnings")
+    sheets["matches"] = failing("matches")
+    path = tmp_path / "failed.xlsx"
+    with job_group("report:failed") as ids:
+        with pytest.raises(Exception, match="matches sheet failed") as err:
+            write_report_xlsx(sheets, str(path))
+    assert any("warnings sheet failed" in note for note in err.value.__notes__)
+    assert len(ids) >= len(sheets)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert not path.exists()
+
+
+def test_write_report_xlsx_concurrent_collect_matches_sequential(spark, sf_dir, tmp_path):
+    """Sheets built straight from a fresh cascade share its lazy
+    checkpoints, which nothing has materialized yet; collected
+    concurrently they give the rows a sequential collect of a second,
+    independent cascade gives."""
+    from collections import Counter
+
+    from mistocksync_spark.operators.cascade import perform_comparison
+    from mistocksync_spark.plans.queries import _preprocess_vitya, base_feed, supplier_feed
+    from mistocksync_spark.sinks.excel import SHEET_NAMES, write_report_xlsx
+    from mistocksync_spark.sinks.report import build_report
+    from mistocksync_spark.sources.reader import _read_xlsx_stdlib
+
+    def report():
+        sup = _preprocess_vitya(supplier_feed(spark, sf_dir))
+        base = base_feed(spark, sf_dir)
+        result = perform_comparison(
+            sup,
+            base,
+            supplier_article="article_vitya",
+            supplier_price="price_usd",
+            base_article="article_vitya",
+            base_price="price_vitya_usd",
+        )
+        return build_report(result, base, sup, supplier_article="article_vitya")
+
+    path = str(tmp_path / "report.xlsx")
+    write_report_xlsx(report(), path)
+    expected = {key: df.collect() for key, df in report().items()}
+    for i, key in enumerate(k for k in SHEET_NAMES if k in expected):
+        header, *rows = _read_xlsx_stdlib(path, sheet=i)
+        got = Counter(tuple((r + [None] * len(header))[: len(header)]) for r in rows)
+        assert got == Counter(tuple(r) for r in expected[key]), key
 
 
 def test_write_duplicates_xlsx(spark, tmp_path):

@@ -1145,3 +1145,48 @@ def test_parallel_actions_runs_all_and_propagates_first_error(spark, tmp_path):
         parallel_actions(boom, ok)
     assert done == [True]
     assert keyed_state_read(spark, str(tmp_path / "c")).count() == 200
+
+
+def test_parallel_actions_keeps_callers_job_group(spark, job_group):
+    """Jobs submitted from the pool threads stay in the caller's job group,
+    so a run's entry label covers its overlapped actions too."""
+    from mistocksync_spark.sinks.layout import parallel_actions
+
+    def a():
+        spark.range(0, 100).count()
+
+    def b():
+        spark.range(0, 200).count()
+
+    with job_group("parallel_actions:sequential") as sequential:
+        a()
+        b()
+    with job_group("parallel_actions:overlapped") as overlapped:
+        parallel_actions(a, b)
+    assert len(sequential) >= 2
+    assert len(overlapped) == len(sequential)
+
+
+def test_parallel_actions_gives_each_thunk_its_own_local_properties(spark):
+    """Each pool thread gets its own copy of the caller's local
+    properties: Spark writes to them while an action runs (the SQL
+    execution id), so one copy shared by the threads would let one
+    action's writes show up in a sibling's jobs."""
+    import threading
+
+    from mistocksync_spark.sinks.layout import parallel_actions
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=120)
+    got = {}
+
+    def thunk(name):
+        def run():
+            sc.setLocalProperty("parallel_actions.test", name)
+            both_set.wait()
+            got[name] = sc.getLocalProperty("parallel_actions.test")
+
+        return run
+
+    parallel_actions(thunk("a"), thunk("b"))
+    assert got == {"a": "a", "b": "b"}

@@ -54,6 +54,62 @@ def test_reader_required_column_failure(spark, cfg_dir):
         apply_config(df, cfg)
 
 
+def test_apply_config_submits_no_job(spark, cfg_dir, job_group):
+    """The required-column check reads only the schema: ``apply_config``
+    runs no Spark action, and a missing column still fails the read."""
+    from mistocksync_spark.sources.reader import SourceConfig, apply_config
+
+    cfg = SourceConfig.load("custom", config_dir=cfg_dir)
+    df = spark.createDataFrame([("1", "10.5", "x")], ["Артикул", "Цена", "name"])
+    missing = spark.createDataFrame([("x",)], ["name"])
+    with job_group("apply_config") as ids:
+        apply_config(df, cfg)
+        with pytest.raises(ValueError, match="required"):
+            apply_config(missing, cfg)
+    assert ids == []
+
+
+def test_validate_counts_out_of_range_prices(spark):
+    """S6 on demand: ``validate`` counts non-null prices outside
+    [price_min, price_max] per ``price*`` column and omits clean columns."""
+    from mistocksync_spark.sources.reader import SourceConfig, validate
+
+    cfg = SourceConfig(name="t", required_columns=["article"], price_min=0.1, price_max=1000.0)
+    df = spark.createDataFrame(
+        [(1, -1.0, 0.5, 1.0), (2, 5.0, 0.05, 2.0), (3, 2000.0, None, 3.0), (4, None, 1000.0, 4.0)],
+        "article long, price double, price_usd double, price_rub double",
+    )
+    assert validate(df, cfg) == {
+        "ok": True,
+        "price_range_warnings": {"price": 2, "price_usd": 1},
+    }
+    with pytest.raises(ValueError, match="required"):
+        validate(df.drop("article"), cfg)
+
+
+def test_read_excel_stdlib_plans_a_local_relation(spark, cfg_dir, tmp_path, monkeypatch):
+    """The stdlib branch hands Spark an Arrow table, so every leaf of the
+    analyzed plan is a ``LocalRelation``: recomputing the list starts no
+    Python worker (a list of tuples plans as a pickled ``LogicalRDD``)."""
+    import sys
+
+    from mistocksync_spark.sinks.excel import _write_xlsx_stdlib
+    from mistocksync_spark.sources.reader import SourceConfig, read_excel
+
+    monkeypatch.setitem(sys.modules, "openpyxl", None)  # force the stdlib branch
+    path = str(tmp_path / "list.xlsx")
+    _write_xlsx_stdlib(
+        path,
+        [("Лист1", ["Артикул", "Цена", "name", "flag"], [(1, 10.5, "Повербанк", True), (7, 20, None, False)])],
+    )
+    out = read_excel(spark, path, SourceConfig.load("custom", config_dir=cfg_dir))
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    names = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    assert names == {"LocalRelation"}
+    assert dict(out.dtypes) == {"article": "bigint", "price": "double", "name": "string", "flag": "boolean"}
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 10.5, "Повербанк", True), (7, 20.0, None, False)]
+
+
 def test_read_excel_stdlib_roundtrip(spark, cfg_dir, tmp_path):
     """Writer → reader round trip with no openpyxl: the stdlib xlsx writer
     (sinks/excel.py) produces a file the stdlib reader path parses."""
