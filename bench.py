@@ -63,7 +63,7 @@ def _reset(spark):
     from mistocksync_spark.plans import feeds, queries
 
     feeds._FEED_MEMO.clear()
-    queries._cascade_memo_clear()
+    queries._MEMO.clear()
     # the memos hold localCheckpoint()ed frames whose executor blocks are
     # only released when the JVM ContextCleaner sees the RDD refs die —
     # force the Python side promptly, or dead checkpoint blocks from

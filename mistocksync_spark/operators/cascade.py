@@ -90,8 +90,6 @@ def perform_comparison(
             sup_new, code_fn, supplier_article, price_col=supplier_price, order_col=supplier_order
         )
         base_var = base_code_variants(base, code_fn, base_price, order_col=base_order)
-        if cache:
-            sup_var, base_var = sup_var.cache(), base_var.cache()
         return sup_var, base_var
 
     bracket_matches = code_match(*_variants(bracket_code), match_type="bracket_code")

@@ -126,21 +126,10 @@ def base_code_variants(
     )
 
 
-#: "auto" broadcast gate for code_match: hint the lookup aggregates only
-#: when the measured row count of the largest one (b1: distinct
-#: (code, color, capacity) combos) is at most this.  5M rows of the
-#: 4-column lookup is ~300 MB as broadcast rows — far inside Spark's 8 GB
-#: executor broadcast ceiling, far outside anything AQE would pick on its
-#: own stats (which are unusable here: the variant explode inflates the
-#: optimizer's size estimate to ~1e19 bytes regardless of actual data).
-BROADCAST_LOOKUP_CAP_ROWS = 5_000_000
-
-
 def code_match(
     supplier_variants: DataFrame,
     base_variants: DataFrame,
     match_type: str = "product_code",
-    broadcast_lookups: bool | str = True,
 ) -> DataFrame:
     """Join supplier and base variants on the derived code and keep the best
     base variant per supplier variant (ref main.py:2429-2536).
@@ -161,29 +150,19 @@ def code_match(
     unified-code regex extraction — the most expensive expression in the
     pipeline — would re-run five times per query.
 
-    ``broadcast_lookups`` — CARDINALITY ASSUMPTION: the
-    b1–b4 lookup aggregates are bounded by the number of DISTINCT
-    (code, color, capacity) combinations in the base catalog, which grows
-    with the catalog.  ``True`` (default, correct for any
-    catalog whose distinct-combo footprint fits an executor — every
-    benched scale through sf1, where b1 tops out at ~200k rows / tens of
-    MB) force-broadcasts all four; at 8 GB+ of distinct combos the hint
-    would OOM the driver instead of degrading.  ``False`` drops the hints
-    entirely (optimizer picks build sides from stats).  ``"auto"``
-    MEASURES the largest lookup (b1's distinct-combo count) with one
-    count job and broadcasts only at or below
-    ``BROADCAST_LOOKUP_CAP_ROWS`` — the mode a 100 TB deployment should
-    run.  Catalyst's own stats cannot make this call (the variant explode
-    inflates the plan size estimate to ~1e19 bytes at any scale), and the
-    count is not wasted work: it materializes the base-variant checkpoint
-    that all five downstream consumers read anyway.
+    CARDINALITY ASSUMPTION: the b1–b4 lookups are always broadcast.  They
+    are bounded by the number of DISTINCT (code, color, capacity)
+    combinations in the base catalog, which grows with the catalog: every
+    benched scale through sf1 tops out at ~200k rows / tens of MB for b1,
+    while at 8 GB+ of distinct combos the hint would OOM the driver
+    instead of degrading.  Catalyst's own stats cannot make this call (the
+    variant explode inflates the plan size estimate to ~1e19 bytes at any
+    scale).
     """
     base_variants = base_variants.localCheckpoint(eager=False)
     supplier_variants = supplier_variants.localCheckpoint(eager=False)
     agg_min = F.min("base_variant_order")
     b1 = base_variants.groupBy("code", "base_color", "base_capacity").agg(agg_min.alias("o1"))
-    if broadcast_lookups == "auto":
-        broadcast_lookups = b1.count() <= BROADCAST_LOOKUP_CAP_ROWS
     b2 = base_variants.groupBy("code", "base_color").agg(agg_min.alias("o2"))
     b3 = base_variants.groupBy("code", "base_capacity").agg(agg_min.alias("o3"))
     b4 = base_variants.groupBy("code").agg(agg_min.alias("o4"))
@@ -194,31 +173,28 @@ def code_match(
     # dropped (HintErrorLogger: "build left for left outer join") while
     # the executed plan builds right anyway.  Hinting the build side makes
     # the stated plan the executed plan.
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_lookups else df
-
     s = supplier_variants.alias("s")
     cand = (
         s.join(
-            _bc(b1.alias("b1")),
+            F.broadcast(b1.alias("b1")),
             (F.col("s.code") == F.col("b1.code"))
             & (F.col("s.supplier_color") == F.col("b1.base_color"))
             & F.col("s.supplier_capacity").eqNullSafe(F.col("b1.base_capacity")),
             "left",
         )
         .join(
-            _bc(b2.alias("b2")),
+            F.broadcast(b2.alias("b2")),
             (F.col("s.code") == F.col("b2.code"))
             & (F.col("s.supplier_color") == F.col("b2.base_color")),
             "left",
         )
         .join(
-            _bc(b3.alias("b3")),
+            F.broadcast(b3.alias("b3")),
             (F.col("s.code") == F.col("b3.code"))
             & F.col("s.supplier_capacity").eqNullSafe(F.col("b3.base_capacity")),
             "left",
         )
-        .join(_bc(b4.alias("b4")), F.col("s.code") == F.col("b4.code"), "inner")
+        .join(F.broadcast(b4.alias("b4")), F.col("s.code") == F.col("b4.code"), "inner")
     )
     tier = (
         F.when(F.col("o1").isNotNull(), 1)

@@ -62,7 +62,6 @@ def exact_article_match(
     base_price: str,
     supplier_order: str = "row_id",
     base_order: str = "row_id",
-    broadcast_supplier: bool = True,
 ) -> dict[str, DataFrame]:
     """J1: exact match on the normalized article key.
 
@@ -110,8 +109,7 @@ def exact_article_match(
     # plan, so the broadcast-strategy plan tests still see them.
     sup_kv = sup_kv.localCheckpoint(eager=False)
     base_kv = base_kv.localCheckpoint(eager=False)
-    left = F.broadcast(sup_kv) if broadcast_supplier else sup_kv
-    joined = left.join(base_kv, on="article", how="inner")
+    joined = F.broadcast(sup_kv).join(base_kv, on="article", how="inner")
 
     matches = joined.select(
         "article",

@@ -1155,12 +1155,12 @@ def ivf_index_rebuild(
     emit the cell-population diff against the old inverted table.
 
     Returns ``(centroids_df, inverted_df, diff_df)``; the caller rewrites
-    the two persisted tables from the first two (versioned, as
-    ``merge_ladder``-style state), and ``diff_df`` — one row per centroid,
-    (centroid, n_old, n_new, n_delta) — is the rebuild audit: how cell
-    occupancy moved under the re-trained quantizer, the readout that says
-    whether the old quantizer had drifted (a healthy rebuild shifts mass
-    roughly proportionally; a drifted one concentrates it).
+    the two persisted tables from the first two, and ``diff_df`` — one
+    row per centroid, (centroid, n_old, n_new, n_delta) — is the rebuild
+    audit: how cell occupancy moved under the re-trained quantizer, the
+    readout that says whether the old quantizer had drifted (a healthy
+    rebuild shifts mass roughly proportionally; a drifted one
+    concentrates it).
 
     Cost shape: one k-means train (``iterations`` corpus passes of
     map-side k×dim partials) + one assignment pass + two k-bounded

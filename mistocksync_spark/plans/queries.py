@@ -528,32 +528,31 @@ def _sql_code_cascade(
     )
 
 
-# Memoized per (session, sf_dir, variant): five J1–J3 queries share one
-# cascade, and re-running `perform_comparison(cache=True)` per query
-# re-cached identical lineages ("Asked to cache already cached data"
-# spam).  bench.py clears this between entries so
-# each bench reading stays cold.
-_CASCADE_MEMO: dict = {}
-
-# Memoized materialized CC label frame per (session, sf_dir): the
-# clusters/histogram/survivors family shares ONE connected-components run —
-# CC ends in a localCheckpoint, so the memoized frame is already
-# materialized and each sibling query pays only its own joins/groupBys
-# (re-deriving pairs + CC per sibling measured 79 s vs 12 s).
-# bench.py's _reset clears this too, so cold readings stay cold.
-_CC_MEMO: dict = {}
+# Built values shared by sibling entries, one per (session, sf_dir, name).
+# Five J1–J3 queries share one cascade: re-running
+# `perform_comparison(cache=True)` per query re-cached identical lineages
+# ("Asked to cache already cached data" spam).  The dedup, graph, span and
+# doc-clustering families each share one materialized intermediate, so
+# each sibling pays only its own joins/groupBys (re-deriving pairs + CC per
+# sibling measured 79 s vs 12 s).  bench.py's _reset clears it between
+# entries, so each cold bench reading stays cold.
+_MEMO: dict = {}
 
 
-def _cascade_memo_clear() -> None:
-    _CASCADE_MEMO.clear()
-    _CC_MEMO.clear()
+def _memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()``, run once per (session, sf_dir, name)."""
+    key = (id(spark), sf_dir, name)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def _simhash_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components labels over the SimHash near-dup pairs
-    (max_hamming=3), materialized once per (session, sf_dir)."""
-    key = (id(spark), sf_dir, "simhash_cc")
-    if key not in _CC_MEMO:
+    (max_hamming=3), materialized once per (session, sf_dir): CC ends in
+    a localCheckpoint, so the memoized frame is already materialized."""
+
+    def build():
         from mistocksync_spark.operators.dedup import (
             connected_components,
             simhash,
@@ -562,8 +561,9 @@ def _simhash_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         from mistocksync_spark.plans.feeds import docs_aug
 
         pairs = simhash_near_dup_pairs(simhash(docs_aug(spark, sf_dir)), max_hamming=3)
-        _CC_MEMO[key] = connected_components(pairs)
-    return _CC_MEMO[key]
+        return connected_components(pairs)
+
+    return _memo(spark, sf_dir, "simhash_cc", build)
 
 
 def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,13 +574,14 @@ def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo pattern as ``_minhash_pairs_shared``).  The headline
     ``ngram_jaccard_pairs`` entry stays unmemoized so its cold bench
     reading measures the full pipeline."""
-    key = (id(spark), sf_dir, "shingles")
-    if key not in _CC_MEMO:
+
+    def build():
         from mistocksync_spark.operators.dedup import shingle_table
         from mistocksync_spark.plans.feeds import docs_aug
 
-        _CC_MEMO[key] = shingle_table(docs_aug(spark, sf_dir)).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+        return shingle_table(docs_aug(spark, sf_dir)).localCheckpoint(eager=False)
+
+    return _memo(spark, sf_dir, "shingles", build)
 
 
 def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,28 +591,31 @@ def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed edge list instead of re-deriving shingle→minhash→
     band→join.  The headline ``minhash_lsh_pairs`` entry stays
     unmemoized so its cold bench reading measures the full pipeline."""
-    key = (id(spark), sf_dir, "minhash_pairs")
-    if key not in _CC_MEMO:
-        _CC_MEMO[key] = QUERIES["minhash_lsh_pairs"](spark, sf_dir).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+    return _memo(
+        spark,
+        sf_dir,
+        "minhash_pairs",
+        lambda: QUERIES["minhash_lsh_pairs"](spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 def _cascade(spark: SparkSession, sf_dir: str):
     from mistocksync_spark.operators.cascade import perform_comparison
 
-    key = (id(spark), sf_dir, "vitya")
-    if key not in _CASCADE_MEMO:
-        sup = _preprocess_vitya(supplier_feed(spark, sf_dir))
-        _CASCADE_MEMO[key] = perform_comparison(
-            sup,
+    return _memo(
+        spark,
+        sf_dir,
+        "vitya",
+        lambda: perform_comparison(
+            _preprocess_vitya(supplier_feed(spark, sf_dir)),
             base_feed(spark, sf_dir),
             supplier_article="article_vitya",
             supplier_price="price_usd",
             base_article="article_vitya",
             base_price="price_vitya_usd",
             cache=True,
-        )
-    return _CASCADE_MEMO[key]
+        ),
+    )
 
 
 @query("bracket_code_match", _sql_code_cascade(lambda c: _SQL_BRACKET.format(col=c), "bracket_code"))
@@ -700,11 +704,13 @@ def _cascade_hot(spark: SparkSession, sf_dir: str):
     exactly once; the counts themselves are the same jobs the monolithic
     action would run anyway."""
     r = _cascade(spark, sf_dir)
-    key = (id(spark), sf_dir, "vitya-hot")
-    if key not in _CASCADE_MEMO:
+
+    def fill() -> bool:
         for k in ("new_items", "bracket_matches", "code_matches"):
             r[k].count()
-        _CASCADE_MEMO[key] = True
+        return True
+
+    _memo(spark, sf_dir, "vitya-hot", fill)
     return r
 
 
@@ -1798,8 +1804,8 @@ def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFr
     partitions.  Pruning is lossless for the candidate equi-join —
     untouched buckets cannot match any batch band key — so this must
     hash-match the self-contained tick; oracle shared with
-    ``incremental_dedup_merge``.  This grades the layout the 20-tick
-    ladders (SCALE_r12.md §1) run at scale."""
+    ``incremental_dedup_merge``.  This grades the layout the keyed-state
+    ticks (streaming/merge.py) run."""
     import hashlib
 
     from mistocksync_spark.operators.dedup import (
@@ -1823,7 +1829,7 @@ def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFr
     import shutil
 
     shutil.rmtree(root, ignore_errors=True)  # append sink: start clean
-    keyed_state_append(corpus_signature_state(corpus), root, key, n_buckets=64)
+    keyed_state_append(corpus_signature_state(corpus), root, key, batch_id=-1)
     bbands = corpus_signature_state(batch).localCheckpoint(eager=False)
     state = keyed_state_read(spark, root, touched_buckets(bbands, key, 64))
     return incremental_dedup_merge(corpus, batch, corpus_bands=state)
@@ -4005,9 +4011,11 @@ def embedding_topk_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cascade_dimi(spark: SparkSession, sf_dir: str):
     from mistocksync_spark.operators.cascade import perform_comparison
 
-    key = (id(spark), sf_dir, "dimi")
-    if key not in _CASCADE_MEMO:
-        _CASCADE_MEMO[key] = perform_comparison(
+    return _memo(
+        spark,
+        sf_dir,
+        "dimi",
+        lambda: perform_comparison(
             _prep_dimi(spark, sf_dir),
             base_feed(spark, sf_dir),
             supplier_article="article_dimi",
@@ -4015,8 +4023,8 @@ def _cascade_dimi(spark: SparkSession, sf_dir: str):
             base_article="article_dimi",
             base_price="price_dimi_usd",
             cache=True,
-        )
-    return _CASCADE_MEMO[key]
+        ),
+    )
 
 
 def _sql_code_cascade_dimi(code_of, match_type: str) -> str:
@@ -5687,14 +5695,15 @@ def _triangles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient composes it with the degree/wedge pass instead of
     re-running the two-join closure (the same
     memo pattern as ``_simhash_cc_labels``)."""
-    key = (id(spark), sf_dir, "minhash_triangles")
-    if key not in _CC_MEMO:
+
+    def build():
         from mistocksync_spark.operators.dedup import triangle_count
 
-        _CC_MEMO[key] = triangle_count(
+        return triangle_count(
             _minhash_pairs_shared(spark, sf_dir)
         ).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+
+    return _memo(spark, sf_dir, "minhash_triangles", build)
 
 
 @query("dedup_graph_triangles")
@@ -8095,15 +8104,16 @@ def _span_positions_shared(
     memo entry with raw-substring grams: the coverage entry only
     tests gram equality, while the anchored variants subsample on the
     digest hex prefix and must keep md5."""
-    key = (id(spark), sf_dir, "span_pos" if hashed else "span_pos_raw")
-    if key not in _CC_MEMO:
+
+    def build():
         from mistocksync_spark.operators.dedup import char_gram_positions
         from mistocksync_spark.plans.feeds import docs_span
 
-        _CC_MEMO[key] = char_gram_positions(
+        return char_gram_positions(
             docs_span(spark, sf_dir), gram_len=_SPAN_GRAM, hashed=hashed
         ).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+
+    return _memo(spark, sf_dir, "span_pos" if hashed else "span_pos_raw", build)
 
 
 @query(
@@ -8682,8 +8692,8 @@ def _doc_vec_shared(spark: SparkSession, sf_dir: str):
     """Memoized (vectors, term-weights, trained centroids) per
     (session, sf_dir) for the doc-clustering family — the three siblings
     share one featurization and one k-means fit."""
-    key = (id(spark), sf_dir, "doc_vecs")
-    if key not in _CC_MEMO:
+
+    def build():
         from mistocksync_spark.operators.textual import (
             hashed_tfidf_vectors,
             tfidf_term_weights,
@@ -8697,8 +8707,9 @@ def _doc_vec_shared(spark: SparkSession, sf_dir: str):
             vecs, n_centroids=_DOC_VEC_K, iterations=_DOC_VEC_ITERS,
             vec_col="embedding", id_col="doc_id",
         )
-        _CC_MEMO[key] = (vecs, tw, cents)
-    return _CC_MEMO[key]
+        return vecs, tw, cents
+
+    return _memo(spark, sf_dir, "doc_vecs", build)
 
 
 @query(
@@ -9926,7 +9937,7 @@ def incremental_prepare_tick_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame
     never changes on ingest ticks — the vocabulary/IVF-quantizer freeze),
     which keeps this gate prefix-decomposable across micro-batches like
     every other: the ladder's v3 tick union is bit-identical to this
-    one-shot (tools/prepare_ladder.py --v3, run at two scales).  Packing
+    one-shot (tools/tick_ladder.py --family prepare --v3).  Packing
     stays emission-scoped by design — packs are artifacts of a sampling
     pass over the accumulated corpus, not per-arrival verdicts.  The
     oracle is the tick oracle template with the v3 injections rendered
@@ -10186,7 +10197,7 @@ def prepare_vocab_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_index_rebuild`` cell-diff analogue), the pre-rebuild decision
     drift that triggered it, and the post-rebuild disagreement, which
     must be 0 (pinned by the oracle — the drift curve collapsing is also
-    shown live by ``tools/prepare_ladder.py --rebuild-at``)."""
+    shown live by ``tools/tick_ladder.py --family prepare --rebuild-at``)."""
     from mistocksync_spark.operators.textual import vocabulary_rebuild
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
 
@@ -10342,6 +10353,7 @@ def _build_tombstone_purge_store(spark: SparkSession, sf_dir: str, root: str) ->
             .agg(F.min("doc_id").alias("keeper")),
             os.path.join(root, "digest_keepers"),
             ["digest"],
+            batch_id=-1,
         ),
         # frozen ORIGINAL-corpus vocabulary (pure function of the corpus)
         lambda: corpus_vocabulary(docs)

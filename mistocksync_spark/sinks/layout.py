@@ -150,67 +150,68 @@ def _write_layout_meta(path: str, meta: dict) -> None:
         json.dump(meta, f)
 
 
+def _layout_meta(path: str) -> dict:
+    """The sidecar of a ``keyed_state_append`` table; a directory without
+    one is not a keyed-state table, so nothing may compact or purge it."""
+    meta = _read_layout_meta(path)
+    if meta is None:
+        raise ValueError(
+            f"no _layout.json sidecar at {path}: not a keyed_state_append table"
+        )
+    return meta
+
+
 def keyed_state_append(
     df: DataFrame,
     path: str,
     key_cols: list[str],
     n_buckets: int = 64,
-    batch_id: int | None = None,
+    *,
+    batch_id: int,
 ) -> str:
-    """Append one ingest tick's rows to a persistent state table
-    PARTITIONED by the join-key bucket — the layout that keeps a
-    thousand-tick state joinable: an equi-join probe only needs the
-    buckets its own keys hash to, so the state scan is partition-pruned
-    instead of full (r11 verdict ask #1; the flat `v{k}` rewrite the
-    5-tick ladder used re-wrote the WHOLE state every tick and pruned
-    nothing).  At 100 TB this is a bucketed/clustered table in a real
-    catalog; directory-partitioned parquet is the same physical idea.
+    """Append one ingest tick's rows to a persistent state table laid out
+    as ``batch=<id>/bucket=<b>``, where the bucket is the join-key hash.
+    An equi-join probe only needs the buckets its own keys hash to, so the
+    state scan is partition-pruned instead of full, and a tick writes
+    bytes proportional to its batch instead of rewriting the whole state.
+    At 100 TB this is a bucketed/clustered table in a real catalog;
+    directory-partitioned parquet is the same physical idea.
 
-    ``batch_id`` makes the append IDEMPOTENT per micro-batch (r14 ADVICE:
-    a checkpoint-recovery replay of batch k double-appended all four
-    prepare state tables): rows land under a ``batch=<id>`` partition
-    level and the write uses DYNAMIC partition overwrite, so a replayed
-    tick REPLACES exactly its own partitions instead of appending a
-    second copy.  ``batch`` and ``bucket`` are reserved layout columns —
-    readers pin ``before_batch`` (``keyed_state_read``) so a replayed
-    tick also *reads* exactly the pre-batch state.  This is the
+    ``batch_id`` makes the append IDEMPOTENT per micro-batch: the write
+    uses DYNAMIC partition overwrite, so a checkpoint-recovery replay of
+    batch k REPLACES exactly its own partitions instead of appending a
+    second copy.  ``batch`` and ``bucket`` are reserved layout columns;
+    readers pin ``before_batch`` (``keyed_state_read``) so a replayed tick
+    also *reads* exactly the pre-batch state.  A one-off table (a prime or
+    a standing store) is written at ``batch_id=-1``.  This is the
     filesystem rendition of what Delta/Iceberg MERGE-by-txn-id does
     transactionally at 100 TB.
 
-    Layout SIDECAR (r15 ADVICE, both low items): the first append records
-    ``{n_buckets, key_cols, layout}`` in ``_layout.json`` inside the
-    table directory; every later append asserts against it, so mixing
-    bucket counts, key columns, or the ``bucket=`` / ``batch=/bucket=``
-    layouts in one table fails IMMEDIATELY with a named error instead of
-    a downstream AnalysisException — and readers/purgers can recover the
-    write-time ``n_buckets`` instead of trusting the caller to re-supply
-    it (``purge_keyed_state``)."""
-    meta = {
-        "n_buckets": int(n_buckets),
-        "key_cols": list(key_cols),
-        "layout": "flat" if batch_id is None else "batch",
-    }
+    Layout SIDECAR: the first append records ``{n_buckets, key_cols}`` in
+    ``_layout.json`` inside the table directory; every later append
+    asserts against it, so mixing bucket counts or key columns in one
+    table fails IMMEDIATELY with a named error instead of a downstream
+    AnalysisException, and ``purge_keyed_state`` recovers the write-time
+    ``n_buckets`` instead of trusting the caller to re-supply it."""
+    from pyspark.sql import functions as F
+
+    meta = {"n_buckets": int(n_buckets), "key_cols": list(key_cols)}
     existing = _read_layout_meta(path)
     if existing is not None and existing != meta:
         raise ValueError(
             f"keyed_state_append layout mismatch at {path}: table was "
             f"written with {existing}, this append requested {meta} — "
-            "mixing bucket counts, key columns or batch/flat layouts in "
-            "one state table breaks partition pruning and discovery"
+            "mixing bucket counts or key columns in one state table breaks "
+            "partition pruning"
         )
-    out = df.withColumn("bucket", state_bucket(key_cols, n_buckets))
-    if batch_id is None:
-        out.write.mode("append").partitionBy("bucket").parquet(path)
-    else:
-        from pyspark.sql import functions as F
-
-        (
-            out.withColumn("batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "bucket")
-            .parquet(path)
-        )
+    (
+        df.withColumn("bucket", state_bucket(key_cols, n_buckets))
+        .withColumn("batch", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch", "bucket")
+        .parquet(path)
+    )
     if existing is None:
         _write_layout_meta(path, meta)
     return path
@@ -235,11 +236,11 @@ def touched_buckets_multi(
     frames: dict[str, tuple[DataFrame, list[str]]], n_buckets: int = 64
 ) -> dict[str, list[int]]:
     """The touched-bucket sets of SEVERAL batch-side key frames, computed
-    in ONE driver action (r14 verdict: three separate
-    ``.distinct().collect()`` jobs per micro-batch were the tick floor at
-    small batches — job-launch overhead, not data): each frame's bucket
-    ids are tagged, unioned, and collected together.  Same bounded result
-    (<= n_buckets ints per tag) as calling ``touched_buckets`` per frame."""
+    in ONE driver action (one ``.distinct().collect()`` job per frame was
+    the tick floor at small batches — job-launch overhead, not data):
+    each frame's bucket ids are tagged, unioned, and collected together.
+    Same bounded result (<= n_buckets ints per tag) as calling
+    ``touched_buckets`` per frame."""
     from pyspark.sql import functions as F
 
     tagged = None
@@ -264,11 +265,10 @@ def keyed_state_read(
     """Read a ``keyed_state_append`` table, pruned to ``buckets`` when
     given (partition-directory pruning — PartitionFilters in the scan,
     asserted by tests/test_layout.py).  ``before_batch`` pins the read to
-    rows appended by micro-batches STRICTLY BEFORE the given id (the
-    table must have been written with ``batch_id``): a checkpoint-recovery
-    replay of batch k then sees exactly the pre-batch state — never its
-    own earlier appends — which together with the idempotent write makes
-    the whole tick replay-safe (r14 ADVICE)."""
+    rows appended by micro-batches STRICTLY BEFORE the given id: a
+    checkpoint-recovery replay of batch k then sees exactly the pre-batch
+    state — never its own earlier appends — which together with the
+    idempotent write makes the whole tick replay-safe."""
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(path)
@@ -288,117 +288,104 @@ def state_file_count(path: str) -> int:
     return len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
 
-def compact_keyed_state(
-    spark: SparkSession,
-    path: str,
-    part_col: str = "bucket",
-    current_batch: int | None = None,
-    max_files: int = 1,
-) -> tuple[int, int]:
-    """INCREMENTAL compaction tick for a partitioned state table
-    (``keyed_state_append`` output, or any ``partitionBy(part_col)``
-    append sink such as the IVF inverted table partitioned by centroid):
-    fold each over-fragmented partition value's accumulated per-tick
-    files into one file, preserving every row.  Returns
-    (files_before, files_after).  r16 rework of the r15 full rewrite,
-    closing two graded defects:
+def keyed_state_tables(root: str) -> list[str]:
+    """The ``keyed_state_append`` tables directly under ``root``: the
+    directories that carry a layout sidecar."""
+    import glob
+    import os
 
-    - REPLAY SAFETY (r15 ADVICE high): ``current_batch`` — the in-flight
-      micro-batch id, passed by the in-stream cadence — physically DROPS
-      any ``batch >= current_batch`` partitions before compacting.  Those
-      rows are uncommitted leftovers of a crashed prior attempt of the
-      same batch (its checkpoint never committed); folding them into the
-      rebase-to-max rewrite made ``keyed_state_read(before_batch=k)``
-      return ZERO pre-batch rows on replay (every arrival judged fresh,
-      and the replay's dynamic-overwrite appends then wiped the rebased
-      history).  Dropping them restores exactly the pre-batch state the
-      replayed tick reads; the replay then rewrites its own partitions
-      via the idempotent append.  At 100 TB the table format's txn log
-      provides the same committed-only view for OPTIMIZE.
-    - INCREMENTAL REWRITE (r15 verdict advisory): only partition values
-      whose accumulated file count exceeds ``max_files`` are rewritten
-      (what Delta/Iceberg OPTIMIZE does); already-compact leaves are
-      never opened, moved, or rewritten — byte-identity pinned by
+    return sorted(
+        os.path.dirname(p) for p in glob.glob(_layout_meta_path(os.path.join(root, "*")))
+    )
+
+
+def _drop_empty_batch_dirs(path: str) -> None:
+    import os
+
+    for t in sorted(os.listdir(path)):
+        d = os.path.join(path, t)
+        if t.startswith("batch=") and os.path.isdir(d) and not os.listdir(d):
+            os.rmdir(d)
+
+
+def compact_keyed_state(
+    spark: SparkSession, path: str, current_batch: int | None = None
+) -> tuple[int, int]:
+    """INCREMENTAL compaction tick for a ``keyed_state_append`` table: fold
+    each bucket whose rows span more than one file into one file,
+    preserving every row.  Returns (files_before, files_after).
+
+    - REPLAY SAFETY: ``current_batch`` — the in-flight micro-batch id,
+      passed by the in-stream cadence — physically DROPS any
+      ``batch >= current_batch`` partitions before compacting.  Those rows
+      are uncommitted leftovers of a crashed prior attempt of the same
+      batch (its checkpoint never committed); folded into the
+      rebase-to-max rewrite, they would make
+      ``keyed_state_read(before_batch=k)`` return ZERO pre-batch rows on
+      replay (every arrival judged fresh), and the replay's
+      dynamic-overwrite appends would then wipe the rebased history.
+      Dropping them restores exactly the pre-batch state the replayed tick
+      reads; the replay then rewrites its own partitions via the
+      idempotent append.  At 100 TB the table format's txn log provides
+      the same committed-only view for OPTIMIZE.
+    - INCREMENTAL REWRITE: only buckets with more than one file are
+      rewritten (what Delta/Iceberg OPTIMIZE does); already-compact leaves
+      are never opened, moved, or rewritten — byte-identity pinned by
       tests/test_layout.py — so the cadence tax is O(files appended since
       the last compaction), not O(state).
 
-    Per-leaf file counts and the max committed batch id come from the
+    Per-bucket file counts and the max committed batch id come from the
     DIRECTORY TREE (no Spark job); the single rewrite job scans only the
-    target leaves (partition-pruned ``isin``).  Batch-layout rows are
-    rebased to the max committed batch id so future appends keep a
+    target buckets (partition-pruned ``isin``).  Rewritten rows are
+    rebased to the max committed batch id, so future appends keep a
     uniform directory depth — valid because every surviving row is
     checkpoint-committed by construction."""
-    import glob as _glob
+    import glob
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    top = sorted(os.listdir(path)) if os.path.isdir(path) else []
-    batch_layout = any(t.startswith("batch=") for t in top)
-    if batch_layout and current_batch is not None:
-        for t in top:
-            if t.startswith("batch=") and int(t.split("=", 1)[1]) >= int(
-                current_batch
-            ):
-                shutil.rmtree(os.path.join(path, t))
-        top = sorted(os.listdir(path))
+    _layout_meta(path)
+    batches = sorted(
+        int(t.split("=", 1)[1]) for t in os.listdir(path) if t.startswith("batch=")
+    )
+    if current_batch is not None:
+        for b in batches:
+            if b >= int(current_batch):
+                shutil.rmtree(os.path.join(path, f"batch={b}"))
+        batches = [b for b in batches if b < int(current_batch)]
     before = state_file_count(path)
-
-    def _pv(v: str):
-        try:
-            return int(v)
-        except ValueError:
-            return v
-
-    counts: dict[str, int] = {}
-    for d in _glob.glob(os.path.join(path, "**", f"{part_col}=*"), recursive=True):
-        v = os.path.basename(d).split("=", 1)[1]
-        counts[v] = counts.get(v, 0) + len(_glob.glob(os.path.join(d, "*.parquet")))
-    targets = sorted(v for v, c in counts.items() if c > max_files)
+    counts: dict[int, int] = {}
+    for d in glob.glob(os.path.join(path, "batch=*", "bucket=*")):
+        b = int(d.rsplit("=", 1)[1])
+        counts[b] = counts.get(b, 0) + len(glob.glob(os.path.join(d, "*.parquet")))
+    targets = sorted(b for b, c in counts.items() if c > 1)
     if not targets:
         return before, before
-    mx = max(
-        (int(t.split("=", 1)[1]) for t in top if t.startswith("batch=")),
-        default=None,
-    )
-    if batch_layout and mx is None:  # nothing committed survives: no-op
-        return before, before
-    df = spark.read.parquet(path).filter(
-        F.col(part_col).isin([_pv(v) for v in targets])
-    )
-    part_cols = [part_col]
-    if batch_layout:
-        df = df.withColumn("batch", F.lit(int(mx)))
-        part_cols = ["batch", part_col]
+    mx = batches[-1]
     tmp = path.rstrip("/") + ".compact_tmp"
     (
-        df.repartition(len(targets), part_col)
+        spark.read.parquet(path)
+        .filter(F.col("bucket").isin(targets))
+        .withColumn("batch", F.lit(mx))
+        .repartition(len(targets), "bucket")
         .write.mode("overwrite")
-        .partitionBy(*part_cols)
+        .partitionBy("batch", "bucket")
         .parquet(tmp)
     )
-    for v in targets:
-        for d in _glob.glob(
-            os.path.join(path, "**", f"{part_col}={v}"), recursive=True
-        ):
+    os.makedirs(os.path.join(path, f"batch={mx}"), exist_ok=True)
+    for b in targets:
+        for d in glob.glob(os.path.join(path, "batch=*", f"bucket={b}")):
             aside = d + ".compact_old"
             os.rename(d, aside)
             shutil.rmtree(aside, ignore_errors=True)
-        if batch_layout:
-            src = os.path.join(tmp, f"batch={mx}", f"{part_col}={v}")
-            dst_dir = os.path.join(path, f"batch={mx}")
-            os.makedirs(dst_dir, exist_ok=True)
-        else:
-            src = os.path.join(tmp, f"{part_col}={v}")
-            dst_dir = path
-        os.rename(src, os.path.join(dst_dir, f"{part_col}={v}"))
+        os.rename(
+            os.path.join(tmp, f"batch={mx}", f"bucket={b}"),
+            os.path.join(path, f"batch={mx}", f"bucket={b}"),
+        )
     shutil.rmtree(tmp, ignore_errors=True)
-    if batch_layout:  # drop batch dirs the swap left empty
-        for t in sorted(os.listdir(path)):
-            d = os.path.join(path, t)
-            if t.startswith("batch=") and os.path.isdir(d) and not os.listdir(d):
-                os.rmdir(d)
+    _drop_empty_batch_dirs(path)
     return before, state_file_count(path)
 
 
@@ -407,21 +394,19 @@ def purge_keyed_state(
     path: str,
     ids: DataFrame,
     key_cols: list[str],
-    n_buckets: int | None = None,
     match_cols: list[str] | None = None,
 ) -> tuple[int, int]:
-    """Right-to-be-forgotten purge of a ``keyed_state_append`` table
-    (r15 — the data-governance tick a training-data pipeline needs):
-    physically remove every row whose key appears in ``ids``, rewriting
-    ONLY the bucket directories those keys hash to — a deletion request
-    is small, so the purge is a partial rewrite proportional to the
-    touched buckets, never a full-table rewrite (at 100 TB this is
-    Delta/Iceberg ``DELETE WHERE`` with file-level pruning; the classic
-    mistake is the rewrite-the-world anti-shape).  Handles both layouts
-    (``bucket=`` and ``batch=/bucket=``) via a per-leaf rewrite-and-swap;
-    a leaf left empty is removed outright.  Returns
-    (rows_removed, leaf_dirs_rewritten).  Untouched buckets' files are
-    not opened, moved, or rewritten (pinned by tests/test_layout.py).
+    """Right-to-be-forgotten purge of a ``keyed_state_append`` table (the
+    data-governance tick a training-data pipeline needs): physically
+    remove every row whose key appears in ``ids``, rewriting ONLY the
+    ``batch=/bucket=`` leaves those keys hash to — a deletion request is
+    small, so the purge is a partial rewrite proportional to the touched
+    buckets, never a full-table rewrite (at 100 TB this is Delta/Iceberg
+    ``DELETE WHERE`` with file-level pruning; the classic mistake is the
+    rewrite-the-world anti-shape).  A leaf left empty is removed outright.
+    Returns (rows_removed, leaf_dirs_rewritten).  Untouched buckets'
+    files are not opened, moved, or rewritten (pinned by
+    tests/test_layout.py).
 
     Governance note: purging the CONTENT store does not erase derived
     dedup memory (digest/band tables) — copies of deleted content must
@@ -429,17 +414,15 @@ def purge_keyed_state(
     artifacts (vocabulary, quantizer) are remediated on their graded
     REBUILD ticks, not here.
 
-    ``n_buckets`` defaults to the WRITE-TIME value recorded in the
-    table's ``_layout.json`` sidecar (r15 ADVICE low: a caller-supplied
-    count that disagreed with the write-time one probed the wrong
-    buckets and silently RETAINED rows hashing elsewhere — an
-    incompleteness failure for a right-to-be-forgotten operation).
-    Passing a value that contradicts the sidecar raises; passing one
-    explicitly is only for sidecar-less legacy tables.
+    The bucket count is the WRITE-TIME value recorded in the table's
+    ``_layout.json`` sidecar: a caller-supplied count that disagreed with
+    it would probe the wrong buckets and silently RETAIN rows hashing
+    elsewhere — an incompleteness failure for a right-to-be-forgotten
+    operation.  A table without a sidecar raises.
 
-    ``match_cols`` (r16, the vector-store purge): when the rows to delete
-    are identified by columns OTHER than the table's bucket key — e.g.
-    the IVF inverted table is keyed/bucketed on ``centroid`` but a
+    ``match_cols`` (the vector-store purge): when the rows to delete are
+    identified by columns OTHER than the table's bucket key — e.g. the
+    IVF inverted table is keyed/bucketed on ``centroid`` but a
     right-to-be-forgotten request names ``vec_id`` — pass ``ids`` rows
     carrying BOTH column sets: ``key_cols`` still drive the bucket
     pruning (lossless when every matching row's key value appears in
@@ -447,39 +430,23 @@ def purge_keyed_state(
     vectors' own deterministic cell assignments), and the per-leaf
     anti-join deletes on ``match_cols``.
 
-    r16 optimization (guide §5 — the driver should do almost no work;
-    r15 verdict advisory #2): the r15 shape ran ~3 sequential Spark jobs
-    PER TOUCHED LEAF (count, anti-join count, write — a 64-bucket
-    request against a many-batch table paid hundreds of serial driver
-    round-trips).  Now the whole purge is THREE bounded jobs regardless
-    of leaf count: (1) one partition-pruned scan of the touched buckets
-    with a broadcast left join on the tombstone ids, aggregated to
-    per-leaf (rows, purged) counts; (2) one dynamic-partition-overwrite
-    write of the surviving rows of exactly the leaves that lost rows
-    (untouched leaves — including touched-bucket leaves with zero
-    matches — are never rewritten, preserving the byte-identity
-    contract); (3) leaves left EMPTY are removed with driver fs ops (no
-    job).  Same results, same (removed, rewritten) accounting, pinned by
-    the same tests."""
+    The driver does almost no work: the purge is THREE bounded jobs
+    regardless of leaf count (three sequential jobs PER touched leaf —
+    count, anti-join count, write — would pay hundreds of serial driver
+    round-trips on a 64-bucket request against a many-batch table):
+    (1) one partition-pruned scan of the touched buckets with a broadcast
+    left join on the tombstone ids, aggregated to per-leaf (rows, purged)
+    counts; (2) one dynamic-partition-overwrite write of the surviving
+    rows of exactly the leaves that lost rows (untouched leaves —
+    including touched-bucket leaves with zero matches — are never
+    rewritten, preserving the byte-identity contract); (3) leaves left
+    EMPTY are removed with driver fs ops (no job)."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    meta = _read_layout_meta(path)
-    if meta is not None:
-        if n_buckets is not None and int(n_buckets) != meta["n_buckets"]:
-            raise ValueError(
-                f"purge_keyed_state n_buckets={n_buckets} contradicts the "
-                f"write-time layout sidecar at {path} ({meta['n_buckets']}) "
-                "— probing the wrong bucket count silently retains rows"
-            )
-        n_buckets = meta["n_buckets"]
-    elif n_buckets is None:
-        raise ValueError(
-            f"purge_keyed_state: no _layout.json sidecar at {path} and no "
-            "n_buckets given — cannot derive the write-time bucket count"
-        )
+    n_buckets = _layout_meta(path)["n_buckets"]
     mc = list(match_cols) if match_cols is not None else list(key_cols)
     key_ids = ids.select(*key_cols).distinct().localCheckpoint(eager=False)
     match_ids = (
@@ -488,11 +455,7 @@ def purge_keyed_state(
     buckets = touched_buckets(key_ids, key_cols, n_buckets)
     if not buckets:
         return 0, 0
-    if meta is not None:
-        batch_layout = meta.get("layout") == "batch"
-    else:
-        batch_layout = any(t.startswith("batch=") for t in os.listdir(path))
-    part_cols = ["batch", "bucket"] if batch_layout else ["bucket"]
+    part_cols = ["batch", "bucket"]
     pruned = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
     data_cols = [c for c in pruned.columns if c not in part_cols]
     flagged = pruned.join(F.broadcast(match_ids), on=mc, how="left").localCheckpoint(
@@ -513,27 +476,13 @@ def purge_keyed_state(
     if not affected:
         return 0, 0
 
-    def _leaf_dir(r) -> str:
-        parts = [f"{c}={r[c]}" for c in part_cols]
-        return os.path.join(path, *parts)
-
     partial = [r for r in affected if r["__nrem"] < r["__n"]]
     if partial:
         # job 2: ONE dynamic-overwrite write of the survivors of exactly
         # the leaves that lost rows (leaf key encoded as a single long so
         # the partition filter stays a pruned isin, not an OR chain)
-        enc = (
-            (F.coalesce(F.col("batch"), F.lit(0)) + F.lit(2)) * 1000000
-            + F.col("bucket")
-            if batch_layout
-            else F.col("bucket").cast("long")
-        )
-        keys = [
-            (int(r["batch"]) + 2) * 1000000 + int(r["bucket"])
-            if batch_layout
-            else int(r["bucket"])
-            for r in partial
-        ]
+        enc = (F.col("batch") + 2) * 1000000 + F.col("bucket")
+        keys = [(int(r["batch"]) + 2) * 1000000 + int(r["bucket"]) for r in partial]
         (
             flagged.filter(F.col("__purge").isNull() & enc.isin(keys))
             .select(*data_cols, *part_cols)
@@ -547,12 +496,11 @@ def purge_keyed_state(
     # their old files must be dropped explicitly (driver fs op, no job)
     for r in affected:
         if r["__nrem"] == r["__n"]:
-            shutil.rmtree(_leaf_dir(r), ignore_errors=True)
-    if batch_layout:  # drop batch dirs the empties left hollow
-        for t in sorted(os.listdir(path)):
-            d = os.path.join(path, t)
-            if t.startswith("batch=") and os.path.isdir(d) and not os.listdir(d):
-                os.rmdir(d)
+            shutil.rmtree(
+                os.path.join(path, f"batch={r['batch']}", f"bucket={r['bucket']}"),
+                ignore_errors=True,
+            )
+    _drop_empty_batch_dirs(path)
     return removed, rewritten
 
 

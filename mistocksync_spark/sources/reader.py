@@ -89,16 +89,24 @@ def apply_data_types(df: DataFrame, config: SourceConfig) -> DataFrame:
     """S5: per-config casts; failed numeric parses become null, matching
     ``pd.to_numeric(errors="coerce")`` (loader.py:249-286)."""
     casts = {
-        c: F.col(c).try_cast(_TYPE_MAP[t])
+        c: F.col(_quoted(c)).try_cast(_TYPE_MAP[t])
         for c, t in config.data_types.items()
         if c in df.columns and t in _TYPE_MAP
     }
     return df.withColumns(casts) if casts else df
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a quoted identifier: a header such as ``a.1`` names one
+    column, not field ``1`` of column ``a``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def drop_empty_rows(df: DataFrame, config: SourceConfig) -> DataFrame:
     """S1/F5: drop all-null rows when skip_empty_rows (loader.py:464-465)."""
-    return df.na.drop(how="all") if config.skip_empty_rows else df
+    if not config.skip_empty_rows:
+        return df
+    return df.na.drop(how="all", subset=[_quoted(c) for c in df.columns])
 
 
 def _check_required_columns(df: DataFrame, config: SourceConfig) -> None:
@@ -219,6 +227,25 @@ def _read_xlsx_stdlib(path: str, sheet: int = 0) -> "list[list]":
         return rows
 
 
+def _header_names(cells: list) -> list[str]:
+    """Unique column names from a sheet's header row: a repeated name gets
+    a ``.1``, ``.2``, ... suffix the way pandas renames it (``a, a`` ->
+    ``a, a.1``), and an empty or missing header becomes ``col_{i}``.  A
+    whitespace header is a name: the Dimi layout maps ``" "`` to its
+    article column.
+    Spark resolves columns by name, so a repeated name would make every
+    later by-name step (``na.drop``, the config's renames) ambiguous."""
+    names: list[str] = []
+    for i, h in enumerate(cells):
+        base = f"col_{i}" if h is None or str(h) == "" else str(h)
+        name, k = base, 0
+        while name in names:
+            k += 1
+            name = f"{base}.{k}"
+        names.append(name)
+    return names
+
+
 def read_excel(spark: SparkSession, path: str, config: SourceConfig, sheet: int = 0) -> DataFrame:
     """S1 Excel surface: driver-side bridge (Excel files are small by
     construction — the reference's workload is 10²-10⁴ rows).  Uses
@@ -237,7 +264,7 @@ def read_excel(spark: SparkSession, path: str, config: SourceConfig, sheet: int 
         cells = _read_xlsx_stdlib(path, sheet=sheet)
         if not cells:
             raise ValueError(f"empty worksheet in {path}")
-        header = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(cells[0])]
+        header = _header_names(cells[0])
         width = len(header)
         data = [tuple((r + [None] * width)[:width]) for r in cells[1:]]
 

@@ -66,6 +66,7 @@ from mistocksync_spark.sinks.layout import (
     compact_keyed_state,
     keyed_state_append,
     keyed_state_read,
+    keyed_state_tables,
     parallel_actions,
     touched_buckets,
     touched_buckets_multi,
@@ -360,6 +361,23 @@ def _ready(fam: _Family, corpus: DataFrame | None, state_dir: str) -> None:
         )
 
 
+def compact_state(spark: SparkSession, state_dir: str, batch_id: int) -> tuple[int, int]:
+    """The streams' tick-START compaction: every keyed-state table under
+    ``state_dir`` is compacted with ``current_batch=batch_id``.  If a prior
+    attempt of THIS batch crashed after appending but before its
+    checkpoint committed, those uncommitted batch>=batch_id partitions are
+    dropped before the rebase-to-max fold — kept, they would become the
+    max, before_batch reads would return zero pre-batch rows, and the
+    replay's dynamic overwrite would wipe the rebased history.  Committed
+    state content is unchanged either way.  Returns (files_before,
+    files_after) summed over the tables."""
+    before = after = 0
+    for path in keyed_state_tables(state_dir):
+        b, a = compact_keyed_state(spark, path, current_batch=batch_id)
+        before, after = before + b, after + a
+    return before, after
+
+
 def _stream(
     fam: _Family,
     spark: SparkSession,
@@ -374,20 +392,7 @@ def _stream(
     def apply_batch(batch_df, batch_id: int) -> None:
         batch_id = int(batch_id)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # compaction at tick START, with current_batch=batch_id: if a
-            # prior attempt of THIS batch crashed after appending but before
-            # its checkpoint committed, those uncommitted batch>=batch_id
-            # partitions are dropped before the rebase-to-max fold — kept,
-            # they would become the max, before_batch reads would return
-            # zero pre-batch rows, and the replay's dynamic overwrite would
-            # wipe the rebased history.  Committed state content is
-            # unchanged either way.
-            for t in (fam.content, *fam.derived):
-                compact_keyed_state(
-                    batch_df.sparkSession,
-                    os.path.join(state_dir, t),
-                    current_batch=batch_id,
-                )
+            compact_state(batch_df.sparkSession, state_dir, batch_id)
         _tick(fam, batch_df, batch_id, state_dir)
 
     _available_now(spark, arrivals_dir, apply_batch, checkpoint)

@@ -28,7 +28,10 @@ def test_tier_priority_color_and_capacity(spark):
             (2, "Увлажнитель (XMUP21YM) 5000mah", "black", 40.0, "b2", None, None, None, 40.0),
         ],
     )
-    m = bracket_code_match(sup, base, "article_vitya", "price_vitya_usd").collect()
+    out = bracket_code_match(sup, base, "article_vitya", "price_vitya_usd")
+    # the b1–b4 lookups are broadcast build sides
+    assert "BroadcastHashJoin" in out._jdf.queryExecution().executedPlan().toString()
+    m = out.collect()
     assert len(m) == 1
     assert m[0].base_article == "b2"
     assert m[0].color_match and m[0].capacity_match
@@ -96,28 +99,3 @@ def test_product_code_brand_grouping(spark):
     assert len(m) == 1
     assert m[0].code == "XIAOMI"
     assert m[0].capacity_match and m[0].color_match
-
-
-def test_broadcast_lookups_auto_mode(spark):
-    # "auto" gates the lookup broadcast hint on the optimizer's size
-    # estimate: a tiny in-memory base catalog is below the cap, so the
-    # result is identical to the default and the lookups still broadcast.
-    from mistocksync_spark.operators.codematch import (
-        base_code_variants,
-        bracket_code,
-        code_match,
-        supplier_code_variants,
-    )
-
-    sup = _sup(spark, [(0, "Увлажнитель (XMUP21YM) 5000mah", "Black", 10.0, "s1")])
-    base = _base(
-        spark,
-        [(0, "Увлажнитель (XMUP21YM) 5000mah", "black", 40.0, "b2", None, None, None, 40.0)],
-    )
-    sv = supplier_code_variants(sup, bracket_code, "article_vitya")
-    bv = base_code_variants(base, bracket_code, "price_vitya_usd")
-    out = code_match(sv, bv, match_type="bracket_code", broadcast_lookups="auto")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0].base_article == "b2"

@@ -2787,17 +2787,20 @@ def test_incremental_embedding_dedup_stateful_matches(spark):
 
 
 def test_incremental_dedup_five_ticks_persisted_state(spark, tmp_path):
-    """N=5 sequential ticks through a PERSISTED,
-    appended corpus_signature_state (parquet round-trip each tick, nothing
-    carried in memory) must be bit-identical to the one-shot MERGE over
-    the same arrivals — the prefix-decomposable seen-set rule beyond the
-    2-batch streaming twin.  The fixture plants a cross-TICK rejected-dup
-    chain (doc 31 dups doc 21; 21 was itself rejected in an earlier tick
-    as a dup of corpus doc 1), the case where a non-decomposable rule
-    would flip a verdict between the ticked and one-shot runs."""
-    from mistocksync_spark.operators.dedup import (
-        corpus_signature_state,
-        incremental_dedup_merge,
+    """N=5 sequential ticks of the production tick driver against
+    PERSISTED keyed state (every tick re-reads its state from disk,
+    nothing is carried in memory, and one compaction runs between two
+    ticks) must be bit-identical to the one-shot MERGE over the same
+    arrivals — the prefix-decomposable seen-set rule beyond the 2-batch
+    streaming twin.  The fixture plants a cross-TICK rejected-dup chain
+    (doc 31 dups doc 21; 21 was itself rejected in an earlier tick as a
+    dup of corpus doc 1), the case where a non-decomposable rule would
+    flip a verdict between the ticked and one-shot runs."""
+    from mistocksync_spark.operators.dedup import incremental_dedup_merge
+    from mistocksync_spark.sinks.layout import compact_keyed_state, keyed_state_read
+    from mistocksync_spark.streaming.merge import (
+        corpus_dedup_tick_against_state,
+        prime_corpus_dedup_state,
     )
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -2819,19 +2822,17 @@ def test_incremental_dedup_five_ticks_persisted_state(spark, tmp_path):
     ticks = [arrivals[0:1], arrivals[1:3], arrivals[3:4], arrivals[4:5], arrivals[5:6]]
 
     state = str(tmp_path / "state")
-    corpus.write.parquet(f"{state}/v0/docs")
-    corpus_signature_state(corpus).write.parquet(f"{state}/v0/bands")
-    accepted = set()
+    prime_corpus_dedup_state(corpus, state)
     for k, rows in enumerate(ticks):
-        batch = _docs(spark, rows)
-        sdocs = spark.read.parquet(f"{state}/v{k}/docs")
-        sbands = spark.read.parquet(f"{state}/v{k}/bands")
-        merged = incremental_dedup_merge(sdocs, batch, corpus_bands=sbands)
-        accepted |= {r.doc_id for r in merged.filter("origin = 'batch'").collect()}
-        sdocs.unionByName(batch).write.parquet(f"{state}/v{k + 1}/docs")
-        sbands.unionByName(corpus_signature_state(batch)).write.parquet(
-            f"{state}/v{k + 1}/bands"
-        )
+        if k == 3:  # the stream's tick-start compaction, between ticks 3 and 4
+            for table in ("docs", "bands"):
+                compact_keyed_state(spark, f"{state}/{table}", current_batch=k)
+        corpus_dedup_tick_against_state(_docs(spark, rows), k, state)
+    docs = keyed_state_read(spark, f"{state}/docs")
+    accepted = {
+        r.doc_id
+        for r in docs.filter("accepted AND origin = 'batch'").collect()
+    }
     oneshot = {
         r.doc_id
         for r in incremental_dedup_merge(corpus, _docs(spark, arrivals))
@@ -2840,7 +2841,7 @@ def test_incremental_dedup_five_ticks_persisted_state(spark, tmp_path):
     }
     assert accepted == oneshot == {11, 51}
     # state grew by exactly the arrivals (every arrival joins the seen set)
-    assert spark.read.parquet(f"{state}/v5/docs").count() == 2 + len(arrivals)
+    assert docs.count() == 2 + len(arrivals)
 
 
 def test_ivf_stored_index_matches_trained_probe(spark, sf_dir, tmp_path):

@@ -100,8 +100,10 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
     path = str(tmp_path / "bands_state")
     key = ["band", "band_key"]
 
-    keyed_state_append(corpus_signature_state(corpus), path, key, n_buckets=16)
-    keyed_state_append(corpus_signature_state(b1), path, key, n_buckets=16)
+    keyed_state_append(
+        corpus_signature_state(corpus), path, key, n_buckets=16, batch_id=-1
+    )
+    keyed_state_append(corpus_signature_state(b1), path, key, n_buckets=16, batch_id=0)
     files_two_ticks = state_file_count(path)
 
     # tick over b2: pruned vs unpruned state read, identical verdicts
@@ -135,15 +137,11 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "bucket" in plan
 
     # compaction: fewer files, zero row drift (order-insensitive content)
-    before_rows = sorted(
-        tuple(r) for r in spark.read.parquet(path).drop("bucket").collect()
-    )
+    before_rows = sorted(tuple(r) for r in keyed_state_read(spark, path).collect())
     nb, na = compact_keyed_state(spark, path)
     assert nb == files_two_ticks and na <= nb
     assert na <= spark.read.parquet(path).select("bucket").distinct().count()
-    after_rows = sorted(
-        tuple(r) for r in spark.read.parquet(path).drop("bucket").collect()
-    )
+    after_rows = sorted(tuple(r) for r in keyed_state_read(spark, path).collect())
     assert after_rows == before_rows
 
 
@@ -199,9 +197,11 @@ def test_prepare_tick_stored_digest_gram_state(spark, sf_dir, tmp_path):
     p_bands = str(tmp_path / "bands")
     p_dig = str(tmp_path / "digests")
     p_grams = str(tmp_path / "grams")
-    keyed_state_append(corpus_signature_state(corpus), p_bands, ["band", "band_key"])
-    keyed_state_append(corpus_digest_state(corpus), p_dig, ["digest"])
-    keyed_state_append(corpus_gram_state(corpus), p_grams, ["g"])
+    keyed_state_append(
+        corpus_signature_state(corpus), p_bands, ["band", "band_key"], batch_id=-1
+    )
+    keyed_state_append(corpus_digest_state(corpus), p_dig, ["digest"], batch_id=-1)
+    keyed_state_append(corpus_gram_state(corpus), p_grams, ["g"], batch_id=-1)
     bdig = corpus_digest_state(batch)
     bgrams = char_gram_positions(batch).select("g").distinct()
     digests = keyed_state_read(spark, p_dig, touched_buckets(bdig, ["digest"]))
@@ -990,11 +990,12 @@ def test_compaction_is_incremental_and_skips_compact_leaves(
 def test_keyed_state_layout_sidecar_guards_appends_and_purge(
     spark, sf_dir, tmp_path
 ):
-    """(1) mixing batch/flat layouts or bucket counts
-    in one table must fail immediately with a named error, not a
-    downstream AnalysisException; (2) purge_keyed_state must derive the
-    WRITE-TIME n_buckets from the table's sidecar — a disagreeing caller
-    value silently retained rows hashing to unprobed buckets."""
+    """(1) mixing bucket counts or key columns in one table must fail
+    immediately with a named error, not a downstream AnalysisException,
+    and an append without a batch id is not a call at all; (2)
+    purge_keyed_state must derive the WRITE-TIME n_buckets from the
+    table's sidecar — a caller-supplied count could probe the wrong
+    buckets and silently retain rows — and refuses a table without one."""
     import pytest
 
     from mistocksync_spark.sinks.layout import (
@@ -1012,7 +1013,7 @@ def test_keyed_state_layout_sidecar_guards_appends_and_purge(
     )
     path = str(tmp_path / "docs_state")
     keyed_state_append(docs, path, ["doc_id"], n_buckets=16, batch_id=-1)
-    with pytest.raises(ValueError, match="layout mismatch"):  # batch -> flat
+    with pytest.raises(TypeError, match="batch_id"):
         keyed_state_append(docs, path, ["doc_id"], n_buckets=16)
     with pytest.raises(ValueError, match="layout mismatch"):  # 16 -> 64
         keyed_state_append(docs, path, ["doc_id"], n_buckets=64, batch_id=0)
@@ -1023,11 +1024,13 @@ def test_keyed_state_layout_sidecar_guards_appends_and_purge(
         )
 
     tomb = docs.limit(7).select("doc_id")
-    with pytest.raises(ValueError, match="contradicts"):
-        purge_keyed_state(spark, path, tomb, ["doc_id"], n_buckets=64)
-    # no n_buckets given: the sidecar supplies the write-time 16 and the
-    # purge is COMPLETE (under the old caller-trusted 64 default, ids
-    # hashing to unprobed buckets silently survived)
+    bare = str(tmp_path / "bare")
+    docs.write.parquet(bare)
+    with pytest.raises(ValueError, match="sidecar at .*bare"):
+        purge_keyed_state(spark, bare, tomb, ["doc_id"])
+    # the sidecar supplies the write-time 16 and the purge is COMPLETE
+    # (under a caller-trusted 64, ids hashing to unprobed buckets would
+    # silently survive)
     removed, _ = purge_keyed_state(spark, path, tomb, ["doc_id"])
     assert removed == 7
     left = {r.doc_id for r in keyed_state_read(spark, path).collect()}

@@ -133,6 +133,29 @@ def test_read_excel_stdlib_roundtrip(spark, cfg_dir, tmp_path):
     assert out[1].price == 10.5 and out[1].name == "Повербанк"
 
 
+def test_read_excel_stdlib_repeated_and_blank_headers(spark, tmp_path):
+    """A header row that repeats a name and has an empty cell reads like
+    pandas reads it: ``a, a.1`` for the repeat, ``col_{i}`` for the empty
+    cell.
+    Repeated names used to make ``drop_empty_rows`` fail with
+    AMBIGUOUS_REFERENCE."""
+    from mistocksync_spark.sinks.excel import _write_xlsx_stdlib
+    from mistocksync_spark.sources.reader import SourceConfig, read_excel
+
+    with open(tmp_path / "dups_config.json", "w", encoding="utf-8") as f:
+        json.dump({"settings": {"skip_empty_rows": True}}, f)
+    path = str(tmp_path / "dups.xlsx")
+    rows = [(1, 2, "x", 3.5, "p"), (4, 5, "y", 6.5, "q"), (7, None, None, None, "r")]
+    _write_xlsx_stdlib(path, [("Лист1", ["a", "a", "", "b", "c"], rows)])
+    out = read_excel(spark, path, SourceConfig.load("dups", config_dir=str(tmp_path)))
+    assert out.columns == ["a", "a.1", "col_2", "b", "c"]
+    assert sorted(tuple(r) for r in out.collect()) == sorted(rows)
+    # a whitespace header is a name, as pandas reads it (dimi_config maps " ")
+    _write_xlsx_stdlib(path, [("Лист1", [" ", "x"], [("k", 1)])])
+    out = read_excel(spark, path, SourceConfig.load("dups", config_dir=str(tmp_path)))
+    assert out.columns == [" ", "x"]
+
+
 def test_read_json_source(spark, cfg_dir, tmp_path):
     from mistocksync_spark.sources.reader import SourceConfig, read_json
 
