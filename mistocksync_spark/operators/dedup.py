@@ -1143,6 +1143,7 @@ def incremental_dedup_merge(
     corpus_bands: DataFrame | None = None,
     return_rejected: bool = False,
     corpus_fetch=None,
+    batch_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental corpus dedup MERGE — the shape of a production ingest
     tick: dedup an incoming ``batch`` of documents against an EXISTING
@@ -1207,6 +1208,12 @@ def incremental_dedup_merge(
     semi-restricts it to exact candidate ids, so pruning is lossless by
     construction.  With ``corpus_fetch`` given and ``return_rejected``
     True, ``corpus`` itself is never consumed and may be None.
+
+    ``batch_bands`` (state path only) is the batch's own
+    ``corpus_signature_state`` rows, built with the same parameters — a
+    tick that has already derived them to probe the band state passes
+    them here, and the gate only shingles the batch for the verify instead
+    of running shingle → minhash → band again.
     """
     # Multi-consumer frames are materialized ONCE behind lazy
     # localCheckpoints (the code_match pattern): Catalyst does not share
@@ -1221,6 +1228,8 @@ def incremental_dedup_merge(
         raise ValueError(
             "corpus=None requires corpus_bands + corpus_fetch + return_rejected"
         )
+    if batch_bands is not None and corpus_bands is None:
+        raise ValueError("batch_bands requires corpus_bands (the state path)")
     corpus_docs = (
         corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
         if corpus is not None
@@ -1252,9 +1261,13 @@ def incremental_dedup_merge(
         bsh = shingle_table(
             batch_docs, text_col="text", id_col="doc_id", n=n
         ).localCheckpoint(eager=False)
-        bbands = lsh_bands(
-            minhash_signatures(bsh, num_hashes), rows_per_band
-        ).localCheckpoint(eager=False)
+        bbands = (
+            batch_bands
+            if batch_bands is not None
+            else lsh_bands(
+                minhash_signatures(bsh, num_hashes), rows_per_band
+            ).localCheckpoint(eager=False)
+        )
         earlier = corpus_bands.select(
             "band",
             "band_key",

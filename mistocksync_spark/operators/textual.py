@@ -1231,6 +1231,7 @@ def incremental_prepare_tick(
     holdout_mod: int | None = None,
     holdout_shingles: DataFrame | None = None,
     contam_min_overlap: int = 2,
+    batch_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-arrival decision rows for ONE ingest tick — the incremental
     sibling of ``corpus_prepare``/``corpus_prepare_v2``: each BATCH
@@ -1290,6 +1291,9 @@ def incremental_prepare_tick(
     through to ``incremental_dedup_merge`` (see its docstring): with
     every state provided plus ``corpus_fetch``, ``corpus`` itself may be
     None and the tick touches no corpus-proportional surface at all.
+    ``batch_bands`` (the batch's own ``corpus_signature_state`` rows, when
+    the tick has already derived them to probe ``corpus_bands``) is passed
+    through to the merge too, so the batch is not banded twice.
 
     v3 emission gates (r15, ``holdout_mod`` opt-in — the tick twin of
     ``corpus_prepare_v3``): arrivals whose ``doc_id % holdout_mod == 0``
@@ -1401,6 +1405,7 @@ def incremental_prepare_tick(
         corpus_bands=corpus_bands,
         return_rejected=True,
         corpus_fetch=corpus_fetch,
+        batch_bands=batch_bands,
     ).withColumn("__rej", F.lit(1))
 
     # span gate: duplicated-character coverage of the ARRIVAL text vs

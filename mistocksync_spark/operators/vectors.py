@@ -620,6 +620,7 @@ def incremental_embedding_dedup_ivf(
     corpus_cells: DataFrame | None = None,
     return_rejected: bool = False,
     corpus_fetch=None,
+    batch_cells: DataFrame | None = None,
 ) -> DataFrame:
     """Vector ingest tick with IVF-CELL candidates against a FROZEN
     quantizer — the structural fix for the banded tick's candidate growth
@@ -658,7 +659,12 @@ def incremental_embedding_dedup_ivf(
     ``return_rejected``, ``corpus`` may be None and the tick touches no
     corpus-proportional surface.  ``return_rejected`` returns the
     rejected batch ids instead of the merged corpus — the streaming
-    twin's verdict surface (same plan up to the final select)."""
+    twin's verdict surface (same plan up to the final select).
+
+    ``batch_cells`` is the batch's own (vec_id, centroid) assignment rows
+    under the same ``centroids`` and ``n_assign`` — a tick that has
+    already assigned the batch to probe the cell state passes them here,
+    and the gate runs no second assignment pass."""
     if corpus is None and (
         corpus_cells is None
         or corpus_fetch is None
@@ -681,9 +687,13 @@ def incremental_embedding_dedup_ivf(
         corpus_cells = ivf_assign(
             cd, centroids, vec_col="emb", id_col="vec_id", n_assign=n_assign
         )
-    bcells = ivf_assign(
-        bd, centroids, vec_col="emb", id_col="vec_id", n_assign=n_assign
-    ).localCheckpoint(eager=False)
+    bcells = (
+        batch_cells
+        if batch_cells is not None
+        else ivf_assign(
+            bd, centroids, vec_col="emb", id_col="vec_id", n_assign=n_assign
+        ).localCheckpoint(eager=False)
+    )
     earlier = corpus_cells.select(
         "centroid",
         F.col("vec_id").alias("earlier_id"),

@@ -1831,7 +1831,7 @@ def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFr
     shutil.rmtree(root, ignore_errors=True)  # append sink: start clean
     keyed_state_append(corpus_signature_state(corpus), root, key, batch_id=-1)
     bbands = corpus_signature_state(batch).localCheckpoint(eager=False)
-    state = keyed_state_read(spark, root, touched_buckets(bbands, key, 64))
+    state = keyed_state_read(spark, root, touched_buckets(bbands, root))
     return incremental_dedup_merge(corpus, batch, corpus_bands=state)
 
 
@@ -9965,7 +9965,7 @@ def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataF
     band, DIGEST, and GRAM state are written partitioned by
     pmod(xxhash64(key)) buckets (sinks/layout.keyed_state_append), the
     tick computes the three key-state bucket sets in ONE folded driver
-    action (bounded, <= 64 ints each) and reads ONLY those partitions;
+    action (bounded, <= n_buckets ints each) and reads ONLY those partitions;
     the DOCS store — the last state read to be pruned — is fetched
     only in the buckets the band probe's candidate corpus ids hash to
     (``corpus_fetch``), and the OOV gate scores against the PERSISTED
@@ -10660,11 +10660,11 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bcells = ivf_assign(batch, cents, n_assign=2)
     cells = keyed_state_read(
-        spark, p_cells, touched_buckets(bcells, ["centroid"])
+        spark, p_cells, touched_buckets(bcells, p_cells)
     )
 
     def fetch_vecs(c_ids):
-        return keyed_state_read(spark, p_vecs, touched_buckets(c_ids, ["vec_id"]))
+        return keyed_state_read(spark, p_vecs, touched_buckets(c_ids, p_vecs))
 
     rejected = incremental_embedding_dedup_ivf(
         None,

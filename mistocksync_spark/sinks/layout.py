@@ -20,6 +20,7 @@ the pruning/compaction actually happened.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def clustered_write(
@@ -57,10 +58,10 @@ def compact_files(
 
 def parallel_actions(*thunks) -> None:
     """Run independent Spark driver actions concurrently from a small
-    thread pool (optimization guide §2.6: actions are only sequential
-    because the driver calls them sequentially — concurrent jobs back-fill
-    executor slots freed by each other's stage tails, so K small
-    independent writes cost ~max() instead of sum() of their walls).
+    thread pool: actions are only sequential because the driver calls them
+    sequentially — concurrent jobs back-fill executor slots freed by each
+    other's stage tails, so K small independent writes cost ~max() instead
+    of sum() of their walls.
 
     Contract: every thunk must be a genuinely independent job — distinct
     output directories.  Thunks may share a lazy ``localCheckpoint`` input
@@ -115,7 +116,7 @@ def parallel_actions(*thunks) -> None:
             raise errs[0]
 
 
-def state_bucket(key_cols: list[str], n_buckets: int = 64):
+def state_bucket(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a state-table join key: pmod(xxhash64)
     over the key columns.  The SAME expression computes (a) the partition
     column at write time and (b) the batch's touched-bucket set at read
@@ -152,7 +153,8 @@ def _write_layout_meta(path: str, meta: dict) -> None:
 
 def _layout_meta(path: str) -> dict:
     """The sidecar of a ``keyed_state_append`` table; a directory without
-    one is not a keyed-state table, so nothing may compact or purge it."""
+    one is not a keyed-state table, so nothing may read, compact or purge
+    it as one."""
     meta = _read_layout_meta(path)
     if meta is None:
         raise ValueError(
@@ -161,11 +163,24 @@ def _layout_meta(path: str) -> dict:
     return meta
 
 
+def _columns(schema) -> list[tuple[str, str]]:
+    # names and types only: parquet reads every column back as nullable
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def _state_frame(spark: SparkSession, path: str) -> DataFrame:
+    """The whole table with its ``batch``/``bucket`` columns, read under
+    the schema its sidecar records, so building the read infers nothing
+    from parquet footers."""
+    schema = StructType.fromJson(_layout_meta(path)["schema"])
+    return spark.read.schema(schema).parquet(path)
+
+
 def keyed_state_append(
     df: DataFrame,
     path: str,
     key_cols: list[str],
-    n_buckets: int = 64,
+    n_buckets: int = 16,
     *,
     batch_id: int,
 ) -> str:
@@ -187,68 +202,83 @@ def keyed_state_append(
     filesystem rendition of what Delta/Iceberg MERGE-by-txn-id does
     transactionally at 100 TB.
 
-    Layout SIDECAR: the first append records ``{n_buckets, key_cols}`` in
-    ``_layout.json`` inside the table directory; every later append
-    asserts against it, so mixing bucket counts or key columns in one
-    table fails IMMEDIATELY with a named error instead of a downstream
-    AnalysisException, and ``purge_keyed_state`` recovers the write-time
-    ``n_buckets`` instead of trusting the caller to re-supply it."""
+    Layout SIDECAR: the first append records ``n_buckets``, ``key_cols``
+    and the full written ``schema`` (data columns plus ``batch`` and
+    ``bucket``) in ``_layout.json`` inside the table directory.  Every
+    later append checks against it — same bucket count, same key columns,
+    same column names and types in the same order (nullability is not
+    compared) — so a drifting table fails IMMEDIATELY with a named error
+    instead of a downstream AnalysisException.  The sidecar is the only
+    source of the bucket count (for ``touched_buckets`` the key columns
+    too) and of the schema every read uses.
+
+    The default of 16 buckets keeps each ``batch=`` directory at or under
+    Spark's 32-child threshold for listing directories with a Spark job
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``), so with
+    the sidecar schema a read lists on the driver and starts no job.  The
+    same threshold applies at the table root: more than 32 ``batch=``
+    directories between two compactions bring the listing job back."""
     from pyspark.sql import functions as F
 
+    out = df.withColumn("batch", F.lit(int(batch_id))).withColumn(
+        "bucket", state_bucket(key_cols, n_buckets)
+    )
     meta = {"n_buckets": int(n_buckets), "key_cols": list(key_cols)}
     existing = _read_layout_meta(path)
-    if existing is not None and existing != meta:
-        raise ValueError(
-            f"keyed_state_append layout mismatch at {path}: table was "
-            f"written with {existing}, this append requested {meta} — "
-            "mixing bucket counts or key columns in one state table breaks "
-            "partition pruning"
-        )
+    if existing is not None:
+        was = {k: existing[k] for k in meta}
+        cols = _columns(StructType.fromJson(existing["schema"]))
+        if was != meta or cols != _columns(out.schema):
+            raise ValueError(
+                f"keyed_state_append layout mismatch at {path}: table was "
+                f"written with {was} and columns {cols}, this append "
+                f"requested {meta} and columns {_columns(out.schema)} — "
+                "mixing bucket counts, key columns or column types in one "
+                "state table breaks partition pruning and its reads"
+            )
     (
-        df.withColumn("bucket", state_bucket(key_cols, n_buckets))
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
+        out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch", "bucket")
         .parquet(path)
     )
     if existing is None:
-        _write_layout_meta(path, meta)
+        _write_layout_meta(path, {**meta, "schema": out.schema.jsonValue()})
     return path
 
 
-def touched_buckets(
-    df: DataFrame, key_cols: list[str], n_buckets: int = 64
-) -> list[int]:
-    """The bucket ids a batch's join keys hash to — a bounded driver fetch
-    (<= n_buckets ints) that becomes the pruning predicate on the state
-    read.  Lossless for an equi-join: state rows in untouched buckets
+def _bucket_of(path: str):
+    """The bucket expression of a ``keyed_state_append`` table, from its
+    sidecar's key columns and bucket count."""
+    meta = _layout_meta(path)
+    return state_bucket(meta["key_cols"], meta["n_buckets"]).alias("bucket")
+
+
+def touched_buckets(df: DataFrame, path: str) -> list[int]:
+    """The buckets of the table at ``path`` that ``df``'s join keys hash
+    to — a bounded driver fetch (<= n_buckets ints) that becomes the
+    pruning predicate on the state read.  ``df`` carries the table's key
+    columns; the key columns and the bucket count come from the table's
+    sidecar.  Lossless for an equi-join: state rows in untouched buckets
     cannot match any batch key."""
-    rows = (
-        df.select(state_bucket(key_cols, n_buckets).alias("bucket"))
-        .distinct()
-        .collect()
-    )
+    rows = df.select(_bucket_of(path)).distinct().collect()
     return sorted(r.bucket for r in rows)
 
 
 def touched_buckets_multi(
-    frames: dict[str, tuple[DataFrame, list[str]]], n_buckets: int = 64
+    frames: dict[str, tuple[DataFrame, str]],
 ) -> dict[str, list[int]]:
-    """The touched-bucket sets of SEVERAL batch-side key frames, computed
-    in ONE driver action (one ``.distinct().collect()`` job per frame was
-    the tick floor at small batches — job-launch overhead, not data):
-    each frame's bucket ids are tagged, unioned, and collected together.
-    Same bounded result (<= n_buckets ints per tag) as calling
+    """The touched-bucket sets of SEVERAL (frame, table path) pairs,
+    computed in ONE driver action (one ``.distinct().collect()`` job per
+    frame was the tick floor at small batches — job-launch overhead, not
+    data): each frame's bucket ids are tagged, unioned, and collected
+    together.  Same bounded result (<= n_buckets ints per tag) as calling
     ``touched_buckets`` per frame."""
     from pyspark.sql import functions as F
 
     tagged = None
-    for tag, (df, key_cols) in frames.items():
-        part = df.select(
-            F.lit(tag).alias("__t"),
-            state_bucket(key_cols, n_buckets).alias("bucket"),
-        ).distinct()
+    for tag, (df, path) in frames.items():
+        part = df.select(F.lit(tag).alias("__t"), _bucket_of(path)).distinct()
         tagged = part if tagged is None else tagged.unionByName(part)
     out: dict[str, list[int]] = {tag: [] for tag in frames}
     for r in tagged.collect():
@@ -268,10 +298,17 @@ def keyed_state_read(
     rows appended by micro-batches STRICTLY BEFORE the given id: a
     checkpoint-recovery replay of batch k then sees exactly the pre-batch
     state — never its own earlier appends — which together with the
-    idempotent write makes the whole tick replay-safe."""
+    idempotent write makes the whole tick replay-safe.
+
+    The read takes its schema from the table's sidecar, so building it
+    runs no schema-inference job, and with at most 32 ``batch=`` and 32
+    ``bucket=`` directories per level the file listing runs on the driver:
+    building the frame starts no Spark job (pinned by
+    tests/test_layout.py).  The listing is still eager, so the frame reads
+    the files that existed when it was built."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = _state_frame(spark, path)
     if buckets is not None:
         df = df.filter(F.col("bucket").isin([int(b) for b in buckets]))
     if before_batch is not None:
@@ -366,7 +403,7 @@ def compact_keyed_state(
     mx = batches[-1]
     tmp = path.rstrip("/") + ".compact_tmp"
     (
-        spark.read.parquet(path)
+        _state_frame(spark, path)
         .filter(F.col("bucket").isin(targets))
         .withColumn("batch", F.lit(mx))
         .repartition(len(targets), "bucket")
@@ -433,7 +470,7 @@ def purge_keyed_state(
     The driver does almost no work: the purge is THREE bounded jobs
     regardless of leaf count (three sequential jobs PER touched leaf —
     count, anti-join count, write — would pay hundreds of serial driver
-    round-trips on a 64-bucket request against a many-batch table):
+    round-trips on a many-bucket request against a many-batch table):
     (1) one partition-pruned scan of the touched buckets with a broadcast
     left join on the tombstone ids, aggregated to per-leaf (rows, purged)
     counts; (2) one dynamic-partition-overwrite write of the surviving
@@ -446,17 +483,16 @@ def purge_keyed_state(
 
     from pyspark.sql import functions as F
 
-    n_buckets = _layout_meta(path)["n_buckets"]
     mc = list(match_cols) if match_cols is not None else list(key_cols)
     key_ids = ids.select(*key_cols).distinct().localCheckpoint(eager=False)
     match_ids = (
         ids.select(*mc).distinct().withColumn("__purge", F.lit(1))
     )
-    buckets = touched_buckets(key_ids, key_cols, n_buckets)
+    buckets = touched_buckets(key_ids, path)
     if not buckets:
         return 0, 0
     part_cols = ["batch", "bucket"]
-    pruned = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+    pruned = _state_frame(spark, path).filter(F.col("bucket").isin(buckets))
     data_cols = [c for c in pruned.columns if c not in part_cols]
     flagged = pruned.join(F.broadcast(match_ids), on=mc, how="left").localCheckpoint(
         eager=False
@@ -559,7 +595,7 @@ def pack_emission_write(
     stratum_col: str = "cluster",
 ) -> str:
     """Write the PACKED corpus assignment — the training-data pipeline's
-    final artifact (r14 verdict ask #4) — in the layout a training
+    final artifact — in the layout a training
     loader consumes: partitioned by ``pack_bucket`` (a deterministic
     function of the pack key, so a loader fetching pack p opens exactly
     one directory), rows range-clustered inside each bucket by

@@ -21,8 +21,11 @@ through one copy of each step; the family gate is the only per-family code:
   build overlapped in ``parallel_actions`` at ``batch_id=-1``;
 - **probe**: lazy checkpoints of the batch-side rows, ONE folded
   ``touched_buckets_multi`` action, pinned and bucket-pruned
-  ``keyed_state_read``s, and a content fetch pruned to the buckets the
-  gate's candidate ids hash to;
+  ``keyed_state_read``s (schema from each table's sidecar, so building a
+  read starts no Spark job), and a content fetch pruned to the buckets
+  the gate's candidate ids hash to.  The gate gets the checkpointed
+  batch-side rows too (``batch_bands``/``batch_cells``), so it never
+  derives them a second time;
 - **tick**: probe, gate, the optional decisions write, then the overlapped
   appends;
 - **stream**: an availableNow file stream, one arrival file per micro-batch.
@@ -152,7 +155,8 @@ class _Family:
     (key columns, derivation from the frame), built the same way at prime
     and at tick and probed by the tick; each ``frozen`` table is written
     once at prime and read whole by the gate.  ``gate(frame, reads,
-    fetch)`` gets the pruned reads by table name and the content fetch.
+    fetch, rows)`` gets the pruned reads by table name, the content fetch
+    and the batch's own derived rows by table name.
     With ``decides`` it returns decision rows, committed before the state
     appends, and the content rows are the frame verbatim; otherwise it
     returns the rejected ids, which mark the content rows' ``accepted``."""
@@ -172,13 +176,14 @@ def _corpus_family(threshold: float = 0.5) -> _Family:
         "doc_id",
         ("doc_id", "text"),
         {"bands": (["band", "band_key"], corpus_signature_state)},
-        lambda frame, reads, fetch: incremental_dedup_merge(
+        lambda frame, reads, fetch, rows: incremental_dedup_merge(
             None,
             frame,
             threshold=threshold,
             corpus_bands=reads["bands"],
             return_rejected=True,
             corpus_fetch=fetch,
+            batch_bands=rows["bands"],
         ),
     )
 
@@ -197,7 +202,7 @@ def _embedding_family(
         # (exact for float inputs; the cosine math is already double)
         ("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
         {"cells": (["centroid"], lambda f: ivf_assign(f, centroids, n_assign=n_assign))},
-        lambda frame, reads, fetch: incremental_embedding_dedup_ivf(
+        lambda frame, reads, fetch, rows: incremental_embedding_dedup_ivf(
             None,
             frame,
             centroids,
@@ -207,6 +212,7 @@ def _embedding_family(
             corpus_cells=reads["cells"],
             return_rejected=True,
             corpus_fetch=fetch,
+            batch_cells=rows["cells"],
         ),
     )
 
@@ -229,10 +235,11 @@ def _prepare_family(
             "digests": (["digest"], corpus_digest_state),
             "grams": (["g"], corpus_gram_state),
         },
-        lambda frame, reads, fetch: incremental_prepare_tick(
+        lambda frame, reads, fetch, rows: incremental_prepare_tick(
             None,
             frame,
             corpus_bands=reads["bands"],
+            batch_bands=rows["bands"],
             vocab=reads["vocab"],
             corpus_digests=reads["digests"],
             corpus_grams=reads["grams"],
@@ -296,17 +303,22 @@ def _decide(fam: _Family, batch_df: DataFrame, state_dir: str, before_batch: int
         t: derive(frame).localCheckpoint(eager=False)
         for t, (_, derive) in fam.derived.items()
     }
-    tb = touched_buckets_multi({t: (rows[t], fam.derived[t][0]) for t in rows})
+
+    def path(table):
+        return os.path.join(state_dir, table)
+
+    tb = touched_buckets_multi({t: (rows[t], path(t)) for t in rows})
 
     def read(table, buckets):
-        return keyed_state_read(
-            s, os.path.join(state_dir, table), buckets, before_batch=before_batch
-        )
+        return keyed_state_read(s, path(table), buckets, before_batch=before_batch)
 
     reads = {t: read(t, tb[t]) for t in rows}
-    reads.update({t: s.read.parquet(os.path.join(state_dir, t)) for t in fam.frozen})
+    reads.update({t: s.read.parquet(path(t)) for t in fam.frozen})
     out = fam.gate(
-        frame, reads, lambda ids: read(fam.content, touched_buckets(ids, [fam.key]))
+        frame,
+        reads,
+        lambda ids: read(fam.content, touched_buckets(ids, path(fam.content))),
+        rows,
     )
     return frame, rows, out
 
@@ -487,7 +499,7 @@ def incremental_embedding_dedup_stream(
             inferred_dim(corpus, "embedding")
             if corpus is not None
             else len(
-                spark.read.parquet(os.path.join(state_dir, "vecs"))
+                keyed_state_read(spark, os.path.join(state_dir, "vecs"))
                 .select("embedding").head()["embedding"]
             )
         )

@@ -3109,6 +3109,65 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
+def test_gates_reuse_batch_rows_with_identical_verdicts(spark):
+    """Both stored-state gates reject the same batch ids whether they
+    derive the batch's bands / cell assignments themselves or are handed
+    the rows a tick's probe already derived (``batch_bands`` /
+    ``batch_cells``)."""
+    from mistocksync_spark.operators.dedup import (
+        corpus_signature_state,
+        incremental_dedup_merge,
+    )
+    from mistocksync_spark.operators.vectors import (
+        incremental_embedding_dedup_ivf,
+        ivf_assign,
+        ivf_train,
+    )
+
+    corpus, batch = _incr_fixture(spark)
+    state = corpus_signature_state(corpus)
+
+    def doc_rejected(**kw):
+        return {
+            r.doc_id
+            for r in incremental_dedup_merge(
+                corpus, batch, corpus_bands=state, return_rejected=True, **kw
+            ).collect()
+        }
+
+    derived = doc_rejected()
+    assert derived == doc_rejected(batch_bands=corpus_signature_state(batch))
+    assert 12 not in derived and {10, 11, 13} <= derived
+    with pytest.raises(ValueError, match="batch_bands requires corpus_bands"):
+        incremental_dedup_merge(corpus, batch, batch_bands=state)
+
+    vcorpus = _emb(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])])
+    vbatch = _emb(
+        spark,
+        [
+            (10, [2.0, 0.0, 0.0, 0.0]),
+            (11, [0.0, 1.0, 0.0, 0.0]),
+            (12, [0.0, 0.0, 1.0, 0.0]),
+            (13, [0.0, 0.0, 3.0, 0.0]),
+        ],
+    )
+    cents = ivf_train(vcorpus, n_centroids=2, iterations=2, vec_col="embedding")
+    cells = ivf_assign(vcorpus, cents, n_assign=2)
+
+    def vec_rejected(**kw):
+        return {
+            r.vec_id
+            for r in incremental_embedding_dedup_ivf(
+                vcorpus, vbatch, cents, dim=4, corpus_cells=cells,
+                return_rejected=True, **kw,
+            ).collect()
+        }
+
+    derived = vec_rejected()
+    assert derived == vec_rejected(batch_cells=ivf_assign(vbatch, cents, n_assign=2))
+    assert derived == {10, 11, 13}
+
+
 def test_corpus_prepare_v2_invariants(spark, sf_dir):
     """corpus_prepare_v2 contract: one decision row per doc; reasons from
     the five-gate vocabulary; cluster/sampled/token accounting present

@@ -108,7 +108,7 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
 
     # tick over b2: pruned vs unpruned state read, identical verdicts
     b2_bands = corpus_signature_state(b2)
-    buckets = touched_buckets(b2_bands, key, n_buckets=16)
+    buckets = touched_buckets(b2_bands, path)
     assert 0 < len(buckets) <= 16
     seen_docs = corpus.unionByName(b1)  # state docs = corpus + all arrivals
     pruned_state = keyed_state_read(spark, path, buckets)
@@ -204,11 +204,10 @@ def test_prepare_tick_stored_digest_gram_state(spark, sf_dir, tmp_path):
     keyed_state_append(corpus_gram_state(corpus), p_grams, ["g"], batch_id=-1)
     bdig = corpus_digest_state(batch)
     bgrams = char_gram_positions(batch).select("g").distinct()
-    digests = keyed_state_read(spark, p_dig, touched_buckets(bdig, ["digest"]))
-    grams = keyed_state_read(spark, p_grams, touched_buckets(bgrams, ["g"]))
+    digests = keyed_state_read(spark, p_dig, touched_buckets(bdig, p_dig))
+    grams = keyed_state_read(spark, p_grams, touched_buckets(bgrams, p_grams))
     bands = keyed_state_read(
-        spark, p_bands,
-        touched_buckets(corpus_signature_state(batch), ["band", "band_key"]),
+        spark, p_bands, touched_buckets(corpus_signature_state(batch), p_bands)
     )
 
     stored = incremental_prepare_tick(
@@ -418,7 +417,7 @@ def test_prepare_tick_docs_read_is_pruned_and_batch_pinned(spark, sf_dir, tmp_pa
     keyed_state_append(batch, p_docs, ["doc_id"], batch_id=0)
     c_ids = corpus.limit(3).select("doc_id")
     pruned = keyed_state_read(
-        spark, p_docs, touched_buckets(c_ids, ["doc_id"]), before_batch=0
+        spark, p_docs, touched_buckets(c_ids, p_docs), before_batch=0
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan and "batch" in plan
@@ -430,11 +429,9 @@ def test_prepare_tick_docs_read_is_pruned_and_batch_pinned(spark, sf_dir, tmp_pa
     assert not (got_ids & batch_ids)
 
     # the folded multi-frame bucket fetch equals the per-frame fetches
-    multi = touched_buckets_multi(
-        {"a": (c_ids, ["doc_id"]), "b": (batch, ["doc_id"])}
-    )
-    assert multi["a"] == touched_buckets(c_ids, ["doc_id"])
-    assert multi["b"] == touched_buckets(batch, ["doc_id"])
+    multi = touched_buckets_multi({"a": (c_ids, p_docs), "b": (batch, p_docs)})
+    assert multi["a"] == touched_buckets(c_ids, p_docs)
+    assert multi["b"] == touched_buckets(batch, p_docs)
 
 
 def test_purge_keyed_state_rewrites_only_touched_buckets(spark, sf_dir, tmp_path):
@@ -444,6 +441,7 @@ def test_purge_keyed_state_rewrites_only_touched_buckets(spark, sf_dir, tmp_path
     so the purge is a partial rewrite (the DELETE-WHERE-with-file-pruning
     shape), never a full-table rewrite."""
     from mistocksync_spark.sinks.layout import (
+        _layout_meta,
         keyed_state_append,
         keyed_state_read,
         purge_keyed_state,
@@ -463,7 +461,9 @@ def test_purge_keyed_state_rewrites_only_touched_buckets(spark, sf_dir, tmp_path
     tomb = docs.filter(F.col("doc_id").isin(tomb_ids)).select("doc_id")
     tomb_buckets = {
         r.b
-        for r in tomb.select(state_bucket(["doc_id"], 64).alias("b"))
+        for r in tomb.select(
+            state_bucket(["doc_id"], _layout_meta(path)["n_buckets"]).alias("b")
+        )
         .distinct()
         .collect()
     }
@@ -927,6 +927,7 @@ def test_compaction_is_incremental_and_skips_compact_leaves(
     stay byte-for-byte untouched (same path, size, mtime), so the
     compaction tax is O(new small files), never O(state)."""
     from mistocksync_spark.sinks.layout import (
+        _layout_meta,
         compact_keyed_state,
         keyed_state_append,
         keyed_state_read,
@@ -958,7 +959,9 @@ def test_compaction_is_incremental_and_skips_compact_leaves(
     keyed_state_append(small, path, ["doc_id"], batch_id=1)
     touched = {
         r.b
-        for r in small.select(state_bucket(["doc_id"], 64).alias("b"))
+        for r in small.select(
+            state_bucket(["doc_id"], _layout_meta(path)["n_buckets"]).alias("b")
+        )
         .distinct()
         .collect()
     }
@@ -1039,6 +1042,77 @@ def test_keyed_state_layout_sidecar_guards_appends_and_purge(
     )
 
 
+def test_keyed_state_read_builds_without_spark_jobs(spark, tmp_path, job_group):
+    """With the schema in the sidecar and at most 16 ``bucket=``
+    directories per batch, building a state read — whole, bucket-pruned or
+    batch-pinned — starts no Spark job: no schema-inference footer job and
+    no parallel listing job.  A plain ``spark.read.parquet`` of the same
+    table does start one, which shows the job group sees such jobs."""
+    from mistocksync_spark.sinks.layout import keyed_state_append, keyed_state_read
+
+    df = spark.range(0, 400).select(
+        F.col("id").alias("doc_id"), F.md5(F.col("id").cast("string")).alias("text")
+    )
+    path = str(tmp_path / "docs")
+    keyed_state_append(df.filter("doc_id < 300"), path, ["doc_id"], batch_id=-1)
+    keyed_state_append(df.filter("doc_id >= 300"), path, ["doc_id"], batch_id=0)
+    assert len(glob.glob(os.path.join(path, "batch=-1", "bucket=*"))) == 16
+
+    with job_group("state-read:sidecar") as ids:
+        reads = [
+            keyed_state_read(spark, path),
+            keyed_state_read(spark, path, buckets=[0, 3, 7]),
+            keyed_state_read(spark, path, before_batch=0),
+            keyed_state_read(spark, path, buckets=[0, 3, 7], before_batch=0),
+        ]
+    assert ids == []
+    assert [r.count() for r in reads[::2]] == [400, 300]
+    assert reads[0].schema == reads[2].schema
+    assert reads[0].columns == ["doc_id", "text"]
+
+    with job_group("state-read:inferred") as inferred:
+        spark.read.parquet(path)
+    assert inferred
+
+
+def test_keyed_state_append_rejects_column_type_drift(spark, tmp_path):
+    """The sidecar records the written schema: an append whose column
+    types (or names) differ raises the named layout-mismatch error before
+    anything is written; a difference in nullability alone does not."""
+    from mistocksync_spark.sinks.layout import (
+        _layout_meta,
+        keyed_state_append,
+        keyed_state_read,
+    )
+
+    df = spark.range(0, 50).select(
+        F.col("id").alias("doc_id"), F.col("id").cast("string").alias("text")
+    )
+    path = str(tmp_path / "docs")
+    keyed_state_append(df, path, ["doc_id"], batch_id=-1)
+    cols = [f["name"] for f in _layout_meta(path)["schema"]["fields"]]
+    assert cols == ["doc_id", "text", "batch", "bucket"]
+    files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    with pytest.raises(ValueError, match="layout mismatch"):  # string -> int
+        keyed_state_append(
+            df.withColumn("text", F.col("doc_id").cast("int")), path, ["doc_id"],
+            batch_id=0,
+        )
+    with pytest.raises(ValueError, match="layout mismatch"):  # renamed column
+        keyed_state_append(
+            df.withColumnRenamed("text", "body"), path, ["doc_id"], batch_id=0
+        )
+    assert sorted(
+        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    ) == files
+    # a nullable copy of the same columns appends fine
+    nullable = df.select(
+        "doc_id", F.when(F.col("doc_id") >= 0, F.col("text")).alias("text")
+    )
+    keyed_state_append(nullable, path, ["doc_id"], batch_id=0)
+    assert keyed_state_read(spark, path).count() == 100
+
+
 def test_purge_match_cols_deletes_by_nonkey_with_bucket_pruning(
     spark, sf_dir, tmp_path
 ):
@@ -1049,6 +1123,7 @@ def test_purge_match_cols_deletes_by_nonkey_with_bucket_pruning(
     match_cols=vec_id — innocent rows sharing a centroid survive, and
     buckets no tombstoned assignment hashes to stay byte-identical."""
     from mistocksync_spark.sinks.layout import (
+        _layout_meta,
         keyed_state_append,
         keyed_state_read,
         purge_keyed_state,
@@ -1074,7 +1149,9 @@ def test_purge_match_cols_deletes_by_nonkey_with_bucket_pruning(
     tomb_ids = {r.vec_id for r in tomb.select("vec_id").distinct().collect()}
     tomb_buckets = {
         r.b
-        for r in tomb.select(state_bucket(["centroid"], 64).alias("b"))
+        for r in tomb.select(
+            state_bucket(["centroid"], _layout_meta(path)["n_buckets"]).alias("b")
+        )
         .distinct()
         .collect()
     }

@@ -23,10 +23,11 @@ Exit 0 iff every reason count matches.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
