@@ -129,7 +129,7 @@ def salted_dim_join(
     the join key itself — hash(key) is constant per key, so salting on it
     would send every hot-key row to the same reducer and silently undo
     the spread).  It used to default to ALL fact columns, which hashed
-    wide text payloads per row just to derive a 4-bit salt (r12 ADVICE).
+    wide text payloads per row just to derive a 4-bit salt.
     """
     if not salt_cols:
         raise ValueError(
@@ -487,7 +487,7 @@ def numeric_correlations(df: DataFrame, columns: list[str]) -> DataFrame:
     exceeds it — in non-ANSI Spark a decimal overflow would otherwise
     yield a silent NULL ``pearson_r`` (indistinguishable from zero
     variance) while the DuckDB HUGEINT oracle raises, a confusing grade
-    divergence instead of an error (round-7 advisor finding).
+    divergence instead of an error.
 
     ONE scan computes all k + k(k−1)/2 moment sums simultaneously (the
     numeric_profile shape); the matrix unpivots from the single result

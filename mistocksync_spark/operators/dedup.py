@@ -253,24 +253,20 @@ def connected_components(pairs: DataFrame, max_iterations: int = 25) -> DataFram
             "node", new_label.alias("cluster_id"), "__orig"
         )
 
-    # Three propagation rounds per checkpoint + convergence probe: each
+    # Four propagation rounds per checkpoint + convergence probe: each
     # materialization is a full Spark job, and duplicate clusters converge
     # in 2-4 rounds, so fewer materializations matters more than detecting
-    # convergence a round earlier.  Labels only DECREASE, so "changed" is
-    # simply cluster_id < a previously snapshotted label.  The snapshot
-    # (__orig) is re-taken before EVERY round, so the probe measures the
-    # LAST round of the block alone: min-label propagation is converged iff
-    # one full round is a fixed point, so a graph whose labels settle by the
-    # block's final round is detected inside that SAME checkpoint job —
-    # near-clique duplicate graphs finish in ONE job where the
-    # block-start snapshot needed a second just to observe zero change.
-    # The
-    # probe is folded into the checkpoint materialization: a LAZY
+    # convergence a round earlier; four rounds let one block job detect the
+    # fixed point for diameter <= 3, where three needed a second block just
+    # to observe zero change.  Labels only DECREASE, so "changed" is simply
+    # cluster_id < a previously snapshotted label.  The snapshot (__orig) is
+    # re-taken before EVERY round, so the probe measures the LAST round of
+    # the block alone: min-label propagation is converged iff one full
+    # round is a fixed point, so a graph whose labels settle by the block's
+    # final round is detected inside that SAME checkpoint job.  The probe
+    # is folded into the checkpoint materialization: a LAZY
     # localCheckpoint plus one full-scan aggregate persists every partition
     # AND returns the changed count in a single job.
-    # 4 rounds/block: duplicate graphs converge in 2-4 rounds, so one
-    # block job detects the fixed point for diameter ≤ 3 where 3 rounds
-    # needed a second block just to observe zero change.
     rounds_per_check = 4
     changed = 1
     done = 0

@@ -12,8 +12,9 @@ Spark-first shape:
 
 Blocking is the scale story: a full cross join is quadratic, so at scale we
 prefilter pairs with a cheap JVM-side 3-gram Jaccard (`jaccard_3gram`) or a
-shared-3-gram equi-join (`blocking="ngram"`), which turns the cross join
-into an equi-join on shingles — the standard entity-resolution pattern.
+shared-3-gram equi-join (`fuzzy_best_match(..., blocking="ngram")`, run on
+the name-deduplicated sides), which turns the cross join into an equi-join
+on shingles — the standard entity-resolution pattern.
 The exact difflib score is only computed for surviving pairs, preserving
 reference semantics whenever the true best match shares ≥1 trigram (with
 ``sim ≥ 0.33`` and realistic names this always holds; ``blocking="none"``
@@ -108,8 +109,14 @@ def fuzzy_candidate_pairs(
     """The (candidate × base) pairs that reach the Python scorer: blocking
     join + JVM length-band prefilter, NO similarity UDF.  Used by
     ``fuzzy_best_match`` and by the bench to report the scored-pair count
-    without paying for scoring twice.
+    without paying for scoring twice.  ``blocking`` is ``"none"`` (cross
+    join) or ``"broadcast"``; ``fuzzy_best_match`` serves the others.
     """
+    if blocking not in ("none", "broadcast"):
+        raise ValueError(
+            f"fuzzy_candidate_pairs: blocking must be 'none' or 'broadcast', got "
+            f"{blocking!r} ('bounded' and 'ngram' are served by fuzzy_best_match)"
+        )
     cand, bs = _prep_sides(
         candidates,
         base,
@@ -119,23 +126,7 @@ def fuzzy_candidate_pairs(
         base_order=base_order,
     )
 
-    if blocking == "ngram":
-        # Equi-join on shared trigrams instead of a cross join: candidate
-        # pairs must share at least one trigram.  Distinct pair ids, then
-        # re-attach payloads — shuffles on small keys, never quadratic.
-        # Right at 100 TB-scale candidate sets; for small candidate batches
-        # the bounded mapInPandas path below is faster (the trigram join is
-        # skew-bound on stop-grams).
-        #
-        # The candidate side is referenced twice (shingle keys + payload
-        # re-attach); checkpoint it so its upstream lineage (e.g. the full
-        # matching cascade) is materialized once, not inlined per reference.
-        cand = cand.localCheckpoint(eager=False)
-        ck = cand.select("supplier_index", F.explode(_ngram_keys(F.col("supplier_name"))).alias("g"))
-        bk = bs.select("base_index", F.explode(_ngram_keys(F.col("base_name"))).alias("g"))
-        pair_ids = ck.join(bk, on="g").select("supplier_index", "base_index").distinct()
-        pairs = pair_ids.join(cand, on="supplier_index").join(bs, on="base_index")
-    elif blocking == "broadcast":
+    if blocking == "broadcast":
         # Small candidate side: broadcast nested-loop join, exact semantics;
         # the UDF's quick-ratio upper-bound cutoff does the pruning instead
         # of a blocking key.  The probe side is spread across all cores —
@@ -309,7 +300,7 @@ def fuzzy_best_match(
     partition.  At 100× candidate volume switch to ``blocking='ngram'``.
     """
     if blocking in ("bounded", "ngram"):
-        # SCORE DISTINCT NAMES, NOT ROWS (round-11): the similarity and the
+        # SCORE DISTINCT NAMES, NOT ROWS: the similarity and the
         # winning base row are pure functions of the NAME PAIR (ties break
         # to the lowest base_index, and the min-index row of the winning
         # base name IS the overall winner, so deduping both sides to their

@@ -104,7 +104,7 @@ def exact_article_match(
     # (the inner join below, plus the matched-key set / anti-join), and
     # Catalyst does not share common subplans across joins — without the
     # checkpoint the base-table scan + regex normalization + dedupe
-    # shuffle re-ran once per consumer (r10 advisory).  Checkpointing the
+    # shuffle re-ran once per consumer.  Checkpointing the
     # INPUTS (not the joined frame) keeps the joins visible in the final
     # plan, so the broadcast-strategy plan tests still see them.
     sup_kv = sup_kv.localCheckpoint(eager=False)

@@ -832,7 +832,7 @@ def charlm_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     materialized once (lazy localCheckpoint), because both the count
     table and the scoring probe consume it and Catalyst does not share
     common subplans across joins (without it the explode ran twice —
-    the r7 bench's 7.7 s).  The (lang, trigram) model table is bounded
+    7.7 s in a bench).  The (lang, trigram) model table is bounded
     by charset³ per language, NOT by corpus size, so it BROADCASTS back
     onto the per-doc frame; the prefix totals derive from the already-
     aggregated count table (no second pass over the corpus).  Two
@@ -1022,7 +1022,7 @@ def vocabulary_drift(
     frozen_vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Measured staleness of a FROZEN ingest vocabulary — the OOV analogue
-    of ``ivf_recall_drift`` (r13 verdict ask #4): score every batch
+    of ``ivf_recall_drift``: score every batch
     arrival's rare-token verdict twice, against (a) the frozen CORPUS
     vocabulary the streaming prepare tick uses and (b) a vocabulary
     freshly rebuilt over corpus ∪ batch (what a rebuild tick would
@@ -1033,7 +1033,7 @@ def vocabulary_drift(
     index's recall drift.  ``n_scored`` counts arrivals with >= 1 token
     (token-less docs have no OOV verdict under either vocabulary);
     ``drift_frac`` is NULL on an empty batch rather than a
-    divide-by-zero (the r13 zero-guard rule).
+    divide-by-zero (an empty denominator yields NULL, never an error).
 
     Plan: both vocabularies are bounded by 1/rel_threshold entries and
     broadcast; the only corpus-scale work is the two token-frequency
@@ -1096,7 +1096,7 @@ def vocabulary_rebuild(
     frozen_vocab: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The vocabulary REBUILD tick the frozen-vocab ingest path defers to
-    (r14 verdict ask #3 — the missing half of the vocab lifecycle, the
+    (the missing half of the vocab lifecycle, the
     exact mirror of ``ivf_index_rebuild`` + ``ivf_recall_drift`` on the
     OOV side): re-derive the vocabulary over the GROWN corpus (standing
     corpus + arrivals), re-freeze it, and emit a one-row audit proving
@@ -1245,7 +1245,7 @@ def incremental_prepare_tick(
     - ``near_dup``: the ``incremental_dedup_merge`` rejection — band
       collision + exact shingle Jaccard >= 0.5 vs corpus or an earlier
       arrival (``return_rejected=True`` surface, identical plan);
-    - ``span_dup`` (r14 — the fifth v2 gate, now present at tick time):
+    - ``span_dup`` (the fifth v2 gate, present at tick time too):
       >= 30% of the arrival's characters are covered by length-
       ``span_gram_len`` grams already seen — in the corpus, or on a
       batch arrival with a smaller id (the same arrival-ordered
@@ -1284,7 +1284,7 @@ def incremental_prepare_tick(
     Deriving any of those states from ``corpus`` inside the tick is
     CORPUS-PROPORTIONAL work (one md5 per character position for grams,
     a full digest shuffle, a token-frequency aggregate) — a hidden cost
-    no production tick should silently pay (r14 ADVICE), so it now
+    no production tick should silently pay, so it
     requires the explicit ``allow_corpus_derived_state=True`` opt-in; the
     graded self-contained entry passes it, stored/stream callers never
     hit it.  ``corpus_fetch`` is the docs-store pruning hook passed
@@ -1295,7 +1295,7 @@ def incremental_prepare_tick(
     the tick has already derived them to probe ``corpus_bands``) is passed
     through to the merge too, so the batch is not banded twice.
 
-    v3 emission gates (r15, ``holdout_mod`` opt-in — the tick twin of
+    v3 emission gates (``holdout_mod`` opt-in — the tick twin of
     ``corpus_prepare_v3``): arrivals whose ``doc_id % holdout_mod == 0``
     are 'holdout' (checked FIRST — corpus membership, not quality), and
     arrivals sharing >= ``contam_min_overlap`` distinct word-trigram
@@ -1352,8 +1352,8 @@ def incremental_prepare_tick(
 
     # exact gate: first (is_batch, doc_id) arrival per digest wins — the
     # precedence is a lexicographic struct MIN, valid for any id range
-    # (r13 ADVICE: the previous is_batch*1e10 + doc_id BIGINT encoding
-    # silently mis-ordered once doc_id reached 1e10)
+    # (an is_batch*1e10 + doc_id BIGINT encoding would silently
+    # mis-order once doc_id reached 1e10)
     if corpus_digests is None:
         # self-contained: one digest shuffle over corpus ∪ batch
         seen = corpus_docs.withColumn("is_batch", F.lit(0)).unionByName(
@@ -1602,7 +1602,7 @@ def dsir_weights(
     (lazy localCheckpoint), because the frame feeds THREE consumers
     (bucket counts, corpus totals, per-doc scoring) and Catalyst does
     not share common subplans across joins, so without it the md5
-    featurization would run three times (the r7 bench's 13 s).  The
+    featurization would run three times (13 s in a bench).  The
     bucket count table is bounded by ``dim`` — NOT corpus size — so it
     (and the 1-row totals) BROADCASTS back onto the per-doc frame;
     featurization is stateless hashing (no vocabulary to build or

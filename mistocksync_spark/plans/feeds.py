@@ -314,7 +314,7 @@ def emb_incr_batch(spark, sf_dir: str):
     return exact.unionByName(scaled).unionByName(negated).unionByName(neg_scaled)
 
 
-# Index-lifecycle fixture (r11 verdict ask #2): the SERVING corpus before
+# Index-lifecycle fixture: the SERVING corpus before
 # an index rebuild is the ~90% slice (vec_id % 10 != 7); the arrivals are
 # the held-out ~10%.  The natural corpus has no cos >= 0.99 pair (the
 # documented emb_incr fixture property), so every arrival is ACCEPTED by

@@ -1796,43 +1796,26 @@ ORACLES["incremental_dedup_merge_stateful"] = ORACLES["incremental_dedup_merge"]
 
 @query("incremental_dedup_merge_pruned")
 def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ingest tick against the PARTITIONED persisted state under a
-    PRUNED read (sinks/layout.py): the corpus signature state is
-    written partitioned by pmod(xxhash64(band, band_key)) buckets, the
-    tick computes its batch's touched-bucket set (bounded driver fetch,
-    the same expression that placed the rows) and reads ONLY those
-    partitions.  Pruning is lossless for the candidate equi-join —
-    untouched buckets cannot match any batch band key — so this must
-    hash-match the self-contained tick; oracle shared with
-    ``incremental_dedup_merge``.  This grades the layout the keyed-state
-    ticks (streaming/merge.py) run."""
-    import hashlib
-
-    from mistocksync_spark.operators.dedup import (
-        corpus_signature_state,
-        incremental_dedup_merge,
-    )
-    from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        touched_buckets,
+    """The ingest tick against the persisted, bucketed state, run by the
+    production tick driver (``streaming/merge.corpus_dedup_tick_against_state``)
+    on a pristine copy of the corpus-dedup stream's primed state: the band
+    probe and the candidate docs fetch are both pruned to the buckets the
+    batch's keys hash to, reads pinned before the batch.  Pruning is
+    lossless for the candidate equi-join — untouched buckets cannot match
+    any batch band key — so the accepted seen-set read back from the
+    ticked state must hash-match the self-contained tick; oracle shared
+    with ``incremental_dedup_merge``."""
+    from mistocksync_spark.plans.feeds import docs_incr_batch
+    from mistocksync_spark.streaming.merge import (
+        accepted_rows,
+        corpus_dedup_tick_against_state,
     )
 
-    key = ["band", "band_key"]
-    corpus = docs_incr_corpus(spark, sf_dir)
-    batch = docs_incr_batch(spark, sf_dir)
-    root = (
-        "/tmp/spark_graft_band_state/"
-        + hashlib.md5(f"incremental_dedup_merge_pruned:{sf_dir}".encode()).hexdigest()[:10]
+    _, state_dir = _pristine_copy(
+        _corpus_dedup_state_root(spark, sf_dir), "incr_dedup_pruned_"
     )
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)  # append sink: start clean
-    keyed_state_append(corpus_signature_state(corpus), root, key, batch_id=-1)
-    bbands = corpus_signature_state(batch).localCheckpoint(eager=False)
-    state = keyed_state_read(spark, root, touched_buckets(bbands, root))
-    return incremental_dedup_merge(corpus, batch, corpus_bands=state)
+    corpus_dedup_tick_against_state(docs_incr_batch(spark, sf_dir), 0, state_dir)
+    return accepted_rows(spark, state_dir, "docs", "doc_id")
 
 
 ORACLES["incremental_dedup_merge_pruned"] = ORACLES["incremental_dedup_merge"]
@@ -1883,33 +1866,22 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Setup amortization (the ``_run_prepare_stream`` pattern): the
     stream's initial state (docs + bands, both
     ``batch=-1``) is a pure function of the corpus, so it is produced
-    ONCE per corpus version in a content-tagged scratch root and COPIED
-    pristine per run (the stream mutates state, so runs can't share one
-    live copy).  Decisions are unchanged — the copied state is
-    bit-identical to what the per-call setup built."""
+    ONCE per corpus version (``_corpus_dedup_state_root``, shared with
+    ``incremental_dedup_merge_pruned``) and COPIED pristine per run (the
+    stream mutates state, so runs can't share one live copy).  Decisions
+    are unchanged — the copied state is bit-identical to what the
+    per-call setup built."""
     import os
-    import shutil
-    import tempfile
 
-    from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
+    from mistocksync_spark.plans.feeds import docs_incr_batch
     from mistocksync_spark.streaming.merge import (
         incremental_corpus_dedup,
-        prime_corpus_dedup_state,
         stage_arrivals,
     )
 
-    work = tempfile.mkdtemp(prefix="incr_dedup_stream_")
-    tag = _parquet_content_tag(f"{sf_dir}/documents.parquet")
-    root = _produce_once_root(
-        "/tmp/spark_graft_dedup_stream_state",
-        "incremental_dedup_stream_state",
-        sf_dir,
-        tag,
-        lambda r: prime_corpus_dedup_state(docs_incr_corpus(spark, sf_dir), r),
+    work, state_dir = _pristine_copy(
+        _corpus_dedup_state_root(spark, sf_dir), "incr_dedup_stream_"
     )
-    state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
     doc_id = F.col("doc_id")
     arrivals = stage_arrivals(
         docs_incr_batch(spark, sf_dir),
@@ -2491,21 +2463,18 @@ ORACLES["incremental_embedding_dedup_stateful"] = ORACLES["incremental_embedding
 
 @query("incremental_embedding_dedup_ivf")
 def incremental_embedding_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vector ingest tick through the IVF-CELL candidate generator and
-    the PERSISTED index state: the quantizer is trained once on
-    the corpus and frozen, the corpus inverted table is written to parquet
-    and read back (the serving stack's own table — see
-    ``embedding_topk_ivf_stored``), and the tick assigns only the arriving
-    batch.  Decision rule and oracle are identical to
+    """The vector ingest tick through the IVF-CELL candidate generator,
+    self-contained (the one-shot twin, as ``incremental_dedup_merge`` is
+    for the corpus tick): the quantizer is trained once on the corpus and
+    frozen, and both sides are assigned to their cells in the operator.
+    Decision rule and oracle are identical to
     ``incremental_embedding_dedup`` (exact all-pairs cosine, the same
     fixture-dependent parity documented there); this entry grades the
     candidate-generator swap that keeps tick cost linear on clustered
-    corpora (SCALE_r11 §2c)."""
-    import hashlib
-
+    corpora.  The stored-state and streaming twins are
+    ``incremental_embedding_dedup_ivf_pruned`` and ``_stream``."""
     from mistocksync_spark.operators.vectors import (
         incremental_embedding_dedup_ivf,
-        ivf_assign,
         ivf_train,
     )
     from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
@@ -2513,19 +2482,7 @@ def incremental_embedding_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataF
     corpus = emb_incr_corpus(spark, sf_dir)
     n_cells = max(16, corpus.count() // 200)
     cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
-    root = (
-        "/tmp/spark_graft_ivf_incr/"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    )
-    ivf_assign(corpus, cents, n_assign=2).write.mode("overwrite").parquet(
-        f"{root}/cells"
-    )
-    return incremental_embedding_dedup_ivf(
-        corpus,
-        emb_incr_batch(spark, sf_dir),
-        cents,
-        corpus_cells=spark.read.parquet(f"{root}/cells"),
-    )
+    return incremental_embedding_dedup_ivf(corpus, emb_incr_batch(spark, sf_dir), cents)
 
 
 ORACLES["incremental_embedding_dedup_ivf"] = ORACLES["incremental_embedding_dedup"]
@@ -2535,50 +2492,28 @@ ORACLES["incremental_embedding_dedup_ivf"] = ORACLES["incremental_embedding_dedu
 def incremental_embedding_dedup_ivf_pruned_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The IVF vector ingest tick with the stored inverted state written
-    PARTITIONED BY CENTROID and read PRUNED to the batch's assigned cells
-    (the vector analogue of ``incremental_dedup_merge_pruned``;
-    the layout the SCALE_r12 §2 ladders run): pruning is lossless because
+    """The IVF vector ingest tick against the persisted, bucketed state,
+    run by the production tick driver
+    (``streaming/merge.embedding_dedup_tick_against_state``) on a pristine
+    copy of the embedding stream's primed state under its frozen
+    quantizer: the cell probe and the exact-rescore vector fetch are both
+    pruned to the buckets the batch's keys hash to (the vector analogue
+    of ``incremental_dedup_merge_pruned``).  Pruning is lossless because
     candidates are a centroid equi-join — corpus rows in cells none of
     the batch's assignments touch cannot pair with any arrival.  Same
-    decision rule, frozen quantizer and oracle as
-    ``incremental_embedding_dedup_ivf``."""
-    import hashlib
-    import shutil
+    decision rule and oracle as ``incremental_embedding_dedup_ivf``."""
+    from mistocksync_spark.plans.feeds import emb_incr_batch
+    from mistocksync_spark.streaming.merge import (
+        accepted_rows,
+        embedding_dedup_tick_against_state,
+    )
 
-    from mistocksync_spark.operators.vectors import (
-        incremental_embedding_dedup_ivf,
-        ivf_assign,
-        ivf_train,
+    root, cents, dim = _embedding_state_root(spark, sf_dir)
+    _, state_dir = _pristine_copy(root, "incr_emb_pruned_")
+    embedding_dedup_tick_against_state(
+        emb_incr_batch(spark, sf_dir), 0, state_dir, cents, dim=dim
     )
-    from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
-
-    corpus = emb_incr_corpus(spark, sf_dir)
-    batch = emb_incr_batch(spark, sf_dir)
-    n_cells = max(16, corpus.count() // 200)
-    cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
-    root = (
-        "/tmp/spark_graft_ivf_incr/"
-        + hashlib.md5(
-            f"incremental_embedding_dedup_ivf_pruned:{sf_dir}".encode()
-        ).hexdigest()[:10]
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    ivf_assign(corpus, cents, n_assign=2).write.mode("overwrite").partitionBy(
-        "centroid"
-    ).parquet(f"{root}/cells")
-    bcells = ivf_assign(batch, cents, n_assign=2).localCheckpoint(eager=False)
-    probe_cells = [
-        r.centroid for r in bcells.select("centroid").distinct().collect()
-    ]
-    pruned = (
-        spark.read.parquet(f"{root}/cells")
-        .filter(F.col("centroid").isin(probe_cells))
-        .select("vec_id", F.col("centroid").cast("long").alias("centroid"))
-    )
-    return incremental_embedding_dedup_ivf(
-        corpus, batch, cents, corpus_cells=pruned
-    )
+    return accepted_rows(spark, state_dir, "vecs", "vec_id")
 
 
 ORACLES["incremental_embedding_dedup_ivf_pruned"] = ORACLES[
@@ -2606,49 +2541,21 @@ def incremental_embedding_dedup_ivf_stream_q(
     frozen quantizer (``ivf_train`` is deterministic — exact int64
     accumulation, deterministic seeds) and the initial vecs/cells state
     are pure functions of the corpus, so they are produced ONCE per
-    corpus version in a content-tagged scratch root (centroids + dim in
-    a JSON sidecar, exact float round-trip) and COPIED pristine per run
-    — the stream mutates state, so runs can't share one live copy.
-    Accepted sets are unchanged."""
-    import json as _json
+    corpus version (``_embedding_state_root``, shared with
+    ``incremental_embedding_dedup_ivf_pruned`` and
+    ``vector_purge_emission``) and COPIED pristine per run — the stream
+    mutates state, so runs can't share one live copy.  Accepted sets are
+    unchanged."""
     import os
-    import shutil
-    import tempfile
 
-    from mistocksync_spark.operators.vectors import inferred_dim, ivf_train
-    from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
+    from mistocksync_spark.plans.feeds import emb_incr_batch
     from mistocksync_spark.streaming.merge import (
         incremental_embedding_dedup_stream,
-        prime_embedding_dedup_state,
         stage_arrivals,
     )
 
-    work = tempfile.mkdtemp(prefix="incr_emb_stream_")
-    tag = _parquet_content_tag(f"{sf_dir}/embeddings.parquet")
-
-    def _build(r: str) -> None:
-        corpus = emb_incr_corpus(spark, sf_dir).localCheckpoint(eager=False)
-        n_cells = max(16, corpus.count() // 200)
-        cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
-        dim = inferred_dim(corpus, "embedding")
-        prime_embedding_dedup_state(corpus, cents, r)
-        with open(os.path.join(r, "_quantizer.json"), "w") as qf:
-            _json.dump({"centroids": cents, "dim": dim}, qf)
-
-    root = _produce_once_root(
-        "/tmp/spark_graft_emb_stream_state",
-        "incremental_embedding_dedup_ivf_stream_state",
-        sf_dir,
-        tag,
-        _build,
-    )
-    with open(os.path.join(root, "_quantizer.json")) as qf:
-        q = _json.load(qf)
-    cents, dim = q["centroids"], q["dim"]
-    state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
-    os.remove(os.path.join(state_dir, "_quantizer.json"))
+    root, cents, dim = _embedding_state_root(spark, sf_dir)
+    work, state_dir = _pristine_copy(root, "incr_emb_stream_")
     vec_id = F.col("vec_id")
     arrivals = stage_arrivals(
         emb_incr_batch(spark, sf_dir),
@@ -3037,10 +2944,8 @@ def ivf_index_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mistocksync_spark.plans.feeds import emb_drift_arrivals, emb_drift_corpus
 
     corpus = emb_drift_corpus(spark, sf_dir)
-    root = (
-        "/tmp/spark_graft_ivf_rebuild/"
-        + hashlib.md5(f"ivf_index_rebuild:{sf_dir}".encode()).hexdigest()[:10]
-    )
+    h = hashlib.md5(f"ivf_index_rebuild:{sf_dir}".encode()).hexdigest()[:10]
+    root = _scratch_root("/tmp/spark_graft_ivf_rebuild", h)
     k_old = max(16, int(corpus.count()) // 200)
     cents_v1, inv_v1 = ivf_index_tables(corpus, n_centroids=k_old, iterations=2)
     cents_v1.write.mode("overwrite").parquet(f"{root}/v1/centroids")
@@ -3150,10 +3055,8 @@ def ivf_recall_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb_drift_corpus(spark, sf_dir)
     grown = corpus.unionByName(emb_drift_arrivals(spark, sf_dir))
     qv = _query_vec(spark, sf_dir)
-    root = (
-        "/tmp/spark_graft_ivf_rebuild/"
-        + hashlib.md5(f"ivf_recall_drift:{sf_dir}".encode()).hexdigest()[:10]
-    )
+    h = hashlib.md5(f"ivf_recall_drift:{sf_dir}".encode()).hexdigest()[:10]
+    root = _scratch_root("/tmp/spark_graft_ivf_rebuild", h)
     k_old = max(16, int(corpus.count()) // 200)
     cents_v1, inv_v1 = ivf_index_tables(corpus, n_centroids=k_old, iterations=2)
     cents_v1.write.mode("overwrite").parquet(f"{root}/v1/centroids")
@@ -3812,11 +3715,10 @@ def embedding_topk_ivf_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents_df, inverted = ivf_index_tables(emb, iterations=2)
     # the query name is part of the path so sibling entries (the recall
-    # twin) never overwrite this entry's tables mid-read
-    root = (
-        "/tmp/spark_graft_ivf_index/"
-        + hashlib.md5(f"embedding_topk_ivf_stored:{sf_dir}".encode()).hexdigest()[:10]
-    )
+    # twin) never overwrite this entry's tables mid-read; the pid-isolated
+    # root does the same for concurrent sessions on one sf_dir
+    h = hashlib.md5(f"embedding_topk_ivf_stored:{sf_dir}".encode()).hexdigest()[:10]
+    root = _scratch_root("/tmp/spark_graft_ivf_index", h)
     cents_df.write.mode("overwrite").parquet(f"{root}/centroids")
     inverted.write.mode("overwrite").parquet(f"{root}/inverted")
     return ivf_topk_stored(
@@ -3847,12 +3749,8 @@ def embedding_topk_ivf_stored_recall_q(spark: SparkSession, sf_dir: str) -> Data
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = _query_vec(spark, sf_dir)
     cents_df, inverted = ivf_index_tables(emb, iterations=2)
-    root = (
-        "/tmp/spark_graft_ivf_index/"
-        + hashlib.md5(
-            f"embedding_topk_ivf_stored_recall:{sf_dir}".encode()
-        ).hexdigest()[:10]
-    )
+    h = hashlib.md5(f"embedding_topk_ivf_stored_recall:{sf_dir}".encode()).hexdigest()[:10]
+    root = _scratch_root("/tmp/spark_graft_ivf_index", h)
     cents_df.write.mode("overwrite").parquet(f"{root}/centroids")
     inverted.write.mode("overwrite").parquet(f"{root}/inverted")
     ivf = ivf_topk_stored(
@@ -4414,7 +4312,7 @@ ORACLES["dup_rate_by_source"] = f"""
 
 
 # --------------------------------------------------------------------------
-# Round-5 text-pipeline extensions: PII redaction, C4-style boilerplate
+# Text-pipeline extensions: PII redaction, C4-style boilerplate
 # paragraph removal, context-window chunking (operators/textual.py).
 # --------------------------------------------------------------------------
 
@@ -4544,7 +4442,7 @@ def doc_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-5 session additions: journey analytics over events (transition
+# Session additions: journey analytics over events (transition
 # matrix, cohort retention, gap-fill+LOCF, z-score anomalies) and two more
 # training-data quality gates (Gopher rules, corpus-relative OOV score).
 # --------------------------------------------------------------------------
@@ -6742,7 +6640,7 @@ def source_length_ks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-7 TPC-H breadth: Q2 (correlated min-cost → decorrelated min-join),
+# TPC-H breadth: Q2 (correlated min-cost → decorrelated min-join),
 # Q15 (view + max-over-aggregate), Q21 (double semi/anti self-join) —
 # adapted to the available schema (no partsupp: per-(part, supplier) unit
 # cost derives from lineitem; no receipt/commit dates: "late" is the
@@ -6941,7 +6839,7 @@ def q21_waiting_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-7 TPC-H completion: Q7/Q8/Q9/Q11/Q12/Q16/Q17/Q20 shapes — with the
+# TPC-H completion: Q7/Q8/Q9/Q11/Q12/Q16/Q17/Q20 shapes — with the
 # documented schema adaptations (no partsupp: inventory/supply notions
 # derive from lineitem; no shipmode/commitdate: linestatus buckets and the
 # returned flag stand in; supplycost proxied as 60% of p_retailprice).
@@ -7394,7 +7292,7 @@ def q20_dominant_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-7: SemDeDup-shaped semantic dedup (cluster → in-cluster prune) and
+# SemDeDup-shaped semantic dedup (cluster → in-cluster prune) and
 # DSIR-shaped importance weighting — LLM-pipeline operators with full
 # bit-deterministic SQL replays.
 # --------------------------------------------------------------------------
@@ -8943,8 +8841,10 @@ def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> st
     """PRODUCE-ONCE SETUP CONTRACT — the single audited implementation of
     setup amortization, centralized so the discipline stays structurally
     checkable
-    (tests/test_layout.py pins that queries.py calls ``_scratch_root``
-    ONLY through here plus the one documented bucketed-table site).
+    (tests/test_produce_once.py pins that queries.py calls
+    ``_scratch_root`` ONLY through here plus the documented direct sites:
+    the catalog-guarded bucketed tables and the four per-run IVF index
+    tables).
 
     What may live under a produce-once root: SETUP STATE ONLY — standing
     tables, indexes, quantizers, vocabularies that are pure functions of
@@ -8954,9 +8854,8 @@ def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> st
     derived from per-run inputs — every ``@query`` body recomputes its
     declared result from the parquet inputs on every call, and the prime
     cost stays on the bench record (the first cold sample of a fresh root
-    pays ``build``).  Mutating entries must ``shutil.copytree`` the
-    pristine root per run and mutate the copy; read-only entries may read
-    the root in place.
+    pays ``build``).  Mutating entries must mutate a per-run copy
+    (``_pristine_copy``); read-only entries may read the root in place.
 
     ``build(root)`` runs at most once per (session pid, corpus version);
     the ``_STATE_READY`` marker commits it, so an interrupted build is
@@ -9016,8 +8915,8 @@ def orders_bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # direct _scratch_root call (not _produce_once_root): the guard here is
     # the CATALOG (tableExists on the content-hashed table name), not a
     # _STATE_READY marker — bucketed tables must be registered via
-    # saveAsTable, so the marker protocol does not apply.  This is the one
-    # documented exception the produce-once structural test allows.
+    # saveAsTable, so the marker protocol does not apply.  One of the
+    # documented exceptions the produce-once structural test allows.
     root = _scratch_root("/tmp/spark_graft_bucketed", h)
     ob, cb = f"orders_b_{h}", f"customer_b_{h}"
     if not spark.catalog.tableExists(ob):
@@ -9994,6 +9893,77 @@ def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataF
     return _stored_prepare_tick(spark, sf_dir)
 
 
+def _pristine_copy(root: str, prefix: str) -> tuple[str, str]:
+    """A per-run mutable copy of the produce-once ``root``: a fresh temp
+    dir ``work`` whose ``state`` child holds the root's tables, without
+    the ``_STATE_READY`` marker and the ``_quantizer.json`` sidecar.
+    Returns (work, state_dir); ``work`` has room for a run's arrivals,
+    checkpoint and outputs beside the state."""
+    import os
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    state_dir = os.path.join(work, "state")
+    shutil.copytree(
+        root, state_dir, ignore=shutil.ignore_patterns("_STATE_READY", "_quantizer.json")
+    )
+    return work, state_dir
+
+
+def _corpus_dedup_state_root(spark: SparkSession, sf_dir: str) -> str:
+    """The produce-once root of the corpus-dedup state
+    (``prime_corpus_dedup_state``: docs + bands at ``batch=-1``), keyed on
+    the documents' content."""
+    from mistocksync_spark.plans.feeds import docs_incr_corpus
+    from mistocksync_spark.streaming.merge import prime_corpus_dedup_state
+
+    return _produce_once_root(
+        "/tmp/spark_graft_dedup_stream_state",
+        "incremental_dedup_stream_state",
+        sf_dir,
+        _parquet_content_tag(f"{sf_dir}/documents.parquet"),
+        lambda r: prime_corpus_dedup_state(docs_incr_corpus(spark, sf_dir), r),
+    )
+
+
+def _embedding_state_root(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, list[list[float]], int]:
+    """The produce-once root of the embedding-dedup state
+    (``prime_embedding_dedup_state``: vecs + cells at ``batch=-1``) and its
+    frozen quantizer, keyed on the embeddings' content.  ``ivf_train`` is
+    deterministic, so the centroids and dim are a pure function of the
+    corpus too; they live in a ``_quantizer.json`` sidecar (exact float
+    round-trip).  Returns (root, centroids, dim)."""
+    import json
+    import os
+
+    from mistocksync_spark.operators.vectors import inferred_dim, ivf_train
+    from mistocksync_spark.plans.feeds import emb_incr_corpus
+    from mistocksync_spark.streaming.merge import prime_embedding_dedup_state
+
+    def build(r: str) -> None:
+        corpus = emb_incr_corpus(spark, sf_dir).localCheckpoint(eager=False)
+        n_cells = max(16, corpus.count() // 200)
+        cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
+        dim = inferred_dim(corpus, "embedding")
+        prime_embedding_dedup_state(corpus, cents, r)
+        with open(os.path.join(r, "_quantizer.json"), "w") as qf:
+            json.dump({"centroids": cents, "dim": dim}, qf)
+
+    root = _produce_once_root(
+        "/tmp/spark_graft_emb_stream_state",
+        "incremental_embedding_dedup_ivf_stream_state",
+        sf_dir,
+        _parquet_content_tag(f"{sf_dir}/embeddings.parquet"),
+        build,
+    )
+    with open(os.path.join(root, "_quantizer.json")) as qf:
+        q = json.load(qf)
+    return root, q["centroids"], q["dim"]
+
+
 def _prepare_state_root(spark: SparkSession, sf_dir: str) -> str:
     """The produce-once root of the prepare state (``prime_prepare_state``:
     docs/bands/digests/grams at ``batch=-1`` + frozen vocab + frozen
@@ -10243,8 +10213,6 @@ def _run_prepare_stream(
     Spark recompute per graded call; decisions are unchanged because
     the copied state is bit-identical to what the setup built."""
     import os
-    import shutil
-    import tempfile
 
     from mistocksync_spark.plans.feeds import docs_incr_batch
     from mistocksync_spark.streaming.merge import (
@@ -10252,10 +10220,9 @@ def _run_prepare_stream(
         stage_arrivals,
     )
 
-    work = tempfile.mkdtemp(prefix="incr_prep_stream_")
-    state_dir = os.path.join(work, "state")
-    shutil.copytree(_prepare_state_root(spark, sf_dir), state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
+    work, state_dir = _pristine_copy(
+        _prepare_state_root(spark, sf_dir), "incr_prep_stream_"
+    )
     batch = docs_incr_batch(spark, sf_dir).localCheckpoint(eager=False)
     # id-ordered halves split at the OBSERVED median (hardcoded cuts
     # silently dropped arrivals whenever the corpus's id offsets moved);
@@ -10362,6 +10329,74 @@ def _build_tombstone_purge_store(spark: SparkSession, sf_dir: str, root: str) ->
     )
 
 
+def _purged_docs_store(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> tuple[str, DataFrame]:
+    """A pristine copy of the pre-purge docs store with the tombstoned
+    ``doc_id % 50 == 0`` originals physically purged from its ``docs``
+    table (``sinks/layout.purge_keyed_state``).  The deletion request is
+    derived from the standing store's own rows.  Returns (state_dir,
+    remaining docs read back from the purged files)."""
+    import os
+
+    from mistocksync_spark.sinks.layout import keyed_state_read, purge_keyed_state
+
+    root = _produce_once_root(
+        "/tmp/spark_graft_purge_store",
+        "tombstone_purge_store",
+        sf_dir,
+        _parquet_content_tag(f"{sf_dir}/documents.parquet"),
+        lambda r: _build_tombstone_purge_store(spark, sf_dir, r),
+    )
+    _, state_dir = _pristine_copy(root, prefix)
+    p_docs = os.path.join(state_dir, "docs")
+    tomb = (
+        keyed_state_read(spark, p_docs)
+        .filter((F.col("doc_id") % 50 == 0) & (F.col("doc_id") < 1000000))
+        .select("doc_id")
+    )
+    purge_keyed_state(spark, p_docs, tomb, ["doc_id"])
+    return state_dir, keyed_state_read(spark, p_docs).localCheckpoint(eager=False)
+
+
+def _purge_reasons(
+    spark: SparkSession, state_dir: str, remaining: DataFrame, vocab: DataFrame
+) -> DataFrame:
+    """(doc_id, text, reason) for the purged store's ``remaining`` docs:
+    digest-keeper memory (``exact_dup``) → ``gopher`` → ``rare_tokens``
+    (more than half the tokens outside ``vocab``) → ``ok``."""
+    import os
+
+    from mistocksync_spark.operators.textual import gopher_rules
+    from mistocksync_spark.sinks.layout import keyed_state_read
+
+    dig = keyed_state_read(spark, os.path.join(state_dir, "digest_keepers"))
+    g = gopher_rules(remaining).select("doc_id", "pass_gopher")
+    btok = remaining.select(
+        "doc_id", F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
+    ).filter(F.col("token") != "")
+    score = (
+        btok.join(F.broadcast(vocab.withColumn("__v", F.lit(1))), on="token", how="left")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("__nt"), F.count("__v").alias("__niv"))
+    )
+    return (
+        remaining.select("doc_id", "text", F.md5("text").alias("digest"))
+        .join(dig, on="digest")
+        .join(g, on="doc_id")
+        .join(score, on="doc_id", how="left")
+        .select(
+            "doc_id",
+            "text",
+            F.when(F.col("keeper") != F.col("doc_id"), F.lit("exact_dup"))
+            .when(F.col("pass_gopher") == 0, F.lit("gopher"))
+            .when(2 * F.col("__niv") < F.col("__nt"), F.lit("rare_tokens"))
+            .otherwise(F.lit("ok"))
+            .alias("reason"),
+        )
+    )
+
+
 @query("tombstone_purge_emission", _sql_tombstone_purge())
 def tombstone_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten, graded END TO END (the governance
@@ -10395,69 +10430,11 @@ def tombstone_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     produced once per corpus version in a content-tagged scratch root
     and copied pristine per run; the graded work (physical purge of the
     copy + emission from the purged files) runs in full every call."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from mistocksync_spark.operators.textual import corpus_vocabulary, gopher_rules
-    from mistocksync_spark.plans.feeds import docs_aug
-    from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
-        parallel_actions,
-        purge_keyed_state,
-    )
-
-    tag = _parquet_content_tag(f"{sf_dir}/documents.parquet")
-    root = _produce_once_root(
-        "/tmp/spark_graft_purge_store",
-        "tombstone_purge_store",
-        sf_dir,
-        tag,
-        lambda r: _build_tombstone_purge_store(spark, sf_dir, r),
-    )
-    work = tempfile.mkdtemp(prefix="tombstone_purge_")
-    shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
-    p_docs = os.path.join(work, "docs")
-    p_dig = os.path.join(work, "digest_keepers")
-    # the deletion request, derived from the standing store's own rows
-    # (identical id set to the old feed-side filter)
-    tomb = (
-        keyed_state_read(spark, p_docs)
-        .filter((F.col("doc_id") % 50 == 0) & (F.col("doc_id") < 1000000))
-        .select("doc_id")
-    )
-    purge_keyed_state(spark, p_docs, tomb, ["doc_id"])
-
-    remaining = keyed_state_read(spark, p_docs).localCheckpoint(eager=False)
-    dig = keyed_state_read(spark, p_dig)
-    g = gopher_rules(remaining).select("doc_id", "pass_gopher")
-    vocab = spark.read.parquet(os.path.join(work, "vocab"))
-    btok = remaining.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
-    score = (
-        btok.join(F.broadcast(vocab.withColumn("__v", F.lit(1))), on="token", how="left")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("__nt"), F.count("__v").alias("__niv"))
-    )
-    return (
-        remaining.select("doc_id", F.md5("text").alias("digest"))
-        .join(dig, on="digest")
-        .join(g, on="doc_id")
-        .join(score, on="doc_id", how="left")
-        .select(
-            "doc_id",
-            F.when(F.col("keeper") != F.col("doc_id"), F.lit("exact_dup"))
-            .when(F.col("pass_gopher") == 0, F.lit("gopher"))
-            .when(2 * F.col("__niv") < F.col("__nt"), F.lit("rare_tokens"))
-            .otherwise(F.lit("ok"))
-            .alias("reason"),
-        )
-    )
+    state_dir, remaining = _purged_docs_store(spark, sf_dir, "tombstone_purge_")
+    vocab = spark.read.parquet(os.path.join(state_dir, "vocab"))
+    return _purge_reasons(spark, state_dir, remaining, vocab).select("doc_id", "reason")
 
 
 @query("incremental_prepare_stream_v3")
@@ -10542,102 +10519,55 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     purged vectors (band/cell entries are derived from the vector values
     and are exactly the data the deletion request covers), so a
     re-arriving COPY of a purged vector is ACCEPTED.  The emission below
-    makes that observable and graded: the IVF ingest tick runs a batch of
-    exact/scaled/negated copies against the PURGED store read back, and
-    batch copies of tombstoned vectors flip to accepted — the oracle
-    replays the purge as a WHERE exclusion, so an incomplete purge (a
-    surviving vecs or cells row still rejecting its copy) hash-fails.
-    The frozen quantizer goes stale by design; the graded remediation is
-    ``ivf_index_rebuild`` (run post-purge in the SCALE_r16 ladder).
+    makes that observable and graded: the production ingest tick
+    (``streaming/merge.embedding_dedup_tick_against_state``) runs a batch
+    of exact/scaled/negated copies against the PURGED store, and batch
+    copies of tombstoned vectors flip to accepted — the oracle replays
+    the purge as a WHERE exclusion, so an incomplete purge (a surviving
+    vecs or cells row still rejecting its copy) hash-fails.  The result
+    is the ticked state's accepted seen-set.  The frozen quantizer goes
+    stale by design; the graded remediation is ``ivf_index_rebuild``.
 
     Setup amortization (the ``_run_prepare_stream`` pattern): the
-    PRE-purge embedding store (vecs + cells + the frozen deterministic
-    quantizer) is a pure function of the corpus — the standing state a
-    deletion request arrives against — so it is produced once per corpus
-    version in a content-tagged scratch root and copied pristine per
-    run; the graded work (both physical purges of the copy + the ingest
-    tick over the purged store) runs in full every call."""
-    import hashlib
-    import json as _json
+    PRE-purge embedding store is the embedding stream's primed state
+    (vecs + cells + the frozen deterministic quantizer,
+    ``_embedding_state_root``) — the standing state a deletion request
+    arrives against — copied pristine per run; the graded work (both
+    physical purges of the copy + the ingest tick over the purged store)
+    runs in full every call."""
     import os
-    import shutil
-    import tempfile
 
-    from mistocksync_spark.operators.vectors import (
-        incremental_embedding_dedup_ivf,
-        inferred_dim,
-        ivf_assign,
-        ivf_train,
-    )
-    from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
+    from mistocksync_spark.operators.vectors import ivf_assign
+    from mistocksync_spark.plans.feeds import emb_incr_batch
     from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
         keyed_state_read,
         parallel_actions,
         purge_keyed_state,
-        touched_buckets,
+    )
+    from mistocksync_spark.streaming.merge import (
+        accepted_rows,
+        embedding_dedup_tick_against_state,
     )
 
-    tag = _parquet_content_tag(f"{sf_dir}/embeddings.parquet")
-
-    def _build(r: str) -> None:
-        corpus = emb_incr_corpus(spark, sf_dir).localCheckpoint(eager=False)
-        dim = inferred_dim(corpus, "embedding")
-        n_cells = max(16, corpus.count() // 200)
-        cents = ivf_train(corpus, n_centroids=n_cells, iterations=2)
-        # two independent table builds over the already-
-        # materialized corpus checkpoint — overlap them
-        parallel_actions(
-            lambda: keyed_state_append(
-                corpus.select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("embedding"),
-                ),
-                os.path.join(r, "vecs"),
-                ["vec_id"],
-                batch_id=-1,
-            ),
-            lambda: keyed_state_append(
-                ivf_assign(corpus, cents, n_assign=2),
-                os.path.join(r, "cells"),
-                ["centroid"],
-                batch_id=-1,
-            ),
-        )
-        with open(os.path.join(r, "_quantizer.json"), "w") as qf:
-            _json.dump({"centroids": cents, "dim": dim}, qf)
-
-    root = _produce_once_root(
-        "/tmp/spark_graft_vec_purge_store",
-        "vector_purge_store",
-        sf_dir,
-        tag,
-        _build,
-    )
-    with open(os.path.join(root, "_quantizer.json")) as qf:
-        q = _json.load(qf)
-    cents, dim = q["centroids"], q["dim"]
-    work = tempfile.mkdtemp(prefix="vector_purge_")
-    shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
-    os.remove(os.path.join(work, "_quantizer.json"))
-    p_vecs = os.path.join(work, "vecs")
-    p_cells = os.path.join(work, "cells")
+    root, cents, dim = _embedding_state_root(spark, sf_dir)
+    _, state_dir = _pristine_copy(root, "vector_purge_")
+    p_vecs = os.path.join(state_dir, "vecs")
+    p_cells = os.path.join(state_dir, "cells")
 
     # the deletion request, derived from the standing store's own rows
-    # (identical id/vector set to the old feed-side filter — the store
-    # holds the exact widened corpus vectors).  EAGER checkpoint: the
-    # request must be materialized BEFORE the vecs purge rewrites the
-    # very files it derives from (the cells purge re-reads it after)
+    # (the store holds the exact widened corpus vectors).  EAGER
+    # checkpoint: the request must be materialized BEFORE the vecs purge
+    # rewrites the very files it derives from (the cells purge re-reads
+    # it after)
     tomb = (
         keyed_state_read(spark, p_vecs)
         .filter(F.col("vec_id") % 40 == 0)
+        .select("vec_id", "embedding")
         .localCheckpoint()
     )
-    # the two purges are independent jobs on distinct
-    # tables (the request is eagerly checkpointed above, so neither purge
-    # reads files the other rewrites) — overlap them
+    # the two purges are independent jobs on distinct tables (the request
+    # is eagerly checkpointed above, so neither purge reads files the
+    # other rewrites) — overlap them
     parallel_actions(
         lambda: purge_keyed_state(spark, p_vecs, tomb.select("vec_id"), ["vec_id"]),
         lambda: purge_keyed_state(
@@ -10649,41 +10579,11 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    # emission over the purged store: the production ingest tick, reads
-    # pruned exactly as the stream runs them
-    batch = (
-        emb_incr_batch(spark, sf_dir)
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        .localCheckpoint(eager=False)
+    # emission over the purged store: the production ingest tick
+    embedding_dedup_tick_against_state(
+        emb_incr_batch(spark, sf_dir), 0, state_dir, cents, dim=dim
     )
-    bcells = ivf_assign(batch, cents, n_assign=2)
-    cells = keyed_state_read(
-        spark, p_cells, touched_buckets(bcells, p_cells)
-    )
-
-    def fetch_vecs(c_ids):
-        return keyed_state_read(spark, p_vecs, touched_buckets(c_ids, p_vecs))
-
-    rejected = incremental_embedding_dedup_ivf(
-        None,
-        batch,
-        cents,
-        dim=dim,
-        corpus_cells=cells,
-        return_rejected=True,
-        corpus_fetch=fetch_vecs,
-    )
-    return (
-        keyed_state_read(spark, p_vecs)
-        .select("vec_id", F.lit("corpus").alias("origin"))
-        .unionByName(
-            batch.join(F.broadcast(rejected), on="vec_id", how="left_anti").select(
-                "vec_id", F.lit("batch").alias("origin")
-            )
-        )
-    )
+    return accepted_rows(spark, state_dir, "vecs", "vec_id")
 
 
 @query(
@@ -10881,50 +10781,19 @@ def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks over it); every composition stage — purge, canonical double
     rebuild, decisions, physical pack write, manifest read-back — runs
     in full every call on the per-run copy."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from mistocksync_spark.operators.textual import (
         corpus_vocabulary,
-        gopher_rules,
         pack_documents,
         token_count,
     )
-    from mistocksync_spark.plans.feeds import docs_aug
     from mistocksync_spark.sinks.layout import (
-        keyed_state_append,
-        keyed_state_read,
         pack_emission_manifest,
         pack_emission_write,
-        parallel_actions,
-        purge_keyed_state,
     )
 
-    tag = _parquet_content_tag(f"{sf_dir}/documents.parquet")
-    # same shared root (and builder) as the tombstone twin
-    root = _produce_once_root(
-        "/tmp/spark_graft_purge_store",
-        "tombstone_purge_store",
-        sf_dir,
-        tag,
-        lambda r: _build_tombstone_purge_store(spark, sf_dir, r),
-    )
-    work = tempfile.mkdtemp(prefix="purge_remediation_")
-    shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
-    shutil.rmtree(os.path.join(work, "vocab"))  # rebuilt post-purge here
-    p_docs = os.path.join(work, "docs")
-    p_dig = os.path.join(work, "digest_keepers")
-    tomb = (
-        keyed_state_read(spark, p_docs)
-        .filter((F.col("doc_id") % 50 == 0) & (F.col("doc_id") < 1000000))
-        .select("doc_id")
-    )
-    purge_keyed_state(spark, p_docs, tomb, ["doc_id"])
-    remaining = keyed_state_read(spark, p_docs).localCheckpoint(eager=False)
+    state_dir, remaining = _purged_docs_store(spark, sf_dir, "purge_remediation_")
 
     # rebuild tick over the purged corpus, canonical-rebuild gate inline:
     # two independent derivations must agree exactly (drift back to 0)
@@ -10942,31 +10811,7 @@ def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token-set disagreements between independent derivations"
         )
 
-    dig = keyed_state_read(spark, p_dig)
-    g = gopher_rules(remaining).select("doc_id", "pass_gopher")
-    btok = remaining.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
-    score = (
-        btok.join(F.broadcast(vr.withColumn("__v", F.lit(1))), on="token", how="left")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("__nt"), F.count("__v").alias("__niv"))
-    )
-    dec = (
-        remaining.select("doc_id", "text", F.md5("text").alias("digest"))
-        .join(dig, on="digest")
-        .join(g, on="doc_id")
-        .join(score, on="doc_id", how="left")
-        .select(
-            "doc_id",
-            "text",
-            F.when(F.col("keeper") != F.col("doc_id"), F.lit("exact_dup"))
-            .when(F.col("pass_gopher") == 0, F.lit("gopher"))
-            .when(2 * F.col("__niv") < F.col("__nt"), F.lit("rare_tokens"))
-            .otherwise(F.lit("ok"))
-            .alias("reason"),
-        )
-    )
+    dec = _purge_reasons(spark, state_dir, remaining, vr)
     ok = dec.filter(F.col("reason") == "ok").select(
         "doc_id",
         F.pmod(F.col("doc_id"), F.lit(8)).alias("stratum"),
@@ -10975,5 +10820,5 @@ def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = pack_documents(
         ok, seq_len=512, token_count_col="n_tokens", stratum_col="stratum"
     ).withColumnRenamed("stratum", "cluster")
-    path = pack_emission_write(packed, os.path.join(work, "packs"))
+    path = pack_emission_write(packed, os.path.join(state_dir, "packs"))
     return pack_emission_manifest(spark, path)

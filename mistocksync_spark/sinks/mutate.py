@@ -223,8 +223,8 @@ def snapshot_diff(
     Comparison is NATIVE (pre-cast) per column; the string cast is for
     display only.  Added/removed keys always emit their rows, even when
     every compared value is NULL — a full-outer side miss is itself the
-    audit fact (round-2 advisory: the old value-inequality filter silently
-    dropped all-NULL added/removed keys).
+    audit fact (a value-inequality filter would silently drop all-NULL
+    added/removed keys).
     """
     cols = compare_cols or [c for c in before.columns if c != key and c in after.columns]
     b = before.select(

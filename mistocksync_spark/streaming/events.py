@@ -112,7 +112,7 @@ def purchase_view_join_stream(events: DataFrame) -> DataFrame:
     watermark allows is silently DROPPED by a stream-stream join — a
     hash-fail with no error — whereas an aggregation merely re-emits a
     key.  24 h tolerates a day of cross-file event-time disorder while
-    still bounding state (round-7 review finding).
+    still bounding state.
     """
     views = (
         events.filter(F.col("event_type") == "view")

@@ -411,10 +411,17 @@ def _stream(
     if fam.decides:
         parts = sorted(glob.glob(os.path.join(state_dir, "decisions", "b*")))
         return spark.read.parquet(*parts).select("doc_id", "reason")
+    return accepted_rows(spark, state_dir, fam.content, fam.key)
+
+
+def accepted_rows(spark: SparkSession, state_dir: str, content: str, key: str) -> DataFrame:
+    """The accepted seen-set of a dedup state: (``key``, origin) of every
+    accepted row of its ``content`` table (``docs``/``doc_id`` or
+    ``vecs``/``vec_id``), the prime corpus and every tick's arrivals."""
     return (
-        keyed_state_read(spark, os.path.join(state_dir, fam.content))
+        keyed_state_read(spark, os.path.join(state_dir, content))
         .filter(F.col("accepted"))
-        .select(fam.key, "origin")
+        .select(key, "origin")
     )
 
 

@@ -3043,7 +3043,7 @@ def test_incremental_embedding_dedup_stream_equals_batch(spark, tmp_path):
 
 
 def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
-    """Round-11: the IVF-cell tick under a frozen quantizer must reproduce
+    """The IVF-cell tick under a frozen quantizer must reproduce
     the banded tick's verdicts on every fixture path (scaled corpus dup,
     exact corpus dup, fresh, dup-of-accepted, negated, dup-of-accepted-
     negated), and the stored-cells parquet round-trip must be
@@ -3053,6 +3053,11 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
         incremental_embedding_dedup_ivf,
         ivf_assign,
         ivf_train,
+    )
+    from mistocksync_spark.sinks.layout import (
+        keyed_state_append,
+        keyed_state_read,
+        touched_buckets,
     )
 
     corpus = _emb(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])])
@@ -3082,23 +3087,18 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
               ).collect()}
     assert stored == got
 
-    # centroid-PARTITIONED state, read PRUNED to the batch's
-    # assigned cells (lossless — candidates are a centroid equi-join) —
-    # verdicts identical, and the pruned scan is partition-pruned in plan
-    ivf_assign(corpus, cents, n_assign=2).write.partitionBy("centroid").parquet(
-        str(tmp_path / "cells_part")
+    # the cells as keyed state (batch=/bucket= layout, keyed on centroid),
+    # read PRUNED to the buckets the batch's assigned cells hash to
+    # (lossless — candidates are a centroid equi-join) — verdicts
+    # identical, and the pruned scan is partition-pruned in plan
+    cells_path = str(tmp_path / "cells_state")
+    keyed_state_append(
+        ivf_assign(corpus, cents, n_assign=2), cells_path, ["centroid"], batch_id=-1
     )
-    probe = [
-        r.centroid
-        for r in ivf_assign(batch, cents, n_assign=2)
-        .select("centroid")
-        .distinct()
-        .collect()
-    ]
-    pruned_cells = (
-        spark.read.parquet(str(tmp_path / "cells_part"))
-        .filter(F.col("centroid").isin(probe))
-        .select("vec_id", F.col("centroid").cast("long").alias("centroid"))
+    pruned_cells = keyed_state_read(
+        spark,
+        cells_path,
+        touched_buckets(ivf_assign(batch, cents, n_assign=2), cells_path),
     )
     pruned = {(r.vec_id, r.origin)
               for r in incremental_embedding_dedup_ivf(

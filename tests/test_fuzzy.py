@@ -1,6 +1,7 @@
 import difflib
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -210,6 +211,19 @@ def test_ngram_blocking_agrees_on_realistic_names(spark):
     assert [(r.supplier_index, r.base_index, r.similarity_ratio) for r in exact] == [
         (r.supplier_index, r.base_index, r.similarity_ratio) for r in blocked
     ]
+
+
+def test_candidate_pairs_rejects_unknown_blocking(spark):
+    """``fuzzy_candidate_pairs`` serves only the cross-join shapes; a
+    blocking it does not implement raises instead of silently running a
+    full cross join."""
+    from mistocksync_spark.operators.fuzzy import fuzzy_candidate_pairs
+
+    cands = _cand(spark, [(0, "Повербанк GREENOE Power bank 60000mah", 90.0)])
+    for blocking in ("ngram", "bounded", "nonsense"):
+        with pytest.raises(ValueError, match="blocking"):
+            fuzzy_candidate_pairs(cands, _base(spark, BASE_ROWS), blocking=blocking)
+    assert fuzzy_candidate_pairs(cands, _base(spark, BASE_ROWS), blocking="none").count() > 0
 
 
 def test_ngram_scale_path_full_batch_parity(spark, sf_dir):

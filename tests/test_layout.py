@@ -824,6 +824,46 @@ def test_no_stream_wait_has_a_timeout():
     assert not bounded, f"awaitTermination called with a timeout at {bounded}"
 
 
+def test_queries_leave_state_probes_and_writes_to_the_tick_driver():
+    """The graded registry never probes or lays out keyed state itself:
+    queries.py calls no ``touched_buckets``/``touched_buckets_multi``
+    (the probe belongs to ``streaming/merge.py``) and writes no table
+    ``partitionBy`` (the keyed-state layout is ``batch=/bucket=``, written
+    by ``sinks/layout.keyed_state_append``), so the stored-state entries
+    grade the code the production tick runs."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "mistocksync_spark" / "plans" / "queries.py"
+    )
+
+    def name(func):
+        return func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+
+    def on_writer(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "write":
+                return True
+            node = node.value if isinstance(node, ast.Attribute) else node.func
+        return False
+
+    calls = [n for n in ast.walk(ast.parse(path.read_text())) if isinstance(n, ast.Call)]
+    probes = [
+        n.lineno for n in calls if name(n.func) in ("touched_buckets", "touched_buckets_multi")
+    ]
+    layouts = [
+        n.lineno
+        for n in calls
+        if isinstance(n.func, ast.Attribute)
+        and n.func.attr == "partitionBy"
+        and on_writer(n.func.value)
+    ]
+    assert not probes, f"queries.py probes keyed state itself at lines {probes}"
+    assert not layouts, f"queries.py writes a partitioned table at lines {layouts}"
+
+
 def test_parquet_content_tag_changes_on_regeneration(tmp_path):
     """Produce-once /tmp state is keyed on _parquet_content_tag: a
     regenerated source file (even bit-identical content — mtime moves)

@@ -1,8 +1,7 @@
-"""Pin the produce-once setup contract (r16 verdict §3 ruling, r17 ask #8):
-the amortization must stay SETUP-ONLY and auditable — one helper owns the
-root+marker+build protocol, and queries.py never reaches _scratch_root
-except through it (plus the one documented catalog-guarded bucketed-table
-site)."""
+"""Pin the produce-once setup contract: the amortization must stay
+SETUP-ONLY and auditable — one helper owns the root+marker+build protocol,
+queries.py never reaches _scratch_root except through it (plus the
+documented direct sites), and every /tmp root it names is pid-isolated."""
 
 import inspect
 import os
@@ -65,7 +64,18 @@ def test_produce_once_root_propagates_build_failure_without_marker(tmp_path):
 def test_scratch_root_only_reachable_through_produce_once_helper():
     """Structural guarantee: every produce-once site in queries.py goes
     through _produce_once_root (whose contract forbids caching result
-    frames), except the documented catalog-guarded bucketed-table site.
+    frames), except the documented direct sites:
+
+    - the catalog-guarded bucketed orders/customer tables
+      (``orders_bucketed_join``, guarded by spark.catalog.tableExists);
+    - the per-run IVF index tables of ``ivf_index_rebuild`` and
+      ``ivf_recall_drift`` (``/tmp/spark_graft_ivf_rebuild``) and of
+      ``embedding_topk_ivf_stored`` and its recall twin
+      (``/tmp/spark_graft_ivf_index``): they are rewritten and read back
+      on every call, so they are graded work, not produce-once state,
+      and the pid-isolated root only keeps concurrent sessions on one
+      sf_dir from overwriting each other's tables.
+
     A new direct _scratch_root caller must either use the helper or add
     its own documented exception here."""
     import mistocksync_spark.plans.queries as q
@@ -77,8 +87,45 @@ def test_scratch_root_only_reachable_through_produce_once_helper():
         for i, ln in enumerate(lines)
         if "_scratch_root(" in ln and "def _scratch_root" not in ln
     ]
-    # exactly two call sites: inside _produce_once_root, and the bucketed
-    # orders/customer tables (guarded by spark.catalog.tableExists)
-    assert len(callers) == 2, callers
+    assert len(callers) == 6, callers
     assert any("_scratch_root(base, h)" in ln for _, ln in callers), callers
-    assert any('"/tmp/spark_graft_bucketed"' in ln for _, ln in callers), callers
+    direct = sorted(ln.split('"')[1] for _, ln in callers if '"/tmp/spark_graft_' in ln)
+    assert direct == [
+        "/tmp/spark_graft_bucketed",
+        "/tmp/spark_graft_ivf_index",
+        "/tmp/spark_graft_ivf_index",
+        "/tmp/spark_graft_ivf_rebuild",
+        "/tmp/spark_graft_ivf_rebuild",
+    ], callers
+
+
+def test_every_tmp_root_in_queries_is_session_isolated():
+    """Every ``/tmp/spark_graft_`` literal in queries.py is the ``base``
+    argument of ``_produce_once_root(`` or ``_scratch_root(``, so each
+    root it names gets the pid component and the dead-session reaping.
+    A fixed root built by string concatenation (no pid) is shared by
+    every session on one sf_dir, and concurrent runs overwrite each
+    other's tables."""
+    import ast
+
+    import mistocksync_spark.plans.queries as q
+
+    tree = ast.parse(inspect.getsource(q))
+    as_base = {
+        id(arg)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("_produce_once_root", "_scratch_root")
+        for arg in node.args[:1]
+    }
+    literals = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "/tmp/spark_graft_" in node.value
+    ]
+    assert literals
+    stray = [(n.lineno, n.value) for n in literals if id(n) not in as_base]
+    assert not stray, f"/tmp roots outside the isolated-root helpers: {stray}"

@@ -64,6 +64,8 @@ def _split_half(spark, sf_dir: str, table: str, key: str, col: str):
 
 def _dedup_family(spark, key, content, corpus, arrivals, prime, tick, oneshot):
     """A dedup family: the result is the set of accepted arrival ids."""
+    from mistocksync_spark.streaming import merge
+
 
     def content_rows(state):
         return spark.read.parquet(os.path.join(state, content))
@@ -79,9 +81,8 @@ def _dedup_family(spark, key, content, corpus, arrivals, prime, tick, oneshot):
         .count(),
         ticked=lambda state: {
             r[0]
-            for r in content_rows(state)
-            .filter(F.col("accepted") & (F.col("origin") == "batch"))
-            .select(key)
+            for r in merge.accepted_rows(spark, state, content, key)
+            .filter(F.col("origin") == "batch")
             .collect()
         },
         oneshot=lambda: {
