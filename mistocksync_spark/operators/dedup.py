@@ -20,6 +20,8 @@ derived keys, no Python in the hot path.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1094,7 +1096,7 @@ def corpus_signature_state(
     """The stored dedup signature state a production corpus maintains
     between ingest ticks: one (doc_id, band, band_key) row per corpus
     document and band — exactly the earlier-side relation
-    ``incremental_dedup_merge`` needs for candidate generation, so a tick
+    ``near_dup_gate`` needs for candidate generation, so a tick
     reads this table instead of re-sketching the whole corpus.  Appended
     per tick with the accepted arrivals' bands; at 100 TB this is a
     bucketed table on (band, band_key) and the candidate join is
@@ -1115,7 +1117,7 @@ def corpus_digest_state(
 ) -> DataFrame:
     """The stored exact-dedup state a production corpus maintains between
     ingest ticks: (doc_id, digest) with digest = md5(text) — the seen-set
-    ``incremental_prepare_tick``'s exact gate probes with the batch's own
+    ``prepare_gate``'s exact gate probes with the batch's own
     digests, so a tick never re-hashes the standing corpus (otherwise
     the last corpus-proportional stage in the tick).
     Appended per tick with the arrivals' digests (accepted AND rejected —
@@ -1127,27 +1129,79 @@ def corpus_digest_state(
     )
 
 
-def incremental_dedup_merge(
-    corpus: DataFrame | None,
-    batch: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    corpus_bands: DataFrame | None = None,
-    return_rejected: bool = False,
-    corpus_fetch=None,
-    batch_bands: DataFrame | None = None,
+def seen_set_candidates(
+    corpus_keys: DataFrame, batch_keys: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs of the arrival-ordered seen-set rule, shared by the
+    dedup gates.  ``batch_keys`` holds (``id_col``, key columns...) rows of
+    the batch — MinHash bands, SimHash bands or IVF cells — and
+    ``corpus_keys`` the same key columns for the seen corpus (extra columns
+    are ignored).  A pair (earlier_id, later_id) collides on every key
+    column, its later side is a batch row, and its earlier side is a corpus
+    row or a batch row with a smaller id.
+
+    Returns ``(cand, corpus_ids)``: the distinct pairs behind a lazy
+    checkpoint, and the distinct corpus-side candidate ids (named
+    ``id_col``) — what a caller's content fetch has to cover."""
+    keys = [c for c in batch_keys.columns if c != id_col]
+
+    def side(df: DataFrame, is_batch: int) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col(id_col).alias("earlier_id"),
+            F.lit(is_batch).alias("earlier_batch"),
+        )
+
+    later = batch_keys.select(*keys, F.col(id_col).alias("later_id"))
+    # earlier_batch is functionally determined by earlier_id (ids are
+    # unique across corpus ∪ batch), so the distinct on the triple equals
+    # the distinct on the pair; it is kept to derive the corpus-side ids
+    cand3 = (
+        side(corpus_keys, 0)
+        .unionByName(side(batch_keys, 1))
+        .join(later, on=keys)
+        .filter(
+            (F.col("earlier_batch") == 0)
+            | (F.col("earlier_id") < F.col("later_id"))
+        )
+        .select("earlier_id", "later_id", "earlier_batch")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    corpus_ids = (
+        cand3.filter(F.col("earlier_batch") == 0)
+        .select(F.col("earlier_id").alias(id_col))
+        .distinct()
+    )
+    return cand3.select("earlier_id", "later_id"), corpus_ids
+
+
+def seen_set_merge(
+    corpus: DataFrame, batch: DataFrame, rejected: DataFrame, key: str
 ) -> DataFrame:
-    """Incremental corpus dedup MERGE — the shape of a production ingest
-    tick: dedup an incoming ``batch`` of documents against an EXISTING
-    ``corpus`` (plus the batch's own earlier arrivals) and return the
-    merged corpus.
+    """The merged corpus of a dedup tick: (``key``, origin) for every
+    corpus row (origin='corpus') and every batch row not in ``rejected``
+    (origin='batch').  The rejected ids are a small frame, broadcast into
+    the anti-join."""
+    return corpus.select(key, F.lit("corpus").alias("origin")).unionByName(
+        batch.join(F.broadcast(rejected), on=key, how="left_anti").select(
+            key, F.lit("batch").alias("origin")
+        )
+    )
+
+
+def near_dup_gate(
+    batch: DataFrame,
+    corpus_bands: DataFrame,
+    batch_bands: DataFrame,
+    corpus_fetch: Callable[[DataFrame], DataFrame],
+    threshold: float = 0.5,
+) -> DataFrame:
+    """The corpus-dedup gate of an ingest tick: the (doc_id) ids of the
+    ``batch`` documents that are REJECTED against the seen set.
 
     Decision rule (arrival-ordered, seen-set based): a batch document is
-    REJECTED iff it has a verified near-duplicate partner — MinHash-LSH
+    rejected iff it has a verified near-duplicate partner — MinHash-LSH
     band collision AND exact shingle Jaccard >= ``threshold`` — among
     (a) any corpus document, or (b) any batch document with a smaller
     ``doc_id``, WHETHER OR NOT that earlier batch document itself
@@ -1159,188 +1213,57 @@ def incremental_dedup_merge(
     verdicts.  (Excluding rejected docs would make verdicts recursive
     along duplicate chains and order-sensitive across ticks.)
 
-    Output: (doc_id, origin) — every corpus doc (origin='corpus') plus
-    every accepted batch doc (origin='batch').
+    PRECONDITION: ``doc_id`` must be unique across corpus ∪ batch.  A
+    collision diverges silently — wrong verdicts with no error.  A
+    production ingest assigns globally-unique monotone ids at arrival
+    time, which satisfies this by construction.
 
-    PRECONDITION: ``id_col`` must be unique across corpus ∪ batch (the
-    same contract as ``incremental_embedding_dedup``).  A collision
-    silently merges the two documents' shingle sets in the self-contained
-    path and diverges differently in the stored-state path — wrong
-    verdicts with no error.  A production ingest assigns globally-unique
-    monotone ids at arrival time, which satisfies this by construction.
+    Inputs: ``batch`` has (doc_id, text); ``corpus_bands`` is the seen
+    corpus's ``corpus_signature_state`` (stored between ticks, so a tick
+    never re-sketches the corpus) and ``batch_bands`` the batch's own rows
+    of it, built with the same defaults.  ``corpus_fetch`` maps the
+    corpus-side candidate ids (a (doc_id) frame) to a (doc_id, text) frame
+    covering at least those docs; a tick resolves it to a bucket-pruned
+    read of its docs store, so the text fetch reads only the partitions
+    the (few) candidate ids hash to.  The verify semi-restricts the fetch
+    to exact candidate ids, so a superset is lossless.
 
     Plan (one band equi-join + one candidate-bounded verify, no
-    quadratics): shingle -> minhash -> band over corpus UNION batch in a
-    single pass; candidates = band self-join restricted to pairs whose
-    LATER side (by (is_batch, doc_id) precedence) is a batch doc; the
-    exact-Jaccard verify first semi-restricts the shingle table to
-    candidate documents, so the intersection join touches only candidate
-    shingles — NOT the full-corpus shingle self-join that
-    ``exact_jaccard_for_pairs`` pays (at 100 TB the corpus shingle table
-    dwarfs the candidate set; restricting docs first keeps the verify
-    proportional to candidates).  Rejected ids are a small frame,
-    broadcast into the final anti-join.
-
-    ``corpus_bands`` is the stored-state substitution, executed: pass a
-    ``corpus_signature_state`` table (built with the SAME num_hashes /
-    rows_per_band / n) and the tick never re-sketches the corpus — only
-    the batch is shingled/minhashed, candidates come from joining the
-    batch's bands against the stored table, and corpus candidate docs
-    are re-shingled for verification only where candidates exist (a
-    candidate-bounded fetch from the corpus store).  Band keys are
-    deterministic per document, so both paths produce bit-identical
-    output (pytest-asserted); at 100 TB the state path is the one that
-    runs — the self-contained path exists so the semantics are closed
-    over the two input tables.
-
-    ``corpus_fetch`` (state path only) closes the LAST unpruned state
-    read: a callable ``(candidate_corpus_ids_df) ->
-    docs_df`` the verify stage calls AFTER the band probe has produced
-    the corpus-side candidate ids — the caller resolves it to a
-    bucket-pruned ``keyed_state_read`` of the docs store, so the text
-    fetch reads only the partitions the (few) candidate ids hash to
-    instead of the whole corpus table.  The returned frame may be a
-    superset of the candidates (bucket granularity); the verify
-    semi-restricts it to exact candidate ids, so pruning is lossless by
-    construction.  With ``corpus_fetch`` given and ``return_rejected``
-    True, ``corpus`` itself is never consumed and may be None.
-
-    ``batch_bands`` (state path only) is the batch's own
-    ``corpus_signature_state`` rows, built with the same parameters — a
-    tick that has already derived them to probe the band state passes
-    them here, and the gate only shingles the batch for the verify instead
-    of running shingle → minhash → band again.
+    quadratics): candidates are the ``seen_set_candidates`` band join;
+    only candidate corpus docs are re-shingled, and the exact-Jaccard
+    verify restricts both shingle sides to candidate docs before the
+    intersection join — NOT the full-corpus shingle self-join that
+    ``exact_jaccard_for_pairs`` pays.  Band keys are deterministic per
+    document, so stored and freshly derived state give identical verdicts.
     """
-    # Multi-consumer frames are materialized ONCE behind lazy
-    # localCheckpoints (the code_match pattern): Catalyst does not share
-    # common subplans, so without the boundaries every reuse of
-    # seen/sh/br/cand re-plans the whole upstream shingle→minhash→band
-    # pipeline — the first un-checkpointed draft of this operator planned
-    # 508 exchanges / 184 broadcast joins; with the boundaries the digest
-    # is a handful of exchanges over the materialized frames.
-    if corpus is None and (
-        corpus_bands is None or corpus_fetch is None or not return_rejected
-    ):
-        raise ValueError(
-            "corpus=None requires corpus_bands + corpus_fetch + return_rejected"
-        )
-    if batch_bands is not None and corpus_bands is None:
-        raise ValueError("batch_bands requires corpus_bands (the state path)")
-    corpus_docs = (
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        if corpus is not None
-        else None
+    # bsh and the candidates each feed several consumers; the lazy
+    # localCheckpoints keep Catalyst (which shares no common subplans)
+    # from re-planning their upstream per consumer
+    batch_docs = batch.select("doc_id", "text")
+    bsh = shingle_table(batch_docs, text_col="text", id_col="doc_id").localCheckpoint(
+        eager=False
     )
-    batch_docs = batch.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    cand, c_ids = seen_set_candidates(corpus_bands, batch_bands, "doc_id")
+    # verify: re-shingle ONLY the candidate corpus docs; batch shingles
+    # are already in bsh
+    e_ids = cand.select(F.col("earlier_id").alias("doc_id")).distinct()
+    corpus_src = corpus_fetch(c_ids).select("doc_id", "text")
+    sh_e = (
+        shingle_table(
+            corpus_src.join(e_ids, on="doc_id", how="left_semi"),
+            text_col="text",
+            id_col="doc_id",
+        )
+        .unionByName(bsh.join(e_ids, on="doc_id", how="left_semi"))
+        .select(F.col("doc_id").alias("earlier_id"), "shingle")
     )
-    if corpus_bands is None:
-        seen = corpus_docs.withColumn("is_batch", F.lit(0)).unionByName(
-            batch_docs.withColumn("is_batch", F.lit(1))
-        ).localCheckpoint(eager=False)
-        sh = shingle_table(seen, text_col="text", id_col="doc_id", n=n).localCheckpoint(
-            eager=False
-        )
-        bands = lsh_bands(minhash_signatures(sh, num_hashes), rows_per_band)
-        rank = seen.select("doc_id", "is_batch")
-        br = bands.join(rank, on="doc_id").localCheckpoint(eager=False)
-        earlier = br.select(
-            "band",
-            "band_key",
-            F.col("doc_id").alias("earlier_id"),
-            F.col("is_batch").alias("earlier_batch"),
-        )
-        later = br.filter(F.col("is_batch") == 1).select(
-            "band", "band_key", F.col("doc_id").alias("later_id")
-        )
-    else:
-        bsh = shingle_table(
-            batch_docs, text_col="text", id_col="doc_id", n=n
-        ).localCheckpoint(eager=False)
-        bbands = (
-            batch_bands
-            if batch_bands is not None
-            else lsh_bands(
-                minhash_signatures(bsh, num_hashes), rows_per_band
-            ).localCheckpoint(eager=False)
-        )
-        earlier = corpus_bands.select(
-            "band",
-            "band_key",
-            F.col("doc_id").alias("earlier_id"),
-            F.lit(0).alias("earlier_batch"),
-        ).unionByName(
-            bbands.select(
-                "band",
-                "band_key",
-                F.col("doc_id").alias("earlier_id"),
-                F.lit(1).alias("earlier_batch"),
-            )
-        )
-        later = bbands.select(
-            "band", "band_key", F.col("doc_id").alias("later_id")
-        )
-    # earlier_batch is retained through the distinct so corpus_fetch can
-    # derive the CORPUS-side candidate ids (it is functionally determined
-    # by earlier_id under the unique-id precondition, so the distinct on
-    # the triple equals the distinct on the pair)
-    cand3 = (
-        earlier.join(later, on=["band", "band_key"])
-        .filter(
-            (F.col("earlier_batch") == 0)
-            | (F.col("earlier_id") < F.col("later_id"))
-        )
-        .select("earlier_id", "later_id", "earlier_batch")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    cand = cand3.select("earlier_id", "later_id")
-    # Verify: restrict shingles to candidate DOCS before the intersection
-    # join (candidate-proportional, not corpus-proportional).
-    if corpus_bands is None:
-        sh_e = sh.join(
-            cand.select(F.col("earlier_id").alias("doc_id")).distinct(),
-            on="doc_id",
-            how="left_semi",
-        ).select(F.col("doc_id").alias("earlier_id"), "shingle")
-        sh_l = sh.join(
-            cand.select(F.col("later_id").alias("doc_id")).distinct(),
-            on="doc_id",
-            how="left_semi",
-        ).select(F.col("doc_id").alias("later_id"), "shingle")
-    else:
-        # state path: re-shingle ONLY the candidate corpus docs (fetch by
-        # id from the corpus store); batch shingles are already in bsh
-        e_ids = cand.select(F.col("earlier_id").alias("doc_id")).distinct()
-        if corpus_fetch is not None:
-            # docs-store pruning: hand the caller the
-            # corpus-side candidate ids so it can bucket-prune the text
-            # fetch; the left_semi below still restricts to exact ids
-            c_ids = (
-                cand3.filter(F.col("earlier_batch") == 0)
-                .select(F.col("earlier_id").alias("doc_id"))
-                .distinct()
-            )
-            corpus_src = corpus_fetch(c_ids).select("doc_id", "text")
-        else:
-            corpus_src = corpus_docs
-        sh_e = (
-            shingle_table(
-                corpus_src.join(e_ids, on="doc_id", how="left_semi"),
-                text_col="text",
-                id_col="doc_id",
-                n=n,
-            )
-            .unionByName(bsh.join(e_ids, on="doc_id", how="left_semi"))
-            .select(F.col("doc_id").alias("earlier_id"), "shingle")
-        )
-        sh_l = bsh.join(
-            cand.select(F.col("later_id").alias("doc_id")).distinct(),
-            on="doc_id",
-            how="left_semi",
-        ).select(F.col("doc_id").alias("later_id"), "shingle")
+    sh_l = bsh.join(
+        cand.select(F.col("later_id").alias("doc_id")).distinct(),
+        on="doc_id",
+        how="left_semi",
+    ).select(F.col("doc_id").alias("later_id"), "shingle")
     # sizes only for candidate docs (from the already-restricted shingle
-    # frames) — a full-corpus groupBy here would be the operator's only
+    # frames) — a full-corpus groupBy here would be the gate's only
     # corpus-scale shuffle, paid for rows the verify never touches
     inter = (
         sh_e.join(sh_l, on="shingle")
@@ -1348,7 +1271,7 @@ def incremental_dedup_merge(
         .groupBy("earlier_id", "later_id")
         .agg(F.count("*").alias("__i"))
     )
-    rejected = (
+    return (
         inter.join(
             sh_e.groupBy("earlier_id").agg(F.count("*").alias("__na")),
             on="earlier_id",
@@ -1364,22 +1287,28 @@ def incremental_dedup_merge(
         .select(F.col("later_id").alias("doc_id"))
         .distinct()
     )
-    if return_rejected:
-        # verdict surface for composition (incremental_prepare_tick): the
-        # rejected batch ids, exactly the frame the anti-join below
-        # consumes — same plan up to here, no behavior change when False
-        return rejected
-    if corpus_bands is None:
-        kept_corpus = seen.filter(F.col("is_batch") == 0)
-        kept_batch = seen.filter(F.col("is_batch") == 1)
-    else:
-        kept_corpus, kept_batch = corpus_docs, batch_docs
-    return kept_corpus.select(
-        "doc_id", F.lit("corpus").alias("origin")
-    ).unionByName(
-        kept_batch.join(F.broadcast(rejected), on="doc_id", how="left_anti")
-        .select("doc_id", F.lit("batch").alias("origin"))
+
+
+def incremental_dedup_merge(corpus: DataFrame, batch: DataFrame) -> DataFrame:
+    """Incremental corpus dedup MERGE — one ingest tick, one-shot: dedup
+    an incoming ``batch`` of (doc_id, text) documents against an EXISTING
+    ``corpus`` (plus the batch's own earlier arrivals) and return the
+    merged corpus as (doc_id, origin) — every corpus doc
+    (origin='corpus') plus every batch doc ``near_dup_gate`` accepts
+    (origin='batch').
+
+    The seen-set state is derived in memory with the prime's builder
+    (``corpus_signature_state``) and the content fetch is the corpus
+    itself, so this runs the exact gate the keyed-state ticks run."""
+    corpus_docs = corpus.select("doc_id", "text")
+    batch_docs = batch.select("doc_id", "text")
+    rejected = near_dup_gate(
+        batch_docs,
+        corpus_signature_state(corpus_docs),
+        corpus_signature_state(batch_docs).localCheckpoint(eager=False),
+        lambda ids: corpus_docs,
     )
+    return seen_set_merge(corpus_docs, batch_docs, rejected, "doc_id")
 
 
 def incremental_dedup_summary(
@@ -1589,7 +1518,7 @@ def corpus_gram_state(
 ) -> DataFrame:
     """The stored span-gate state a production corpus maintains between
     ingest ticks: the DISTINCT gram hashes (g) occurring anywhere in the
-    corpus — the seen-set ``incremental_prepare_tick``'s span gate probes,
+    corpus — the seen-set ``prepare_gate``'s span gate probes,
     the exact analogue of ``corpus_signature_state`` for the
     exact-substring family.  Appended per tick with the arrivals' distinct
     grams (accepted AND rejected — the same seen-set rule as bands and

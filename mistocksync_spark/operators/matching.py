@@ -134,12 +134,11 @@ def exact_article_match(
     # New items = supplier rows whose article found no base match.  A
     # broadcast hint on the supplier side of a LEFT ANTI join is illegal
     # (BroadcastHashJoin cannot build the preserved side; the hint was
-    # silently dropped with a HintErrorLogger warning — r10 fix, same
-    # class as the r9 report-sheet divergence).  Instead anti-join against
-    # the MATCHED KEY SET — the inner join's own distinct articles — which
-    # is supplier-bounded and a legal broadcast build: the base table is
-    # never shuffled at any scale (the inner join above already streams it
-    # against the broadcast supplier).
+    # silently dropped with a HintErrorLogger warning).  Instead anti-join
+    # against the MATCHED KEY SET — the inner join's own distinct articles
+    # — which is supplier-bounded and a legal broadcast build: the base
+    # table is never shuffled at any scale (the inner join above already
+    # streams it against the broadcast supplier).
     matched_keys = joined.select("article").distinct()
     new_items = sup_kv.join(
         F.broadcast(matched_keys), on="article", how="left_anti"

@@ -6,6 +6,8 @@ All pure column expressions (codegen-friendly); no UDFs.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1215,214 +1217,103 @@ def vocabulary_rebuild(
     return vr, audit
 
 
-def incremental_prepare_tick(
-    corpus: DataFrame | None,
+def prepare_gate(
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    rel_threshold: float = 1e-4,
-    corpus_bands: DataFrame | None = None,
-    vocab: DataFrame | None = None,
-    corpus_digests: DataFrame | None = None,
-    corpus_grams: DataFrame | None = None,
-    span_gram_len: int = 30,
-    corpus_fetch=None,
-    allow_corpus_derived_state: bool = False,
-    holdout_mod: int | None = None,
-    holdout_shingles: DataFrame | None = None,
-    contam_min_overlap: int = 2,
-    batch_bands: DataFrame | None = None,
+    corpus_bands: DataFrame,
+    batch_bands: DataFrame,
+    corpus_digests: DataFrame,
+    corpus_grams: DataFrame,
+    vocab: DataFrame,
+    corpus_fetch: Callable[[DataFrame], DataFrame],
+    holdout_mod: int | None,
+    holdout_shingles: DataFrame | None,
 ) -> DataFrame:
     """Per-arrival decision rows for ONE ingest tick — the incremental
-    sibling of ``corpus_prepare``/``corpus_prepare_v2``: each BATCH
-    document gets (doc_id, reason), reasons evaluated against the
-    standing corpus plus earlier arrivals, first-match-wins:
+    sibling of ``corpus_prepare``/``corpus_prepare_v2``: each ``batch``
+    (doc_id, text) document gets (doc_id, reason), reasons evaluated
+    against the seen state (standing corpus plus earlier arrivals),
+    first-match-wins:
 
-    - ``exact_dup``: md5(text) already seen — in the corpus, or on a
-      batch arrival with a smaller id (the same arrival-ordered
-      seen-set rule ``incremental_dedup_merge`` uses, so the verdict is
-      prefix-decomposable across micro-batches);
-    - ``near_dup``: the ``incremental_dedup_merge`` rejection — band
+    - ``exact_dup``: md5(text) already seen — in ``corpus_digests`` (the
+      stored ``corpus_digest_state``), or on a batch arrival with a
+      smaller id (the same arrival-ordered seen-set rule
+      ``near_dup_gate`` uses, so the verdict is prefix-decomposable across
+      micro-batches);
+    - ``near_dup``: the ``operators.dedup.near_dup_gate`` rejection — band
       collision + exact shingle Jaccard >= 0.5 vs corpus or an earlier
-      arrival (``return_rejected=True`` surface, identical plan);
-    - ``span_dup`` (the fifth v2 gate, present at tick time too):
-      >= 30% of the arrival's characters are covered by length-
-      ``span_gram_len`` grams already seen — in the corpus, or on a
-      batch arrival with a smaller id (the same arrival-ordered
-      seen-set rule; coverage is the pair-free interval-union sweep
-      ``duplicated_span_coverage`` uses, run over BATCH positions only);
+      arrival, on ``corpus_bands``/``batch_bands`` and ``corpus_fetch``
+      (see that gate);
+    - ``span_dup``: >= 30% of the arrival's characters are covered by
+      length-30 grams already seen — in ``corpus_grams`` (the stored
+      ``corpus_gram_state``, de-duplicated on entry, so cross-tick append
+      overlap is harmless), or on a batch arrival with a smaller id;
+      coverage is the pair-free interval-union sweep
+      ``duplicated_span_coverage`` uses, run over BATCH positions only;
     - ``gopher``: the scan-local Gopher rules on the arrival text;
-    - ``rare_tokens``: OOV fraction vs the CORPUS vocabulary — the
-      production shape: arrivals are scored against the standing vocab
-      (tokens holding >= ``rel_threshold`` of CORPUS token mass), not
-      against a vocabulary the batch itself distorts.
+    - ``rare_tokens``: OOV fraction vs ``vocab``, the (token) vocabulary
+      frozen per corpus version (``corpus_vocabulary``) — arrivals are
+      scored against the standing vocab, not against a vocabulary the
+      batch itself distorts, which is also what keeps multi-tick
+      decisions bit-identical to the one-shot tick.
 
-    Plan: the near-dup stage is the candidate-bounded merge plan (band
-    equi-join, verify restricted to candidate docs); the exact gate is
-    one digest shuffle over corpus ∪ batch (or a state probe, below);
-    the span gate sweeps BATCH gram positions only; the corpus
-    vocabulary is bounded by 1/rel_threshold entries so it broadcasts;
-    every output row is a batch doc — corpus rows are read, never
-    emitted.
+    Every stage reads corpus-scale state only through a probe with batch
+    keys or a candidate-bounded fetch, so the tick is batch/candidate-
+    proportional end to end; every output row is a batch doc.
 
-    Stream/state hooks — each the stored substitution for the one
-    corpus-proportional stage of its gate, so a production tick is
-    batch/candidate-proportional end to end: ``corpus_bands`` is the
-    stored ``corpus_signature_state`` (passed through to the merge — the
-    tick never re-sketches the corpus); ``corpus_digests`` the stored
-    ``corpus_digest_state`` (the exact gate probes it with the batch's
-    digests instead of re-hashing the corpus); ``corpus_grams`` the
-    stored ``corpus_gram_state`` (the span gate probes it instead of
-    re-gramming the corpus; de-duplicated on entry, so cross-tick
-    append overlap is harmless); ``vocab`` a pre-built frozen (token)
-    vocabulary frame — the streaming twin freezes the ORIGINAL corpus's
-    vocabulary across micro-batches (the rare-token analogue of the
-    frozen IVF quantizer: vocab refreshes on rebuild ticks, not ingest
-    ticks), which is also what keeps multi-tick decisions bit-identical
-    to the one-shot tick.
-
-    Deriving any of those states from ``corpus`` inside the tick is
-    CORPUS-PROPORTIONAL work (one md5 per character position for grams,
-    a full digest shuffle, a token-frequency aggregate) — a hidden cost
-    no production tick should silently pay, so it
-    requires the explicit ``allow_corpus_derived_state=True`` opt-in; the
-    graded self-contained entry passes it, stored/stream callers never
-    hit it.  ``corpus_fetch`` is the docs-store pruning hook passed
-    through to ``incremental_dedup_merge`` (see its docstring): with
-    every state provided plus ``corpus_fetch``, ``corpus`` itself may be
-    None and the tick touches no corpus-proportional surface at all.
-    ``batch_bands`` (the batch's own ``corpus_signature_state`` rows, when
-    the tick has already derived them to probe ``corpus_bands``) is passed
-    through to the merge too, so the batch is not banded twice.
-
-    v3 emission gates (``holdout_mod`` opt-in — the tick twin of
+    v3 emission gates (``holdout_mod`` not None — the tick twin of
     ``corpus_prepare_v3``): arrivals whose ``doc_id % holdout_mod == 0``
     are 'holdout' (checked FIRST — corpus membership, not quality), and
-    arrivals sharing >= ``contam_min_overlap`` distinct word-trigram
-    shingles with the holdout slice are 'contaminated' (checked LAST,
-    after rare_tokens — the v3 one-shot's exact reason order).  The
-    holdout shingle set is FROZEN per corpus version (the eval slice
-    never changes on ingest ticks — the vocabulary/IVF-quantizer freeze
-    argument, which is also what keeps the gate prefix-decomposable
-    across micro-batches): pass ``holdout_shingles`` (stored
-    ``holdout_shingle_state``) or opt in to deriving it from ``corpus``.
+    arrivals sharing >= 2 distinct word-trigram shingles with
+    ``holdout_shingles`` (the stored ``holdout_shingle_state``, FROZEN per
+    corpus version like the vocabulary) are 'contaminated' (checked LAST,
+    after rare_tokens — the v3 one-shot's exact reason order).
+    ``holdout_shingles`` is unused when ``holdout_mod`` is None.
     """
     from mistocksync_spark.operators.dedup import (
         char_gram_positions,
         contamination_check,
-        corpus_gram_state,
         dup_position_coverage,
-        holdout_shingle_state,
-        incremental_dedup_merge,
+        near_dup_gate,
     )
 
-    missing = [
-        name
-        for name, v in (
-            ("corpus_bands", corpus_bands),
-            ("corpus_digests", corpus_digests),
-            ("corpus_grams", corpus_grams),
-            ("vocab", vocab),
-        )
-        if v is None
-    ]
-    if holdout_mod is not None and holdout_shingles is None:
-        missing.append("holdout_shingles")
-    if missing and not allow_corpus_derived_state:
-        raise ValueError(
-            "incremental_prepare_tick without stored state for "
-            f"{missing} re-derives it from the corpus EVERY tick "
-            "(corpus-proportional); pass the stored state or opt in "
-            "with allow_corpus_derived_state=True"
-        )
-    if corpus is None and (missing or corpus_fetch is None):
-        raise ValueError(
-            "corpus=None requires corpus_bands/corpus_digests/"
-            "corpus_grams/vocab (+ holdout_shingles under holdout_mod) "
-            "and corpus_fetch"
-        )
-    corpus_docs = (
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        if corpus is not None
-        else None
+    batch_docs = batch.select("doc_id", "text").localCheckpoint(eager=False)
+
+    # exact gate: the corpus is never re-hashed — a batch digest is a dup
+    # iff it exists in the digest state (every corpus row precedes every
+    # batch row in arrival order) or a smaller-id batch arrival shares it;
+    # both probes are batch-proportional
+    bh = batch_docs.select("doc_id", F.md5("text").alias("__h"))
+    hit = (
+        corpus_digests.select(F.col("digest").alias("__h"))
+        .distinct()
+        .withColumn("__in_c", F.lit(1))
     )
-    batch_docs = batch.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).localCheckpoint(eager=False)
+    bmin_h = bh.groupBy("__h").agg(F.min("doc_id").alias("__hmin"))
+    exact = (
+        bh.join(hit, on="__h", how="left")
+        .join(bmin_h, on="__h")
+        .select(
+            "doc_id",
+            (
+                F.col("__in_c").isNotNull()
+                | (F.col("__hmin") < F.col("doc_id"))
+            ).alias("__xdup"),
+        )
+    )
 
-    # exact gate: first (is_batch, doc_id) arrival per digest wins — the
-    # precedence is a lexicographic struct MIN, valid for any id range
-    # (an is_batch*1e10 + doc_id BIGINT encoding would silently
-    # mis-order once doc_id reached 1e10)
-    if corpus_digests is None:
-        # self-contained: one digest shuffle over corpus ∪ batch
-        seen = corpus_docs.withColumn("is_batch", F.lit(0)).unionByName(
-            batch_docs.withColumn("is_batch", F.lit(1))
-        )
-        xh = seen.select("doc_id", "is_batch", F.md5("text").alias("__h"))
-        first = xh.groupBy("__h").agg(
-            F.min(F.struct("is_batch", "doc_id")).alias("__first")
-        )
-        exact = (
-            xh.filter(F.col("is_batch") == 1)
-            .join(first, on="__h")
-            .select(
-                "doc_id",
-                (
-                    (F.col("__first.is_batch") != 1)
-                    | (F.col("__first.doc_id") != F.col("doc_id"))
-                ).alias("__xdup"),
-            )
-        )
-    else:
-        # stored-state: the corpus is never re-hashed — a batch digest is
-        # a dup iff it exists in the digest state (every corpus row
-        # precedes every batch row in (is_batch, doc_id) order) or a
-        # smaller-id batch arrival shares it; both probes are
-        # batch-proportional
-        bh = batch_docs.select("doc_id", F.md5("text").alias("__h"))
-        hit = (
-            corpus_digests.select(F.col("digest").alias("__h"))
-            .distinct()
-            .withColumn("__in_c", F.lit(1))
-        )
-        bmin_h = bh.groupBy("__h").agg(F.min("doc_id").alias("__hmin"))
-        exact = (
-            bh.join(hit, on="__h", how="left")
-            .join(bmin_h, on="__h")
-            .select(
-                "doc_id",
-                (
-                    F.col("__in_c").isNotNull()
-                    | (F.col("__hmin") < F.col("doc_id"))
-                ).alias("__xdup"),
-            )
-        )
-
-    rejected = incremental_dedup_merge(
-        corpus_docs,
-        batch_docs,
-        corpus_bands=corpus_bands,
-        return_rejected=True,
-        corpus_fetch=corpus_fetch,
-        batch_bands=batch_bands,
+    rejected = near_dup_gate(
+        batch_docs, corpus_bands, batch_bands, corpus_fetch
     ).withColumn("__rej", F.lit(1))
 
     # span gate: duplicated-character coverage of the ARRIVAL text vs
     # grams seen in the corpus or on a smaller-id arrival — the
     # arrival-ordered analogue of corpus_prepare_v2's pair-free coverage
-    # gate.  Positions are extracted from the BATCH only; the corpus
-    # enters through the (stored or derived) distinct-gram seen-set, and
-    # the interval-union sweep runs over batch positions, so the gate is
-    # batch-bounded given stored state.
+    # gate.  Positions are extracted from the BATCH only and the sweep
+    # runs over batch positions, so the gate is batch-bounded.
     bpos = char_gram_positions(
-        batch_docs, text_col="text", id_col="doc_id", gram_len=span_gram_len
+        batch_docs, text_col="text", id_col="doc_id"
     ).localCheckpoint(eager=False)
-    cg = (
-        corpus_grams.select("g").distinct()
-        if corpus_grams is not None
-        else corpus_gram_state(corpus_docs, gram_len=span_gram_len)
-    )
+    cg = corpus_grams.select("g").distinct()
     bmin_g = bpos.groupBy("g").agg(F.min("doc_id").alias("__gmin"))
     dup_pos = (
         bpos.join(bmin_g, on="g")
@@ -1430,21 +1321,20 @@ def incremental_prepare_tick(
         .filter(F.col("__in_cg").isNotNull() | (F.col("__gmin") < F.col("doc_id")))
         .select("doc_id", "pos")
     )
-    scov = dup_position_coverage(dup_pos, gram_len=span_gram_len)
+    scov = dup_position_coverage(dup_pos)
     blen = batch_docs.select("doc_id", F.length("text").alias("__len"))
 
     g = gopher_rules(batch_docs).select("doc_id", "pass_gopher")
 
-    cvocab = (
-        vocab.select("token")
-        if vocab is not None
-        else corpus_vocabulary(corpus_docs, rel_threshold=rel_threshold)
-    )
     btok = batch_docs.select(
         "doc_id", F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
     bscore = (
-        btok.join(F.broadcast(cvocab.withColumn("__v", F.lit(1))), on="token", how="left")
+        btok.join(
+            F.broadcast(vocab.select("token").withColumn("__v", F.lit(1))),
+            on="token",
+            how="left",
+        )
         .groupBy("doc_id")
         .agg(F.count("*").alias("__nt"), F.count("__v").alias("__niv"))
     )
@@ -1461,16 +1351,9 @@ def incremental_prepare_tick(
     if holdout_mod is not None:
         # v3 gate 6 probe: the graded contamination_check plan against the
         # frozen holdout shingle set (DISTINCT shingles broadcast, batch
-        # hits aggregate map-side — batch-proportional given stored state)
-        hs = (
-            holdout_shingles
-            if holdout_shingles is not None
-            else holdout_shingle_state(corpus_docs, holdout_mod=holdout_mod)
-        )
+        # hits aggregate map-side — batch-proportional)
         contam = (
-            contamination_check(
-                batch_docs, None, min_overlap=contam_min_overlap, eval_shingles=hs
-            )
+            contamination_check(batch_docs, None, eval_shingles=holdout_shingles)
             .select("doc_id")
             .withColumn("__cont", F.lit(1))
         )
@@ -1494,6 +1377,43 @@ def incremental_prepare_tick(
         reason = reason.when(F.col("__cont").isNotNull(), F.lit("contaminated"))
     return joined.select(
         "doc_id", reason.otherwise(F.lit("ok")).alias("reason")
+    )
+
+
+def incremental_prepare_tick(
+    corpus: DataFrame, batch: DataFrame, holdout_mod: int | None = None
+) -> DataFrame:
+    """One ingest tick of the corpus-prepare pipeline, one-shot:
+    ``prepare_gate``'s (doc_id, reason) decision rows for every ``batch``
+    (doc_id, text) document against the ``corpus``; ``holdout_mod`` turns
+    on the v3 emission gates.
+
+    Every state the gate probes is derived in memory with the builder the
+    prepare stream primes it with (``corpus_signature_state``,
+    ``corpus_digest_state``, ``corpus_gram_state``, ``corpus_vocabulary``,
+    ``holdout_shingle_state``) and the content fetch is the corpus itself,
+    so this runs the exact gate the keyed-state ticks run.  Deriving the
+    states is corpus-proportional work, which is why the ticks keep them
+    stored instead."""
+    from mistocksync_spark.operators.dedup import (
+        corpus_digest_state,
+        corpus_gram_state,
+        corpus_signature_state,
+        holdout_shingle_state,
+    )
+
+    corpus_docs = corpus.select("doc_id", "text")
+    batch_docs = batch.select("doc_id", "text")
+    return prepare_gate(
+        batch_docs,
+        corpus_signature_state(corpus_docs),
+        corpus_signature_state(batch_docs).localCheckpoint(eager=False),
+        corpus_digest_state(corpus_docs),
+        corpus_gram_state(corpus_docs),
+        corpus_vocabulary(corpus_docs),
+        lambda ids: corpus_docs,
+        holdout_mod,
+        None if holdout_mod is None else holdout_shingle_state(corpus_docs, holdout_mod),
     )
 
 

@@ -20,9 +20,12 @@
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mistocksync_spark.operators.dedup import seen_set_candidates, seen_set_merge
 
 
 def _to_double(arr: Column) -> Column:
@@ -507,230 +510,40 @@ def cosine_near_dup_pairs_brute(
     return pairs.mapInPandas(score, schema=out_schema)
 
 
-def incremental_embedding_dedup(
-    corpus: DataFrame,
+def embedding_gate(
     batch: DataFrame,
+    corpus_keys: DataFrame,
+    batch_keys: DataFrame,
+    corpus_fetch: Callable[[DataFrame], DataFrame],
+    dim: int,
     threshold: float = 0.99,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    nbits: int = 96,
-    nbands: int = 8,
-    corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Incremental EMBEDDING dedup MERGE — the vector-side ingest tick
-    (sibling of ``operators.dedup.incremental_dedup_merge``): reject an
-    arriving vector iff its exact cosine ≥ ``threshold`` against any
-    corpus vector or any smaller-id arrival, WHETHER OR NOT that earlier
-    arrival survived (the prefix-decomposable seen-set rule — id-ordered
-    micro-batches reproduce the one-shot answer bit-for-bit).  Ids must
-    be unique across corpus ∪ batch.  Output: (vec_id, origin).
+    """The embedding-dedup gate of a vector ingest tick (sibling of
+    ``operators.dedup.near_dup_gate``): the (vec_id) ids of the ``batch``
+    vectors REJECTED because their exact cosine is >= ``threshold``
+    against any corpus vector or any smaller-id arrival, WHETHER OR NOT
+    that earlier arrival survived (the prefix-decomposable seen-set rule —
+    id-ordered micro-batches reproduce the one-shot answer bit-for-bit).
+    Ids must be unique across corpus ∪ batch.
 
-    Plan: banded SimHash signatures over both sides (``signature_bands``
-    — one numpy matmul per Arrow batch), candidates = band equi-join
-    whose probe side is the batch and whose precedence filter keeps
-    "earlier collides with later-arrival" pairs, exact ``unrolled_dot``
-    cosine rescore on the candidate-restricted vector fetch (LSH only
-    proposes, never decides), rejected ids broadcast into the final
-    anti-join.  ``corpus_bands`` is the stored-state substitution: pass a
-    persisted ``signature_bands`` table (same nbits/nbands) and the tick
-    never re-signs the corpus — band values are deterministic per vector,
-    so both paths are bit-identical (pytest-asserted).  Recall follows
-    ``cosine_near_dup_pairs``: sign-identical duplicates (exact or
-    positively scaled copies) collide in EVERY band, so true duplicate
-    ingests are always caught; boundary-cosine pairs carry the documented
-    1-(1-(1-p)^r)^b band survival, graded by the near-dup recall harness
-    on the same signature family.
-    """
-    if dim is None:
-        dim = inferred_dim(corpus, vec_col)
-    cd = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-    bd = batch.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-    if corpus_bands is None:
-        corpus_bands = signature_bands(
-            cd, dim, nbits=nbits, nbands=nbands, vec_col="emb", id_col="vec_id"
-        )
-    bbands = signature_bands(
-        bd, dim, nbits=nbits, nbands=nbands, vec_col="emb", id_col="vec_id"
-    ).localCheckpoint(eager=False)
-    earlier = corpus_bands.select(
-        "band_id",
-        "band_val",
-        F.col("vec_id").alias("earlier_id"),
-        F.lit(0).alias("earlier_batch"),
-    ).unionByName(
-        bbands.select(
-            "band_id",
-            "band_val",
-            F.col("vec_id").alias("earlier_id"),
-            F.lit(1).alias("earlier_batch"),
-        )
-    )
-    later = bbands.select("band_id", "band_val", F.col("vec_id").alias("later_id"))
-    cand = (
-        earlier.join(later, on=["band_id", "band_val"])
-        .filter(
-            (F.col("earlier_batch") == 0)
-            | (F.col("earlier_id") < F.col("later_id"))
-        )
-        .select("earlier_id", "later_id")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    allv = cd.unionByName(bd).select(
-        "vec_id", _to_double(F.col("emb")).alias("v"), norm(F.col("emb")).alias("nrm")
-    )
-    av = allv.join(
-        cand.select(F.col("earlier_id").alias("vec_id")).distinct(),
-        on="vec_id",
-        how="left_semi",
-    ).select(F.col("vec_id").alias("earlier_id"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    bv = allv.join(
-        cand.select(F.col("later_id").alias("vec_id")).distinct(),
-        on="vec_id",
-        how="left_semi",
-    ).select(F.col("vec_id").alias("later_id"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dotab = unrolled_dot("va", "vb", dim)
-    sim = F.when(
-        F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))
-    ).otherwise(F.lit(0.0))
-    rejected = (
-        cand.join(av, on="earlier_id")
-        .join(bv, on="later_id")
-        .filter(sim >= threshold)
-        .select(F.col("later_id").alias("vec_id"))
-        .distinct()
-    )
-    return cd.select("vec_id", F.lit("corpus").alias("origin")).unionByName(
-        bd.join(F.broadcast(rejected), on="vec_id", how="left_anti").select(
-            "vec_id", F.lit("batch").alias("origin")
-        )
-    )
+    Inputs: ``batch`` has (vec_id, embedding) of ``dim`` elements;
+    ``corpus_keys`` and ``batch_keys`` are the seen corpus's and the
+    batch's candidate-key rows — (vec_id, band_id, band_val) from
+    ``signature_bands`` or (vec_id, centroid) from ``ivf_assign`` under a
+    frozen quantizer, the only difference between the banded and the IVF
+    tick.  ``corpus_fetch`` maps the corpus-side candidate ids (a (vec_id)
+    frame) to a (vec_id, embedding) frame covering at least those vectors;
+    a tick resolves it to a bucket-pruned read of its vector store, and
+    the rescore semi-restricts it to exact ids (lossless).
 
-
-def incremental_embedding_dedup_ivf(
-    corpus: DataFrame | None,
-    batch: DataFrame,
-    centroids: list[list[float]],
-    threshold: float = 0.99,
-    n_assign: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    corpus_cells: DataFrame | None = None,
-    return_rejected: bool = False,
-    corpus_fetch=None,
-    batch_cells: DataFrame | None = None,
-) -> DataFrame:
-    """Vector ingest tick with IVF-CELL candidates against a FROZEN
-    quantizer — the structural fix for the banded tick's candidate growth
-    (SCALE_r11 measured the signature-band tick at 24.7x on 10x clustered
-    vectors; same-cell candidates are linear at fixed cell density).
-
-    Decision rule is IDENTICAL to ``incremental_embedding_dedup`` (reject
-    an arrival iff exact cosine >= threshold against any corpus vector or
-    smaller-id arrival, rejected arrivals stay in the seen set, ids unique
-    across corpus ∪ batch); only the CANDIDATE GENERATOR differs:
-    ``centroids`` is the quantizer trained ONCE at index-build time and
-    frozen (``ivf_train`` / ``ivf_index_tables`` — the same table a
-    serving stack already persists), every side is assigned to its
-    ``n_assign`` nearest cells, and candidates are cell-sharing pairs.
-    ``corpus_cells`` is the stored-state substitution: pass the persisted
-    (vec_id, centroid) inverted table (built with the SAME centroids and
-    n_assign) and the tick never re-assigns the corpus — only the arriving
-    batch runs the one-matmul assignment pass.  Assignments under a frozen
-    quantizer are deterministic per vector, so the stored and
-    self-contained paths are bit-identical (pytest-asserted).
-
-    Recall contract: exact and positively-scaled duplicates have identical
-    cosine geometry, hence identical cell assignments — always caught.  A
-    natural boundary pair is missed only if it shares none of its
-    n_assign nearest cells (the ``embedding_near_dup_ivf_recall`` gate
-    family); production corpora re-train the quantizer on index-rebuild
-    ticks, not ingest ticks, exactly as modeled here.
-
-    ``corpus_fetch`` (state path only) is the vector-store pruning hook —
-    the embedding twin of ``incremental_dedup_merge``'s docs-store
-    pruning: a callable ``(candidate_corpus_ids_df) -> vectors_df`` the
-    exact-rescore stage calls AFTER the cell probe has produced the
-    corpus-side candidate ids, so the caller can bucket-prune the
-    embedding fetch; the semi-join below still restricts to exact ids
-    (lossless).  With ``corpus_fetch`` + ``corpus_cells`` +
-    ``return_rejected``, ``corpus`` may be None and the tick touches no
-    corpus-proportional surface.  ``return_rejected`` returns the
-    rejected batch ids instead of the merged corpus — the streaming
-    twin's verdict surface (same plan up to the final select).
-
-    ``batch_cells`` is the batch's own (vec_id, centroid) assignment rows
-    under the same ``centroids`` and ``n_assign`` — a tick that has
-    already assigned the batch to probe the cell state passes them here,
-    and the gate runs no second assignment pass."""
-    if corpus is None and (
-        corpus_cells is None
-        or corpus_fetch is None
-        or not return_rejected
-        or dim is None
-    ):
-        raise ValueError(
-            "corpus=None requires corpus_cells + corpus_fetch + "
-            "return_rejected + explicit dim"
-        )
-    if dim is None:
-        dim = inferred_dim(corpus, vec_col)
-    cd = (
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-        if corpus is not None
-        else None
-    )
-    bd = batch.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-    if corpus_cells is None:
-        corpus_cells = ivf_assign(
-            cd, centroids, vec_col="emb", id_col="vec_id", n_assign=n_assign
-        )
-    bcells = (
-        batch_cells
-        if batch_cells is not None
-        else ivf_assign(
-            bd, centroids, vec_col="emb", id_col="vec_id", n_assign=n_assign
-        ).localCheckpoint(eager=False)
-    )
-    earlier = corpus_cells.select(
-        "centroid",
-        F.col("vec_id").alias("earlier_id"),
-        F.lit(0).alias("earlier_batch"),
-    ).unionByName(
-        bcells.select(
-            "centroid",
-            F.col("vec_id").alias("earlier_id"),
-            F.lit(1).alias("earlier_batch"),
-        )
-    )
-    later = bcells.select("centroid", F.col("vec_id").alias("later_id"))
-    # earlier_batch is functionally determined by earlier_id (unique-id
-    # precondition), so the distinct on the triple equals the pair's —
-    # retained so corpus_fetch can derive the corpus-side candidate ids
-    cand3 = (
-        earlier.join(later, on="centroid")
-        .filter(
-            (F.col("earlier_batch") == 0)
-            | (F.col("earlier_id") < F.col("later_id"))
-        )
-        .select("earlier_id", "later_id", "earlier_batch")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    cand = cand3.select("earlier_id", "later_id")
-    if corpus_fetch is not None:
-        c_ids = (
-            cand3.filter(F.col("earlier_batch") == 0)
-            .select(F.col("earlier_id").alias("vec_id"))
-            .distinct()
-        )
-        csrc = corpus_fetch(c_ids).select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb")
-        )
-    else:
-        csrc = cd
+    Plan: ``seen_set_candidates`` on the key columns, then the exact
+    ``unrolled_dot`` cosine rescore on the candidate-restricted vectors
+    (candidate keys only propose, never decide).  Keys are deterministic
+    per vector, so stored and freshly derived keys give identical
+    verdicts."""
+    bd = batch.select("vec_id", F.col("embedding").alias("emb"))
+    cand, c_ids = seen_set_candidates(corpus_keys, batch_keys, "vec_id")
+    csrc = corpus_fetch(c_ids).select("vec_id", F.col("embedding").alias("emb"))
     allv = csrc.unionByName(bd).select(
         "vec_id", _to_double(F.col("emb")).alias("v"), norm(F.col("emb")).alias("nrm")
     )
@@ -748,22 +561,75 @@ def incremental_embedding_dedup_ivf(
     sim = F.when(
         F.col("na") * F.col("nb") > 0, dotab / (F.col("na") * F.col("nb"))
     ).otherwise(F.lit(0.0))
-    rejected = (
+    return (
         cand.join(av, on="earlier_id")
         .join(bv, on="later_id")
         .filter(sim >= threshold)
         .select(F.col("later_id").alias("vec_id"))
         .distinct()
     )
-    if return_rejected:
-        # verdict surface for the streaming twin: the rejected batch ids,
-        # exactly the frame the anti-join below consumes — same plan up
-        # to here, no behavior change when False
-        return rejected
-    return cd.select("vec_id", F.lit("corpus").alias("origin")).unionByName(
-        bd.join(F.broadcast(rejected), on="vec_id", how="left_anti").select(
-            "vec_id", F.lit("batch").alias("origin")
-        )
+
+
+def _embedding_merge(
+    corpus: DataFrame, batch: DataFrame, keys: Callable[[DataFrame, int], DataFrame]
+) -> DataFrame:
+    """One-shot embedding dedup MERGE: ``keys(frame, dim)`` derives the
+    candidate-key rows of both sides in memory, the corpus is the content
+    fetch, and ``embedding_gate`` decides."""
+    dim = inferred_dim(corpus, "embedding")
+    cd = corpus.select("vec_id", "embedding")
+    bd = batch.select("vec_id", "embedding")
+    rejected = embedding_gate(
+        bd,
+        keys(cd, dim),
+        keys(bd, dim).localCheckpoint(eager=False),
+        lambda ids: cd,
+        dim,
+    )
+    return seen_set_merge(cd, bd, rejected, "vec_id")
+
+
+def incremental_embedding_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:
+    """Incremental EMBEDDING dedup MERGE — the vector-side ingest tick,
+    one-shot (sibling of ``operators.dedup.incremental_dedup_merge``):
+    merge the (vec_id, embedding) ``batch`` into the ``corpus`` and return
+    (vec_id, origin), the arrivals ``embedding_gate`` rejects left out.
+
+    Candidates are banded SimHash signatures (``signature_bands`` — one
+    numpy matmul per Arrow batch).  Recall follows
+    ``cosine_near_dup_pairs``: sign-identical duplicates (exact or
+    positively scaled copies) collide in EVERY band, so true duplicate
+    ingests are always caught; boundary-cosine pairs carry the documented
+    1-(1-(1-p)^r)^b band survival, graded by the near-dup recall harness
+    on the same signature family.
+    """
+    return _embedding_merge(corpus, batch, signature_bands)
+
+
+def incremental_embedding_dedup_ivf(
+    corpus: DataFrame, batch: DataFrame, centroids: list[list[float]]
+) -> DataFrame:
+    """Vector ingest tick with IVF-CELL candidates against a FROZEN
+    quantizer, one-shot — the structural fix for the banded tick's
+    candidate growth (SCALE_r11 measured the signature-band tick at 24.7x
+    on 10x clustered vectors; same-cell candidates are linear at fixed
+    cell density).
+
+    The decision rule is ``incremental_embedding_dedup``'s; only the
+    candidate key differs: ``centroids`` is the quantizer trained ONCE at
+    index-build time and frozen (``ivf_train`` / ``ivf_index_tables``),
+    every vector is assigned to its 2 nearest cells (``ivf_assign``, the
+    builder the embedding stream primes its cell state with), and
+    candidates are cell-sharing pairs.
+
+    Recall contract: exact and positively-scaled duplicates have identical
+    cosine geometry, hence identical cell assignments — always caught.  A
+    natural boundary pair is missed only if it shares none of its 2
+    nearest cells (the ``embedding_near_dup_ivf_recall`` gate family);
+    production corpora re-train the quantizer on index-rebuild ticks, not
+    ingest ticks, exactly as modeled here."""
+    return _embedding_merge(
+        corpus, batch, lambda f, dim: ivf_assign(f, centroids, n_assign=2)
     )
 
 
@@ -1366,50 +1232,6 @@ def pq_train(
                 if counts[s, c] > 0:
                     books[s, c] = (sums[s, c].astype("float64") / 1_000_000.0) / counts[s, c]
     return books.tolist()
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Encode every (normalized) vector as its m nearest-codeword ids —
-    the m-byte compressed representation.  One Arrow-batched pass, one
-    BLAS call per subspace per batch; at 100 TB the codes table is what
-    ships to the servers, 4·dim/m× smaller than the floats."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    B = np.asarray(codebooks, dtype="float64")  # (m, k, dsub)
-    m, _, dsub = B.shape
-    half = 0.5 * (B**2).sum(axis=2)  # (m, k)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType(), False),
-            StructField("codes", ArrayType(LongType()), False),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            codes = np.stack(
-                [
-                    (V[:, s * dsub : (s + 1) * dsub] @ B[s].T - half[s]).argmax(axis=1)
-                    for s in range(m)
-                ],
-                axis=1,
-            )
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].astype("int64"), "codes": [c.tolist() for c in codes]}
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def pq_topk(

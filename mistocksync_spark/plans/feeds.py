@@ -130,7 +130,7 @@ def docs_aug(spark, sf_dir: str):
 # near-dup of corpus (%9=0, appended tail), exact copy of corpus (%9=4),
 # genuinely fresh docs (%9=1, reversed text shares no shingles), an
 # intra-batch near-dup of a fresh arrival (%18=1, the %9=1 text + a tail),
-# and a SPAN-dup of corpus (%9=2, r14: the corpus doc's 40% character
+# and a SPAN-dup of corpus (%9=2: the corpus doc's 40% character
 # prefix + a unique tail — shares long verbatim substrings, so the
 # prepare tick's span gate fires, while 3-word-shingle Jaccard stays
 # ~0.4 < 0.5 so the near-dup gate does NOT; prefixes shorter than one

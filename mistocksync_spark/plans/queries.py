@@ -1772,23 +1772,29 @@ ORACLES["incremental_dedup_merge"] = (
 
 @query("incremental_dedup_merge_stateful")
 def incremental_dedup_merge_stateful_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same ingest tick through the STORED-STATE path: candidates come
-    from a precomputed corpus_signature_state band table (what a 100 TB
-    corpus persists between ticks) and only candidate corpus docs are
-    re-shingled for verification.  Band keys are deterministic per doc,
-    so this must hash-match the self-contained query — oracle shared with
+    """The same ingest tick with the corpus band state MATERIALIZED before
+    the gate runs: ``near_dup_gate`` probes a checkpointed
+    corpus_signature_state table (what a 100 TB corpus persists between
+    ticks) instead of the one-shot's lazily derived one, and the merge is
+    the shared ``seen_set_merge``.  Band keys are deterministic per doc,
+    so this must hash-match the one-shot query — oracle shared with
     ``incremental_dedup_merge``."""
     from mistocksync_spark.operators.dedup import (
         corpus_signature_state,
-        incremental_dedup_merge,
+        near_dup_gate,
+        seen_set_merge,
     )
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
 
-    corpus = docs_incr_corpus(spark, sf_dir)
-    state = corpus_signature_state(corpus).localCheckpoint(eager=False)
-    return incremental_dedup_merge(
-        corpus, docs_incr_batch(spark, sf_dir), corpus_bands=state
+    corpus = docs_incr_corpus(spark, sf_dir).select("doc_id", "text")
+    batch = docs_incr_batch(spark, sf_dir).select("doc_id", "text")
+    rejected = near_dup_gate(
+        batch,
+        corpus_signature_state(corpus).localCheckpoint(eager=False),
+        corpus_signature_state(batch).localCheckpoint(eager=False),
+        lambda ids: corpus,
     )
+    return seen_set_merge(corpus, batch, rejected, "doc_id")
 
 
 ORACLES["incremental_dedup_merge_stateful"] = ORACLES["incremental_dedup_merge"]
@@ -1803,7 +1809,7 @@ def incremental_dedup_merge_pruned_q(spark: SparkSession, sf_dir: str) -> DataFr
     batch's keys hash to, reads pinned before the batch.  Pruning is
     lossless for the candidate equi-join — untouched buckets cannot match
     any batch band key — so the accepted seen-set read back from the
-    ticked state must hash-match the self-contained tick; oracle shared
+    ticked state must hash-match the one-shot tick; oracle shared
     with ``incremental_dedup_merge``."""
     from mistocksync_spark.plans.feeds import docs_incr_batch
     from mistocksync_spark.streaming.merge import (
@@ -2396,23 +2402,31 @@ def incremental_embedding_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query("incremental_embedding_dedup_stateful")
 def incremental_embedding_dedup_stateful_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same vector ingest tick through the STORED-STATE path: the
-    corpus band table comes precomputed (what a production vector store
-    persists between ticks); band values are deterministic per vector, so
-    this must hash-match the self-contained query — oracle shared."""
+    """The same vector ingest tick with the corpus band state MATERIALIZED
+    before the gate runs: ``embedding_gate`` probes a checkpointed
+    ``signature_bands`` table (what a production vector store persists
+    between ticks) and the merge is the shared ``seen_set_merge``; band
+    values are deterministic per vector, so this must hash-match the
+    one-shot query — oracle shared."""
+    from mistocksync_spark.operators.dedup import seen_set_merge
     from mistocksync_spark.operators.vectors import (
-        incremental_embedding_dedup,
+        embedding_gate,
         inferred_dim,
         signature_bands,
     )
     from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
 
-    corpus = emb_incr_corpus(spark, sf_dir)
+    corpus = emb_incr_corpus(spark, sf_dir).select("vec_id", "embedding")
+    batch = emb_incr_batch(spark, sf_dir).select("vec_id", "embedding")
     dim = inferred_dim(corpus, "embedding")
-    state = signature_bands(corpus, dim).localCheckpoint(eager=False)
-    return incremental_embedding_dedup(
-        corpus, emb_incr_batch(spark, sf_dir), dim=dim, corpus_bands=state
+    rejected = embedding_gate(
+        batch,
+        signature_bands(corpus, dim).localCheckpoint(eager=False),
+        signature_bands(batch, dim).localCheckpoint(eager=False),
+        lambda ids: corpus,
+        dim,
     )
+    return seen_set_merge(corpus, batch, rejected, "vec_id")
 
 
 def _sql_incremental_embedding_dedup() -> str:
@@ -2464,9 +2478,9 @@ ORACLES["incremental_embedding_dedup_stateful"] = ORACLES["incremental_embedding
 @query("incremental_embedding_dedup_ivf")
 def incremental_embedding_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vector ingest tick through the IVF-CELL candidate generator,
-    self-contained (the one-shot twin, as ``incremental_dedup_merge`` is
-    for the corpus tick): the quantizer is trained once on the corpus and
-    frozen, and both sides are assigned to their cells in the operator.
+    one-shot (as ``incremental_dedup_merge`` is for the corpus tick): the
+    quantizer is trained once on the corpus and frozen, and both sides are
+    assigned to their cells in memory.
     Decision rule and oracle are identical to
     ``incremental_embedding_dedup`` (exact all-pairs cosine, the same
     fixture-dependent parity documented there); this entry grades the
@@ -8792,7 +8806,8 @@ def _scratch_root(base: str, tag: str, max_age_days: float = 7.0) -> str:
     """Session-isolated scratch root ``{base}/{pid}-{tag}``: the pid
     component keeps concurrent sessions on one machine from racing on a
     shared path; sibling roots whose pid is no longer alive are reaped
-    here, so abandoned state does not accumulate across sessions.  A
+    here, so abandoned state does not accumulate across sessions; so is
+    any child whose name lacks the ``{pid}-`` prefix.  A
     recycled pid (or a pid owned by another user, where kill(pid, 0)
     raises PermissionError) would keep a dead session's root alive
     forever, so an mtime-age fallback reaps any sibling root older than
@@ -8815,8 +8830,13 @@ def _scratch_root(base: str, tag: str, max_age_days: float = 7.0) -> str:
     cutoff = time.time() - max_age_days * 86400.0
     try:
         for d in os.listdir(base):
-            opid = d.split("-", 1)[0]
-            if not opid.isdigit() or int(opid) == pid:
+            opid, sep, _ = d.partition("-")
+            if not (sep and opid.isdigit()):
+                # every writer names its root {pid}-{tag}, so a child
+                # without that prefix was left by code that no longer runs
+                shutil.rmtree(f"{base}/{d}", ignore_errors=True)
+                continue
+            if int(opid) == pid:
                 continue
             dead = False
             try:
@@ -8843,8 +8863,8 @@ def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> st
     checkable
     (tests/test_produce_once.py pins that queries.py calls
     ``_scratch_root`` ONLY through here plus the documented direct sites:
-    the catalog-guarded bucketed tables and the four per-run IVF index
-    tables).
+    the catalog-guarded bucketed tables, the four per-run IVF index
+    tables and ``_run_dir``'s runs root).
 
     What may live under a produce-once root: SETUP STATE ONLY — standing
     tables, indexes, quantizers, vocabularies that are pure functions of
@@ -9629,7 +9649,6 @@ def pack_emission_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Footer range-clustering is pinned separately by
     tests/test_layout.py."""
     import os
-    import tempfile
 
     from mistocksync_spark.sinks.layout import (
         pack_emission_manifest,
@@ -9644,7 +9663,7 @@ def pack_emission_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pack_offset",
         F.col("n_bpe_tokens").alias("n_tokens"),
     )
-    work = tempfile.mkdtemp(prefix="pack_emission_")
+    work = _run_dir("pack_emission_")
     path = pack_emission_write(packed, os.path.join(work, "packs"))
     return pack_emission_manifest(spark, path)
 
@@ -9811,12 +9830,7 @@ def incremental_prepare_tick_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
 
     return incremental_prepare_tick(
-        docs_incr_corpus(spark, sf_dir),
-        docs_incr_batch(spark, sf_dir),
-        # the SELF-CONTAINED anti-shape, graded on purpose: every state
-        # derived inline from the corpus (the stored twin is the
-        # production path; deriving state per tick is opt-in)
-        allow_corpus_derived_state=True,
+        docs_incr_corpus(spark, sf_dir), docs_incr_batch(spark, sf_dir)
     )
 
 
@@ -9844,16 +9858,13 @@ def incremental_prepare_tick_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame
     the v1 text stays byte-identical, so the shared standing grade of
     tick/stored/stream is untouched.  Production ticks run the stored
     shape (``streaming/merge.prepare_tick_against_state(holdout_mod=50)``
-    probing persisted ``holdout_shingle_state``); this graded entry is
-    the self-contained semantic definition."""
+    probing persisted ``holdout_shingle_state``); this graded entry runs
+    the same gate over state derived in memory."""
     from mistocksync_spark.operators.textual import incremental_prepare_tick
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
 
     return incremental_prepare_tick(
-        docs_incr_corpus(spark, sf_dir),
-        docs_incr_batch(spark, sf_dir),
-        allow_corpus_derived_state=True,
-        holdout_mod=50,
+        docs_incr_corpus(spark, sf_dir), docs_incr_batch(spark, sf_dir), holdout_mod=50
     )
 
 
@@ -9873,11 +9884,10 @@ def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataF
     instead of re-hashing the standing corpus, and the span gate probes
     the gram state instead of re-gramming it — so every gate's
     corpus-side read is O(batch + probed buckets) and the tick never
-    touches a corpus-proportional surface (``corpus=None`` — enforced by
-    the operator's stored-state guard).  Pruning is lossless for every
+    touches a corpus-proportional surface.  Pruning is lossless for every
     probe (equi-joins on the bucketed key; the verify semi-restricts the
     docs fetch to exact candidate ids), so this must hash-match the
-    self-contained tick — oracle shared with
+    one-shot tick — oracle shared with
     ``incremental_prepare_tick``.  This grades the state shape the
     prepare ladder and the streaming twin run.
 
@@ -9893,17 +9903,28 @@ def incremental_prepare_tick_stored_q(spark: SparkSession, sf_dir: str) -> DataF
     return _stored_prepare_tick(spark, sf_dir)
 
 
-def _pristine_copy(root: str, prefix: str) -> tuple[str, str]:
-    """A per-run mutable copy of the produce-once ``root``: a fresh temp
-    dir ``work`` whose ``state`` child holds the root's tables, without
-    the ``_STATE_READY`` marker and the ``_quantizer.json`` sidecar.
-    Returns (work, state_dir); ``work`` has room for a run's arrivals,
-    checkpoint and outputs beside the state."""
+def _run_dir(prefix: str) -> str:
+    """A fresh per-run directory under this session's runs root.  The
+    frame a run returns reads it lazily, so it outlives the call; the root
+    is reaped by ``_scratch_root`` once the session is dead."""
     import os
-    import shutil
     import tempfile
 
-    work = tempfile.mkdtemp(prefix=prefix)
+    root = _scratch_root("/tmp/spark_graft_runs", "runs")
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _pristine_copy(root: str, prefix: str) -> tuple[str, str]:
+    """A per-run mutable copy of the produce-once ``root``: a fresh
+    ``_run_dir`` ``work`` whose ``state`` child holds the root's tables,
+    without the ``_STATE_READY`` marker and the ``_quantizer.json``
+    sidecar.  Returns (work, state_dir); ``work`` has room for a run's
+    arrivals, checkpoint and outputs beside the state."""
+    import os
+    import shutil
+
+    work = _run_dir(prefix)
     state_dir = os.path.join(work, "state")
     shutil.copytree(
         root, state_dir, ignore=shutil.ignore_patterns("_STATE_READY", "_quantizer.json")
@@ -9991,7 +10012,7 @@ def _stored_prepare_tick(
 ) -> DataFrame:
     """Shared body of ``incremental_prepare_tick_stored`` and its v3 twin:
     the stream's probe and gate (folded bucket fetch, candidate-pruned
-    docs read, corpus=None), unpinned, on the produce-once prepare root."""
+    docs read), unpinned, on the produce-once prepare root."""
     from mistocksync_spark.plans.feeds import docs_incr_batch
     from mistocksync_spark.streaming.merge import prepare_decisions
 
@@ -10012,7 +10033,7 @@ def incremental_prepare_tick_v3_stored_q(spark: SparkSession, sf_dir: str) -> Da
     emission gates probe the FROZEN ``holdout_shingle_state`` table
     (built once per corpus version in the same produce-once root as the
     other five state artifacts) while every other gate runs the stored
-    twin's pruned-probe plan.  Must hash-match the self-contained v3
+    twin's pruned-probe plan.  Must hash-match the one-shot v3
     tick — oracle shared with ``incremental_prepare_tick_v3``."""
     return _stored_prepare_tick(spark, sf_dir, holdout_mod=50)
 
@@ -10446,7 +10467,7 @@ def incremental_prepare_stream_v3_q(spark: SparkSession, sf_dir: str) -> DataFra
     prefix-decomposable, so the union of per-micro-batch decisions must
     equal the one-shot v3 tick bit-for-bit — oracle shared with
     ``incremental_prepare_tick_v3``.  With this entry every v3 shape is
-    graded: self-contained (semantic definition), stored (pruned-probe
+    graded: one-shot (state derived in memory), stored (pruned-probe
     production tick), and streaming (continuous ingest).  The in-stream
     compaction cadence is exercised (and its cost benched) on the v1
     stream entry; the v3 twin runs cadence-off over the IDENTICAL state

@@ -51,7 +51,7 @@ def get_spark(app_name: str = "mistocksync-spark", cpus: int | None = None) -> S
         # handed a 48g cap that invites the OOM-killer.  On a real cluster
         # this maps to executor memory.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
-        # bucketed-table files for the catalog path (sources/catalog.py)
+        # bucketed-table catalog entries (sinks/layout.bucketed_table_write)
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"))
         .config("spark.ui.enabled", "false")
     )

@@ -2,8 +2,9 @@
 
 The reference re-reads the whole base workbook and re-runs the comparison
 per button press (main.py:889-904).  The streaming shape subscribes to
-arrivals and hands each micro-batch to the *batch* operators verbatim — so
-the semantics are literally the code that passed the oracle.
+arrivals and decides each micro-batch with the same gate functions the
+one-shot operators run — so the semantics are literally the code that
+passed the oracle.
 
 ``incremental_price_merge`` MERGEs supplier price updates into the base.
 The three keyed-state families — corpus dedup, embedding dedup and corpus
@@ -15,7 +16,12 @@ micro-batches reproduce the one-shot batch operators bit for bit — which
 is what lets the streams share their oracles.
 
 Each family's state is described once, as data (``_Family``), and run
-through one copy of each step; the family gate is the only per-family code:
+through one copy of each step; the family gate (``near_dup_gate``,
+``embedding_gate`` or ``prepare_gate``) is the only per-family code.  The
+one-shot operators (``incremental_dedup_merge``,
+``incremental_embedding_dedup_ivf``, ``incremental_prepare_tick``) run
+the same gates over state they derive in memory with the builders the
+prime uses.  The steps:
 
 - **prime**: one eager ``localCheckpoint`` of the corpus, then every table
   build overlapped in ``parallel_actions`` at ``batch_id=-1``;
@@ -24,8 +30,7 @@ through one copy of each step; the family gate is the only per-family code:
   ``keyed_state_read``s (schema from each table's sidecar, so building a
   read starts no Spark job), and a content fetch pruned to the buckets
   the gate's candidate ids hash to.  The gate gets the checkpointed
-  batch-side rows too (``batch_bands``/``batch_cells``), so it never
-  derives them a second time;
+  batch-side rows too, so it never derives them a second time;
 - **tick**: probe, gate, the optional decisions write, then the overlapped
   appends;
 - **stream**: an availableNow file stream, one arrival file per micro-batch.
@@ -54,17 +59,10 @@ from mistocksync_spark.operators.dedup import (
     corpus_gram_state,
     corpus_signature_state,
     holdout_shingle_state,
-    incremental_dedup_merge,
+    near_dup_gate,
 )
-from mistocksync_spark.operators.textual import (
-    corpus_vocabulary,
-    incremental_prepare_tick,
-)
-from mistocksync_spark.operators.vectors import (
-    incremental_embedding_dedup_ivf,
-    inferred_dim,
-    ivf_assign,
-)
+from mistocksync_spark.operators.textual import corpus_vocabulary, prepare_gate
+from mistocksync_spark.operators.vectors import embedding_gate, inferred_dim, ivf_assign
 from mistocksync_spark.sinks.layout import (
     compact_keyed_state,
     keyed_state_append,
@@ -176,14 +174,8 @@ def _corpus_family(threshold: float = 0.5) -> _Family:
         "doc_id",
         ("doc_id", "text"),
         {"bands": (["band", "band_key"], corpus_signature_state)},
-        lambda frame, reads, fetch, rows: incremental_dedup_merge(
-            None,
-            frame,
-            threshold=threshold,
-            corpus_bands=reads["bands"],
-            return_rejected=True,
-            corpus_fetch=fetch,
-            batch_bands=rows["bands"],
+        lambda frame, reads, fetch, rows: near_dup_gate(
+            frame, reads["bands"], rows["bands"], fetch, threshold
         ),
     )
 
@@ -202,17 +194,8 @@ def _embedding_family(
         # (exact for float inputs; the cosine math is already double)
         ("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
         {"cells": (["centroid"], lambda f: ivf_assign(f, centroids, n_assign=n_assign))},
-        lambda frame, reads, fetch, rows: incremental_embedding_dedup_ivf(
-            None,
-            frame,
-            centroids,
-            threshold=threshold,
-            n_assign=n_assign,
-            dim=dim,
-            corpus_cells=reads["cells"],
-            return_rejected=True,
-            corpus_fetch=fetch,
-            batch_cells=rows["cells"],
+        lambda frame, reads, fetch, rows: embedding_gate(
+            frame, reads["cells"], rows["cells"], fetch, dim, threshold
         ),
     )
 
@@ -235,17 +218,16 @@ def _prepare_family(
             "digests": (["digest"], corpus_digest_state),
             "grams": (["g"], corpus_gram_state),
         },
-        lambda frame, reads, fetch, rows: incremental_prepare_tick(
-            None,
+        lambda frame, reads, fetch, rows: prepare_gate(
             frame,
-            corpus_bands=reads["bands"],
-            batch_bands=rows["bands"],
-            vocab=reads["vocab"],
-            corpus_digests=reads["digests"],
-            corpus_grams=reads["grams"],
-            corpus_fetch=fetch,
-            holdout_mod=holdout_mod,
-            holdout_shingles=reads.get("holdout_shingles"),
+            reads["bands"],
+            rows["bands"],
+            reads["digests"],
+            reads["grams"],
+            reads["vocab"],
+            fetch,
+            holdout_mod,
+            reads.get("holdout_shingles"),
         ),
         frozen,
         decides=True,

@@ -1150,17 +1150,6 @@ def test_pq_train_reduces_quantization_error(spark, sf_dir):
     assert mse(trained) <= mse(seed_books) + 1e-12
 
 
-def test_pq_encode_shape_and_range(spark, sf_dir):
-    from mistocksync_spark.operators.vectors import pq_encode, pq_train
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = pq_train(emb, m=8, k=16, iterations=1)
-    rows = pq_encode(emb, books).collect()
-    assert len(rows) == emb.count()
-    for r in rows[:20]:
-        assert len(r.codes) == 8 and all(0 <= c < 16 for c in r.codes)
-
-
 def test_url_audit_counts_and_blocklist(spark):
     from mistocksync_spark.operators.textual import url_audit
 
@@ -2717,19 +2706,28 @@ def test_incremental_corpus_dedup_stream_equals_batch(spark, tmp_path):
     assert got == want and (12, "batch") in got
 
 
-def test_incremental_dedup_stateful_path_matches_self_contained(spark):
-    """The stored-state path (precomputed corpus band table + candidate-
-    bounded corpus re-shingle) must be bit-identical to the self-contained
-    path — band keys are deterministic per document."""
+def test_incremental_dedup_stateful_path_matches_self_contained(spark, tmp_path):
+    """The gate on STORED band state (a corpus_signature_state table
+    written to parquet and read back, as a tick reads it) must be
+    bit-identical to the one-shot merge, which derives that state in
+    memory — band keys are deterministic per document."""
     from mistocksync_spark.operators.dedup import (
         corpus_signature_state,
         incremental_dedup_merge,
+        near_dup_gate,
+        seen_set_merge,
     )
 
     corpus, batch = _incr_fixture(spark)
-    state = corpus_signature_state(corpus)
+    corpus_signature_state(corpus).write.parquet(str(tmp_path / "bands"))
+    rejected = near_dup_gate(
+        batch,
+        spark.read.parquet(str(tmp_path / "bands")),
+        corpus_signature_state(batch),
+        lambda ids: corpus,
+    )
     got = {(r.doc_id, r.origin)
-           for r in incremental_dedup_merge(corpus, batch, corpus_bands=state).collect()}
+           for r in seen_set_merge(corpus, batch, rejected, "doc_id").collect()}
     want = {(r.doc_id, r.origin)
             for r in incremental_dedup_merge(corpus, batch).collect()}
     assert got == want and (12, "batch") in got
@@ -2766,23 +2764,34 @@ def test_incremental_embedding_dedup_verdict_paths(spark):
         ],
     )
     got = {(r.vec_id, r.origin)
-           for r in incremental_embedding_dedup(corpus, batch, dim=4).collect()}
+           for r in incremental_embedding_dedup(corpus, batch).collect()}
     assert got == {(1, "corpus"), (2, "corpus"), (12, "batch"), (14, "batch")}
 
 
-def test_incremental_embedding_dedup_stateful_matches(spark):
+def test_incremental_embedding_dedup_stateful_matches(spark, tmp_path):
+    """The embedding gate on STORED signature bands (parquet round trip)
+    must be bit-identical to the one-shot merge's in-memory bands."""
+    from mistocksync_spark.operators.dedup import seen_set_merge
     from mistocksync_spark.operators.vectors import (
+        embedding_gate,
         incremental_embedding_dedup,
         signature_bands,
     )
 
     corpus = _emb(spark, [(1, [1.0, 0.0, 0.5, 0.0]), (2, [0.0, 1.0, 0.0, 0.25])])
     batch = _emb(spark, [(10, [2.0, 0.0, 1.0, 0.0]), (11, [0.0, 0.0, 0.0, 1.0])])
-    state = signature_bands(corpus, 4)
+    signature_bands(corpus, 4).write.parquet(str(tmp_path / "bands"))
+    rejected = embedding_gate(
+        batch,
+        spark.read.parquet(str(tmp_path / "bands")),
+        signature_bands(batch, 4),
+        lambda ids: corpus,
+        4,
+    )
     got = {(r.vec_id, r.origin) for r in
-           incremental_embedding_dedup(corpus, batch, dim=4, corpus_bands=state).collect()}
+           seen_set_merge(corpus, batch, rejected, "vec_id").collect()}
     want = {(r.vec_id, r.origin) for r in
-            incremental_embedding_dedup(corpus, batch, dim=4).collect()}
+            incremental_embedding_dedup(corpus, batch).collect()}
     assert got == want == {(1, "corpus"), (2, "corpus"), (11, "batch")}
 
 
@@ -3020,7 +3029,7 @@ def test_incremental_embedding_dedup_stream_equals_batch(spark, tmp_path):
     cents = ivf_train(corpus, n_centroids=2, iterations=2)
     want = {
         (r.vec_id, r.origin)
-        for r in incremental_embedding_dedup_ivf(corpus, batch, cents, dim=4).collect()
+        for r in incremental_embedding_dedup_ivf(corpus, batch, cents).collect()
     }
     arrivals = stage_arrivals(
         batch,
@@ -3046,9 +3055,11 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
     """The IVF-cell tick under a frozen quantizer must reproduce
     the banded tick's verdicts on every fixture path (scaled corpus dup,
     exact corpus dup, fresh, dup-of-accepted, negated, dup-of-accepted-
-    negated), and the stored-cells parquet round-trip must be
-    bit-identical to the self-contained path."""
+    negated), and the gate on stored cells (parquet round-trip, and the
+    pruned keyed-state read) must be bit-identical to the one-shot."""
+    from mistocksync_spark.operators.dedup import seen_set_merge
     from mistocksync_spark.operators.vectors import (
+        embedding_gate,
         incremental_embedding_dedup,
         incremental_embedding_dedup_ivf,
         ivf_assign,
@@ -3074,18 +3085,20 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
     )
     cents = ivf_train(corpus, n_centroids=2, iterations=2, vec_col="embedding")
     want = {(r.vec_id, r.origin)
-            for r in incremental_embedding_dedup(corpus, batch, dim=4).collect()}
+            for r in incremental_embedding_dedup(corpus, batch).collect()}
     got = {(r.vec_id, r.origin)
-           for r in incremental_embedding_dedup_ivf(corpus, batch, cents, dim=4).collect()}
+           for r in incremental_embedding_dedup_ivf(corpus, batch, cents).collect()}
     assert got == want == {(1, "corpus"), (2, "corpus"), (12, "batch"), (14, "batch")}
 
+    def gated(cells):
+        rejected = embedding_gate(
+            batch, cells, ivf_assign(batch, cents, n_assign=2), lambda ids: corpus, 4
+        )
+        return {(r.vec_id, r.origin)
+                for r in seen_set_merge(corpus, batch, rejected, "vec_id").collect()}
+
     ivf_assign(corpus, cents, n_assign=2).write.parquet(str(tmp_path / "cells"))
-    stored = {(r.vec_id, r.origin)
-              for r in incremental_embedding_dedup_ivf(
-                  corpus, batch, cents, dim=4,
-                  corpus_cells=spark.read.parquet(str(tmp_path / "cells")),
-              ).collect()}
-    assert stored == got
+    assert gated(spark.read.parquet(str(tmp_path / "cells"))) == got
 
     # the cells as keyed state (batch=/bucket= layout, keyed on centroid),
     # read PRUNED to the buckets the batch's assigned cells hash to
@@ -3100,46 +3113,43 @@ def test_incremental_embedding_dedup_ivf_matches_banded(spark, tmp_path):
         cells_path,
         touched_buckets(ivf_assign(batch, cents, n_assign=2), cells_path),
     )
-    pruned = {(r.vec_id, r.origin)
-              for r in incremental_embedding_dedup_ivf(
-                  corpus, batch, cents, dim=4, corpus_cells=pruned_cells,
-              ).collect()}
-    assert pruned == got
+    assert gated(pruned_cells) == got
     plan = pruned_cells._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
 
 
 def test_gates_reuse_batch_rows_with_identical_verdicts(spark):
-    """Both stored-state gates reject the same batch ids whether they
-    derive the batch's bands / cell assignments themselves or are handed
-    the rows a tick's probe already derived (``batch_bands`` /
-    ``batch_cells``)."""
+    """Both dedup gates, handed the batch rows a tick's probe has already
+    derived and checkpointed (the batch's bands / cell assignments),
+    reject exactly the batch ids the one-shot merges reject."""
     from mistocksync_spark.operators.dedup import (
         corpus_signature_state,
         incremental_dedup_merge,
+        near_dup_gate,
     )
     from mistocksync_spark.operators.vectors import (
+        embedding_gate,
         incremental_embedding_dedup_ivf,
         ivf_assign,
         ivf_train,
     )
 
+    def one_shot_rejected(merged, batch, key):
+        accepted = {r[0] for r in merged.filter("origin = 'batch'").select(key).collect()}
+        return {r[0] for r in batch.select(key).collect()} - accepted
+
     corpus, batch = _incr_fixture(spark)
-    state = corpus_signature_state(corpus)
-
-    def doc_rejected(**kw):
-        return {
-            r.doc_id
-            for r in incremental_dedup_merge(
-                corpus, batch, corpus_bands=state, return_rejected=True, **kw
-            ).collect()
-        }
-
-    derived = doc_rejected()
-    assert derived == doc_rejected(batch_bands=corpus_signature_state(batch))
+    derived = {
+        r.doc_id
+        for r in near_dup_gate(
+            batch,
+            corpus_signature_state(corpus),
+            corpus_signature_state(batch).localCheckpoint(eager=False),
+            lambda ids: corpus,
+        ).collect()
+    }
+    assert derived == one_shot_rejected(incremental_dedup_merge(corpus, batch), batch, "doc_id")
     assert 12 not in derived and {10, 11, 13} <= derived
-    with pytest.raises(ValueError, match="batch_bands requires corpus_bands"):
-        incremental_dedup_merge(corpus, batch, batch_bands=state)
 
     vcorpus = _emb(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])])
     vbatch = _emb(
@@ -3152,20 +3162,59 @@ def test_gates_reuse_batch_rows_with_identical_verdicts(spark):
         ],
     )
     cents = ivf_train(vcorpus, n_centroids=2, iterations=2, vec_col="embedding")
-    cells = ivf_assign(vcorpus, cents, n_assign=2)
-
-    def vec_rejected(**kw):
-        return {
-            r.vec_id
-            for r in incremental_embedding_dedup_ivf(
-                vcorpus, vbatch, cents, dim=4, corpus_cells=cells,
-                return_rejected=True, **kw,
-            ).collect()
-        }
-
-    derived = vec_rejected()
-    assert derived == vec_rejected(batch_cells=ivf_assign(vbatch, cents, n_assign=2))
+    derived = {
+        r.vec_id
+        for r in embedding_gate(
+            vbatch,
+            ivf_assign(vcorpus, cents, n_assign=2),
+            ivf_assign(vbatch, cents, n_assign=2).localCheckpoint(eager=False),
+            lambda ids: vcorpus,
+            4,
+        ).collect()
+    }
+    assert derived == one_shot_rejected(
+        incremental_embedding_dedup_ivf(vcorpus, vbatch, cents), vbatch, "vec_id"
+    )
     assert derived == {10, 11, 13}
+
+
+def test_seen_set_gates_have_one_path():
+    """Each seen-set gate takes its stored state, its content fetch and
+    the batch's derived rows as REQUIRED arguments — no defaulted stand-in
+    that would select a second, self-contained implementation — and the
+    switches that used to select between the two paths are gone from the
+    package, the tools and the tests."""
+    import inspect
+    from pathlib import Path
+
+    from mistocksync_spark.operators.dedup import near_dup_gate
+    from mistocksync_spark.operators.textual import prepare_gate
+    from mistocksync_spark.operators.vectors import embedding_gate
+
+    for gate, required in (
+        (near_dup_gate, {"corpus_bands", "batch_bands", "corpus_fetch"}),
+        (embedding_gate, {"corpus_keys", "batch_keys", "corpus_fetch"}),
+        (
+            prepare_gate,
+            {"corpus_bands", "batch_bands", "corpus_digests", "corpus_grams",
+             "vocab", "corpus_fetch", "holdout_shingles"},
+        ),
+    ):
+        params = inspect.signature(gate).parameters
+        assert required <= set(params), gate.__name__
+        defaulted = {p for p in required if params[p].default is not inspect.Parameter.empty}
+        assert not defaulted, (gate.__name__, defaulted)
+
+    root = Path(__file__).resolve().parents[1]
+    switches = ("return_" + "rejected", "allow_corpus_" + "derived_state")
+    hits = [
+        (str(f.relative_to(root)), w)
+        for d in ("mistocksync_spark", "tools", "tests")
+        for f in (root / d).rglob("*.py")
+        for w in switches
+        if w in f.read_text(encoding="utf-8")
+    ]
+    assert not hits, hits
 
 
 def test_corpus_prepare_v2_invariants(spark, sf_dir):
@@ -3208,9 +3257,8 @@ def test_v3_tick_contaminated_gate_fires_on_true_positive(spark):
     arrival sharing exactly 2 word trigrams with a holdout doc (< 30
     chars, so zero char-30-gram span coverage), all tokens in-vocab,
     gopher-passing, no verified near-dup — and a control arrival that
-    must come out 'ok'.  Both the self-contained and the stored
-    (frozen holdout_shingle_state probe) paths must agree."""
-    from mistocksync_spark.operators.dedup import holdout_shingle_state
+    must come out 'ok'.  The one-shot tick probes the frozen
+    holdout_shingle_state the v3 stream primes."""
     from mistocksync_spark.operators.textual import incremental_prepare_tick
 
     words = [f"word{i:02d}x" for i in range(60)]
@@ -3239,24 +3287,9 @@ def test_v3_tick_contaminated_gate_fires_on_true_positive(spark):
     )
     got = {
         r.doc_id: r.reason
-        for r in incremental_prepare_tick(
-            corpus, batch, allow_corpus_derived_state=True, holdout_mod=50
-        ).collect()
+        for r in incremental_prepare_tick(corpus, batch, holdout_mod=50).collect()
     }
     assert got == {1001: "contaminated", 1002: "ok"}
-    # stored-probe parity: the frozen holdout shingle state path
-    hs = holdout_shingle_state(corpus, holdout_mod=50)
-    got_stored = {
-        r.doc_id: r.reason
-        for r in incremental_prepare_tick(
-            corpus,
-            batch,
-            allow_corpus_derived_state=True,
-            holdout_mod=50,
-            holdout_shingles=hs,
-        ).collect()
-    }
-    assert got_stored == got
 
 
 def test_incremental_prepare_tick_consistent_with_merge(spark, sf_dir):

@@ -78,7 +78,8 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
     compaction tick bounds the file count without changing a row."""
     from mistocksync_spark.operators.dedup import (
         corpus_signature_state,
-        incremental_dedup_merge,
+        near_dup_gate,
+        seen_set_merge,
     )
     from mistocksync_spark.sinks.layout import (
         compact_keyed_state,
@@ -111,20 +112,18 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
     buckets = touched_buckets(b2_bands, path)
     assert 0 < len(buckets) <= 16
     seen_docs = corpus.unionByName(b1)  # state docs = corpus + all arrivals
-    pruned_state = keyed_state_read(spark, path, buckets)
-    full_state = keyed_state_read(spark, path)
-    accepted_pruned = {
-        r.doc_id
-        for r in incremental_dedup_merge(seen_docs, b2, corpus_bands=pruned_state)
-        .filter(F.col("origin") == "batch")
-        .collect()
-    }
-    accepted_full = {
-        r.doc_id
-        for r in incremental_dedup_merge(seen_docs, b2, corpus_bands=full_state)
-        .filter(F.col("origin") == "batch")
-        .collect()
-    }
+
+    def accepted(state):
+        rejected = near_dup_gate(b2, state, b2_bands, lambda ids: seen_docs)
+        return {
+            r.doc_id
+            for r in seen_set_merge(seen_docs, b2, rejected, "doc_id")
+            .filter(F.col("origin") == "batch")
+            .collect()
+        }
+
+    accepted_pruned = accepted(keyed_state_read(spark, path, buckets))
+    accepted_full = accepted(keyed_state_read(spark, path))
     assert accepted_pruned == accepted_full and len(accepted_pruned) > 0
 
     # partition pruning is in the PLAN, not just the row count
@@ -148,16 +147,20 @@ def test_keyed_state_append_prune_compact_roundtrip(spark, sf_dir, tmp_path):
 def test_prepare_tick_stored_digest_gram_state(spark, sf_dir, tmp_path):
     """The prepare tick's exact and span gates
     probe PERSISTED keyed-append digest/gram state under PRUNED reads,
-    bit-identically to the self-contained tick, and the pruning is real
-    partition pruning (PartitionFilters on the bucket column) in both
-    state scans."""
+    bit-identically to the one-shot tick (state derived in memory), and
+    the pruning is real partition pruning (PartitionFilters on the bucket
+    column) in both state scans."""
     from mistocksync_spark.operators.dedup import (
         char_gram_positions,
         corpus_digest_state,
         corpus_gram_state,
         corpus_signature_state,
     )
-    from mistocksync_spark.operators.textual import incremental_prepare_tick
+    from mistocksync_spark.operators.textual import (
+        corpus_vocabulary,
+        incremental_prepare_tick,
+        prepare_gate,
+    )
     from mistocksync_spark.sinks.layout import (
         keyed_state_append,
         keyed_state_read,
@@ -210,15 +213,18 @@ def test_prepare_tick_stored_digest_gram_state(spark, sf_dir, tmp_path):
         spark, p_bands, touched_buckets(corpus_signature_state(batch), p_bands)
     )
 
-    stored = incremental_prepare_tick(
-        corpus,
+    stored = prepare_gate(
         batch,
-        corpus_bands=bands,
-        corpus_digests=digests,
-        corpus_grams=grams,
-        allow_corpus_derived_state=True,  # vocab intentionally derived here
+        bands,
+        corpus_signature_state(batch),
+        digests,
+        grams,
+        corpus_vocabulary(corpus),
+        lambda ids: corpus,
+        None,
+        None,
     )
-    plain = incremental_prepare_tick(corpus, batch, allow_corpus_derived_state=True)
+    plain = incremental_prepare_tick(corpus, batch)
     got = {(r.doc_id, r.reason) for r in stored.collect()}
     want = {(r.doc_id, r.reason) for r in plain.collect()}
     assert got == want
@@ -901,6 +907,43 @@ def test_scratch_root_isolates_pid_and_reaps_dead_sessions(tmp_path):
     assert root == f"{base}/{os.getpid()}-cafebabe00"
     assert not os.path.exists(f"{base}/999999999-deadbeef00")  # reaped
     assert os.path.exists(f"{base}/{os.getpid()}-aaaaaaaaaa")  # live pid kept
+
+
+def test_scratch_root_reaps_pid_less_children(tmp_path):
+    """Every writer names its root ``{pid}-{tag}``, so a child without
+    that prefix (a hash-named dir left by code that no longer runs) is
+    dead and goes with the next ``_scratch_root`` call."""
+    import os
+
+    from mistocksync_spark.plans.queries import _scratch_root
+
+    base = str(tmp_path / "scratch")
+    os.makedirs(f"{base}/6bd280b7d7/part")
+    os.makedirs(f"{base}/{os.getpid()}-aaaaaaaaaa")
+    _scratch_root(base, "cafebabe00")
+    assert sorted(os.listdir(base)) == [f"{os.getpid()}-aaaaaaaaaa"]
+
+
+def test_pristine_copy_work_dir_sits_under_session_root(tmp_path):
+    """A mutating entry's per-run copy is made under this session's
+    ``{pid}-`` runs root, not in bare /tmp, so the reaper removes it once
+    the session is dead."""
+    import os
+    import shutil
+
+    from mistocksync_spark.plans.queries import _pristine_copy
+
+    src = tmp_path / "root"
+    (src / "bands").mkdir(parents=True)
+    (src / "_STATE_READY").write_text("t")
+    work, state = _pristine_copy(str(src), "unit_")
+    try:
+        parent = os.path.dirname(work)
+        assert os.path.basename(parent) == f"{os.getpid()}-runs"
+        assert os.path.basename(work).startswith("unit_")
+        assert sorted(os.listdir(state)) == ["bands"]
+    finally:
+        shutil.rmtree(work)
 
 
 def test_compaction_drops_uncommitted_replay_rows(spark, sf_dir, tmp_path):

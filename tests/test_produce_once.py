@@ -74,7 +74,10 @@ def test_scratch_root_only_reachable_through_produce_once_helper():
       (``/tmp/spark_graft_ivf_index``): they are rewritten and read back
       on every call, so they are graded work, not produce-once state,
       and the pid-isolated root only keeps concurrent sessions on one
-      sf_dir from overwriting each other's tables.
+      sf_dir from overwriting each other's tables;
+    - ``_run_dir``'s per-session runs root (``/tmp/spark_graft_runs``),
+      under which every per-run work dir of a mutating entry is made, so
+      a dead session's copies are reaped with its root.
 
     A new direct _scratch_root caller must either use the helper or add
     its own documented exception here."""
@@ -87,7 +90,7 @@ def test_scratch_root_only_reachable_through_produce_once_helper():
         for i, ln in enumerate(lines)
         if "_scratch_root(" in ln and "def _scratch_root" not in ln
     ]
-    assert len(callers) == 6, callers
+    assert len(callers) == 7, callers
     assert any("_scratch_root(base, h)" in ln for _, ln in callers), callers
     direct = sorted(ln.split('"')[1] for _, ln in callers if '"/tmp/spark_graft_' in ln)
     assert direct == [
@@ -96,6 +99,7 @@ def test_scratch_root_only_reachable_through_produce_once_helper():
         "/tmp/spark_graft_ivf_index",
         "/tmp/spark_graft_ivf_rebuild",
         "/tmp/spark_graft_ivf_rebuild",
+        "/tmp/spark_graft_runs",
     ], callers
 
 

@@ -364,26 +364,6 @@ def test_build_report_sheets(spark, sf_dir):
     assert w.m is None or w.m > 20.0
 
 
-# ---------------------------------------------------------------- catalog
-def test_bucketed_join_has_no_exchange(spark):
-    from mistocksync_spark.sources.catalog import colocated_join, write_bucketed
-
-    left = spark.createDataFrame([(i, f"s{i}") for i in range(1000)], "article long, sval string")
-    right = spark.createDataFrame([(i, i * 1.5) for i in range(0, 1000, 2)], "article long, price double")
-    write_bucketed(left, "t_sup_bucketed", "article", buckets=4)
-    write_bucketed(right, "t_base_bucketed", "article", buckets=4)
-    # disable broadcast so the join would otherwise shuffle both sides
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = colocated_join(spark, "t_sup_bucketed", "t_base_bucketed", "article")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_snapshot_diff_all_null_added_removed_rows(spark):
     """An added/removed key whose compared columns are ALL NULL must still
     emit its audit rows — the side miss is the fact (round-2 advisory: the

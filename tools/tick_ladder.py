@@ -122,7 +122,7 @@ def _family(spark, sf_dir: str, name: str, holdout_mod: int | None):
             lambda batch, k, state: merge.embedding_dedup_tick_against_state(
                 batch, k, state, cents, dim=dim
             ),
-            lambda: incremental_embedding_dedup_ivf(corpus, arrivals, cents, dim=dim),
+            lambda: incremental_embedding_dedup_ivf(corpus, arrivals, cents),
         )
     from mistocksync_spark.operators.textual import incremental_prepare_tick
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
@@ -148,9 +148,7 @@ def _family(spark, sf_dir: str, name: str, holdout_mod: int | None):
             spark.read.parquet(os.path.join(state, "decisions", "b*"))
         ),
         oneshot=lambda: decisions(
-            incremental_prepare_tick(
-                corpus, arrivals, allow_corpus_derived_state=True, holdout_mod=holdout_mod
-            )
+            incremental_prepare_tick(corpus, arrivals, holdout_mod=holdout_mod)
         ),
     )
 
